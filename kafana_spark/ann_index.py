@@ -129,7 +129,8 @@ def ann_index_stream_sink(path: str, n_assign: int = 1):
     mode=overwrite, so an at-least-once redelivery REPLACES its
     partition instead of duplicating assignment rows (duplicates would
     surface the same vec_id twice per probed cell). Same idempotency
-    discipline as ingest_stream_exactly_once (streaming/pipeline.py).
+    contract as the store sink ingest_stream_exactly_once, which keys
+    its files by batch id instead of a ``batch=`` dir.
     """
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:

@@ -129,16 +129,16 @@ def dedup_index_stream_sink(path: str, text_col: str = "text"):
     streaming ingest — use with
     ``stream.writeStream.foreachBatch(dedup_index_stream_sink(p))``.
 
-    Idempotent under at-least-once redelivery with the same discipline
-    as ``ingest_stream_exactly_once`` (streaming/pipeline.py): each
-    micro-batch lands in its own ``batch=<epoch_id>`` subdirectory
-    with mode=overwrite, so a replayed batch REPLACES its partition
-    instead of appending a duplicate (a plain append would double the
-    (doc_id, h) shingle rows and inflate every jaccard intersection
-    the doc participates in). A crash mid-write heals the same way:
-    the retry overwrites whatever partial partition was left. Readers
-    see ``batch`` as an extra partition column; the from_index query
-    paths drop it.
+    Idempotent under at-least-once redelivery, the contract the store
+    sink ``ingest_stream_exactly_once`` keeps by batch-id file names:
+    here each micro-batch lands in the index's own ``batch=<epoch_id>``
+    subdirectory with mode=overwrite, so a replayed batch REPLACES its
+    partition instead of appending a duplicate (a plain append would
+    double the (doc_id, h) shingle rows and inflate every jaccard
+    intersection the doc participates in). A crash mid-write heals the
+    same way: the retry overwrites whatever partial partition was left.
+    Readers see ``batch`` as an extra partition column; the from_index
+    query paths drop it.
     """
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:

@@ -15,7 +15,8 @@ Scale shape:
 - lookup: the bucket of the queried term is a LITERAL, so the scan
   reads one directory (partition pruning, pinned by test); the
   surviving posting ids semi-join the store on ``_id``, where the
-  parquet bloom filters on ``_id`` (store.BLOOM_COLS) skip row groups.
+  bloom filters on ``_id`` in compacted files (store.BLOOM_COLS) skip
+  row groups.
 - maintenance: append-only — new documents append their postings; the
   index needs no rewrite (a token's postings may span files within its
   bucket; the reader unions them for free).

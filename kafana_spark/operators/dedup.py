@@ -175,8 +175,8 @@ def candidate_pairs(bands: DataFrame, id_col: str = "doc_id",
             .distinct())
 
 
-# Auto verify-shape thresholds (r12, calibrated with
-# tools/verify_shape_ab.py on both regimes): prefer the default
+# Auto verify-shape thresholds (calibrated by timing both verify shapes
+# on both regimes): prefer the default
 # self-join unless its estimated join volume (Σ_h df² over the pruned
 # inverted index) exceeds BOTH an absolute floor and a multiple of the
 # pair-first volume (Σ_pairs |A|). At natural shingle entropy the two

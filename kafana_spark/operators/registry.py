@@ -176,8 +176,7 @@ def x_minhash_prod(spark, sf_dir):
     this key is rows-only by design (the declared-twin split: every
     ORACLE-checked key keeps md5, the cross-engine contract); parity
     of the two settings' output is pinned by
-    test_minhash_hash_fn_knob_parity and re-checked at bench SF by
-    tools/hash_ab.py."""
+    test_minhash_hash_fn_knob_parity."""
     return (dedup.minhash_near_dup(_docs(spark, sf_dir),
                                    NEAR_DUP_THRESHOLD,
                                    hash_fn="xxhash64")

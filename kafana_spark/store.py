@@ -8,12 +8,14 @@ docker-compose.yml:72-78). Design:
   ``ds`` (UTC date of record timestamp, ≈ rollover/retention boundary,
   /root/reference/README.md:14). Partition pruning replaces ES shard
   routing; parquet min/max + dictionary stats replace the skip index.
+- one writer, one layout: ``write_store`` appends every batch, loaded
+  or streamed, as ``<batch_id>-part-*`` files under ``topic=/ds=``;
+  re-writing a batch id replaces its files. Bloom filters on
+  ``key``/``_id`` go only on the files ``compact``/``merge_upsert``
+  rewrite; small appended files carry none.
 - idempotency on replay (ES upsert by _id, kafana.http:76) is provided
   by dedup-on-read over ``_id`` — observably identical to the ES
-  behavior and needs no table format beyond Parquet. At 100 TB the same
-  contract is kept by MERGE on _id in a Delta/Iceberg table; the layout
-  (deterministic _id, topic/ds partitioning) is chosen so that swap is
-  additive.
+  behavior and needs no table format beyond Parquet.
 - "latest state per key" is a VIEW over the changelog (README.md:11:
   "rather a change log than a table"), ordered by (partition, offset)
   within key — Kafka ordering is per-partition, so offset, not
@@ -22,14 +24,19 @@ docker-compose.yml:72-78). Design:
 
 from __future__ import annotations
 
+import glob
 import logging
 import os
+import re
+import shutil
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kafana_spark.ingest import TOMBSTONE
+from kafana_spark.ingest import TOMBSTONE, doc_id
 
 _LOG = logging.getLogger(__name__)
 
@@ -41,10 +48,10 @@ def with_store_partitions(docs: DataFrame) -> DataFrame:
     return docs.withColumn("ds", F.to_date("timestamp"))
 
 
-#: needle-query columns that get parquet bloom filters at write time:
-#: `key = X` / `_id = Y` lookups skip row groups whose bloom excludes
-#: the value — the parquet-native stand-in for the ES inverted index
-#: on exact terms (expected-ndv sized for ~1M keys per file).
+#: needle-query columns that get parquet bloom filters in the files
+#: ``compact`` and ``merge_upsert`` rewrite: `key = X` / `_id = Y`
+#: lookups skip row groups whose bloom excludes the value — the ES
+#: exact-term index stand-in (expected-ndv sized for ~1M keys per file).
 BLOOM_COLS = ("key", "_id")
 BLOOM_NDV = 1_000_000
 
@@ -59,11 +66,39 @@ def _bloomed(writer):
     return writer
 
 
-def write_store(docs: DataFrame, path: str, mode: str = "append") -> None:
-    """Append enriched documents to the store, partitioned for pruning."""
-    _bloomed(with_store_partitions(docs)
-             .write.mode(mode)
-             .partitionBy(*PARTITION_COLS)).parquet(path)
+def _partition_dirs(root: str) -> list[str]:
+    """The ``topic=/ds=`` partition dirs under ``root``."""
+    return glob.glob(os.path.join(glob.escape(root), "topic=*", "ds=*"))
+
+
+def write_store(docs: DataFrame, path: str,
+                batch_id: str | None = None) -> None:
+    """Append enriched documents to the store — its only writer — as
+    batch ``batch_id`` (a fresh uuid when omitted).
+
+    Stages the batch in ``<path>/_staging/<batch_id>`` (hidden from
+    partition discovery), deletes the files an earlier attempt of that
+    batch left, moves each staged file into ``topic=/ds=`` as
+    ``<batch_id>-<name>`` and drops the staging dir, so a replayed or
+    half-moved batch replaces its own files instead of duplicating.
+    """
+    bid = batch_id or uuid.uuid4().hex
+    base = path.rstrip("/")
+    stage = os.path.join(base, "_staging", bid)
+    (with_store_partitions(docs).write.mode("overwrite")
+     .partitionBy(*PARTITION_COLS).parquet(stage))
+    for part in _partition_dirs(base):
+        for name in os.listdir(part):
+            if name.startswith(f"{bid}-part-"):
+                os.remove(os.path.join(part, name))
+    for part in _partition_dirs(stage):
+        dst = os.path.join(base, os.path.relpath(part, stage))
+        os.makedirs(dst, exist_ok=True)
+        for name in os.listdir(part):
+            if name.endswith(".parquet"):
+                os.rename(os.path.join(part, name),
+                          os.path.join(dst, f"{bid}-{name}"))
+    shutil.rmtree(stage)
 
 
 #: merge-in-progress marker: while present and fresh, readers skip
@@ -97,9 +132,6 @@ def _recover_merge(path: str, ignore_marker: bool = False) -> list[str]:
     from the parked copy) and logs them, so operators know the prior
     merge must be retried.
     """
-    import shutil
-    import time
-
     rolled_back: list[str] = []
     base = path.rstrip("/")
     if not os.path.isdir(base):
@@ -187,8 +219,6 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
     part of the record identity in the changelog model). Returns the
     number of partitions rewritten.
     """
-    import shutil
-
     # single-writer contract (local-FS store): the merging process owns
     # the store, so a marker left by a PRIOR crashed merge must not
     # block ITS recovery — ignore_marker, then take the marker for the
@@ -265,10 +295,8 @@ def read_store(spark: SparkSession, path: str, dedup: bool = True) -> DataFrame:
     """Read the changelog; optionally dedup replayed records by _id.
 
     Dedup-on-read mirrors the ES sink's idempotent upsert (same _id ⇒
-    one logical document). Uses max(offset-tiebreak-free) semantics: all
-    replays of an _id are byte-identical by construction, so any winner
-    is correct — we use a groupBy-free window to keep it cheap when the
-    store is already partitioned by topic.
+    one logical document). All replays of an _id are byte-identical by
+    construction, so any winner is correct.
 
     Runs merge-crash recovery first so a read between a crash and the
     next merge never sees a partition parked mid-swap (local-FS only;
@@ -305,8 +333,6 @@ def compact(spark: SparkSession, path: str,
     could lose committed partitions on plain parquet). A crash between
     the renames leaves the previous store at ``<path>.compact-old``.
     """
-    import shutil
-
     df = spark.read.parquet(path)
     out = df.repartition(*PARTITION_COLS)
     if cluster_by:
@@ -316,10 +342,9 @@ def compact(spark: SparkSession, path: str,
     for d in (tmp, old):
         if os.path.isdir(d):
             shutil.rmtree(d)
-    (out.write.mode("overwrite")
-     .option("maxRecordsPerFile", str(max_records_per_file))
-     .partitionBy(*PARTITION_COLS)
-     .parquet(tmp))
+    _bloomed(out.write.mode("overwrite")
+             .option("maxRecordsPerFile", str(max_records_per_file))
+             .partitionBy(*PARTITION_COLS)).parquet(tmp)
     os.rename(base, old)
     os.rename(tmp, base)
     shutil.rmtree(old)
@@ -333,22 +358,12 @@ def retention(path: str, cutoff_ds: str) -> list[str]:
     bound. Returns the removed partition paths. (Local-FS walk; on an
     object store the same loop runs over the FileSystem API.)
     """
-    import re
-    import shutil
-
     removed: list[str] = []
-    if not os.path.isdir(path):
-        return removed
-    for topic_dir in os.listdir(path):
-        tpath = os.path.join(path, topic_dir)
-        if not (os.path.isdir(tpath) and topic_dir.startswith("topic=")):
-            continue
-        for ds_dir in os.listdir(tpath):
-            m = re.fullmatch(r"ds=(\d{4}-\d{2}-\d{2})", ds_dir)
-            if m and m.group(1) < cutoff_ds:
-                full = os.path.join(tpath, ds_dir)
-                shutil.rmtree(full)
-                removed.append(full)
+    for part in _partition_dirs(path):
+        ds = os.path.basename(part)[len("ds="):]
+        if re.fullmatch(r"\d{4}-\d{2}-\d{2}", ds) and ds < cutoff_ds:
+            shutil.rmtree(part)
+            removed.append(part)
     return removed
 
 
@@ -395,8 +410,6 @@ def delete_by_query(docs: DataFrame, predicate) -> DataFrame:
     the victim batch); with a real multi-partition topic the spec is
     non-trivial.
     """
-    from kafana_spark.ingest import doc_id
-
     victims = latest_state(docs).where(predicate)
     maxoff = (docs.groupBy("topic", "partition")
               .agg(F.max("offset").alias("__mo")))
@@ -424,8 +437,6 @@ def update_by_query(docs: DataFrame, predicate,
     enriched frame; callers that need it in sync include it in
     ``set_fields`` explicitly. Returns the appended changelog frame.
     """
-    from kafana_spark.ingest import doc_id
-
     victims = latest_state(docs).where(predicate)
     maxoff = (docs.groupBy("topic", "partition")
               .agg(F.max("offset").alias("__mo")))

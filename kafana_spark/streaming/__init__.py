@@ -1,3 +1,3 @@
 from kafana_spark.streaming.pipeline import (  # noqa: F401
-    ingest_stream, sessionize, windowed_counts,
+    sessionize, windowed_counts,
 )

@@ -10,9 +10,10 @@ and idempotent indexing by _id (kafana.http:76). Spark equivalents:
 - checkpointing replaces Connect's offset storage
 - ``trigger(availableNow=True)`` drains everything then stops — the
   batch-equivalence harness (SURVEY.md §5.3.3)
-- idempotency: deterministic file naming per micro-batch via foreachBatch
-  would be the Delta MERGE path; with plain parquet we keep the
-  dedup-on-read contract (store.read_store)
+- exactly-once: every micro-batch goes through ``store.write_store``,
+  the store's only writer, under a batch id keyed by checkpoint and
+  epoch — a replayed batch replaces its own files (Structured
+  Streaming's epoch-keyed foreachBatch sink)
 
 Streaming aggregations (the C12 streaming twin + watermarks/session
 windows the reference lacks, SURVEY.md §2.D):
@@ -22,55 +23,39 @@ windows the reference lacks, SURVEY.md §2.D):
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kafana_spark.ingest import enrich
-from kafana_spark.store import with_store_partitions
+from kafana_spark.store import write_store
 
 
-def ingest_stream(records: DataFrame, store_path: str, checkpoint: str,
-                  value_col: str = "value_struct",
-                  available_now: bool = True) -> StreamingQuery:
-    """Enrich a streaming envelope frame and append it to the store.
-
-    `records` must carry the Kafka envelope columns + a decoded struct
-    value (exactly what sources/kafka.py:kafka_envelope emits). The
-    write is append-only, partitioned by (topic, ds) like the batch
-    path.
-    """
-    docs = with_store_partitions(enrich(records, value_col))
-    writer = (docs.writeStream
-              .format("parquet")
-              .option("path", store_path)
-              .option("checkpointLocation", checkpoint)
-              .partitionBy("topic", "ds")
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def stream_batch_id(checkpoint: str, epoch_id: int) -> str:
+    """Store batch id of micro-batch ``epoch_id`` of the stream
+    checkpointed at ``checkpoint``: scoped by both, so two streams into
+    one store never replace each other's batches."""
+    return f"{hashlib.sha1(checkpoint.encode()).hexdigest()[:16]}-{epoch_id}"
 
 
 def ingest_stream_exactly_once(records: DataFrame, store_path: str,
                                checkpoint: str,
                                value_col: str = "value_struct",
                                available_now: bool = True) -> StreamingQuery:
-    """Exactly-once ingest to plain parquet without a table format.
+    """Enrich a streaming envelope frame (Kafka envelope columns + a
+    decoded struct value, as sources/kafka.py:kafka_envelope emits) and
+    append it to the store exactly once, without a table format.
 
-    foreachBatch + a deterministic per-batch output directory
-    (``batch=<epoch_id>``): a replayed micro-batch (failure between
-    write and checkpoint commit) OVERWRITES its own directory instead
-    of appending duplicates — the same observable contract as the ES
-    sink's idempotent upsert by _id (/root/reference/kafana.http:76)
-    and the plain-parquet twin of a Delta MERGE. Readers glob the
-    store root; `batch=` behaves as an extra partition column.
+    Each micro-batch goes through ``store.write_store`` as batch
+    ``stream_batch_id(checkpoint, epoch_id)``, so a batch replayed after
+    a failure between write and checkpoint commit replaces its own files
+    — the ES sink's idempotent upsert by _id (kafana.http:76).
     """
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        docs = with_store_partitions(enrich(batch_df, value_col))
-        (docs.write.mode("overwrite")
-         .partitionBy(*[c for c in ("topic", "ds")])
-         .parquet(f"{store_path}/batch={epoch_id}"))
+        write_store(enrich(batch_df, value_col), store_path,
+                    stream_batch_id(checkpoint, epoch_id))
 
     writer = (records.writeStream
               .foreachBatch(write_batch)

@@ -88,21 +88,25 @@ def test_salted_agg_matches_plain_agg(spark):
 
 
 def test_store_writes_bloom_filters_on_needle_columns(spark, tmp_path):
-    """write_store attaches parquet bloom filters to key/_id — verified
-    by the byte overhead vs a bloom-less write of identical data (the
-    pyarrow in this env doesn't expose bloom offsets directly)."""
+    """compact attaches parquet bloom filters to key/_id — verified by
+    the byte overhead vs a bloom-less write of identical data in the
+    same layout (the pyarrow in this env doesn't expose bloom offsets
+    directly). A ~1M-NDV filter outweighs a small file's data many
+    times over, while row order alone moves its size by a few percent."""
     import os
+
+    from kafana_spark.store import PARTITION_COLS, with_store_partitions
 
     ev = load_table(spark, SF_SMOKE, "events").limit(500)
     docs = enrich(events_as_kafka_records(ev))
 
     write_store(docs, str(tmp_path / "with_bloom"))
-    from kafana_spark.store import with_store_partitions
-    (with_store_partitions(docs).write.partitionBy("topic", "ds")
-     .parquet(str(tmp_path / "no_bloom")))
+    compact(spark, str(tmp_path / "with_bloom"))
+    (with_store_partitions(docs).repartition(*PARTITION_COLS).write
+     .partitionBy(*PARTITION_COLS).parquet(str(tmp_path / "no_bloom")))
 
     size = lambda p: sum(os.path.getsize(f) for f in parquet_files(p))
-    assert size(tmp_path / "with_bloom") > size(tmp_path / "no_bloom")
+    assert size(tmp_path / "with_bloom") > 2 * size(tmp_path / "no_bloom")
 
 
 def test_merge_upsert_updates_inserts_and_leaves_rest_untouched(

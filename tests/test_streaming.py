@@ -17,9 +17,9 @@ from kafana_spark.sources.kafka import (
     confluent_schema_id, frame_confluent, strip_confluent_header,
 )
 from kafana_spark.sources.tables import load_table
-from kafana_spark.store import read_store, with_store_partitions, write_store
+from kafana_spark.store import compact, read_store, retention, write_store
 from kafana_spark.streaming.pipeline import (
-    ingest_stream, sessionize, windowed_counts,
+    ingest_stream_exactly_once, sessionize, stream_batch_id, windowed_counts,
 )
 from tests.conftest import SF_SMOKE
 
@@ -41,8 +41,8 @@ def test_stream_batch_parity(spark, tmp_path):
     staged = str(tmp_path / "staged")
     records.write.parquet(staged)
     stream = (spark.readStream.schema(records.schema).parquet(staged))
-    q = ingest_stream(stream, str(tmp_path / "stream_store"),
-                      str(tmp_path / "ckpt"))
+    q = ingest_stream_exactly_once(stream, str(tmp_path / "stream_store"),
+                                   str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     b = read_store(spark, batch_store)
@@ -70,7 +70,7 @@ def test_stream_restart_is_idempotent(spark, tmp_path):
 
     for _ in range(2):  # second run: nothing new to process
         stream = spark.readStream.schema(records.schema).parquet(staged)
-        q = ingest_stream(stream, store, ckpt)
+        q = ingest_stream_exactly_once(stream, store, ckpt)
         q.awaitTermination(120)
 
     assert read_store(spark, store, dedup=False).count() == 200
@@ -153,34 +153,127 @@ def test_stateful_running_counts_across_microbatches(spark, tmp_path):
     assert got == want
 
 
-def test_exactly_once_replayed_batch_overwrites(spark, tmp_path):
-    """A redelivered micro-batch must overwrite its own batch directory,
-    not append duplicates (foreachBatch + deterministic path = the
-    plain-parquet idempotency contract)."""
-    from kafana_spark.streaming.pipeline import ingest_stream_exactly_once
+def _stream(spark, staged, schema, store, ckpt):
+    """Drain the new files under ``staged`` into ``store`` through the
+    exactly-once sink, as one micro-batch."""
+    stream = spark.readStream.schema(schema).parquet(staged)
+    ingest_stream_exactly_once(stream, store, ckpt).awaitTermination(120)
 
+
+def test_exactly_once_replayed_batch_overwrites(spark, tmp_path):
+    """A redelivered micro-batch must replace its own files, not append
+    duplicates: replay batch 0 through the same write_store call and
+    batch id the sink uses."""
     records = records_df(spark)
     staged = str(tmp_path / "staged")
     records.write.parquet(staged)
-    store = str(tmp_path / "store")
+    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
 
-    stream = spark.readStream.schema(records.schema).parquet(staged)
-    q = ingest_stream_exactly_once(stream, store, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    _stream(spark, staged, records.schema, store, ckpt)
     first = spark.read.parquet(store)
     first_ids = sorted(r._id for r in first.select("_id").collect())
     assert len(first_ids) == 200
 
-    # simulate redelivery: run batch 0's write again by hand
-    from kafana_spark.ingest import enrich
-    from kafana_spark.store import with_store_partitions
-    docs = with_store_partitions(enrich(records))
-    docs.write.mode("overwrite").partitionBy("topic", "ds") \
-        .parquet(f"{store}/batch=0")
+    # simulate redelivery: the sink's write of batch 0, again
+    write_store(enrich(records), store, stream_batch_id(ckpt, 0))
 
     replayed = spark.read.parquet(store)
     assert replayed.count() == 200  # no duplicates
     assert sorted(r._id for r in replayed.select("_id").collect()) == first_ids
+
+
+def test_replay_heals_leftover_staging_and_half_moved_batch(spark, tmp_path):
+    """A crash mid-move leaves part of batch 0 in the store and a
+    staging dir behind; replaying the batch restores exactly its rows
+    and clears the staging dir."""
+    import glob
+    import os
+
+    records = records_df(spark)
+    staged = str(tmp_path / "staged")
+    records.write.parquet(staged)
+    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+    _stream(spark, staged, records.schema, store, ckpt)
+    first_ids = sorted(r._id for r in
+                       read_store(spark, store, dedup=False)
+                       .select("_id").collect())
+
+    bid = stream_batch_id(ckpt, 0)
+    moved = sorted(glob.glob(f"{store}/topic=*/ds=*/{bid}-part-*.parquet"))
+    assert len(moved) >= 2
+    for f in moved[::2]:          # half the batch never got moved
+        os.remove(f)
+    junk = os.path.join(store, "_staging", bid, "topic=x", "ds=2024-01-01")
+    os.makedirs(junk)
+    with open(os.path.join(junk, "part-junk.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    assert read_store(spark, store, dedup=False).count() < 200
+
+    write_store(enrich(records), store, bid)
+
+    healed = read_store(spark, store, dedup=False)
+    assert healed.count() == 200
+    assert sorted(r._id for r in healed.select("_id").collect()) == first_ids
+    assert not os.path.exists(os.path.join(store, "_staging", bid))
+
+
+def test_two_streams_with_own_checkpoints_keep_both(spark, tmp_path):
+    """Two streams into one store must not replace each other's batches
+    (the sink's batch id is scoped by checkpoint, not epoch alone)."""
+    ev = load_table(spark, SF_SMOKE, "events")
+    records = events_as_kafka_records(ev)
+    staged = str(tmp_path / "staged")
+    records.write.parquet(staged)
+    assert records.count() == 1000
+    store = str(tmp_path / "store")
+
+    for name in ("ckpt_a", "ckpt_b"):
+        _stream(spark, staged, records.schema, store, str(tmp_path / name))
+
+    assert read_store(spark, store, dedup=False).count() == 2000
+
+
+def test_stream_after_compact_reads_every_row(spark, tmp_path):
+    """Stream, compact, then stream one more batch: the store keeps one
+    layout, so read_store still sees every row."""
+    import time
+
+    records = records_df(spark)
+    staged = str(tmp_path / "staged")
+    last = F.col("offset") % 4 == 0
+    records.where(~last).write.parquet(staged)
+    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+    _stream(spark, staged, records.schema, store, ckpt)
+    compact(spark, store)
+
+    time.sleep(1.2)               # a strictly newer file for the source
+    records.where(last).coalesce(1).write.mode("append").parquet(staged)
+    _stream(spark, staged, records.schema, store, ckpt)
+
+    got = read_store(spark, store, dedup=False)
+    assert got.count() == 200
+    assert got.select("_id").distinct().count() == 200
+
+
+def test_retention_drops_old_days_of_streamed_store(spark, tmp_path):
+    """retention works on a stream-written store: the days before the
+    cutoff go, the rest stay."""
+    records = records_df(spark)
+    staged = str(tmp_path / "staged")
+    records.write.parquet(staged)
+    store = str(tmp_path / "store")
+    _stream(spark, staged, records.schema, store, str(tmp_path / "ckpt"))
+    ds_vals = sorted(r.ds for r in read_store(spark, store, dedup=False)
+                     .select("ds").distinct().collect())
+    assert len(ds_vals) >= 2, "fixture needs multiple days"
+    cutoff = str(ds_vals[1])
+
+    removed = retention(store, cutoff)
+
+    assert removed
+    left = read_store(spark, store, dedup=False)
+    assert left.where(F.col("ds") < cutoff).count() == 0
+    assert left.where(F.col("ds") >= cutoff).count() > 0
 
 
 def test_stream_interval_join_matches_batch(spark, tmp_path):
