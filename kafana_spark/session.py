@@ -60,6 +60,11 @@ def get_spark(
         # ContextCleaner delete a checkpoint's files once its RDD is
         # GC'd on the driver (r11 ADVICE).
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # store.read_store passes each snapshot file as a root path; past
+        # the default 32 Spark lists them in an extra parallel job, which
+        # took a needle request on a 56-file store from 2 jobs to 3
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "100000")
     )
     if driver_mem:
         builder = builder.config("spark.driver.memory", driver_mem)

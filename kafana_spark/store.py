@@ -8,14 +8,18 @@ docker-compose.yml:72-78). Design:
   ``ds`` (UTC date of record timestamp, ≈ rollover/retention boundary,
   /root/reference/README.md:14). Partition pruning replaces ES shard
   routing; parquet min/max + dictionary stats replace the skip index.
-- one writer, one layout: ``write_store`` appends every batch, loaded
-  or streamed, as ``<batch_id>-part-*`` files under ``topic=/ds=``;
-  re-writing a batch id replaces its files. Bloom filters on
-  ``key``/``_id`` go only on the files ``compact``/``merge_upsert``
-  rewrite; small appended files carry none.
-- idempotency on replay (ES upsert by _id, kafana.http:76) is provided
-  by dedup-on-read over ``_id`` — observably identical to the ES
-  behavior and needs no table format beyond Parquet.
+- one commit log: every writer lands ``<owner>-part-*`` files under
+  ``topic=/ds=`` and publishes them as one atomically created
+  ``_log/<version>.json`` entry of added and removed files; deletes
+  happen only after it. Readers read the latest snapshot's files with
+  the logged schema, so a crash at any step leaves the old or the new
+  snapshot visible (Structured Streaming's file-sink log, SIGMOD 2018).
+  Appends may race each other and one maintenance call
+  (``compact``/``merge_upsert``/``retention``) at a time. Bloom filters
+  on ``key``/``_id`` go only on the files ``compact``/``merge_upsert``
+  rewrite.
+- idempotency on replay (ES upsert by _id, kafana.http:76): a replayed
+  batch id replaces its own files, and reads dedup by ``_id``.
 - "latest state per key" is a VIEW over the changelog (README.md:11:
   "rather a change log than a table"), ordered by (partition, offset)
   within key — Kafka ordering is per-partition, so offset, not
@@ -24,23 +28,25 @@ docker-compose.yml:72-78). Design:
 
 from __future__ import annotations
 
+import contextlib
+import datetime as dt
 import glob
-import logging
+import json
 import os
-import re
 import shutil
-import time
 import uuid
+from dataclasses import dataclass, field
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from kafana_spark.ingest import TOMBSTONE, doc_id
 
-_LOG = logging.getLogger(__name__)
-
 PARTITION_COLS = ("topic", "ds")
+LOG_DIR = "_log"
 
 
 def with_store_partitions(docs: DataFrame) -> DataFrame:
@@ -71,239 +77,222 @@ def _partition_dirs(root: str) -> list[str]:
     return glob.glob(os.path.join(glob.escape(root), "topic=*", "ds=*"))
 
 
+class CommitConflict(RuntimeError):
+    """A file this commit removes was already removed by a newer one."""
+
+
+@dataclass
+class _Snapshot:
+    """The store at ``version``: live files (store-relative path → its
+    ``topic``/``ds``), stored schema, and the entries replayed."""
+    version: int = -1
+    files: dict = field(default_factory=dict)
+    schema: str | None = None
+    entries: list = field(default_factory=list)
+
+    def apply(self, entry: dict) -> None:
+        for p in entry["remove"]:
+            self.files.pop(p, None)
+        self.files.update(entry["add"])
+        self.version, self.schema = entry["version"], entry["schema"]
+        self.entries.append(entry)
+
+
+def _entry_path(base: str, version: int) -> str:
+    return os.path.join(base, LOG_DIR, f"{version:020d}.json")
+
+
+def _load(base: str, version: int) -> dict:
+    with open(_entry_path(base, version)) as fh:
+        return json.load(fh)
+
+
+def _snapshot(base: str) -> _Snapshot:
+    """The latest snapshot, replayed from the newest ``compact`` entry
+    (which lists every live file) onward."""
+    try:
+        names = os.listdir(os.path.join(base, LOG_DIR))
+    except FileNotFoundError:
+        names = []
+    chain = []
+    for v in sorted((int(n[:-5]) for n in names if n.endswith(".json")),
+                    reverse=True):
+        chain.append(_load(base, v))
+        if chain[-1]["op"] == "compact":
+            break
+    snap = _Snapshot()
+    for entry in reversed(chain):
+        snap.apply(entry)
+    return snap
+
+
+def _commit(base: str, snap: _Snapshot, op: str, add: dict,
+            remove: list[str] = (), schema: str | None = None,
+            batch: str | None = None) -> None:
+    """Publish ``add``/``remove`` as the next version after ``snap``
+    (a temp file hard-linked to the version name: whole or absent) and
+    advance ``snap`` to it. On a lost race the newer entries are
+    replayed and the commit retried: a batch re-derives the files it
+    replaces, so appends never conflict; other commits raise
+    ``CommitConflict`` if a file they remove is already gone."""
+    remove = set(remove)
+    os.makedirs(os.path.join(base, LOG_DIR), exist_ok=True)
+    tmp = os.path.join(base, LOG_DIR, f".{uuid.uuid4().hex}.tmp")
+    try:
+        while True:
+            if batch is not None:   # a replayed batch replaces its own
+                remove = {p for p in snap.files if os.path.basename(p)
+                          .startswith(f"{batch}-part-")}
+            elif not remove <= snap.files.keys():
+                raise CommitConflict(
+                    f"{op} on {base}: a newer commit removed its files")
+            entry = {"version": snap.version + 1, "op": op, "batch": batch,
+                     "schema": schema or snap.schema, "add": add,
+                     "remove": sorted(remove)}
+            if op == "compact":     # the whole live set: replay starts here
+                entry["add"] = {p: v for p, v in snap.files.items()
+                                if p not in remove} | add
+            with open(tmp, "w") as fh:
+                json.dump(entry, fh)
+                fh.flush()
+                os.fsync(fh.fileno())
+            try:
+                os.link(tmp, _entry_path(base, entry["version"]))
+            except FileExistsError:     # another writer won this version
+                while os.path.exists(_entry_path(base, snap.version + 1)):
+                    snap.apply(_load(base, snap.version + 1))
+                continue
+            snap.apply(entry)
+            return
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+
+
+def _collect_garbage(base: str, snap: _Snapshot,
+                     owner: str | None = None) -> None:
+    """Delete files ``snap`` does not hold that a replayed entry removed
+    or a crashed attempt of ``owner`` left uncommitted — never another
+    writer's in-flight files. Emptied partition dirs stay: a concurrent
+    writer may be moving a file into one."""
+    dead = {p for e in snap.entries for p in e["remove"]}
+    for part in _partition_dirs(base):
+        for name in os.listdir(part):
+            rel = os.path.relpath(os.path.join(part, name), base)
+            if rel not in snap.files and (
+                    rel in dead
+                    or (owner and name.startswith(f"{owner}-part-"))):
+                os.remove(os.path.join(part, name))
+
+
+def _land(base: str, snap: _Snapshot, op: str, owner: str, write,
+          remove: list[str] = (), schema: str | None = None,
+          batch: str | None = None) -> dict:
+    """``write(stage)`` a partitioned parquet copy to ``_staging/<owner>``,
+    move its files into ``topic=/ds=`` as ``<owner>-<name>``, commit
+    them, then collect garbage. Returns the added files."""
+    stage = os.path.join(base, "_staging", owner)
+    write(stage)
+    add = {}
+    for part in _partition_dirs(stage):
+        rel_dir = os.path.relpath(part, stage)
+        topic, ds = (unquote(d.split("=", 1)[1])
+                     for d in rel_dir.split(os.sep))
+        os.makedirs(os.path.join(base, rel_dir), exist_ok=True)
+        for name in sorted(os.listdir(part)):
+            if name.endswith(".parquet"):
+                rel = os.path.join(rel_dir, f"{owner}-{name}")
+                os.rename(os.path.join(part, name), os.path.join(base, rel))
+                add[rel] = {"topic": topic, "ds": ds}
+    _commit(base, snap, op, add, remove, schema, batch)
+    _collect_garbage(base, snap, owner)
+    shutil.rmtree(stage, ignore_errors=True)
+    return add
+
+
+def _read(spark: SparkSession, base: str, schema: str | None,
+          files) -> DataFrame:
+    """The given snapshot files under ``base``, read with the stored
+    schema (no inference job); partition columns come from the paths."""
+    if schema is None:
+        raise FileNotFoundError(f"no store commit log under {base}")
+    return (spark.read.schema(StructType.fromJson(json.loads(schema)))
+            .option("basePath", base)
+            .parquet(*(os.path.join(base, p) for p in files)))
+
+
+def _store_schema(docs: DataFrame) -> str:
+    """``docs``' schema as a store read returns it: partition cols last."""
+    return StructType(sorted(docs.schema,
+                             key=lambda f: f.name in PARTITION_COLS)).json()
+
+
 def write_store(docs: DataFrame, path: str,
                 batch_id: str | None = None) -> None:
-    """Append enriched documents to the store — its only writer — as
-    batch ``batch_id`` (a fresh uuid when omitted).
-
-    Stages the batch in ``<path>/_staging/<batch_id>`` (hidden from
-    partition discovery), deletes the files an earlier attempt of that
-    batch left, moves each staged file into ``topic=/ds=`` as
-    ``<batch_id>-<name>`` and drops the staging dir, so a replayed or
-    half-moved batch replaces its own files instead of duplicating.
+    """Append enriched documents to the store as batch ``batch_id`` (a
+    fresh uuid when omitted): one ``append`` commit of its
+    ``<batch_id>-part-*`` files. Re-writing a committed batch id removes
+    that batch's old files in the same commit, so a replayed batch
+    replaces its own instead of duplicating; a retry after a crash
+    deletes what the crashed attempt left uncommitted.
     """
     bid = batch_id or uuid.uuid4().hex
     base = path.rstrip("/")
-    stage = os.path.join(base, "_staging", bid)
-    (with_store_partitions(docs).write.mode("overwrite")
-     .partitionBy(*PARTITION_COLS).parquet(stage))
-    for part in _partition_dirs(base):
-        for name in os.listdir(part):
-            if name.startswith(f"{bid}-part-"):
-                os.remove(os.path.join(part, name))
-    for part in _partition_dirs(stage):
-        dst = os.path.join(base, os.path.relpath(part, stage))
-        os.makedirs(dst, exist_ok=True)
-        for name in os.listdir(part):
-            if name.endswith(".parquet"):
-                os.rename(os.path.join(part, name),
-                          os.path.join(dst, f"{bid}-{name}"))
-    shutil.rmtree(stage)
-
-
-#: merge-in-progress marker: while present and fresh, readers skip
-#: crash recovery so a reader racing a LIVE merge's park/rename window
-#: cannot mistake an in-flight swap for a crash and rename a parked
-#: dir back over the merge's staged result (ADVICE.md r5). A marker
-#: older than this is a crash leftover and recovery proceeds.
-MERGE_MARKER = ".merge-inprogress"
-MERGE_MARKER_STALE_SEC = 600
-
-
-def _recover_merge(path: str, ignore_marker: bool = False) -> list[str]:
-    """Finish or roll back a partition swap interrupted by a crash.
-
-    ``merge_upsert``'s per-partition swap has a window between parking
-    the live dir as ``.merge-old.ds=<date>`` and renaming the staged
-    dir in, during which the partition exists only under its parked
-    name. This pass (run at the start of every merge AND by
-    ``read_store`` before reading) repairs either outcome: a parked
-    copy next to a live dir means the swap completed and the copy is
-    garbage — drop it; a parked copy with no live dir means the swap
-    was interrupted — rename it back (a rollback: the interrupted
-    merge's staged result for that partition is discarded, so the
-    caller must re-run the same merge to land those updates).
-
-    The parked name is dot-prefixed ON PURPOSE: Spark/Hadoop partition
-    discovery only hides ``_``/``.``-prefixed paths, so a plain
-    ``ds=<date>.merge-old`` sibling would be read as a partition
-    between a crash and the next merge (duplicate _ids + a string ds
-    value). Returns the partition dirs that were rolled back (restored
-    from the parked copy) and logs them, so operators know the prior
-    merge must be retried.
-    """
-    rolled_back: list[str] = []
-    base = path.rstrip("/")
-    if not os.path.isdir(base):
-        return rolled_back
-    marker = os.path.join(base, MERGE_MARKER)
-
-    def _merge_live() -> bool:
-        if ignore_marker or not os.path.exists(marker):
-            return False
-        try:
-            age = time.time() - os.path.getmtime(marker)
-        except OSError:       # marker vanished between check and stat
-            return False
-        if age < MERGE_MARKER_STALE_SEC:
-            return True
-        try:                  # crash leftover: clear, recover normally
-            os.remove(marker)
-        except FileNotFoundError:
-            pass              # a concurrent reader already cleared it
-        return False
-
-    if _merge_live():
-        # a merge is (very likely) live right now — parked dirs are
-        # its in-flight swap state, not crash debris; leave them
-        return rolled_back
-    for topic_dir in os.listdir(base):
-        tdir = os.path.join(base, topic_dir)
-        if not (os.path.isdir(tdir) and topic_dir.startswith("topic=")):
-            continue
-        for name in os.listdir(tdir):
-            # current parked form ".merge-old.ds=<date>" plus the legacy
-            # "ds=<date>.merge-old" suffix form, repaired identically
-            if name.startswith(".merge-old."):
-                dst_name = name[len(".merge-old."):]
-            elif name.endswith(".merge-old"):
-                dst_name = name[: -len(".merge-old")]
-            else:
-                continue
-            old = os.path.join(tdir, name)
-            dst = os.path.join(tdir, dst_name)
-            if os.path.isdir(dst):
-                shutil.rmtree(old)
-            else:
-                # re-check the marker at the last instant: a merge that
-                # started AFTER the entry check parks dirs mid-scan, and
-                # rolling one back here would fight its swap (the writer
-                # also re-parks on a lost race — see merge_upsert — so
-                # this check narrows the window rather than carrying the
-                # whole guarantee)
-                if _merge_live():
-                    return rolled_back
-                os.rename(old, dst)
-                rolled_back.append(dst)
-    if rolled_back:
-        _LOG.warning(
-            "merge recovery rolled back %d partition(s) (%s): the "
-            "interrupted merge's updates for these partitions were "
-            "discarded — re-run the same merge to apply them",
-            len(rolled_back), ", ".join(rolled_back))
-    return rolled_back
+    docs = with_store_partitions(docs)
+    _land(base, _snapshot(base), "append", bid,
+          lambda stage: (docs.write.mode("overwrite")
+                         .partitionBy(*PARTITION_COLS).parquet(stage)),
+          schema=_store_schema(docs), batch=bid)
 
 
 def merge_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
-    """MERGE (upsert on ``_id``) into the plain-parquet store: the
-    Delta/Iceberg ``MERGE WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT``
-    contract, implemented as partition-granular copy-on-write — the
-    env hosts no table format, and at 100 TB this is exactly what those
-    formats do underneath (rewrite affected files, commit atomically),
-    just at partition rather than file granularity.
+    """MERGE (upsert on ``_id``) into the store: the Delta/Iceberg
+    ``MERGE WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT`` contract as
+    partition-granular copy-on-write on the store's commit log.
 
-    Plan shape: only partitions named by the updates are READ (the
-    touched-set semi-join prunes the scan to those directories), rows
-    whose ``_id`` is being replaced are anti-joined out (updates
-    broadcast — an update batch is small next to the store), and the
-    union is staged to a sibling directory, then swapped in with
-    per-partition renames. Untouched partitions are never read, never
-    written, and keep their files byte-identical. A crash mid-swap
-    leaves at most one partition parked under its ``.merge-old`` name
-    (no partition is ever half-written); ``_recover_merge`` runs at the
-    start of every merge and restores or garbage-collects that copy, so
-    the store self-heals on the next merge after a crash.
+    Only the snapshot files of partitions named by the updates are
+    READ; rows whose ``_id`` is being replaced are anti-joined out
+    (updates broadcast — small next to the store) and the union is
+    written as new files. One ``merge`` commit adds them and removes the
+    files read, so a reader sees every update or none. Untouched
+    partitions keep their files byte-identical.
 
     Assumes updates keep each record's original ``ds`` (true by
     construction: ``ds`` derives from the record timestamp, which is
     part of the record identity in the changelog model). Returns the
     number of partitions rewritten.
     """
-    # single-writer contract (local-FS store): the merging process owns
-    # the store, so a marker left by a PRIOR crashed merge must not
-    # block ITS recovery — ignore_marker, then take the marker for the
-    # duration of the swap so concurrent readers stand down.
-    _recover_merge(path, ignore_marker=True)
+    base = path.rstrip("/")
+    snap = _snapshot(base)
     up = with_store_partitions(updates) if "ds" not in updates.columns \
         else updates
-    touched = up.select(*PARTITION_COLS).distinct()
-    existing = (spark.read.parquet(path)
-                .join(F.broadcast(touched), list(PARTITION_COLS),
-                      "left_semi"))
+    touched = {(r[0], str(r[1]))
+               for r in up.select(*PARTITION_COLS).distinct().collect()}
+    old = [p for p, v in snap.files.items()
+           if (v["topic"], v["ds"]) in touched]
+    existing = _read(spark, base, snap.schema, old)
     keep = existing.join(F.broadcast(up.select("_id").distinct()),
                          "_id", "left_anti")
     merged = keep.unionByName(up.select(*existing.columns))
-
-    base = path.rstrip("/")
-    tmp = base + ".merge-tmp"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    _bloomed(merged.write.mode("overwrite")
-             .partitionBy(*PARTITION_COLS)).parquet(tmp)
-
-    marker = os.path.join(base, MERGE_MARKER)
-    os.makedirs(base, exist_ok=True)
-    with open(marker, "w") as fh:
-        fh.write(str(os.getpid()))
-    swapped = 0
-    try:
-        for topic_dir in os.listdir(tmp):
-            tsrc = os.path.join(tmp, topic_dir)
-            if not (os.path.isdir(tsrc) and topic_dir.startswith("topic=")):
-                continue
-            os.makedirs(os.path.join(base, topic_dir), exist_ok=True)
-            for ds_dir in os.listdir(tsrc):
-                src = os.path.join(tsrc, ds_dir)
-                dst = os.path.join(base, topic_dir, ds_dir)
-                # dot-prefixed park name: hidden from Spark/Hadoop
-                # partition discovery, so a crash mid-swap never exposes
-                # stale rows as a readable partition (see _recover_merge)
-                old = os.path.join(base, topic_dir, ".merge-old." + ds_dir)
-                if os.path.isdir(old):
-                    shutil.rmtree(old)
-                if os.path.isdir(dst):
-                    os.rename(dst, old)
-                try:
-                    os.rename(src, dst)
-                except OSError:
-                    # a reader that entered _recover_merge before this
-                    # merge took the marker may have rolled the parked
-                    # dir back into dst mid-swap; re-park it and retry
-                    # once — the marker is held now, so no second
-                    # rollback can race this window
-                    if os.path.isdir(dst):
-                        shutil.rmtree(old, ignore_errors=True)
-                        os.rename(dst, old)
-                        os.rename(src, dst)
-                    else:
-                        raise
-                if os.path.isdir(old):
-                    shutil.rmtree(old)
-                swapped += 1
-    finally:
-        # remove the marker on success AND on failure: a surviving
-        # process that caught the error must let readers recover; a
-        # hard crash leaves the marker, which goes stale after
-        # MERGE_MARKER_STALE_SEC and recovery proceeds
-        if os.path.exists(marker):
-            os.remove(marker)
-    shutil.rmtree(tmp)
-    return swapped
+    add = _land(base, snap, "merge", "merge",
+                lambda stage: _bloomed(merged.write.mode("overwrite")
+                                       .partitionBy(*PARTITION_COLS))
+                .parquet(stage), remove=old)
+    return len({os.path.dirname(p) for p in add})
 
 
 def read_store(spark: SparkSession, path: str, dedup: bool = True) -> DataFrame:
-    """Read the changelog; optionally dedup replayed records by _id.
+    """Read exactly the latest snapshot's files, with the logged schema
+    (an empty snapshot reads as an empty frame; files no commit lists
+    are never seen); optionally dedup replayed records by _id.
 
     Dedup-on-read mirrors the ES sink's idempotent upsert (same _id ⇒
     one logical document). All replays of an _id are byte-identical by
     construction, so any winner is correct.
-
-    Runs merge-crash recovery first so a read between a crash and the
-    next merge never sees a partition parked mid-swap (local-FS only;
-    the check is a directory listing, negligible next to the scan).
     """
-    _recover_merge(path)
-    df = spark.read.parquet(path)
+    base = path.rstrip("/")
+    snap = _snapshot(base)
+    df = _read(spark, base, snap.schema, snap.files)
     if not dedup:
         return df
     return df.dropDuplicates(["_id"])
@@ -327,44 +316,44 @@ def compact(spark: SparkSession, path: str,
     become disjoint ranges, so needle queries (`key = X`) skip most
     row groups instead of scanning the day.
 
-    Staged rewrite: the compacted copy is written to a sibling temp
-    directory and swapped in with two renames, so a failure mid-write
-    never touches the live store (the in-place overwrite it replaces
-    could lose committed partitions on plain parquet). A crash between
-    the renames leaves the previous store at ``<path>.compact-old``.
+    One ``compact`` commit swaps the snapshot it read for the rewritten
+    files; the store path exists throughout, and a batch appended
+    between the read and the commit stays live.
     """
-    df = spark.read.parquet(path)
-    out = df.repartition(*PARTITION_COLS)
+    base = path.rstrip("/")
+    snap = _snapshot(base)
+    out = _read(spark, base, snap.schema, snap.files) \
+        .repartition(*PARTITION_COLS)
     if cluster_by:
         out = out.sortWithinPartitions(*PARTITION_COLS, *cluster_by)
-    base = path.rstrip("/")
-    tmp, old = base + ".compact-tmp", base + ".compact-old"
-    for d in (tmp, old):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-    _bloomed(out.write.mode("overwrite")
-             .option("maxRecordsPerFile", str(max_records_per_file))
-             .partitionBy(*PARTITION_COLS)).parquet(tmp)
-    os.rename(base, old)
-    os.rename(tmp, base)
-    shutil.rmtree(old)
+    _land(base, snap, "compact", "compact",
+          lambda stage: _bloomed(
+              out.write.mode("overwrite")
+              .option("maxRecordsPerFile", str(max_records_per_file))
+              .partitionBy(*PARTITION_COLS)).parquet(stage),
+          remove=list(snap.files))
 
 
 def retention(path: str, cutoff_ds: str) -> list[str]:
-    """Drop ds partitions strictly older than ``cutoff_ds`` (ISO date).
+    """Drop ds partitions strictly older than ``cutoff_ds``
+    (``YYYY-MM-DD``; anything else raises ``ValueError`` before
+    anything is removed).
 
-    Metadata-only: removes partition directories, no data rewrite —
-    the retention/rollover-deletion half of the reference's index-size
-    bound. Returns the removed partition paths. (Local-FS walk; on an
-    object store the same loop runs over the FileSystem API.)
+    Metadata-only: one ``retention`` commit removes the partitions'
+    files, no data rewrite — the retention/rollover-deletion half of
+    the reference's index-size bound. Returns the removed partition
+    paths.
     """
-    removed: list[str] = []
-    for part in _partition_dirs(path):
-        ds = os.path.basename(part)[len("ds="):]
-        if re.fullmatch(r"\d{4}-\d{2}-\d{2}", ds) and ds < cutoff_ds:
-            shutil.rmtree(part)
-            removed.append(part)
-    return removed
+    if dt.date.fromisoformat(cutoff_ds).isoformat() != cutoff_ds:
+        raise ValueError(f"retention cutoff {cutoff_ds!r} is not YYYY-MM-DD")
+    base = path.rstrip("/")
+    snap = _snapshot(base)
+    # canonical ISO days compare in date order as strings
+    old = [p for p, v in snap.files.items() if v["ds"] < cutoff_ds]
+    if old:
+        _commit(base, snap, "retention", {}, old)
+    _collect_garbage(base, snap)
+    return sorted({os.path.join(base, os.path.dirname(p)) for p in old})
 
 
 def latest_state(docs: DataFrame, drop_tombstones: bool = True) -> DataFrame:

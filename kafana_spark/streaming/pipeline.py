@@ -10,10 +10,10 @@ and idempotent indexing by _id (kafana.http:76). Spark equivalents:
 - checkpointing replaces Connect's offset storage
 - ``trigger(availableNow=True)`` drains everything then stops — the
   batch-equivalence harness (SURVEY.md §5.3.3)
-- exactly-once: every micro-batch goes through ``store.write_store``,
-  the store's only writer, under a batch id keyed by checkpoint and
-  epoch — a replayed batch replaces its own files (Structured
-  Streaming's epoch-keyed foreachBatch sink)
+- exactly-once: every micro-batch is one ``store.write_store`` commit
+  on the store's ``_log/``, under a batch id keyed by checkpoint and
+  epoch — a replayed batch replaces its own files in one commit
+  (Structured Streaming's epoch-keyed foreachBatch sink + metadata log)
 
 Streaming aggregations (the C12 streaming twin + watermarks/session
 windows the reference lacks, SURVEY.md §2.D):
@@ -50,7 +50,7 @@ def ingest_stream_exactly_once(records: DataFrame, store_path: str,
 
     Each micro-batch goes through ``store.write_store`` as batch
     ``stream_batch_id(checkpoint, epoch_id)``, so a batch replayed after
-    a failure between write and checkpoint commit replaces its own files
+    a failure between store and checkpoint commit replaces its own files
     — the ES sink's idempotent upsert by _id (kafana.http:76).
     """
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:

@@ -18,3 +18,63 @@ def spark():
     spark = get_spark("kafana-tests", master="local[4]", shuffle_partitions=4)
     yield spark
     spark.stop()
+
+
+class Crash(Exception):
+    """Raised by the ``crash`` fixture at the store step it was armed on."""
+
+
+class _CrashingOs:
+    """``os`` as ``kafana_spark.store`` sees it under the ``crash``
+    fixture: one armed step — the n-th ``rename``, the ``commit`` (the
+    link that publishes a log entry) or the first ``delete`` of a
+    parquet file — raises ``Crash``, or runs ``action`` just before the
+    real call. It fires once; everything else is plain ``os``."""
+
+    #: pytest imports this file apart from ``tests.conftest``, so tests
+    #: catch the fixture's own class: ``crash.Crash``
+    Crash = Crash
+
+    def __init__(self):
+        self.step = None
+
+    def arm(self, step: str, n: int = 1, action=None) -> None:
+        self.step, self.n, self.action = step, n, action
+
+    def __getattr__(self, name):
+        return getattr(os, name)
+
+    def _hit(self, step: str) -> None:
+        if self.step != step:
+            return
+        self.n -= 1
+        if self.n:
+            return
+        self.step = None
+        if self.action is None:
+            raise Crash(step)
+        self.action()
+
+    def rename(self, src, dst):
+        self._hit("rename")
+        os.rename(src, dst)
+
+    def link(self, src, dst):
+        self._hit("commit")
+        os.link(src, dst)
+
+    def remove(self, path):
+        if str(path).endswith(".parquet"):
+            self._hit("delete")
+        os.remove(path)
+
+
+@pytest.fixture
+def crash(monkeypatch):
+    """Crash injection for the store's filesystem steps; see
+    ``_CrashingOs``."""
+    import kafana_spark.store as store
+
+    proxy = _CrashingOs()
+    monkeypatch.setattr(store, "os", proxy)
+    return proxy

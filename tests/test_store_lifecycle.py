@@ -1,15 +1,22 @@
-"""Store lifecycle (compaction + retention) and skew utilities."""
+"""Store lifecycle (compaction, merge, retention, crashes and races on the
+commit log) and skew utilities."""
 
 from __future__ import annotations
 
 import glob
+import os
+import shutil
+from urllib.parse import unquote, urlparse
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafana_spark.ingest import enrich, events_as_kafka_records
 from kafana_spark.operators.skew import salted_agg, salted_join
 from kafana_spark.sources.tables import load_table
-from kafana_spark.store import compact, read_store, retention, write_store
+from kafana_spark.store import (
+    compact, merge_upsert, read_store, retention, write_store,
+)
 from tests.conftest import SF_SMOKE
 
 
@@ -153,149 +160,224 @@ def test_merge_upsert_updates_inserts_and_leaves_rest_untouched(
     assert after == untouched
 
 
-def test_merge_recovers_interrupted_swap(spark, tmp_path):
-    """A crash between the two swap renames parks a partition under the
-    hidden .merge-old.<ds> name; the next merge restores it before
-    staging anything. Covers the legacy suffix park name and a stale
-    .merge-tmp staging dir from the crashed merge too."""
-    import os
-    import shutil
+def _rows(spark, store):
+    """(_id, key, ds) of every row in the store's snapshot, sorted."""
+    return sorted((r._id, r.key, str(r.ds)) for r in
+                  read_store(spark, store, dedup=False)
+                  .select("_id", "key", "ds").collect())
 
-    from kafana_spark.store import merge_upsert, with_store_partitions
 
-    store = str(tmp_path / "store")
-    ev = load_table(spark, SF_SMOKE, "events").limit(400)
-    docs = enrich(events_as_kafka_records(ev))
+def _live_files(spark, store):
+    """Local paths of the snapshot's files."""
+    return {os.path.realpath(unquote(urlparse(u).path))
+            for u in read_store(spark, store, dedup=False).inputFiles()}
+
+
+def _assert_no_leftovers(spark, store):
+    """Every parquet file on disk is a snapshot file, and no staged
+    write is left behind."""
+    on_disk = {os.path.realpath(f) for f in parquet_files(store)}
+    assert on_disk == _live_files(spark, store)
+    assert glob.glob(os.path.join(store, "_staging", "*")) == []
+
+
+def _events_docs(spark, n=200):
+    return enrich(events_as_kafka_records(
+        load_table(spark, SF_SMOKE, "events").limit(n)))
+
+
+def _replay_setup(spark, store):
+    """A committed batch replayed whole: same rows, fresh files."""
+    docs = _events_docs(spark)
+    write_store(docs, store, "b0")
+    return lambda: write_store(docs, store, "b0"), lambda pre: pre
+
+
+def _compact_setup(spark, store):
+    docs = _events_docs(spark)
+    write_store(docs, store, "b0")
+    write_store(docs, store, "b1")   # several small files per partition
+    return lambda: compact(spark, store), lambda pre: pre
+
+
+def _merge_setup(spark, store):
+    docs = _events_docs(spark, 400)
     write_store(docs, store)
-    total = docs.count()
+    victim = min(r._id for r in docs.select("_id").collect())
+    upd = (docs.where(F.col("_id") == victim)
+           .withColumn("key", F.lit("RECOVERED")))
+    return (lambda: merge_upsert(spark, store, upd),
+            lambda pre: sorted((i, "RECOVERED" if i == victim else k, d)
+                               for i, k, d in pre))
 
-    # simulate the crash window: live dir parked away, staged dir lost
-    full = with_store_partitions(docs)
-    topic, ds = full.select("topic", "ds").distinct().orderBy("ds") \
-        .collect()[0]
-    tdir = os.path.join(store, f"topic={topic}")
-    os.rename(os.path.join(tdir, f"ds={ds}"),
-              os.path.join(tdir, f".merge-old.ds={ds}"))
 
-    # also leave a completed-swap leftover on another partition, under
-    # the legacy (pre-hidden) suffix name a crashed old version wrote
-    other = full.select("topic", "ds").distinct().orderBy("ds") \
-        .collect()[-1]
-    done = os.path.join(store, f"topic={other.topic}", f"ds={other.ds}")
-    shutil.copytree(done, done + ".merge-old")
+def _retention_setup(spark, store):
+    write_store(_events_docs(spark), store)
+    cutoff = sorted({d for _, _, d in _rows(spark, store)})[1]
+    return (lambda: retention(store, cutoff),
+            lambda pre: [r for r in pre if r[2] >= cutoff])
 
-    # and the staging dir the crashed merge abandoned mid-write
-    stale_tmp = store + ".merge-tmp"
-    os.makedirs(os.path.join(stale_tmp, f"topic={topic}", f"ds={ds}"))
-    with open(os.path.join(stale_tmp, f"topic={topic}", f"ds={ds}",
-                           "part-junk.parquet"), "wb") as fh:
+
+#: op → setup(spark, store): builds the store, returns the call and
+#: the post-call rows as a function of the pre-call rows
+SETUPS = {"write_store": _replay_setup, "compact": _compact_setup,
+          "merge_upsert": _merge_setup, "retention": _retention_setup}
+
+
+@pytest.mark.parametrize("op,step", [
+    (op, step) for op in SETUPS for step in ("rename", "commit", "delete")
+    if (op, step) != ("retention", "rename")])     # retention renames nothing
+def test_crash_shows_one_snapshot_and_retry_lands(spark, tmp_path, crash,
+                                                  op, step):
+    """A crash before the commit (mid-move or at the log link) leaves
+    exactly the pre-call rows readable — no half-moved batch, no
+    missing store; a crash in the post-commit delete leaves exactly the
+    post-call rows. Re-running the call lands the post-call rows and
+    deletes everything the crashed attempt left behind."""
+    store = str(tmp_path / "store")
+    call, expect = SETUPS[op](spark, store)
+    pre = _rows(spark, store)
+    pre_files = _live_files(spark, store)
+    crash.arm(step, n=2 if step == "rename" else 1)
+    with pytest.raises(crash.Crash):
+        call()
+    assert _rows(spark, store) == (expect(pre) if step == "delete" else pre)
+
+    call()
+
+    assert _rows(spark, store) == expect(pre)
+    assert _live_files(spark, store) != pre_files   # the retry committed
+    _assert_no_leftovers(spark, store)
+
+
+def test_merge_recovers_interrupted_swap(spark, tmp_path, crash):
+    """A merge that crashed between moving its files into the partitions
+    leaves the pre-merge snapshot readable; the next merge — with other
+    updates — lands its own rows and deletes the crashed one's moved
+    files and the junk it abandoned in its staging dir."""
+    store = str(tmp_path / "store")
+    docs = _events_docs(spark, 400)
+    write_store(docs, store)
+    ids = sorted(r._id for r in docs.select("_id").collect())
+    pre = _rows(spark, store)
+
+    crash.arm("rename", n=2)
+    with pytest.raises(crash.Crash):
+        merge_upsert(spark, store, docs.where(F.col("_id") == ids[0])
+                     .withColumn("key", F.lit("CRASHED")))
+    assert _rows(spark, store) == pre
+    junk = os.path.join(store, "_staging", "merge", "part-junk.parquet")
+    os.makedirs(os.path.dirname(junk), exist_ok=True)
+    with open(junk, "wb") as fh:
         fh.write(b"not a parquet file")
 
-    upd = (docs.limit(1).withColumn("key", F.lit("RECOVERED")))
-    merge_upsert(spark, store, upd)
+    merge_upsert(spark, store, docs.where(F.col("_id") == ids[-1])
+                 .withColumn("key", F.lit("RECOVERED")))
 
-    leftovers = [p for t in os.listdir(store) if t.startswith("topic=")
-                 for p in os.listdir(os.path.join(store, t))
-                 if "merge-old" in p]
-    assert leftovers == []
-    assert not os.path.isdir(stale_tmp)    # stale staging dir replaced
-    got = read_store(spark, store)
-    assert got.count() == total            # parked partition restored
-    assert got.where(F.col("key") == "RECOVERED").count() == 1
-
-
-def test_read_store_recovers_and_hides_crash_artifacts(spark, tmp_path):
-    """Between a crash and the next merge, read_store must neither see
-    the parked copy as a partition (hidden dot-prefix) nor miss the
-    partition whose swap was interrupted (read-time recovery)."""
-    import os
-    import shutil
-
-    from kafana_spark.store import with_store_partitions
-
-    store = str(tmp_path / "store")
-    ev = load_table(spark, SF_SMOKE, "events").limit(400)
-    docs = enrich(events_as_kafka_records(ev))
-    write_store(docs, store)
-    total = docs.count()
-
-    full = with_store_partitions(docs)
-    parts = full.select("topic", "ds").distinct().orderBy("ds").collect()
-    assert len(parts) >= 2
-
-    # completed-swap crash: live dir + parked stale copy side by side —
-    # the hidden name keeps the duplicate rows out of partition discovery
-    t0, d0 = parts[0]
-    live0 = os.path.join(store, f"topic={t0}", f"ds={d0}")
-    shutil.copytree(live0,
-                    os.path.join(store, f"topic={t0}", f".merge-old.ds={d0}"))
-
-    # interrupted-swap crash on another partition: only the parked copy
-    # exists — read-time recovery must restore it before the scan
-    t1, d1 = parts[-1]
-    tdir1 = os.path.join(store, f"topic={t1}")
-    os.rename(os.path.join(tdir1, f"ds={d1}"),
-              os.path.join(tdir1, f".merge-old.ds={d1}"))
-
-    got = read_store(spark, store, dedup=False)
-    assert got.count() == total
-    assert got.where(F.col("ds") == d1).count() > 0
-    assert dict(got.groupBy("_id").count()
-                .where(F.col("count") > 1).collect()) == {}
-
-
-def test_reader_skips_recovery_while_merge_marker_fresh(spark, tmp_path):
-    """A reader racing a LIVE merge must not mistake the in-flight
-    park/rename window for a crash: with a fresh .merge-inprogress
-    marker, _recover_merge stands down and leaves parked dirs alone;
-    once the marker goes stale (crashed merge), recovery proceeds."""
-    import os
-    import time
-
-    from kafana_spark.store import (
-        MERGE_MARKER, _recover_merge, with_store_partitions,
-    )
-
-    store = str(tmp_path / "store")
-    ev = load_table(spark, SF_SMOKE, "events").limit(200)
-    docs = enrich(events_as_kafka_records(ev))
-    write_store(docs, store)
-
-    full = with_store_partitions(docs)
-    topic, ds = full.select("topic", "ds").distinct().orderBy("ds") \
-        .collect()[0]
-    tdir = os.path.join(store, f"topic={topic}")
-    parked = os.path.join(tdir, f".merge-old.ds={ds}")
-    os.rename(os.path.join(tdir, f"ds={ds}"), parked)
-
-    marker = os.path.join(store, MERGE_MARKER)
-    with open(marker, "w") as fh:
-        fh.write("test")
-
-    # fresh marker → no recovery, parked dir untouched
-    assert _recover_merge(store) == []
-    assert os.path.isdir(parked)
-
-    # stale marker → treated as crash debris: cleared, swap rolled back
-    old = time.time() - 7200
-    os.utime(marker, (old, old))
-    rolled = _recover_merge(store)
-    assert rolled and not os.path.exists(marker)
-    assert not os.path.isdir(parked)
-    assert os.path.isdir(os.path.join(tdir, f"ds={ds}"))
+    assert _rows(spark, store) == sorted(
+        (i, "RECOVERED" if i == ids[-1] else k, d) for i, k, d in pre)
+    _assert_no_leftovers(spark, store)
 
 
 def test_merge_upsert_clears_its_marker(spark, tmp_path):
-    """A completed merge leaves no marker behind (readers must not be
-    blind to genuine crashes for the staleness window)."""
-    import os
-
-    from kafana_spark.store import MERGE_MARKER, merge_upsert
-
+    """A completed merge leaves no in-flight state behind: its staging
+    dir is gone and the files it replaced are deleted, so every parquet
+    file on disk is a snapshot file."""
     store = str(tmp_path / "store")
-    ev = load_table(spark, SF_SMOKE, "events").limit(200)
-    docs = enrich(events_as_kafka_records(ev))
+    docs = _events_docs(spark)
     write_store(docs, store)
+    before = set(parquet_files(store))
+
     merge_upsert(spark, store, docs.limit(1).withColumn(
         "key", F.lit("UPD")))
-    assert not os.path.exists(os.path.join(store, MERGE_MARKER))
+
+    assert not os.path.exists(os.path.join(store, "_staging", "merge"))
+    assert set(parquet_files(store)) != before
+    _assert_no_leftovers(spark, store)
+
+
+def test_append_during_compact_survives(spark, tmp_path, crash):
+    """A batch committed between compact's snapshot read and its commit
+    stays in the store."""
+    store = str(tmp_path / "store")
+    docs = _events_docs(spark)
+    even = F.col("offset") % 2 == 0
+    write_store(docs.where(even), store, "even")
+    crash.arm("rename", action=lambda: write_store(
+        docs.where(~even), store, "odd"))
+
+    compact(spark, store)
+
+    got = _rows(spark, store)
+    assert len(got) == 200
+    assert {i for i, _, _ in got} \
+        == {r._id for r in docs.select("_id").collect()}
+    _assert_no_leftovers(spark, store)
+
+
+def test_racing_commits_both_land(spark, tmp_path, crash):
+    """Two appends that read the same snapshot race for one log version:
+    the loser replays the winner's entry and commits the next one."""
+    store = str(tmp_path / "store")
+    docs = _events_docs(spark)
+    even = F.col("offset") % 2 == 0
+    crash.arm("commit", action=lambda: write_store(
+        docs.where(even), store, "even"))
+
+    write_store(docs.where(~even), store, "odd")
+
+    assert len(glob.glob(os.path.join(store, "_log", "*.json"))) == 2
+    assert len(_rows(spark, store)) == 200
+    _assert_no_leftovers(spark, store)
+
+
+def test_compact_conflicts_when_its_files_were_removed(spark, tmp_path,
+                                                       crash):
+    """A maintenance commit whose removed files a newer commit already
+    removed raises instead of resurrecting rows; a retry then lands on
+    the newer snapshot and clears the loser's files."""
+    from kafana_spark.store import CommitConflict
+
+    store = str(tmp_path / "store")
+    write_store(_events_docs(spark), store)
+    crash.arm("rename", action=lambda: retention(store, "9999-12-31"))
+
+    with pytest.raises(CommitConflict):
+        compact(spark, store)
+
+    assert _rows(spark, store) == []
+    compact(spark, store)
+    assert _rows(spark, store) == []
+    _assert_no_leftovers(spark, store)
+
+def test_read_store_ignores_files_no_commit_lists(spark, tmp_path):
+    store = str(tmp_path / "store")
+    write_store(_events_docs(spark), store)
+    f = parquet_files(store)[0]
+    shutil.copy(f, os.path.join(os.path.dirname(f), "part-stray.parquet"))
+    assert read_store(spark, store, dedup=False).count() == 200
+
+
+def test_empty_snapshot_reads_empty_with_stored_schema(spark, tmp_path):
+    store = str(tmp_path / "store")
+    write_store(_events_docs(spark), store)
+    schema = read_store(spark, store).schema
+
+    assert retention(store, "9999-12-31")     # every day goes
+
+    got = read_store(spark, store)
+    assert got.count() == 0
+    assert got.schema == schema
+    assert parquet_files(store) == []
+
+
+def test_retention_rejects_non_iso_cutoff(spark, tmp_path):
+    """A cutoff compared as a string must be a canonical ISO day:
+    "2026-1-5" and "20260105" sort after every 2020s day."""
+    store = str(tmp_path / "store")
+    write_store(_events_docs(spark), store)
+    pre = _rows(spark, store)
+    for cutoff in ("2026-1-5", "20260105", "2026-02-30", "today"):
+        with pytest.raises(ValueError):
+            retention(store, cutoff)
+    assert _rows(spark, store) == pre

@@ -182,41 +182,6 @@ def test_exactly_once_replayed_batch_overwrites(spark, tmp_path):
     assert sorted(r._id for r in replayed.select("_id").collect()) == first_ids
 
 
-def test_replay_heals_leftover_staging_and_half_moved_batch(spark, tmp_path):
-    """A crash mid-move leaves part of batch 0 in the store and a
-    staging dir behind; replaying the batch restores exactly its rows
-    and clears the staging dir."""
-    import glob
-    import os
-
-    records = records_df(spark)
-    staged = str(tmp_path / "staged")
-    records.write.parquet(staged)
-    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
-    _stream(spark, staged, records.schema, store, ckpt)
-    first_ids = sorted(r._id for r in
-                       read_store(spark, store, dedup=False)
-                       .select("_id").collect())
-
-    bid = stream_batch_id(ckpt, 0)
-    moved = sorted(glob.glob(f"{store}/topic=*/ds=*/{bid}-part-*.parquet"))
-    assert len(moved) >= 2
-    for f in moved[::2]:          # half the batch never got moved
-        os.remove(f)
-    junk = os.path.join(store, "_staging", bid, "topic=x", "ds=2024-01-01")
-    os.makedirs(junk)
-    with open(os.path.join(junk, "part-junk.parquet"), "wb") as fh:
-        fh.write(b"not a parquet file")
-    assert read_store(spark, store, dedup=False).count() < 200
-
-    write_store(enrich(records), store, bid)
-
-    healed = read_store(spark, store, dedup=False)
-    assert healed.count() == 200
-    assert sorted(r._id for r in healed.select("_id").collect()) == first_ids
-    assert not os.path.exists(os.path.join(store, "_staging", bid))
-
-
 def test_two_streams_with_own_checkpoints_keep_both(spark, tmp_path):
     """Two streams into one store must not replace each other's batches
     (the sink's batch id is scoped by checkpoint, not epoch alone)."""
