@@ -1369,7 +1369,8 @@ def unigram_logprob(df: DataFrame, id_col: str = "doc_id",
     # Deriving vocab from per_doc as well was measured and REJECTED:
     # the extra differently-keyed exchanges cost more at bench SF
     # than the saved scan (x71 1.35x, x110 1.20x interleaved).
-    total = vocab.groupBy().agg(F.sum("cnt").alias("n"))
+    total = vocab.groupBy().agg(
+        F.coalesce(F.sum("cnt"), F.lit(0)).alias("n"))  # 0 on empty input
     per_doc = h.groupBy(id_col, "h").agg(F.count(F.lit(1)).alias("c"))
     cost_u = F.round((F.log(F.col("n")) - F.log(F.col("cnt")))
                      * F.lit(float(UNIGRAM_FP))).cast("long")
@@ -1426,8 +1427,8 @@ def bigram_logprob(df: DataFrame, train_pred: "F.Column",
     # V = |c1| are the same integers the direct aggregate computed,
     # and the re-aggregation rides c1's exchange instead of
     # re-exploding the train corpus.
-    tot = c1.groupBy().agg(F.sum("c1").alias("n1"),
-                           F.count(F.lit(1)).alias("nv"))
+    tot = c1.groupBy().agg(F.coalesce(F.sum("c1"), F.lit(0)).alias("n1"),
+                           F.count(F.lit(1)).alias("nv"))  # 0, 0 if empty
     c2 = (train.select(F.explode(grams(F.col(text_col), 2)).alias("g"))
           .select(portable_hash64(F.col("g")).alias("h2"))
           .groupBy("h2").agg(F.count(F.lit(1)).alias("c2")))

@@ -19,7 +19,10 @@ docker-compose.yml:72-78). Design:
   on ``key``/``_id`` go only on the files ``compact``/``merge_upsert``
   rewrite.
 - idempotency on replay (ES upsert by _id, kafana.http:76): a replayed
-  batch id replaces its own files, and reads dedup by ``_id``.
+  batch id replaces its own files, and ``compact`` keeps one row per
+  ``_id``. Its log entry marks the snapshot's ``_id``s unique, and
+  ``read_store(dedup=True)`` runs ``dropDuplicates("_id")`` only on a
+  snapshot that is not so marked (appended to since the last compact).
 - "latest state per key" is a VIEW over the changelog (README.md:11:
   "rather a change log than a table"), ordered by (partition, offset)
   within key — Kafka ordering is per-partition, so offset, not
@@ -84,10 +87,12 @@ class CommitConflict(RuntimeError):
 @dataclass
 class _Snapshot:
     """The store at ``version``: live files (store-relative path → its
-    ``topic``/``ds``), stored schema, and the entries replayed."""
+    ``topic``/``ds``), stored schema, whether its ``_id``s are unique,
+    and the entries replayed."""
     version: int = -1
     files: dict = field(default_factory=dict)
     schema: str | None = None
+    unique_ids: bool = False
     entries: list = field(default_factory=list)
 
     def apply(self, entry: dict) -> None:
@@ -95,6 +100,8 @@ class _Snapshot:
             self.files.pop(p, None)
         self.files.update(entry["add"])
         self.version, self.schema = entry["version"], entry["schema"]
+        # entries written before the flag existed promise nothing
+        self.unique_ids = entry.get("unique_ids", False)
         self.entries.append(entry)
 
 
@@ -134,7 +141,12 @@ def _commit(base: str, snap: _Snapshot, op: str, add: dict,
     advance ``snap`` to it. On a lost race the newer entries are
     replayed and the commit retried: a batch re-derives the files it
     replaces, so appends never conflict; other commits raise
-    ``CommitConflict`` if a file they remove is already gone."""
+    ``CommitConflict`` if a file they remove is already gone.
+
+    The entry's ``unique_ids`` says no two live rows share an ``_id``:
+    true after a ``compact`` that rewrote every live file, inherited
+    through a ``retention`` (removing files keeps ids unique), false
+    after an append or a merge."""
     remove = set(remove)
     os.makedirs(os.path.join(base, LOG_DIR), exist_ok=True)
     tmp = os.path.join(base, LOG_DIR, f".{uuid.uuid4().hex}.tmp")
@@ -148,10 +160,14 @@ def _commit(base: str, snap: _Snapshot, op: str, add: dict,
                     f"{op} on {base}: a newer commit removed its files")
             entry = {"version": snap.version + 1, "op": op, "batch": batch,
                      "schema": schema or snap.schema, "add": add,
-                     "remove": sorted(remove)}
+                     "remove": sorted(remove),
+                     "unique_ids": op == "retention" and snap.unique_ids}
             if op == "compact":     # the whole live set: replay starts here
-                entry["add"] = {p: v for p, v in snap.files.items()
-                                if p not in remove} | add
+                kept = {p: v for p, v in snap.files.items()
+                        if p not in remove}
+                entry["add"] = kept | add
+                # a batch appended during the rewrite may repeat its ids
+                entry["unique_ids"] = not kept
             with open(tmp, "w") as fh:
                 json.dump(entry, fh)
                 fh.flush()
@@ -286,14 +302,16 @@ def read_store(spark: SparkSession, path: str, dedup: bool = True) -> DataFrame:
     (an empty snapshot reads as an empty frame; files no commit lists
     are never seen); optionally dedup replayed records by _id.
 
-    Dedup-on-read mirrors the ES sink's idempotent upsert (same _id ⇒
-    one logical document). All replays of an _id are byte-identical by
-    construction, so any winner is correct.
+    Dedup mirrors the ES sink's idempotent upsert (same _id ⇒ one
+    logical document). All replays of an _id are byte-identical by
+    construction, so any winner is correct. A snapshot the log marks
+    ``unique_ids`` (``compact`` deduplicated it at write) is returned
+    as the plain file scan; any other pays a ``dropDuplicates`` shuffle.
     """
     base = path.rstrip("/")
     snap = _snapshot(base)
     df = _read(spark, base, snap.schema, snap.files)
-    if not dedup:
+    if not dedup or snap.unique_ids:
         return df
     return df.dropDuplicates(["_id"])
 
@@ -311,6 +329,14 @@ def compact(spark: SparkSession, path: str,
     ``maxRecordsPerFile`` re-splits partitions that exceed the target
     so file size stays bounded on the high side too.
 
+    The same shuffle drops replayed records: rows are deduplicated on
+    (topic, ds, _id) inside each task, which needs no second exchange.
+    That equals dedup by ``_id`` alone, since ``_id`` is
+    topic+partition+offset and names one Kafka record whose bytes, and
+    so whose timestamp and ``ds``, every replay repeats. The commit
+    marks the snapshot ``unique_ids`` so reads skip their own dedup —
+    unless a batch was appended between the read and the commit.
+
     ``cluster_by`` sorts rows within each rewritten partition (a
     Z-ORDER-lite): parquet row-group min/max stats on the sort columns
     become disjoint ranges, so needle queries (`key = X`) skip most
@@ -322,8 +348,11 @@ def compact(spark: SparkSession, path: str,
     """
     base = path.rstrip("/")
     snap = _snapshot(base)
+    # same _id ⇒ same record ⇒ same ds: dedup within the (topic, ds)
+    # clustering is exact and rides the repartition's exchange
     out = _read(spark, base, snap.schema, snap.files) \
-        .repartition(*PARTITION_COLS)
+        .repartition(*PARTITION_COLS) \
+        .dropDuplicates([*PARTITION_COLS, "_id"])
     if cluster_by:
         out = out.sortWithinPartitions(*PARTITION_COLS, *cluster_by)
     _land(base, snap, "compact", "compact",

@@ -136,7 +136,8 @@ def dedup_stream(records: DataFrame, id_cols: tuple[str, ...] = ("_id",),
                  time_col: str = "timestamp") -> DataFrame:
     """Exactly-once-style in-stream dedup: drop redelivered records by
     deterministic id within the watermark horizon (unbounded exact
-    dedup belongs to the store's dedup-on-read).
+    dedup belongs to the store: ``compact``, and ``read_store`` on a
+    snapshot appended to since).
 
     Uses ``dropDuplicatesWithinWatermark``, not ``dropDuplicates``:
     with plain dropDuplicates the watermark only evicts state when the

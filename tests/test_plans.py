@@ -135,6 +135,53 @@ def test_store_prunes_topic_partitions(spark, tmp_path):
     assert m, plan
 
 
+def _redelivered_store(spark, path):
+    from kafana_spark.ingest import enrich, events_as_kafka_records
+    from kafana_spark.sources.tables import load_table
+    from kafana_spark.store import write_store
+
+    docs = enrich(events_as_kafka_records(
+        load_table(spark, SF_SMOKE, "events").limit(100)))
+    for _ in range(2):      # every record delivered twice
+        write_store(docs, path)
+
+
+def test_compacted_store_reads_without_dedup_shuffle(spark, tmp_path):
+    """compact leaves one row per _id and its log entry says so, so a
+    deduplicating read of the compacted store is a bare file scan."""
+    from kafana_spark.store import compact, read_store
+
+    store = str(tmp_path / "store")
+    _redelivered_store(spark, store)
+    assert "Exchange" in plan_of(read_store(spark, store))
+
+    compact(spark, store)
+
+    plan = plan_of(read_store(spark, store))
+    assert "Exchange" not in plan, plan
+    assert "Aggregate" not in plan, plan
+
+
+def test_compact_dedups_inside_its_one_shuffle(spark, tmp_path,
+                                               monkeypatch):
+    """compact's dedup on (topic, ds, _id) is satisfied by the
+    repartition on (topic, ds): the write plans exactly one Exchange."""
+    import kafana_spark.store as store_mod
+
+    store = str(tmp_path / "store")
+    _redelivered_store(spark, store)
+    written, bloomed = [], store_mod._bloomed
+    monkeypatch.setattr(store_mod, "_bloomed",
+                        lambda w: written.append(w._df) or bloomed(w))
+
+    store_mod.compact(spark, store)
+
+    (df,) = written
+    plan = plan_of(df)
+    assert "Aggregate" in plan, plan
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
+
+
 # ----------------------------------------------------- whole-stage codegen
 
 def test_q09_metrics_is_codegen_hash_agg(spark):

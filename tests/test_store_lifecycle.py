@@ -32,20 +32,27 @@ def parquet_files(path):
     return glob.glob(f"{path}/**/*.parquet", recursive=True)
 
 
+def _by_id(df):
+    return sorted(df.collect(), key=lambda r: r._id)
+
+
 def test_compact_reduces_files_preserves_rows(spark, tmp_path):
+    """Compaction keeps one row per ``_id`` (the 4 appends are full
+    redeliveries) and changes no deduplicated read."""
     store = tmp_path / "store"
     _build_store(spark, store, appends=4)
     before_files = len(parquet_files(store))
     before = read_store(spark, str(store), dedup=False)
-    before_count = before.count()
     before_ids = set(r._id for r in before.select("_id").distinct().collect())
+    before_rows = _by_id(read_store(spark, str(store)))
 
     compact(spark, str(store))
 
     after = read_store(spark, str(store), dedup=False)
-    assert after.count() == before_count
+    assert after.count() == len(before_ids)
     assert set(r._id for r in after.select("_id").distinct().collect()) \
         == before_ids
+    assert _by_id(read_store(spark, str(store))) == before_rows
     assert len(parquet_files(store)) < before_files
 
 
@@ -197,7 +204,7 @@ def _compact_setup(spark, store):
     docs = _events_docs(spark)
     write_store(docs, store, "b0")
     write_store(docs, store, "b1")   # several small files per partition
-    return lambda: compact(spark, store), lambda pre: pre
+    return lambda: compact(spark, store), lambda pre: sorted(set(pre))
 
 
 def _merge_setup(spark, store):
@@ -298,7 +305,8 @@ def test_merge_upsert_clears_its_marker(spark, tmp_path):
 
 def test_append_during_compact_survives(spark, tmp_path, crash):
     """A batch committed between compact's snapshot read and its commit
-    stays in the store."""
+    stays in the store, beside the rewritten files — so the compact
+    entry cannot mark the snapshot's ``_id``s unique."""
     store = str(tmp_path / "store")
     docs = _events_docs(spark)
     even = F.col("offset") % 2 == 0
@@ -312,6 +320,7 @@ def test_append_during_compact_survives(spark, tmp_path, crash):
     assert len(got) == 200
     assert {i for i, _, _ in got} \
         == {r._id for r in docs.select("_id").collect()}
+    assert not _unique_ids(store)
     _assert_no_leftovers(spark, store)
 
 
@@ -381,3 +390,101 @@ def test_retention_rejects_non_iso_cutoff(spark, tmp_path):
         with pytest.raises(ValueError):
             retention(store, cutoff)
     assert _rows(spark, store) == pre
+
+
+# ------------------------------------------- the log's unique_ids flag
+
+def _unique_ids(store):
+    from kafana_spark.store import _snapshot
+
+    return _snapshot(store).unique_ids
+
+
+def _assert_dedup_read_exact(spark, store):
+    """``read_store(dedup=True)`` holds the rows of the same snapshot
+    passed through ``dropDuplicates(["_id"])``: same ``_id``s, same
+    count, so no ``_id`` appears twice."""
+    got = read_store(spark, store)
+    want = read_store(spark, store, dedup=False).dropDuplicates(["_id"])
+    ids = lambda df: sorted(r._id for r in df.select("_id").collect())
+    assert ids(got) == ids(want)
+    assert got.count() == want.count()
+
+
+def _redelivered_store(spark, store):
+    """200 docs, then a replay of their first 50 under a new batch id:
+    50 ``_id``s are stored twice."""
+    docs = _events_docs(spark)
+    write_store(docs, store, "b0")
+    write_store(docs.orderBy("_id").limit(50), store, "redelivery")
+    return docs
+
+
+def test_compact_marks_snapshot_ids_unique(spark, tmp_path):
+    store = str(tmp_path / "store")
+    _redelivered_store(spark, store)
+    assert read_store(spark, store, dedup=False).count() == 250
+    assert not _unique_ids(store)
+    _assert_dedup_read_exact(spark, store)
+
+    compact(spark, store)
+
+    assert _unique_ids(store)
+    assert read_store(spark, store, dedup=False).count() == 200
+    _assert_dedup_read_exact(spark, store)
+
+
+def test_append_after_compact_clears_unique_flag(spark, tmp_path):
+    """A replay appended after compaction repeats compacted ``_id``s, so
+    reads dedup again."""
+    store = str(tmp_path / "store")
+    docs = _redelivered_store(spark, store)
+    compact(spark, store)
+
+    write_store(docs.limit(30), store, "late-replay")
+
+    assert not _unique_ids(store)
+    assert read_store(spark, store, dedup=False).count() == 230
+    assert read_store(spark, store).count() == 200
+    _assert_dedup_read_exact(spark, store)
+
+
+def test_retention_keeps_and_merge_clears_unique_flag(spark, tmp_path):
+    store = str(tmp_path / "store")
+    docs = _redelivered_store(spark, store)
+    compact(spark, store)
+    cutoff = sorted({d for _, _, d in _rows(spark, store)})[1]
+
+    assert retention(store, cutoff)
+
+    assert _unique_ids(store)
+    _assert_dedup_read_exact(spark, store)
+
+    kept = docs.where(F.to_date("timestamp") >= cutoff)
+    merge_upsert(spark, store,
+                 kept.limit(1).withColumn("key", F.lit("MERGED")))
+
+    assert not _unique_ids(store)
+    _assert_dedup_read_exact(spark, store)
+
+
+def test_unflagged_compact_entry_still_dedups_on_read(spark, tmp_path):
+    """A ``compact`` entry with no ``unique_ids`` field — as written
+    before the flag, when compaction kept duplicates — promises
+    nothing: reads of its snapshot dedup."""
+    import json
+
+    from kafana_spark.store import _entry_path, _snapshot
+
+    store = str(tmp_path / "store")
+    _redelivered_store(spark, store)
+    snap = _snapshot(store)
+    with open(_entry_path(store, snap.version + 1), "w") as fh:
+        json.dump({"version": snap.version + 1, "op": "compact",
+                   "batch": None, "schema": snap.schema,
+                   "add": snap.files, "remove": []}, fh)
+
+    assert not _unique_ids(store)
+    assert read_store(spark, store, dedup=False).count() == 250
+    assert read_store(spark, store).count() == 200
+    _assert_dedup_read_exact(spark, store)

@@ -349,6 +349,20 @@ def test_bigram_logprob_closed_form_with_backoff(spark):
     assert out2[2].avg_u == exp2 // 2
 
 
+def test_bigram_logprob_empty_train_slice(spark):
+    """An empty training slice totals N = 0 tokens (coalesced, not a
+    NULL sum) over V = 0 types: every document is still scored, every
+    bigram backs off, and the cost is NULL because ln(N + V) = ln(0)
+    is undefined — never an error."""
+    df = spark.createDataFrame([(0, "a b a"), (1, "b a")],
+                               "doc_id long, text string")
+    out = {r.doc_id: r for r in
+           T.bigram_logprob(df, F.lit(False)).collect()}
+    assert {i: (r.n_scored, r.n_backoff) for i, r in out.items()} \
+        == {0: (3, 2), 1: (2, 1)}
+    assert all(r.score_u is None and r.avg_u is None for r in out.values())
+
+
 def test_bigram_logprob_heldout_docs_back_off(spark):
     from kafana_spark.operators.text import bigram_logprob
     from kafana_spark.sources.tables import load_table
