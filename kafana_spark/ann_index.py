@@ -6,12 +6,17 @@ deployment computes them at write time and answers every query from the
 stored index (exactly how FAISS/Milvus-style IVF serving works, and the
 ANN twin of the dedup index in ``dedup_index.py``).
 
-Layout under one index root:
+Layout under one index root — each table written and read through
+``store.py``'s commit log (a build is one ``replace_table``, a new
+batch one ``append_table`` under its id, a read the table's snapshot):
 
 - ``<path>/centroids``   — (cid, cv, cnrm): the coarse quantizer.
 - ``<path>/assignments`` — (vec_id, v, nrm, cid): one row per corpus
   vector per assigned cell (n_assign > 1 duplicates boundary vectors
   into adjacent cells for recall).
+
+A rebuild replaces every batch appended against the old quantizer,
+and a failed write or redelivery leaves the previous snapshot live.
 
 Queries read both tables and run probe + rank only: no KMeans refit, no
 corpus re-assignment, no norms recomputed. Appending a new batch
@@ -25,18 +30,20 @@ store roundtrip against the same DuckDB oracle as x08.
 
 from __future__ import annotations
 
-import os
-import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafana_spark import batch_manifest as bm
 from kafana_spark.functions import l2_norm
 from kafana_spark.operators.similarity import (
     _ivf_assign, _ivf_centroids, _ivf_probe_rank, _km_assign, _km_corpus,
     _km_loop, _lsh_qcodes, _lsh_rank, _pq_adc_rank, _pq_refine, _vectors,
-    _with_norm, lsh_codes, lsh_planes, pq_codebooks, pq_encode,
+    _with_norm, binary_signs, lsh_codes, lsh_planes, pq_codebooks,
+    pq_encode,
 )
+from kafana_spark.store import append_table, read_table, replace_table
 
 CENT_DIR = "centroids"
 LLOYD_STATS_DIR = "lloyd_stats"
@@ -48,21 +55,8 @@ LSH_PLANE_DIR = "lsh_planes"
 LSH_CODE_DIR = "lsh_codes"
 
 
-def _clear_batched_dir(path: str) -> None:
-    """Drop a batch=<id>-partitioned index subtree before an overwrite
-    rebuild. mode='overwrite' on ``.../batch=base`` replaces only that
-    subdirectory — batch=<uuid>/<epoch> partitions left by
-    append_*/stream sinks would survive the rebuild while holding rows
-    computed against the OLD quantizer/codebooks, silently corrupting
-    every query in the documented rebuild-on-drift flow (ADVICE.md r5).
-    Local-FS delete, same stance as store.py's merge machinery."""
-    if os.path.isdir(path):
-        shutil.rmtree(path)
-
-
 def build_ann_index(df: DataFrame, path: str, centroid_mod: int = 40,
                     method: str = "modulo", n_assign: int = 1,
-                    mode: str = "overwrite",
                     n_vectors: int | None = None,
                     centroid_k: int | None = None) -> None:
     """Fit the quantizer and persist centroids + cell assignments.
@@ -77,17 +71,9 @@ def build_ann_index(df: DataFrame, path: str, centroid_mod: int = 40,
     corpus = _with_norm(_vectors(df))
     centroids = _ivf_centroids(df, corpus, method, centroid_mod,
                                n_vectors, centroid_k)
-    centroids.write.mode(mode).parquet(f"{path}/{CENT_DIR}")
-    # loads land under batch=<id> so batch builds, appends and the
-    # streaming sink share ONE layout (bare files next to batch= dirs
-    # would break parquet partition discovery); readers drop the column
-    if mode == "overwrite":
-        from kafana_spark.batch_manifest import clear_fingerprints
-
-        _clear_batched_dir(f"{path}/{ASSIGN_DIR}")
-        clear_fingerprints(path)
-    _ivf_assign(corpus, centroids, n_assign) \
-        .write.mode(mode).parquet(f"{path}/{ASSIGN_DIR}/batch=base")
+    replace_table(centroids, f"{path}/{CENT_DIR}")
+    replace_table(_ivf_assign(corpus, centroids, n_assign),
+                  f"{path}/{ASSIGN_DIR}")
 
 
 def append_ann_index(df: DataFrame, path: str, n_assign: int = 1,
@@ -105,32 +91,22 @@ def append_ann_index(df: DataFrame, path: str, n_assign: int = 1,
     tripwire runs here: the same rows re-appended under a fresh
     batch id (the uuid-retry footgun) raise instead of bloating the
     probed cells."""
-    import uuid
-
-    from kafana_spark import batch_manifest as bm
-
-    spark = df.sparkSession
     bid = batch or uuid.uuid4().hex
-    n, fp = bm.batch_fingerprint(df, "vec_id")
-    bm.enforce_fresh_batch(spark, path, bid, n, fp)
-    centroids = spark.read.parquet(f"{path}/{CENT_DIR}")
-    corpus = _with_norm(_vectors(df))
-    _ivf_assign(corpus, centroids, n_assign) \
-        .write.mode("overwrite") \
-        .parquet(f"{path}/{ASSIGN_DIR}/batch={bid}")
-    bm.write_fingerprint(spark, path, bid, n, fp)
+    table = f"{path}/{ASSIGN_DIR}"
+    meta = bm.fresh_batch_meta(df, "vec_id", table, bid)
+    centroids = read_table(df.sparkSession, f"{path}/{CENT_DIR}")
+    append_table(_ivf_assign(_with_norm(_vectors(df)), centroids,
+                             n_assign), table, bid, meta=meta)
 
 
 def ann_index_stream_sink(path: str, n_assign: int = 1):
     """foreachBatch sink keeping the IVF index fresh under streaming
     ingest: each micro-batch of new vectors is assigned against the
     STORED centroids (no refit — the append_ann_index contract) and
-    written to its own ``batch=<epoch_id>`` subdirectory with
-    mode=overwrite, so an at-least-once redelivery REPLACES its
-    partition instead of duplicating assignment rows (duplicates would
-    surface the same vec_id twice per probed cell). Same idempotency
-    contract as the store sink ingest_stream_exactly_once, which keys
-    its files by batch id instead of a ``batch=`` dir.
+    appended as batch ``<epoch_id>``, so an at-least-once redelivery
+    REPLACES that batch's files instead of duplicating assignment rows
+    (duplicates would surface the same vec_id twice per probed cell) —
+    the store sink's idempotency contract.
     """
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
@@ -145,24 +121,21 @@ def ann_topk_from_index(spark: SparkSession, path: str,
                         n_probe: int = 3) -> DataFrame:
     """Approximate top-k from the stored index: probe n_probe cells per
     query, rank members of those cells only. Reads centroids (tiny,
-    broadcast) and the probed slice of the assignment table. drop("batch")
-    is a no-op on batch-built indexes and strips the partition column a
-    stream-built (batch=<id>-partitioned) index adds."""
-    centroids = spark.read.parquet(f"{path}/{CENT_DIR}")
-    assigned = spark.read.parquet(f"{path}/{ASSIGN_DIR}").drop("batch")
+    broadcast) and the probed slice of the assignment table."""
+    centroids = read_table(spark, f"{path}/{CENT_DIR}")
+    assigned = read_table(spark, f"{path}/{ASSIGN_DIR}")
     return _ivf_probe_rank(assigned, centroids, queries, k, n_probe)
 
 
 def build_lloyd_index(df: DataFrame, path: str, centroid_mod: int = 40,
                       n_iters: int = 3, dim: int = 64,
-                      n_assign: int = 1,
-                      mode: str = "overwrite") -> None:
+                      n_assign: int = 1) -> None:
     """Lloyd-refined IVF index WITH the walk's exact sufficient
     statistics persisted — the maintainable variant of
     ``build_ann_index(method='lloyd')`` (which runs the same walk but
     keeps only the centroids, so a later refresh would have to
     re-read the base corpus). Layout adds
-    ``<path>/lloyd_stats/batch=base``: (cid, cnt, s) with s the
+    ``<path>/lloyd_stats``: (cid, cnt, s) with s the
     per-dimension µunit sums — the sufficient statistics of every
     cell, so refreshed centroids are EXACT over base+appends without
     touching base data again."""
@@ -173,20 +146,13 @@ def build_lloyd_index(df: DataFrame, path: str, centroid_mod: int = 40,
         "cid bigint, cv array<double>")
     centroids = cdf.select("cid", "cv",
                            l2_norm(F.col("cv")).alias("cnrm"))
-    centroids.write.mode(mode).parquet(f"{path}/{CENT_DIR}")
-    if mode == "overwrite":
-        from kafana_spark.batch_manifest import clear_fingerprints
-
-        _clear_batched_dir(f"{path}/{LLOYD_STATS_DIR}")
-        _clear_batched_dir(f"{path}/{ASSIGN_DIR}")
-        clear_fingerprints(path)
-    spark.createDataFrame(
+    replace_table(centroids, f"{path}/{CENT_DIR}")
+    replace_table(spark.createDataFrame(
         [(c, cnt, s) for c, (cnt, s) in sorted(stats.items())],
-        "cid bigint, cnt bigint, s array<bigint>") \
-        .write.mode(mode) \
-        .parquet(f"{path}/{LLOYD_STATS_DIR}/batch=base")
-    _ivf_assign(_with_norm(_vectors(df)), centroids, n_assign) \
-        .write.mode(mode).parquet(f"{path}/{ASSIGN_DIR}/batch=base")
+        "cid bigint, cnt bigint, s array<bigint>"),
+        f"{path}/{LLOYD_STATS_DIR}")
+    replace_table(_ivf_assign(_with_norm(_vectors(df)), centroids,
+                              n_assign), f"{path}/{ASSIGN_DIR}")
 
 
 def _lloyd_batch_stats(batch_df: DataFrame, centroids: DataFrame,
@@ -213,30 +179,25 @@ def lloyd_stats_stream_sink(path: str, n_assign: int = 1,
     """foreachBatch sink maintaining the Lloyd index under streaming
     ingest: each micro-batch is (a) assigned against the STORED
     centroids and appended probe-servable, and (b) reduced to its
-    exact sufficient statistics in its own ``batch=<epoch_id>`` dir
-    with mode=overwrite — an at-least-once redelivery REPLACES its
-    partition, so the later centroid refresh counts every vector
-    once (the ann/dedup/token sink idempotency discipline)."""
+    exact sufficient statistics, both appended as batch
+    ``<epoch_id>`` — an at-least-once redelivery REPLACES that batch's
+    files, so the later centroid refresh counts every vector once (the
+    ann/dedup/token sink idempotency discipline)."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        from kafana_spark import batch_manifest as bm
-
-        spark = batch_df.sparkSession
+        bid, table = str(epoch_id), f"{path}/{ASSIGN_DIR}"
         # the stats are SUMMED at refresh time (event_index-class
         # merge law), so the fingerprint tripwire guards them too:
         # the same vectors under a fresh epoch would double the
         # sufficient statistics and skew every refreshed centroid
-        n, fp = bm.batch_fingerprint(batch_df, "vec_id")
-        bm.enforce_fresh_batch(spark, path, str(epoch_id), n, fp)
-        centroids = spark.read.parquet(f"{path}/{CENT_DIR}")
-        _ivf_assign(_with_norm(_vectors(batch_df)), centroids,
-                    n_assign) \
-            .write.mode("overwrite") \
-            .parquet(f"{path}/{ASSIGN_DIR}/batch={epoch_id}")
-        _lloyd_batch_stats(batch_df, centroids, dim) \
-            .write.mode("overwrite") \
-            .parquet(f"{path}/{LLOYD_STATS_DIR}/batch={epoch_id}")
-        bm.write_fingerprint(spark, path, str(epoch_id), n, fp)
+        meta = bm.fresh_batch_meta(batch_df, "vec_id", table, bid)
+        centroids = read_table(batch_df.sparkSession,
+                               f"{path}/{CENT_DIR}")
+        append_table(_ivf_assign(_with_norm(_vectors(batch_df)),
+                                 centroids, n_assign),
+                     table, bid, meta=meta)
+        append_table(_lloyd_batch_stats(batch_df, centroids, dim),
+                     f"{path}/{LLOYD_STATS_DIR}", bid)
 
     return _sink
 
@@ -250,14 +211,13 @@ def refresh_lloyd_centroids(spark: SparkSession, path: str,
     cu[j] = floor(s[j]/cnt + 0.5) — EXACT over everything ever
     ingested, no base re-read, no walk re-run.
 
-    Overwrites ``<path>/centroids`` (stored assignments keep their
+    Replaces ``<path>/centroids`` (stored assignments keep their
     cells — the online-IVF contract: probes route by the refreshed
     centroid, members move only on full rebuild) and returns the
     drift report (cid, n_total, shift_u) vs the replaced centroids.
 
-    Scale: the fold is |cells|·dim combinable rows; the merged table
-    is driver-materialized (it is centroid-sized) before the
-    overwrite so the read and the write never race on the same path.
+    Scale: the fold is |cells|·dim combinable rows, collected to the
+    driver (it is centroid-sized).
 
     ``dim`` is derived from the stored arrays; passing it is only a
     cross-check (raises on mismatch with the built index).
@@ -265,7 +225,7 @@ def refresh_lloyd_centroids(spark: SparkSession, path: str,
     import math
 
     old = {int(r.cid): [int(x) for x in r.cu] for r in
-           spark.read.parquet(f"{path}/{CENT_DIR}")
+           read_table(spark, f"{path}/{CENT_DIR}")
            .select("cid", F.transform(
                "cv", lambda x: F.floor(x * 1_000_000.0 + 0.5)
                .cast("bigint")).alias("cu")).collect()}
@@ -279,8 +239,7 @@ def refresh_lloyd_centroids(spark: SparkSession, path: str,
             f"dim={dim} does not match the stored index "
             f"(centroid arrays have {stored_dim} dimensions)")
     dim = stored_dim
-    stats = (spark.read.parquet(f"{path}/{LLOYD_STATS_DIR}")
-             .drop("batch")
+    stats = (read_table(spark, f"{path}/{LLOYD_STATS_DIR}")
              .select("cid", "cnt", F.posexplode("s").alias("i", "si"))
              .groupBy("cid", "i")
              .agg(F.sum("si").alias("s"), F.sum("cnt").alias("cnt"))
@@ -306,32 +265,26 @@ def refresh_lloyd_centroids(spark: SparkSession, path: str,
         [(c, cv) for c, _, cv, _ in rows],
         "cid bigint, cv array<double>") \
         .select("cid", "cv", l2_norm(F.col("cv")).alias("cnrm"))
-    cents.write.mode("overwrite").parquet(f"{path}/{CENT_DIR}")
+    replace_table(cents, f"{path}/{CENT_DIR}")
     return spark.createDataFrame(
         [(c, n, s) for c, n, _, s in rows],
         "cid bigint, n_total bigint, shift_u bigint").orderBy("cid")
 
 
 def build_pq_index(df: DataFrame, path: str, dim: int = 64,
-                   m_total: int = 16, ksub: int = 32, train_mod: int = 3,
-                   mode: str = "overwrite") -> None:
+                   m_total: int = 16, ksub: int = 32,
+                   train_mod: int = 3) -> None:
     """Persist PQ codebooks + codes + refine vectors — the
     FAISS-IVFPQ+refine serving shape: the ADC scan reads m_total
     1-byte codes per vector (~dim/2× smaller than float32); the
     vectors table exists only for the fixed-size candidate re-rank.
     """
-    cb = pq_codebooks(df, dim, m_total, ksub, train_mod)
-    cb.write.mode(mode).parquet(f"{path}/{PQ_CB_DIR}")
-    codes = pq_encode(df, df.sparkSession.read.parquet(
-        f"{path}/{PQ_CB_DIR}"), m_total, dim // m_total)
-    if mode == "overwrite":
-        from kafana_spark.batch_manifest import clear_fingerprints
-
-        _clear_batched_dir(f"{path}/{PQ_CODE_DIR}")
-        _clear_batched_dir(f"{path}/{PQ_VEC_DIR}")
-        clear_fingerprints(path)
-    codes.write.mode(mode).parquet(f"{path}/{PQ_CODE_DIR}/batch=base")
-    _vectors(df).write.mode(mode).parquet(f"{path}/{PQ_VEC_DIR}/batch=base")
+    replace_table(pq_codebooks(df, dim, m_total, ksub, train_mod),
+                  f"{path}/{PQ_CB_DIR}")
+    cb = read_table(df.sparkSession, f"{path}/{PQ_CB_DIR}")
+    replace_table(pq_encode(df, cb, m_total, dim // m_total),
+                  f"{path}/{PQ_CODE_DIR}")
+    replace_table(_vectors(df), f"{path}/{PQ_VEC_DIR}")
 
 
 def append_pq_index(df: DataFrame, path: str, dim: int = 64,
@@ -341,27 +294,20 @@ def append_pq_index(df: DataFrame, path: str, dim: int = 64,
     Pass ``batch`` for idempotent re-runs; random id otherwise.
     Fingerprint tripwire as in ``append_ann_index`` (serve paths
     dedup candidates, so only the fresh-id retry footgun raises)."""
-    import uuid
-
-    from kafana_spark import batch_manifest as bm
-
-    spark = df.sparkSession
-    cb = spark.read.parquet(f"{path}/{PQ_CB_DIR}")
+    cb = read_table(df.sparkSession, f"{path}/{PQ_CB_DIR}")
     bid = batch or uuid.uuid4().hex
-    n, fp = bm.batch_fingerprint(df, "vec_id")
-    bm.enforce_fresh_batch(spark, path, bid, n, fp)
-    pq_encode(df, cb, m_total, dim // m_total) \
-        .write.mode("overwrite").parquet(f"{path}/{PQ_CODE_DIR}/batch={bid}")
-    _vectors(df).write.mode("overwrite") \
-        .parquet(f"{path}/{PQ_VEC_DIR}/batch={bid}")
-    bm.write_fingerprint(spark, path, bid, n, fp)
+    table = f"{path}/{PQ_CODE_DIR}"
+    meta = bm.fresh_batch_meta(df, "vec_id", table, bid)
+    append_table(pq_encode(df, cb, m_total, dim // m_total), table, bid,
+                 meta=meta)
+    append_table(_vectors(df), f"{path}/{PQ_VEC_DIR}", bid)
 
 
 def pq_index_stream_sink(path: str, dim: int = 64, m_total: int = 16):
     """foreachBatch sink for the PQ index: encode each new micro-batch
-    against the STORED codebooks, land codes + refine vectors in
-    per-batch ``batch=<epoch_id>`` dirs (overwrite ⇒ redelivery-safe,
-    same discipline as ann_index_stream_sink)."""
+    against the STORED codebooks, append codes + refine vectors as
+    batch ``<epoch_id>`` (redelivery replaces it, same discipline as
+    ann_index_stream_sink)."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         append_pq_index(batch_df, path, dim, m_total,
@@ -379,36 +325,30 @@ def pq_topk_from_index(spark: SparkSession, path: str,
     against the stored codes, then (with ``pool``) an exact re-rank
     of the pool from the stored refine vectors. ``pool=None`` serves
     raw ADC without touching any vector."""
-    cb = spark.read.parquet(f"{path}/{PQ_CB_DIR}")
-    codes = spark.read.parquet(f"{path}/{PQ_CODE_DIR}").drop("batch")
+    cb = read_table(spark, f"{path}/{PQ_CB_DIR}")
+    codes = read_table(spark, f"{path}/{PQ_CODE_DIR}")
     sub = dim // m_total
     if pool is None:
         return _pq_adc_rank(codes, cb, queries, k, m_total, sub)
     cands = _pq_adc_rank(codes, cb, queries, pool, m_total, sub)
-    vectors = spark.read.parquet(f"{path}/{PQ_VEC_DIR}").drop("batch")
+    vectors = read_table(spark, f"{path}/{PQ_VEC_DIR}")
     return _pq_refine(cands, vectors, queries, k, dim)
 
 
 def build_lsh_index(df: DataFrame, path: str, n_tables: int = 6,
-                    n_bits: int = 4, anchor_mod: int = 10, dim: int = 64,
-                    mode: str = "overwrite") -> None:
+                    n_bits: int = 4, anchor_mod: int = 10,
+                    dim: int = 64) -> None:
     """Persist LSH planes + sign-signature codes — the third stored ANN
     family (IVF cells, PQ codes, LSH buckets). Planes are a pure
     function of the corpus's anchor pool (RNG-free), so the stored
     index reproduces the inline ``lsh_topk`` exactly; the codes table
     carries its vectors, making query time a (t, code) equi-join plus
     the in-bucket rank with no second corpus read."""
-    planes = lsh_planes(df, n_tables, n_bits, anchor_mod)
-    planes.write.mode(mode).parquet(f"{path}/{LSH_PLANE_DIR}")
-    if mode == "overwrite":
-        from kafana_spark.batch_manifest import clear_fingerprints
-
-        _clear_batched_dir(f"{path}/{LSH_CODE_DIR}")
-        clear_fingerprints(path)
-    codes = lsh_codes(_with_norm(_vectors(df)),
-                      df.sparkSession.read.parquet(f"{path}/{LSH_PLANE_DIR}"),
-                      dim)
-    codes.write.mode(mode).parquet(f"{path}/{LSH_CODE_DIR}/batch=base")
+    replace_table(lsh_planes(df, n_tables, n_bits, anchor_mod),
+                  f"{path}/{LSH_PLANE_DIR}")
+    planes = read_table(df.sparkSession, f"{path}/{LSH_PLANE_DIR}")
+    replace_table(lsh_codes(_with_norm(_vectors(df)), planes, dim),
+                  f"{path}/{LSH_CODE_DIR}")
 
 
 def append_lsh_index(df: DataFrame, path: str, dim: int = 64,
@@ -417,25 +357,19 @@ def append_lsh_index(df: DataFrame, path: str, dim: int = 64,
     append-only like the IVF assignments; planes never drift (they are
     anchored to the original corpus sample), rebuild to re-anchor.
     Fingerprint tripwire as in ``append_ann_index``."""
-    import uuid
-
-    from kafana_spark import batch_manifest as bm
-
-    spark = df.sparkSession
     bid = batch or uuid.uuid4().hex
-    n, fp = bm.batch_fingerprint(df, "vec_id")
-    bm.enforce_fresh_batch(spark, path, bid, n, fp)
-    planes = spark.read.parquet(f"{path}/{LSH_PLANE_DIR}")
-    lsh_codes(_with_norm(_vectors(df)), planes, dim) \
-        .write.mode("overwrite") \
-        .parquet(f"{path}/{LSH_CODE_DIR}/batch={bid}")
-    bm.write_fingerprint(spark, path, bid, n, fp)
+    table = f"{path}/{LSH_CODE_DIR}"
+    meta = bm.fresh_batch_meta(df, "vec_id", table, bid)
+    planes = read_table(df.sparkSession, f"{path}/{LSH_PLANE_DIR}")
+    append_table(lsh_codes(_with_norm(_vectors(df)), planes, dim),
+                 table, bid, meta=meta)
 
 
 def lsh_index_stream_sink(path: str, dim: int = 64):
     """foreachBatch sink for the LSH index: sign each micro-batch
-    against the STORED planes into ``batch=<epoch_id>`` (overwrite ⇒
-    redelivery-safe, same discipline as ann_index_stream_sink)."""
+    against the STORED planes, appended as batch ``<epoch_id>``
+    (redelivery replaces it, same discipline as
+    ann_index_stream_sink)."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         append_lsh_index(batch_df, path, dim, batch=str(epoch_id))
@@ -449,8 +383,8 @@ def lsh_topk_from_index(spark: SparkSession, path: str,
     """LSH top-k from the stored index: query signatures against the
     stored planes (tiny, broadcast), candidates from the stored codes'
     (t, code) buckets, exact cosine rank in-bucket."""
-    planes = spark.read.parquet(f"{path}/{LSH_PLANE_DIR}")
-    codes = spark.read.parquet(f"{path}/{LSH_CODE_DIR}").drop("batch")
+    planes = read_table(spark, f"{path}/{LSH_PLANE_DIR}")
+    codes = read_table(spark, f"{path}/{LSH_CODE_DIR}")
     return _lsh_rank(codes, _lsh_qcodes(queries, planes, dim), k)
 
 
@@ -466,7 +400,7 @@ def semantic_pairs_from_index(spark: SparkSession, path: str,
     serves BOTH similarity search and semantic dedup."""
     from kafana_spark.operators.dedup import _blocked_cosine_pairs
 
-    assigned = spark.read.parquet(f"{path}/{ASSIGN_DIR}").drop("batch")
+    assigned = read_table(spark, f"{path}/{ASSIGN_DIR}")
     e = assigned.select(F.col("cid").alias("cell"), "vec_id", "v")
     return _blocked_cosine_pairs(e, float(threshold), block_size)
 
@@ -480,8 +414,8 @@ def knn_graph_from_index(spark: SparkSession, path: str, k: int = 5,
     propagation, outlier triage) all amortize one build. Queries are
     reconstructed from the stored assignment rows themselves
     (vec_id, v), so no corpus re-read either."""
-    centroids = spark.read.parquet(f"{path}/{CENT_DIR}")
-    assigned = spark.read.parquet(f"{path}/{ASSIGN_DIR}").drop("batch")
+    centroids = read_table(spark, f"{path}/{CENT_DIR}")
+    assigned = read_table(spark, f"{path}/{ASSIGN_DIR}")
     queries = (assigned.groupBy("vec_id")
                .agg(F.any_value("v").alias("v"))
                .select(F.col("vec_id").alias("qid"), "v"))
@@ -510,7 +444,7 @@ def knn_clusters_from_index(spark: SparkSession, path: str,
     machinery. The vec_id universe is the stored index itself."""
     from kafana_spark.operators.dedup import clusters_from_mutual
 
-    assigned = spark.read.parquet(f"{path}/{ASSIGN_DIR}").drop("batch")
+    assigned = read_table(spark, f"{path}/{ASSIGN_DIR}")
     ids = assigned.select("vec_id").distinct()
     mu = mutual_knn_from_index(spark, path, k, n_probe)
     return clusters_from_mutual(ids, mu, min_cos, max_iter)
@@ -552,42 +486,33 @@ BIN_WORDS_DIR = "binary_words"
 BIN_VEC_DIR = "binary_vectors"
 
 
-def build_binary_index(df: DataFrame, path: str, dim: int = 64,
-                       mode: str = "overwrite",
-                       batch: str = "base") -> None:
+def _binary_tables(df: DataFrame, dim: int):
+    """(sign words, rerank vectors) of a batch, with their tables."""
+    return ((binary_signs(df, dim), BIN_WORDS_DIR),
+            (_vectors(df), BIN_VEC_DIR))
+
+
+def build_binary_index(df: DataFrame, path: str, dim: int = 64) -> None:
     """Persist the sign words + full-precision rerank vectors — the
     binary twin of the PQ layout (codes + refine vectors): the
     Hamming scan reads dim/8 bytes per vector from
     ``binary_words``; only pooled candidates touch
     ``binary_vectors``. Packing is append-only (no trained state, so
     appends never drift — unlike IVF/PQ there is nothing to refresh)."""
-    from kafana_spark.operators.similarity import _vectors, binary_signs
-
-    if mode == "overwrite":
-        from kafana_spark.batch_manifest import clear_fingerprints
-
-        _clear_batched_dir(f"{path}/{BIN_WORDS_DIR}")
-        _clear_batched_dir(f"{path}/{BIN_VEC_DIR}")
-        clear_fingerprints(path)
-    binary_signs(df, dim).write.mode("overwrite") \
-        .parquet(f"{path}/{BIN_WORDS_DIR}/batch={batch}")
-    _vectors(df).write.mode("overwrite") \
-        .parquet(f"{path}/{BIN_VEC_DIR}/batch={batch}")
+    for frame, sub in _binary_tables(df, dim):
+        replace_table(frame, f"{path}/{sub}")
 
 
 def append_binary_index(df_new: DataFrame, path: str, batch: str,
                         dim: int = 64) -> None:
     """Pack and append a new batch — stateless encode, idempotent
-    per-batch overwrite (the ann/dedup sink discipline).
+    per-batch replace (the ann/dedup sink discipline).
     Fingerprint tripwire as in ``append_ann_index``."""
-    from kafana_spark import batch_manifest as bm
-
-    spark = df_new.sparkSession
-    n, fp = bm.batch_fingerprint(df_new, "vec_id")
-    bm.enforce_fresh_batch(spark, path, batch, n, fp)
-    build_binary_index(df_new, path, dim, mode="append_batch",
-                       batch=batch)
-    bm.write_fingerprint(spark, path, batch, n, fp)
+    meta = bm.fresh_batch_meta(df_new, "vec_id",
+                               f"{path}/{BIN_WORDS_DIR}", batch)
+    for frame, sub in _binary_tables(df_new, dim):
+        append_table(frame, f"{path}/{sub}", batch,
+                     meta=meta if sub == BIN_WORDS_DIR else None)
 
 
 def binary_topk_from_index(spark: SparkSession, path: str,
@@ -601,8 +526,8 @@ def binary_topk_from_index(spark: SparkSession, path: str,
         hamming_topk_from_parts,
     )
 
-    words = spark.read.parquet(f"{path}/{BIN_WORDS_DIR}").drop("batch")
-    vecs = spark.read.parquet(f"{path}/{BIN_VEC_DIR}").drop("batch")
+    words = read_table(spark, f"{path}/{BIN_WORDS_DIR}")
+    vecs = read_table(spark, f"{path}/{BIN_VEC_DIR}")
     # dim cross-check against the stored word layout (the
     # refresh_lloyd_centroids discipline): serving dim=64 against an
     # index built at dim=128 would silently scan only the first half
@@ -621,8 +546,8 @@ def binary_topk_from_index(spark: SparkSession, path: str,
 
 def binary_index_stream_sink(path: str, dim: int = 64):
     """foreachBatch sink maintaining the binary index under streaming
-    ingest: per-epoch ``batch=<epoch_id>`` overwrite, so at-least-once
-    redelivery replaces its own partition."""
+    ingest: each micro-batch is appended as batch ``<epoch_id>``, so
+    at-least-once redelivery replaces its own files."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         append_binary_index(batch_df, path, batch=str(epoch_id),

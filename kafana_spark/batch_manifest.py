@@ -15,93 +15,80 @@ Two guards, matched to what each family's store can support:
 
 - **Fingerprint tripwire** (all families, one tiny agg per append):
   a ``(n, bit_xor(xxhash64(id)))`` content fingerprint per batch,
-  kept in ``<root>/_batch_fp/batch=<id>``. A NEW batch id carrying
-  an already-recorded fingerprint is the redelivery-under-a-fresh-id
-  footgun and raises; re-using the SAME batch id replaces its own
-  partition (idempotent, never raises). bit_xor is commutative and
-  overflow-free, so the fingerprint is partition-order independent;
-  ids are unique within a batch, so nothing self-cancels. Partial
-  overlaps pass (set fingerprints cannot see intersection) — that is
-  the exact check's job where the store permits one.
+  kept as the ``meta`` of the batch's append entry in the commit log
+  of the family's id table (``store.append_table``). A NEW batch id
+  carrying an already-recorded fingerprint is the
+  redelivery-under-a-fresh-id footgun and raises; re-using the SAME
+  batch id replaces its own files (idempotent, never raises). bit_xor
+  is commutative and overflow-free, so the fingerprint is
+  partition-order independent; ids are unique within a batch, so
+  nothing self-cancels. Partial overlaps pass (set fingerprints
+  cannot see intersection) — that is the exact check's job where the
+  store permits one.
 
 - **Exact disjointness** (dedup_index and gate_index only — their
   stores keep one row per id): a semi-join of the new batch's ids
-  against the stored id column; any hit raises. Cost is one
-  column-pruned scan of the stored ids per append — bounded and
-  honest at 100 TB (the id column of a 1e9-doc corpus is ~8 GB, read
-  once per append job). The ann_index family does NOT need it: every
-  serve path dedups candidates per (qid, vec_id), so duplicated
-  vectors cannot change a ranking; event_index stores only aggregate
-  rollups (no ids survive), so the fingerprint tripwire is the
-  strongest enforceable guard.
+  against the id column of the snapshot files the batch does not
+  own; any hit raises. Cost is one column-pruned scan of the stored
+  ids per append — bounded and honest at 100 TB (the id column of a
+  1e9-doc corpus is ~8 GB, read once per append job). The ann_index
+  family does NOT need it: every serve path dedups candidates per
+  (qid, vec_id), so duplicated vectors cannot change a ranking;
+  event_index stores only aggregate rollups (no ids survive), so the
+  fingerprint tripwire is the strongest enforceable guard.
 
-The manifest layout mirrors scd2_index's span manifest: one row per
-batch under ``batch=<id>``, overwritten with its batch (a replayed
-batch replaces manifest and data atomically enough for the
-at-least-once contract), cleared by base rebuilds alongside the data
-subtrees. Pre-manifest stores pass every check (nothing recorded to
-compare), so existing indexes keep serving.
+A rebuild (``store.replace_table``) starts the log's replay afresh,
+so the fingerprints of the batches it drops are forgotten with them.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-FP_DIR = "_batch_fp"
+from kafana_spark import store
 
 
-def batch_fingerprint(df: DataFrame,
-                      id_col: str) -> tuple[int, int | None]:
-    """(row count, bit_xor of xxhash64(id)) — one combinable agg."""
+def fresh_batch_meta(df: DataFrame, id_col: str, table: str,
+                     batch: str) -> dict:
+    """The batch's content fingerprint ``{"n", "fp"}`` (row count,
+    bit_xor of xxhash64(id) — one combinable agg), to be kept in its
+    append entry. Raises if another batch of ``table`` carries the
+    same fingerprint — the same rows are being re-appended under a
+    NEW batch id (a retried append that drew a fresh uuid), which
+    would double-count every row at serve time. Same-id redelivery
+    passes: it replaces its own files."""
     r = df.agg(F.count(F.lit(1)).alias("n"),
                F.expr(f"bit_xor(xxhash64(cast({id_col} as string)))")
                .alias("fp")).first()
-    return r.n, r.fp
-
-
-def write_fingerprint(spark: SparkSession, root: str, batch: str,
-                      n: int, fp: int | None) -> None:
-    spark.createDataFrame([(batch, n, fp)],
-                          "batch_id string, n long, fp long") \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(f"{root}/{FP_DIR}/batch={batch}")
-
-
-def enforce_fresh_batch(spark: SparkSession, root: str, batch: str,
-                        n: int, fp: int | None) -> None:
-    """Raise if another stored batch carries this exact content
-    fingerprint — the same rows are being re-appended under a NEW
-    batch id (a retried append that drew a fresh uuid), which would
-    double-count every row at serve time. Same-id redelivery passes:
-    it replaces its own partition."""
-    if n == 0:
-        return  # empty batch adds no rows to double-count
-    if not os.path.isdir(f"{root}/{FP_DIR}"):
-        return  # pre-manifest store: nothing recorded to compare
-    rows = spark.read.parquet(f"{root}/{FP_DIR}") \
-        .select("batch_id", "n", "fp").collect()
-    dupes = [r.batch_id for r in rows
-             if r.batch_id != batch and r.n == n and r.fp == fp]
+    meta = {"n": r.n, "fp": r.fp}
+    if not r.n:
+        return meta  # empty batch adds no rows to double-count
+    dupes = sorted(b for b, m in store.batch_meta(table).items()
+                   if b != batch and m == meta)
     if dupes:
         raise ValueError(
             f"batch {batch!r} has the same content fingerprint "
-            f"(n={n}) as stored batch(es) {dupes} — these look like "
+            f"(n={r.n}) as stored batch(es) {dupes} — these look like "
             f"the SAME rows re-appended under a new batch id, which "
             f"double-counts them at serve time; redeliver under the "
             f"original batch id (idempotent) or rebuild the base")
+    return meta
 
 
-def enforce_disjoint_ids(new_df: DataFrame, stored_ids: DataFrame,
+def enforce_disjoint_ids(new_df: DataFrame, table: str, batch: str,
                          id_col: str, what: str) -> None:
-    """Raise if any id in the new batch already exists in the store
-    (exact set-disjointness — the merge-law precondition for the
+    """Raise if any id in the new batch already exists in the snapshot
+    files of ``table`` that batch ``batch`` does not own (exact
+    set-disjointness — the merge-law precondition for the
     one-row-per-id families). One semi-join against the column-pruned
     stored id scan."""
+    if not store.table_files(table):
+        return  # nothing stored yet
+    stored = store.read_table(new_df.sparkSession, table,
+                              skip_batch=batch)
     hits = (new_df.select(F.col(id_col)).distinct()
-            .join(stored_ids.select(F.col(id_col)).distinct(),
+            .join(stored.select(F.col(id_col)).distinct(),
                   id_col, "semi")
             .limit(5).collect())
     if hits:
@@ -111,10 +98,3 @@ def enforce_disjoint_ids(new_df: DataFrame, stored_ids: DataFrame,
             f"(first few: {ids}) — batches must be id-disjoint or "
             f"the merged serve double-counts their rows; redeliver "
             f"under the original batch id or rebuild the base")
-
-
-def clear_fingerprints(root: str) -> None:
-    """Drop the fingerprint manifest (base rebuilds)."""
-    from kafana_spark.ann_index import _clear_batched_dir
-
-    _clear_batched_dir(f"{root}/{FP_DIR}")

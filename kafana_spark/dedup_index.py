@@ -16,10 +16,12 @@ Layout under one index root:
 - ``<path>/shingles``   — hashed 3-gram inverted index: (doc_id, h)
   parquet, 8-byte shingle hashes (see hashed_shingle_set).
 
-Both are append-only for new documents (per-doc functions — no global
-state), so daily-batch maintenance is one map-side pass over the new
-docs. Queries then run LSH banding + exact verify FROM the store,
-touching no text:
+Each table is written and read through ``store.py``'s commit log: a
+build is one ``replace_table`` per table, a batch one ``append_table``
+under its id, a read the table's snapshot. All are append-only for
+new documents (per-doc functions — no global state), so daily-batch
+maintenance is one map-side pass over the new docs. Queries then run
+LSH banding + exact verify FROM the store, touching no text:
 
 - ``near_dup_from_index``  — all verified pairs in the index.
 - ``incremental_from_index`` — NEW batch × indexed corpus, the
@@ -32,14 +34,18 @@ tests/test_dedup_index.py.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafana_spark import batch_manifest as bm
 from kafana_spark.operators.dedup import (
     candidate_pairs, hashed_shingle_set, jaccard_verify, lsh_bands,
     minhash_signature,
 )
 from kafana_spark.session import serve_materialize
+from kafana_spark.store import BASE, read_table, write_table
 
 SIG_DIR = "signatures"
 BAND_DIR = "bands"
@@ -47,68 +53,44 @@ SH_DIR = "shingles"
 
 
 def build_dedup_index(df: DataFrame, path: str, text_col: str = "text",
-                      mode: str = "overwrite",
-                      batch: str = "base") -> None:
-    """Sign + shingle the corpus once and persist both tables.
+                      batch: str = BASE) -> None:
+    """Sign + shingle the corpus once and persist the three tables.
 
     One map-side pass over the text (shingle explode), one combinable
     aggregation (signature mins); writes are partitioned however the
     input is — at 100 TB partition the input by ingest day and this
     becomes the per-day index build.
 
-    Every load lands under a ``batch=<id>`` subdirectory so batch
-    builds, manual appends and the streaming sink share ONE layout
-    (mixing bare files with batch= dirs would break parquet partition
-    discovery); readers drop the resulting partition column.
+    The default ``batch=BASE`` is a full rebuild: one ``replace_table``
+    per table drops every appended batch, whose surviving (doc_id, h)
+    shingle rows would otherwise double-count every jaccard
+    intersection those docs participate in (ADVICE.md r5). Any other
+    id appends that batch (a redelivery replaces its own files).
 
-    A full rebuild (mode='overwrite' with the default batch='base')
-    clears the whole index tree first: overwriting only batch=base
-    would leave batch=<uuid>/<epoch> partitions from prior appends/
-    streaming sinks in place, and their surviving (doc_id, h) shingle
-    rows would double-count every jaccard intersection those docs
-    participate in (ADVICE.md r5). Per-batch overwrites (appends,
-    stream redeliveries) still replace only their own partition.
-
-    Incremental loads (batch != 'base') ENFORCE the merge-law
-    precondition (r8 verdict #6): batches must be doc-disjoint, or
-    the duplicated (doc_id, h) shingle rows silently inflate every
-    jaccard the doc participates in. Two guards (batch_manifest.py):
-    the content-fingerprint tripwire (same rows under a NEW batch id
-    — the uuid-retry footgun — raises) and an exact doc_id semi-join
-    against the stored signatures (one row per doc, column-pruned).
-    Same-id redelivery replaces its own partition and passes both.
+    Incremental loads ENFORCE the merge-law precondition (r8 verdict
+    #6): batches must be doc-disjoint, or the duplicated (doc_id, h)
+    shingle rows silently inflate every jaccard the doc participates
+    in. Two guards (batch_manifest.py): the content-fingerprint
+    tripwire (same rows under a NEW batch id — the uuid-retry footgun
+    — raises) and an exact doc_id semi-join against the stored
+    signatures of the other batches (one row per doc, column-pruned).
+    Same-id redelivery replaces its own files and passes both.
     """
-    from kafana_spark import batch_manifest as bm
-
-    spark = df.sparkSession
-    full_rebuild = mode == "overwrite" and batch == "base"
-    if full_rebuild:
-        from kafana_spark.ann_index import _clear_batched_dir
-
-        for sub in (SIG_DIR, BAND_DIR, SH_DIR):
-            _clear_batched_dir(f"{path}/{sub}")
-        bm.clear_fingerprints(path)
-    else:
-        n, fp = bm.batch_fingerprint(df, "doc_id")
-        bm.enforce_fresh_batch(spark, path, batch, n, fp)
-        import os
-
-        if n and os.path.isdir(f"{path}/{SIG_DIR}"):
-            stored = (spark.read.parquet(f"{path}/{SIG_DIR}")
-                      .where(F.col("batch").cast("string")
-                             != F.lit(batch)))
-            bm.enforce_disjoint_ids(df, stored, "doc_id",
+    sig_table = f"{path}/{SIG_DIR}"
+    meta = None
+    if batch != BASE:
+        meta = bm.fresh_batch_meta(df, "doc_id", sig_table, batch)
+        if meta["n"]:
+            bm.enforce_disjoint_ids(df, sig_table, batch, "doc_id",
                                     "dedup index")
-        bm.write_fingerprint(spark, path, batch, n, fp)
     sh = hashed_shingle_set(df, text_col=text_col)
     sig = minhash_signature(sh).persist()
     try:
-        sig.write.mode(mode).parquet(f"{path}/{SIG_DIR}/batch={batch}")
-        lsh_bands(sig).write.mode(mode) \
-            .parquet(f"{path}/{BAND_DIR}/batch={batch}")
+        write_table(sig, sig_table, batch, meta=meta)
+        write_table(lsh_bands(sig), f"{path}/{BAND_DIR}", batch)
     finally:
         sig.unpersist()
-    sh.write.mode(mode).parquet(f"{path}/{SH_DIR}/batch={batch}")
+    write_table(sh, f"{path}/{SH_DIR}", batch)
 
 
 def append_dedup_index(df: DataFrame, path: str,
@@ -118,9 +100,7 @@ def append_dedup_index(df: DataFrame, path: str,
     and shingles are per-doc functions, so no existing row changes).
     Each append gets its own batch id — pass one (ingest day, epoch)
     for idempotent re-runs, or let a random one be drawn."""
-    import uuid
-
-    build_dedup_index(df, path, text_col=text_col, mode="overwrite",
+    build_dedup_index(df, path, text_col=text_col,
                       batch=batch or uuid.uuid4().hex)
 
 
@@ -130,20 +110,17 @@ def dedup_index_stream_sink(path: str, text_col: str = "text"):
     ``stream.writeStream.foreachBatch(dedup_index_stream_sink(p))``.
 
     Idempotent under at-least-once redelivery, the contract the store
-    sink ``ingest_stream_exactly_once`` keeps by batch-id file names:
-    here each micro-batch lands in the index's own ``batch=<epoch_id>``
-    subdirectory with mode=overwrite, so a replayed batch REPLACES its
-    partition instead of appending a duplicate (a plain append would
-    double the (doc_id, h) shingle rows and inflate every jaccard
-    intersection the doc participates in). A crash mid-write heals the
-    same way: the retry overwrites whatever partial partition was left.
-    Readers see ``batch`` as an extra partition column; the from_index
-    query paths drop it.
+    sink keeps: each micro-batch is appended as batch ``<epoch_id>``,
+    so a replayed batch REPLACES its own files instead of appending a
+    duplicate (a plain append would double the (doc_id, h) shingle
+    rows and inflate every jaccard intersection the doc participates
+    in). A crash mid-write heals the same way: nothing was committed,
+    and the retry's commit replaces whatever the log holds for it.
     """
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         build_dedup_index(batch_df, path, text_col=text_col,
-                          mode="overwrite", batch=str(epoch_id))
+                          batch=str(epoch_id))
 
     return _sink
 
@@ -164,10 +141,8 @@ def near_dup_from_index(spark: SparkSession, path: str,
     ``bucket_cap`` — it bounds per-bucket pair fan-out and therefore
     the materialized checkpoint, at the documented recall trade.
     """
-    # drop is a no-op when the column is absent, so one reader serves
-    # both batch-built and stream-built (batch=<id>-partitioned) indexes
-    bands = spark.read.parquet(f"{path}/{BAND_DIR}").drop("batch")
-    sh = spark.read.parquet(f"{path}/{SH_DIR}").drop("batch")
+    bands = read_table(spark, f"{path}/{BAND_DIR}")
+    sh = read_table(spark, f"{path}/{SH_DIR}")
     # materialize the candidate list ONCE: jaccard_verify references
     # `pairs` from four places (cand-id prune, intersection join x2
     # via sh_v, final join), and as a lazy subplan each reference
@@ -252,7 +227,7 @@ def incremental_from_index(new: DataFrame, path: str,
         hashed_shingle_set(new, text_col=text_col), eager=False)
     new_ids = sh_new.select("doc_id").distinct()
     bn = lsh_bands(minhash_signature(sh_new))
-    bo = (spark.read.parquet(f"{path}/{BAND_DIR}").drop("batch")
+    bo = (read_table(spark, f"{path}/{BAND_DIR}")
           .join(F.broadcast(new_ids), "doc_id", "left_anti"))
     # materialized for the same reason as near_dup_from_index's pair
     # list: jaccard_verify references `cand` from four places, and as
@@ -266,7 +241,7 @@ def incremental_from_index(new: DataFrame, path: str,
                 F.greatest("a.doc_id", "b.doc_id").alias("db"))
         .where(F.col("da") < F.col("db"))
         .distinct(), eager=False)
-    sh_old = (spark.read.parquet(f"{path}/{SH_DIR}").drop("batch")
+    sh_old = (read_table(spark, f"{path}/{SH_DIR}")
               .join(F.broadcast(new_ids), "doc_id", "left_anti"))
     # ckpt_pairs=False: `cand` is the materialized checkpoint above
     return jaccard_verify(cand, sh_new.unionByName(sh_old), threshold,
@@ -279,33 +254,29 @@ GRAM_DIR = "grams"
 
 
 def build_substr_index(df: DataFrame, path: str, k: int | None = None,
-                       text_col: str = "text", mode: str = "overwrite",
-                       batch: str = "base") -> None:
+                       text_col: str = "text", batch: str = BASE) -> None:
     """Persist the positional k-gram index the ExactSubstr family
     shares: (doc_id, pos, h) — a pure per-document function, so the
-    same batch=<id> layout, append and rebuild discipline as the
-    minhash index above applies (full rebuilds clear stale batches;
-    per-batch overwrites stay incremental)."""
+    same commit, append and rebuild discipline as the minhash index
+    above applies (``batch=BASE`` replaces the table; any other id
+    appends that batch)."""
     from kafana_spark.operators.dedup import (
         EXSUB_K, positional_gram_index,
     )
 
-    if mode == "overwrite" and batch == "base":
-        from kafana_spark.ann_index import _clear_batched_dir
-
-        _clear_batched_dir(f"{path}/{GRAM_DIR}")
-    positional_gram_index(df, k or EXSUB_K, text_col=text_col) \
-        .write.mode(mode).parquet(f"{path}/{GRAM_DIR}/batch={batch}")
+    write_table(positional_gram_index(df, k or EXSUB_K, text_col=text_col),
+                f"{path}/{GRAM_DIR}", batch)
 
 
 def substr_index_stream_sink(path: str, k: int | None = None,
                              text_col: str = "text"):
-    """foreachBatch sink for the gram index — per-epoch ``batch=<id>``
-    overwrite, redelivery-safe like the other index sinks."""
+    """foreachBatch sink for the gram index — each micro-batch is
+    appended as batch ``<epoch_id>``, redelivery-safe like the other
+    index sinks."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         build_substr_index(batch_df, path, k, text_col=text_col,
-                           mode="overwrite", batch=str(epoch_id))
+                           batch=str(epoch_id))
 
     return _sink
 
@@ -320,5 +291,5 @@ def spans_from_index(spark: SparkSession, path: str,
     text is read."""
     from kafana_spark.operators.dedup import EXSUB_K, _spans_from_grams
 
-    g = spark.read.parquet(f"{path}/{GRAM_DIR}").drop("batch")
+    g = read_table(spark, f"{path}/{GRAM_DIR}")
     return _spans_from_grams(g, k or EXSUB_K, min_count=min_count)

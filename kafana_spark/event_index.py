@@ -6,15 +6,15 @@ the event stream to one of three TINY mergeable frames before any real
 work: the daily count series, the DISTINCT (user, day) activity frame,
 and the hourly (n_events, n_err) grid. At 100 TB the event scan is the
 whole cost — a production store maintains the rollups incrementally
-and serves every dashboard query from them. This index persists all
-three, batch-partitioned:
+and serves every dashboard query from them. This index persists them
+as one row set per batch:
 
-- ``<path>/daily/batch=<id>``     — (day, c): per-batch daily counts.
-- ``<path>/user_days/batch=<id>`` — (k, day): per-batch distinct
-  user-day activity.
-- ``<path>/hourly/batch=<id>``    — (hour, n_events, n_err).
-- ``<path>/type_hourly/batch=<id>`` — (hour, t, observed): per-type
-  hourly counts (the x205 metric-alert grid).
+- ``<path>/daily``       — (day, c): per-batch daily counts.
+- ``<path>/user_days``   — (k, day): per-batch distinct user-day
+  activity.
+- ``<path>/hourly``      — (hour, n_events, n_err).
+- ``<path>/type_hourly`` — (hour, t, observed): per-type hourly
+  counts (the x205 metric-alert grid).
 
 Mergeability is exact, not approximate: counts are distributive (sum
 of per-batch sums = global sum) and user-day rows are collapsed with
@@ -24,10 +24,11 @@ tails (events.acf_from_daily etc.), so the registry's stored twins
 hash-match the full-recompute oracles — the store roundtrip is proven
 lossless, the x57/x148/x172 price-list discipline.
 
-Batch layout matches dedup_index/ann_index/gate_index: every load
-lands under ``batch=<id>``; a base rebuild clears each subtree first;
-redelivering a batch id overwrites its own partition (idempotent), so
-the foreachBatch streaming sink is at-least-once safe.
+Every table is written and read through ``store.py``'s commit log,
+like dedup_index/ann_index/gate_index: a base build replaces each
+table, an append commits its rows as one batch, and redelivering a
+batch id replaces its own files (idempotent), so the foreachBatch
+streaming sink is at-least-once safe.
 """
 
 from __future__ import annotations
@@ -35,8 +36,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafana_spark import batch_manifest as bm
 from kafana_spark.operators import events as ev_ops
 from kafana_spark.operators.events import US_PER_DAY, US_PER_HOUR
+from kafana_spark.store import BASE, read_table, write_table
 
 DAILY_DIR = "daily"
 USER_DAYS_DIR = "user_days"
@@ -63,34 +66,23 @@ def _rollups(df: DataFrame, time_col: str, key_col: str,
     return daily, user_days, hourly, type_hourly
 
 
-def _write_rollups(rollups, path: str, batch: str) -> None:
-    daily, user_days, hourly, type_hourly = rollups
-    for frame, sub in ((daily, DAILY_DIR), (user_days, USER_DAYS_DIR),
-                       (hourly, HOURLY_DIR),
-                       (type_hourly, TYPE_HOURLY_DIR)):
-        frame.write.mode("overwrite") \
-            .parquet(f"{path}/{sub}/batch={batch}")
+def _write_rollups(rollups, path: str, batch: str,
+                   meta: dict | None = None) -> None:
+    for frame, sub in zip(rollups, (DAILY_DIR, USER_DAYS_DIR,
+                                    HOURLY_DIR, TYPE_HOURLY_DIR)):
+        write_table(frame, f"{path}/{sub}", batch,
+                    meta=meta if sub == DAILY_DIR else None)
 
 
 def build_event_index(df: DataFrame, path: str, *,
                       time_col: str = "ts", key_col: str = "user_id",
                       type_col: str = "event_type",
-                      err_type: str = "error",
-                      batch: str = "base") -> None:
+                      err_type: str = "error") -> None:
     """One pass over the events (three combinable aggregates sharing
-    the projected base frame), three rollup tables out. A base build
-    clears stale batch partitions from every subtree first."""
-    from kafana_spark.ann_index import _clear_batched_dir
-
-    if batch == "base":
-        from kafana_spark.batch_manifest import clear_fingerprints
-
-        for sub in (DAILY_DIR, USER_DAYS_DIR, HOURLY_DIR,
-                    TYPE_HOURLY_DIR):
-            _clear_batched_dir(f"{path}/{sub}")
-        clear_fingerprints(path)
+    the projected base frame), four rollup tables out, each replacing
+    the table's appended batches."""
     _write_rollups(_rollups(df, time_col, key_col, type_col,
-                            err_type), path, batch)
+                            err_type), path, BASE)
 
 
 def append_event_index(df_new: DataFrame, path: str, batch: str, *,
@@ -101,44 +93,40 @@ def append_event_index(df_new: DataFrame, path: str, batch: str, *,
     """Fold a new event batch into the rollups — the same three
     aggregates over ONLY the new rows; merging happens at serve time
     by summing per-batch partials (exact, no base re-read). A
-    redelivered batch id replaces its own partition.
+    redelivered batch id replaces its own files.
 
     The merge law needs ROW-DISJOINT batches (partial sums
     double-count duplicated events). The store keeps only aggregates
     — no ids survive to check exactly — so the enforceable guard is
     the content-fingerprint tripwire (r8 verdict #6): the same rows
     re-appended under a fresh batch id raise; same-id redelivery
-    replaces its own partition and passes. Partial overlaps remain
+    replaces its own files and passes. Partial overlaps remain
     the caller's contract (offset-partitioned ingest batches satisfy
     it by construction)."""
-    from kafana_spark import batch_manifest as bm
-
-    spark = df_new.sparkSession
-    n, fp = bm.batch_fingerprint(df_new, seq_col)
-    bm.enforce_fresh_batch(spark, path, batch, n, fp)
+    meta = bm.fresh_batch_meta(df_new, seq_col, f"{path}/{DAILY_DIR}",
+                               batch)
     _write_rollups(_rollups(df_new, time_col, key_col, type_col,
-                            err_type), path, batch)
-    bm.write_fingerprint(spark, path, batch, n, fp)
+                            err_type), path, batch, meta)
 
 
 def daily_from_store(spark: SparkSession, path: str) -> DataFrame:
     """(day, c) merged across batches — per-batch counts are partial
     sums of a distributive aggregate, so SUM is exact."""
-    return (spark.read.parquet(f"{path}/{DAILY_DIR}")
+    return (read_table(spark, f"{path}/{DAILY_DIR}")
             .groupBy("day").agg(F.sum("c").alias("c")))
 
 
 def user_days_from_store(spark: SparkSession, path: str) -> DataFrame:
     """DISTINCT (k, day) merged across batches — the one DISTINCT
     collapses user-days split across ingest batches."""
-    return (spark.read.parquet(f"{path}/{USER_DAYS_DIR}")
+    return (read_table(spark, f"{path}/{USER_DAYS_DIR}")
             .select("k", "day").distinct())
 
 
 def hourly_from_store(spark: SparkSession, path: str) -> DataFrame:
     """(hour, n_err) grid merged across batches (grid = hours with
     any event, exactly the inline operator's grid)."""
-    return (spark.read.parquet(f"{path}/{HOURLY_DIR}")
+    return (read_table(spark, f"{path}/{HOURLY_DIR}")
             .groupBy("hour").agg(F.sum("n_err").alias("n_err")))
 
 
@@ -146,7 +134,7 @@ def type_hourly_from_store(spark: SparkSession,
                            path: str) -> DataFrame:
     """(hour, t, observed) grid merged across batches — per-batch
     counts are distributive partial sums."""
-    return (spark.read.parquet(f"{path}/{TYPE_HOURLY_DIR}")
+    return (read_table(spark, f"{path}/{TYPE_HOURLY_DIR}")
             .groupBy("hour", "t")
             .agg(F.sum("observed").alias("observed")))
 
@@ -214,9 +202,9 @@ def event_stream_sink(path: str, *, time_col: str = "ts",
                       type_col: str = "event_type",
                       err_type: str = "error"):
     """foreachBatch sink maintaining the rollups from streaming
-    ingest: each micro-batch lands as ``batch=<epoch_id>`` via
+    ingest: each micro-batch is appended as batch ``<epoch_id>`` via
     ``append_event_index`` — at-least-once redelivery replaces its
-    own partition, so every event counts once in the served series."""
+    own files, so every event counts once in the served series."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         append_event_index(batch_df, path, batch=str(epoch_id),

@@ -14,7 +14,7 @@ This index persists both halves:
   quality cut per language = min quality_bp among the docs the
   percentile gate kept at build time (new batches are gated by the
   frozen cut; percentiles are not re-ranked per batch).
-- ``<path>/gates/batch=<id>``  — one row per doc:
+- ``<path>/gates``             — one row per doc:
   (doc_id, source, lang, g_gopher, g_fair, g_nb).
 
 The base build stores the EXACT x169 gate booleans (so reports served
@@ -24,10 +24,11 @@ lang cut, NB score under the frozen weights (every appended doc is
 held-out by definition, so pred = score >= 0 is the x141 semantics).
 Unknown languages in an append gate to False (conservative).
 
-Batch layout discipline matches dedup_index/ann_index: every load
-lands under ``batch=<id>``; a full rebuild clears the whole gates
-subtree first so stale append partitions computed against an OLD
-model cannot survive a model refresh.
+Every table is written and read through ``store.py``'s commit log,
+like dedup_index/ann_index: a build replaces each table (so appended
+batches gated under an OLD model cannot survive a model refresh), an
+append commits its gate rows as one batch, and reads see the latest
+snapshot.
 """
 
 from __future__ import annotations
@@ -35,9 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafana_spark import batch_manifest as bm
 from kafana_spark.operators.text import (
     gopher_rules, lang_fair_gate, nb_score, nb_train, quality_score,
 )
+from kafana_spark.store import append_table, read_table, replace_table
 
 GATES_DIR = "gates"
 MODEL_DIR = "model"
@@ -48,21 +51,14 @@ def build_gate_index(df: DataFrame, path: str, *,
                      min_mwl_x10: int = 40, max_mwl_x10: int = 100,
                      min_stop: int = 2, max_dup2_bp: int = 1500,
                      keep_pct_bp: int = 5000, train_mod: int = 3,
-                     vocab_k: int = 50, quality_cut: int = 4700,
-                     mode: str = "overwrite",
-                     batch: str = "base") -> None:
+                     vocab_k: int = 50,
+                     quality_cut: int = 4700) -> None:
     """Train the global state, gate the corpus, persist both.
 
     One pass per gate family (all combinable aggregates / bounded
     windows — the x162/x158/x141 plans unchanged); the model tables
-    are broadcast-sized. A rebuild clears stale append partitions
+    are broadcast-sized. A rebuild replaces every appended batch
     (they were scored under the OLD model)."""
-    if mode == "overwrite" and batch == "base":
-        from kafana_spark.ann_index import _clear_batched_dir
-        from kafana_spark.batch_manifest import clear_fingerprints
-
-        _clear_batched_dir(f"{path}/{GATES_DIR}")
-        clear_fingerprints(path)
     gg = (gopher_rules(df, min_words=min_words, max_words=max_words,
                        min_mwl_x10=min_mwl_x10,
                        max_mwl_x10=max_mwl_x10, min_stop=min_stop,
@@ -88,12 +84,10 @@ def build_gate_index(df: DataFrame, path: str, *,
             .join(lf.select("doc_id", F.col("keep").alias("g_fair")),
                   "doc_id")
             .join(gn, "doc_id"))
-    rows.write.mode(mode).parquet(f"{path}/{GATES_DIR}/batch={batch}")
-    w.write.mode("overwrite").parquet(f"{path}/{MODEL_DIR}/nb_weights")
-    prior.write.mode("overwrite") \
-        .parquet(f"{path}/{MODEL_DIR}/nb_prior")
-    cuts.write.mode("overwrite") \
-        .parquet(f"{path}/{MODEL_DIR}/lang_cuts")
+    replace_table(rows, f"{path}/{GATES_DIR}")
+    for frame, name in ((w, "nb_weights"), (prior, "nb_prior"),
+                        (cuts, "lang_cuts")):
+        replace_table(frame, f"{path}/{MODEL_DIR}/{name}")
 
 
 def append_gate_index(df_new: DataFrame, path: str, batch: str, *,
@@ -105,30 +99,21 @@ def append_gate_index(df_new: DataFrame, path: str, batch: str, *,
     only: Gopher rules, quality vs the stored per-lang cut, NB score
     under the stored weights (appended docs are all held-out, so
     pred = score >= 0). No global state is recomputed; redelivering
-    the same batch id overwrites its own partition (idempotent).
+    the same batch id replaces its own files (idempotent).
 
     The held-out/no-duplicate precondition is ENFORCED (r8 verdict
     #6): the content-fingerprint tripwire catches the same rows
     re-appended under a fresh batch id, and an exact doc_id semi-join
     against the stored gates (one row per doc) catches any overlap —
     a duplicated doc would count twice in every served gate matrix."""
-    from kafana_spark import batch_manifest as bm
-
     spark = df_new.sparkSession
-    n, fp = bm.batch_fingerprint(df_new, "doc_id")
-    bm.enforce_fresh_batch(spark, path, batch, n, fp)
-    import os
-
-    if n and os.path.isdir(f"{path}/{GATES_DIR}"):
-        stored = (spark.read.parquet(f"{path}/{GATES_DIR}")
-                  .where(F.col("batch").cast("string")
-                         != F.lit(batch)))
-        bm.enforce_disjoint_ids(df_new, stored, "doc_id",
+    table = f"{path}/{GATES_DIR}"
+    meta = bm.fresh_batch_meta(df_new, "doc_id", table, batch)
+    if meta["n"]:
+        bm.enforce_disjoint_ids(df_new, table, batch, "doc_id",
                                 "gate index")
-    bm.write_fingerprint(spark, path, batch, n, fp)
-    w = spark.read.parquet(f"{path}/{MODEL_DIR}/nb_weights")
-    prior = spark.read.parquet(f"{path}/{MODEL_DIR}/nb_prior")
-    cuts = spark.read.parquet(f"{path}/{MODEL_DIR}/lang_cuts")
+    w, prior, cuts = (read_table(spark, f"{path}/{MODEL_DIR}/{name}")
+                      for name in ("nb_weights", "nb_prior", "lang_cuts"))
     gg = (gopher_rules(df_new, min_words=min_words,
                        max_words=max_words, min_mwl_x10=min_mwl_x10,
                        max_mwl_x10=max_mwl_x10, min_stop=min_stop,
@@ -145,14 +130,13 @@ def append_gate_index(df_new: DataFrame, path: str, batch: str, *,
           .select("doc_id", F.col("pred").alias("g_nb")))
     rows = (df_new.select("doc_id", "source", "lang")
             .join(gg, "doc_id").join(gf, "doc_id").join(gn, "doc_id"))
-    rows.write.mode("overwrite") \
-        .parquet(f"{path}/{GATES_DIR}/batch={batch}")
+    append_table(rows, table, batch, meta=meta)
 
 
 def gates_from_store(spark: SparkSession, path: str) -> DataFrame:
     """(doc_id, source, lang, g_gopher, g_fair, g_nb) across all
-    stored batches (the partition column is dropped)."""
-    return (spark.read.parquet(f"{path}/{GATES_DIR}")
+    stored batches."""
+    return (read_table(spark, f"{path}/{GATES_DIR}")
             .select("doc_id", "source", "lang",
                     "g_gopher", "g_fair", "g_nb"))
 
@@ -196,10 +180,10 @@ def gate_stream_sink(path: str, *,
                      min_mwl_x10: int = 40, max_mwl_x10: int = 100,
                      min_stop: int = 2, max_dup2_bp: int = 1500):
     """foreachBatch sink gating streaming ingest under the FROZEN
-    model: each micro-batch lands as ``batch=<epoch_id>`` via
+    model: each micro-batch is appended as batch ``<epoch_id>`` via
     ``append_gate_index`` (per-doc functions + stored weights/cuts
     only — no global state recomputed per micro-batch), so an
-    at-least-once redelivery REPLACES its own partition and the
+    at-least-once redelivery REPLACES its own files and the
     served reports count every doc once (the ann/dedup/token sink
     idempotency discipline)."""
 

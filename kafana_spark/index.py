@@ -9,11 +9,13 @@ so a term lookup prunes to one shard — O(postings) work per query
 against a 100 TB store.
 
 Scale shape:
-- build: explode distinct tokens per doc (map-only) → one write
-  partitioned by ``bucket = pmod(xxhash64(token), n_buckets)``. No
-  shuffle beyond the write's own partitioning.
+- build: explode distinct tokens per doc (map-only) → one append
+  commit (``store.append_table``) partitioned by
+  ``bucket = pmod(xxhash64(token), n_buckets)``. No shuffle beyond the
+  write's own partitioning.
 - lookup: the bucket of the queried term is a LITERAL, so the scan
-  reads one directory (partition pruning, pinned by test); the
+  of the index snapshot reads one bucket's files (partition pruning,
+  pinned by test); the
   surviving posting ids semi-join the store on ``_id``, where the
   bloom filters on ``_id`` in compacted files (store.BLOOM_COLS) skip
   row groups.
@@ -24,12 +26,15 @@ Scale shape:
 
 from __future__ import annotations
 
-import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafana_spark.store import append_table, read_table, table_files
+
 N_BUCKETS = 64
+BUCKET_COLS = ("bucket",)
 
 
 def tokenize_field(col: F.Column) -> F.Column:
@@ -54,14 +59,14 @@ def build_token_index(docs: DataFrame, field: str = "message.value",
         .withColumn("bucket", _bucket(F.col("token"))))
 
 
-def write_token_index(postings: DataFrame, path: str,
-                      mode: str = "append") -> None:
-    """Persist postings sharded by token-hash bucket (append-only)."""
-    (postings.write.mode(mode).partitionBy("bucket").parquet(path))
+def write_token_index(postings: DataFrame, path: str) -> None:
+    """Persist postings sharded by token-hash bucket (append-only): one
+    append commit as a fresh batch."""
+    append_table(postings, path, uuid.uuid4().hex, BUCKET_COLS)
 
 
 def lookup_ids(spark: SparkSession, index_path: str, term: str) -> DataFrame:
-    """Posting ids for one term: reads exactly one bucket directory."""
+    """Posting ids for one term: reads exactly one bucket's files."""
     t = term.lower()
     b = None
     # compute the bucket driver-side so the scan filter is a literal
@@ -69,7 +74,7 @@ def lookup_ids(spark: SparkSession, index_path: str, term: str) -> DataFrame:
     b_row = (spark.range(1)
              .select(_bucket(F.lit(t)).alias("b")).collect())
     b = b_row[0].b
-    return (spark.read.parquet(index_path)
+    return (read_table(spark, index_path)
             .where((F.col("bucket") == b) & (F.col("token") == t))
             .select("_id"))
 
@@ -86,27 +91,18 @@ def search_via_index(spark: SparkSession, index_path: str,
 def index_size_report(spark: SparkSession, index_path: str) -> dict:
     """Operational stats: buckets present, files, postings.
 
-    Metadata-only: the postings count is summed from parquet FOOTER
-    row counts (one footer read per file, no row decoded) — at 100 TB
-    a postings count is a metadata question, never a table scan
-    (ADVICE/VERDICT r4 flagged the old full count() here)."""
+    Metadata-only: the live files and their buckets come from the
+    index snapshot (so uncommitted crash debris never counts), and the
+    postings count is summed from parquet FOOTER row counts (one
+    footer read per file, no row decoded) — at 100 TB a postings
+    count is a metadata question, never a table scan (ADVICE/VERDICT
+    r4 flagged the old full count() here)."""
     import pyarrow.parquet as pq
 
-    files: list[str] = []
-    buckets: set[str] = set()
-    for root, dirs, names in os.walk(index_path):
-        # prune what Spark's reader ignores (_temporary, .staging, …)
-        # so crash debris never inflates the postings count
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        # bucket= dirs sit at the root for batch-built indexes and one
-        # level down (under batch=<epoch>) for stream-built ones;
-        # "buckets present" = distinct bucket values either way
-        buckets.update(d for d in dirs if d.startswith("bucket="))
-        files += [os.path.join(root, n) for n in names
-                  if n.endswith(".parquet")]
-    n_postings = sum(pq.read_metadata(f).num_rows for f in files)
-    return {"buckets": len(buckets), "files": len(files),
-            "postings": n_postings}
+    files = table_files(index_path)
+    return {"buckets": len({v["bucket"] for v in files.values()}),
+            "files": len(files),
+            "postings": sum(pq.read_metadata(f).num_rows for f in files)}
 
 
 def token_index_stream_sink(path: str, field: str = "message.value",
@@ -115,18 +111,15 @@ def token_index_stream_sink(path: str, field: str = "message.value",
     ingest — the third index with streaming maintenance, next to the
     near-dup and ANN sinks (dedup_index / ann_index).
 
-    Layout: each micro-batch lands under ``batch=<epoch_id>`` with its
-    own ``bucket=`` partitioning below, written with mode=overwrite —
-    an at-least-once redelivery REPLACES its epoch instead of
-    appending duplicate postings. The root must be DEDICATED to this
-    sink (mixing bare bucket= dirs with batch= dirs breaks partition
-    discovery); ``lookup_ids`` works unchanged — the bucket filter
-    still prunes to one directory per batch.
+    Each micro-batch is appended as batch ``<epoch_id>`` — an
+    at-least-once redelivery REPLACES its epoch's postings instead of
+    appending duplicates; ``lookup_ids`` works unchanged — the bucket
+    filter still prunes to one bucket's files.
     """
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        (build_token_index(batch_df, field=field, id_col=id_col)
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(f"{path}/batch={epoch_id}"))
+        append_table(build_token_index(batch_df, field=field,
+                                       id_col=id_col),
+                     path, str(epoch_id), BUCKET_COLS)
 
     return _sink

@@ -65,6 +65,21 @@ def value_as_string(value_struct: Column, raw_value: Column | None = None) -> Co
     return F.coalesce(rendered, F.lit(TOMBSTONE))
 
 
+def _envelope(df: DataFrame, message: F.Column,
+              *extra: F.Column) -> DataFrame:
+    """The indexed document: ``message``, the typed Kafka envelope
+    columns, any ``extra`` columns, then the derived ``_id``."""
+    return df.select(
+        message.alias("message"),
+        F.col("timestamp"),
+        F.col("topic"),
+        F.col("partition").cast("int").alias("partition"),
+        F.col("offset").cast("long").alias("offset"),
+        F.col("key").cast("string").alias("key"),
+        *extra,
+    ).withColumn("_id", doc_id())
+
+
 def enrich(df: DataFrame, value_col: str = "value_struct",
            extract_json: dict[str, tuple[str, str, str]] | None = None,
            ) -> DataFrame:
@@ -103,15 +118,7 @@ def enrich(df: DataFrame, value_col: str = "value_struct",
         F.get_json_object(value.getField(field), path).cast(cast_t).alias(out)
         for out, (field, path, cast_t) in (extract_json or {}).items()
     ]
-    return df.select(
-        message.alias("message"),
-        F.col("timestamp"),
-        F.col("topic"),
-        F.col("partition").cast("int").alias("partition"),
-        F.col("offset").cast("long").alias("offset"),
-        F.col("key").cast("string").alias("key"),
-        *extracted,
-    ).withColumn("_id", doc_id())
+    return _envelope(df, message, *extracted)
 
 
 def enrich_schemaless(df: DataFrame, value_col: str = "value_map") -> DataFrame:
@@ -125,14 +132,7 @@ def enrich_schemaless(df: DataFrame, value_col: str = "value_map") -> DataFrame:
     message = F.struct(
         F.coalesce(F.to_json(value), F.lit(TOMBSTONE)).alias("value"),
     )
-    return df.select(
-        message.alias("message"),
-        F.col("timestamp"),
-        F.col("topic"),
-        F.col("partition").cast("int").alias("partition"),
-        F.col("offset").cast("long").alias("offset"),
-        F.col("key").cast("string").alias("key"),
-    ).withColumn("_id", doc_id())
+    return _envelope(df, message)
 
 
 def events_as_kafka_records(events: DataFrame, topic: str = "events") -> DataFrame:

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from kafana_spark.store import append_table, read_table
+
 
 def _cents(col: str) -> F.Column:
     """Integer cents with the engine-portable rounding used repo-wide."""
@@ -616,19 +618,19 @@ DAILY_REV_DIR = "daily_rev"
 def build_order_rollup(orders: DataFrame, path: str, *,
                        batch: str = "base") -> None:
     """Persist the per-batch daily revenue partials (ds, day,
-    day_cents).  Cents sums are distributive, so per-batch partials
-    merged with SUM are exact — the same mergeability contract as the
-    event-rollup index (event_index.py), proven by serving x255's
-    oracle from a two-batch build.
+    day_cents) as one append commit of batch ``batch`` (a redelivered
+    id replaces its own partials). Cents sums are distributive, so
+    per-batch partials merged with SUM are exact — the same
+    mergeability contract as the event-rollup index (event_index.py),
+    proven by serving x255's oracle from a two-batch build.
     """
-    _daily_revenue(orders).write.mode("overwrite").parquet(
-        f"{path}/{DAILY_REV_DIR}/batch={batch}")
+    append_table(_daily_revenue(orders), f"{path}/{DAILY_REV_DIR}", batch)
 
 
 def daily_revenue_from_store(spark, path: str) -> DataFrame:
     """(ds, day, day_cents) merged across batches — exact partial
     sums."""
-    return (spark.read.parquet(f"{path}/{DAILY_REV_DIR}")
+    return (read_table(spark, f"{path}/{DAILY_REV_DIR}")
             .groupBy("ds", "day")
             .agg(F.sum("day_cents").alias("day_cents")))
 
@@ -650,10 +652,10 @@ def running_from_daily(daily: DataFrame) -> DataFrame:
 
 def order_stream_sink(path: str):
     """foreachBatch sink maintaining the order-rollup index from
-    streaming ingest: each micro-batch's daily-revenue partials land
-    as ``batch=<epoch_id>`` (the event_index.py sink contract) —
-    at-least-once redelivery overwrites its own partition, so every
-    order counts once in the served running series.
+    streaming ingest: each micro-batch's daily-revenue partials are
+    appended as batch ``<epoch_id>`` (the event_index.py sink
+    contract) — at-least-once redelivery replaces its own files, so
+    every order counts once in the served running series.
     """
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:

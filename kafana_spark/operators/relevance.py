@@ -32,6 +32,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from kafana_spark.functions import tokens
+from kafana_spark.store import BASE, append_table, read_table, write_table
 
 #: Lucene/ES BM25 defaults (k1, b) — org.apache.lucene.search
 #: .similarities.BM25Similarity.
@@ -951,8 +952,8 @@ def term_vectors(df: DataFrame, doc_id: int, id_col: str = "doc_id",
             .orderBy("term"))
 
 
-#: percolator store subdirectory (batch=<id> layout shared with the
-#: other persisted indexes)
+#: percolator query table (written and read through the store's commit
+#: log, like the other persisted indexes)
 PERC_DIR = "perc_queries"
 
 
@@ -980,25 +981,20 @@ def _percolate_qdf(df: DataFrame, qdf: DataFrame, id_col: str,
 
 
 def build_percolator_index(spark, queries: Mapping[str, Sequence[str]],
-                           path: str, mode: str = "overwrite",
-                           batch: str = "base") -> None:
+                           path: str, batch: str = BASE) -> None:
     """Persist registered percolator queries — ES stores percolator
     queries AS index documents, and this is that store: (query_id,
-    term, n_required) rows under the same ``batch=<id>`` layout /
-    rebuild discipline as the other persisted indexes (full rebuilds
-    clear stale batches; per-batch writes register alerts
+    term, n_required) rows under the same commit and rebuild
+    discipline as the other persisted indexes (``batch=BASE`` replaces
+    the table; any other id appends its registrations
     incrementally)."""
-    if mode == "overwrite" and batch == "base":
-        from kafana_spark.ann_index import _clear_batched_dir
-
-        _clear_batched_dir(f"{path}/{PERC_DIR}")
     # registration order: base is seq 0, incremental batch N is seq
     # N+1 — the offset keeps batch="0" strictly AFTER base (a tie
     # would make the latest-wins max-seq filter keep BOTH definitions
     # of a re-registered query_id: inflated n_matched, never-firing
     # alert). Non-numeric / negative batch ids raise loudly rather
     # than storing an unorderable version.
-    if batch == "base":
+    if batch == BASE:
         seq = 0
     else:
         seq = int(batch) + 1
@@ -1007,10 +1003,9 @@ def build_percolator_index(spark, queries: Mapping[str, Sequence[str]],
                 f"percolator batch id must be >= 0 (got {batch!r})")
     qrows = [(qid, t, len(ts), seq)
              for qid, ts in sorted(queries.items()) for t in ts]
-    spark.createDataFrame(
-        qrows,
-        "query_id string, term string, n_required int, seq int") \
-        .write.mode(mode).parquet(f"{path}/{PERC_DIR}/batch={batch}")
+    write_table(spark.createDataFrame(
+        qrows, "query_id string, term string, n_required int, seq int"),
+        f"{path}/{PERC_DIR}", batch)
 
 
 def percolate_from_store(df: DataFrame, path: str,
@@ -1021,7 +1016,7 @@ def percolate_from_store(df: DataFrame, path: str,
     match any document batch/stream against them with no query
     re-compilation — the ES alerting serving path."""
     spark = df.sparkSession
-    raw = spark.read.parquet(f"{path}/{PERC_DIR}")
+    raw = read_table(spark, f"{path}/{PERC_DIR}")
     # latest registration wins: a re-registered query_id REPLACES its
     # earlier definition (without this, stale term rows inflate
     # n_matched past n_required and the alert silently never fires)
@@ -1035,12 +1030,11 @@ def percolate_from_store(df: DataFrame, path: str,
 def register_percolator_queries(spark,
                                 queries: Mapping[str, Sequence[str]],
                                 path: str, batch: str) -> None:
-    """Incrementally register new alert queries under ``batch=<id>``
-    (idempotent per batch id — re-registration overwrites its own
+    """Incrementally register new alert queries as batch ``batch``
+    (idempotent per batch id — re-registration replaces its own
     batch only, the redelivery-safe discipline of the other index
     sinks)."""
-    build_percolator_index(spark, queries, path, mode="overwrite",
-                           batch=batch)
+    build_percolator_index(spark, queries, path, batch=batch)
 
 
 def percolator_alert_sink(queries_path: str, out_path: str,
@@ -1048,15 +1042,14 @@ def percolator_alert_sink(queries_path: str, out_path: str,
                           text_col: str = "text"):
     """foreachBatch sink: percolate each document micro-batch against
     the stored queries and append the per-epoch alert digests to
-    ``out_path`` under ``batch=<epoch>`` (redelivery-safe: an epoch
-    replay overwrites its own digests)."""
+    ``out_path`` as batch ``<epoch>`` (redelivery-safe: an epoch
+    replay replaces its own digests)."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         out = percolate_from_store(batch_df, queries_path,
                                    id_col=id_col, text_col=text_col)
-        (out.withColumn("epoch", F.lit(int(epoch_id)))
-         .write.mode("overwrite")
-         .parquet(f"{out_path}/batch={epoch_id}"))
+        append_table(out.withColumn("epoch", F.lit(int(epoch_id))),
+                     out_path, str(epoch_id))
 
     return _sink
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kafana_spark.functions import tokens
+from kafana_spark.store import read_table, replace_table
 
 # marker stopwords per language for the n-gram/stopword heuristic
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -287,30 +288,25 @@ def bpe_encode(df: DataFrame, n_merges: int = 3,
     return _bpe_symbol_counts(seq, id_col)
 
 
-#: persisted tokenizer artifact directory (batch=<id> layout shared
-#: with the other stored indexes)
+#: persisted tokenizer artifact table (written and read through the
+#: store's commit log, like the other stored indexes)
 BPE_DIR = "bpe_merges"
 
 
 def build_bpe_index(df: DataFrame, path: str, n_merges: int = 3,
-                    text_col: str = "text", mode: str = "overwrite",
-                    batch: str = "base") -> None:
+                    text_col: str = "text") -> None:
     """Train the BPE merge list once and PERSIST it — tokenizer prep
     as an index-once artifact (the stored-twin stance of the minhash /
     IVF / PQ / LSH / substring-gram / percolator stores): training
     pays the N corpus count passes; every later encode is a pure map
     over the stored merges. Stored rows: (rnd, pair, cnt) — literally
-    the tokenizer's ordered merge table."""
-    from kafana_spark.ann_index import _clear_batched_dir
-
-    if mode == "overwrite" and batch == "base":
-        _clear_batched_dir(f"{path}/{BPE_DIR}")
+    the tokenizer's ordered merge table, one replace commit per
+    training run."""
     seq = _bpe_seq(df, text_col)
     rows, _ = _bpe_loop(seq, n_merges, topk=1, apply_last=True)
-    df.sparkSession.createDataFrame(
+    replace_table(df.sparkSession.createDataFrame(
         [(r[0], r[2], r[3]) for r in rows],
-        "rnd int, pair string, cnt bigint") \
-        .write.mode(mode).parquet(f"{path}/{BPE_DIR}/batch={batch}")
+        "rnd int, pair string, cnt bigint"), f"{path}/{BPE_DIR}")
 
 
 def bpe_encode_from_store(df: DataFrame, path: str,
@@ -323,7 +319,7 @@ def bpe_encode_from_store(df: DataFrame, path: str,
     the shared oracle proves the store roundtrip lossless."""
     spark = df.sparkSession
     merges = sorted(
-        spark.read.parquet(f"{path}/{BPE_DIR}").collect(),
+        read_table(spark, f"{path}/{BPE_DIR}").collect(),
         key=lambda r: r.rnd)
     seq = _bpe_seq(df, text_col,
                    carry=[F.col(id_col),

@@ -18,6 +18,10 @@ rollup itself is built incrementally (one new ds row-group per group per
 day; ``unionByName`` of daily builds is the maintenance path — sketches
 and partial metrics merge across builds exactly like across days).
 
+The streaming sinks persist through ``store.py``'s commit log: the
+rollup sink replaces its table once per micro-batch, the count-min
+sink appends one batch per epoch; readers see the latest snapshot.
+
 Exactness contract: everything except the ``ndv_*`` columns is
 bit-equal to aggregating the raw data (x37 hash-checks that through the
 DuckDB oracle); ``ndv_*`` is approximate with HLL's standard error
@@ -30,6 +34,10 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kafana_spark.store import (
+    append_table, read_table, replace_table, table_files,
+)
 
 #: HLL precision: 2^12 registers ≈ 1.6% relative standard error
 HLL_LG_K = 12
@@ -134,31 +142,19 @@ def rollup_stream_sink(path: str, by: Sequence[str] = ("topic",),
     touches. Use with
     ``stream.writeStream.foreachBatch(rollup_stream_sink(...))``.
 
-    The merged frame is eagerly materialized (localCheckpoint) before
-    the overwrite so the read-modify-write on the same path never
-    races its own scan. Deliberately NOT serve_materialize/reliable
-    checkpoint (r11 review): the materialization here only guards the
-    within-batch read-then-overwrite — executor-loss durability is
-    irrelevant because the parquet write follows immediately and a
-    failed micro-batch is redelivered whole, while per-batch reliable
-    checkpoints would accrete never-cleaned rdd-N directories in the
-    checkpoint store for the lifetime of the stream.
+    Each micro-batch is one ``replace_table`` commit of the merged
+    rollup. The snapshot it read stays live until that commit, so the
+    read-modify-write never races its own scan, and a failed
+    micro-batch leaves the prior rollup intact for its redelivery.
     """
-    import os
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         days = batch_df.withColumn(ds_col, F.to_date(time_col))
-        existing = None
-        if os.path.isdir(path) and any(
-                f.endswith(".parquet") or f == "_SUCCESS"
-                for _, _, fs in os.walk(path) for f in fs):
-            existing = spark.read.parquet(path)
-        merged = update_rollup(existing, days, by=by, ds_col=ds_col,
-                               value_col=value_col,
-                               distinct_cols=distinct_cols)
-        merged.localCheckpoint(eager=True) \
-            .write.mode("overwrite").parquet(path)
+        existing = read_table(spark, path) if table_files(path) else None
+        replace_table(update_rollup(existing, days, by=by, ds_col=ds_col,
+                                    value_col=value_col,
+                                    distinct_cols=distinct_cols), path)
 
     return _sink
 
@@ -229,21 +225,20 @@ def cms_estimate(sketch: DataFrame, terms: DataFrame,
 
 def cms_stream_sink(path: str, col: str = "text"):
     """foreachBatch sink for streaming CMS maintenance: each
-    micro-batch's partial sketch lands under ``batch=<epoch_id>`` with
-    mode=overwrite (redelivery REPLACES, never double-counts — the
-    same per-epoch discipline as every other index sink here), and
+    micro-batch's partial sketch is appended as batch ``<epoch_id>``
+    (redelivery REPLACES, never double-counts — the same per-epoch
+    discipline as every other index sink here), and
     ``cms_from_store`` folds the partials bucket-wise at read time —
     exact by linearity, so the served sketch always equals the
     one-shot sketch of everything ingested."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        cms_sketch(batch_df, col).write.mode("overwrite") \
-            .parquet(f"{path}/batch={epoch_id}")
+        append_table(cms_sketch(batch_df, col), path, str(epoch_id))
 
     return _sink
 
 
 def cms_from_store(spark, path: str) -> DataFrame:
     """The current sketch: bucket-wise sum of all stored partials."""
-    raw = spark.read.parquet(path).drop("batch")
-    return raw.groupBy("j", "b").agg(F.sum("cnt").alias("cnt"))
+    return (read_table(spark, path)
+            .groupBy("j", "b").agg(F.sum("cnt").alias("cnt")))

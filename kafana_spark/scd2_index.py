@@ -5,14 +5,13 @@ the event stream.
 x287 derives the dimension from the full changelog per query; at
 100 TB the changelog scan is the whole cost, while the dimension
 itself is tiny (changes-only). This index persists the COLLAPSED
-change rows, batch-partitioned:
+change rows, one row set per batch:
 
-- ``<path>/changes/batch=<id>`` — (key, state, ts, seq) rows where
-  the state differs from its (ts, seq)-ordered predecessor WITHIN the
-  batch.
-- ``<path>/manifest/batch=<id>`` — one (batch_id, min_us, max_us)
-  row per batch: the batch's event-time span, used to ENFORCE the
-  merge law's precondition at append time (below).
+- ``<path>/changes`` — (key, state, ts, seq) rows where the state
+  differs from its (ts, seq)-ordered predecessor WITHIN the batch.
+  Each batch's commit-log entry also records its event-time span
+  ``{"min_us", "max_us"}``, used to ENFORCE the merge law's
+  precondition at append time (below).
 
 Merge law (the ``operators.events.scd2_changes`` docstring, pinned by
 test): collapse is idempotent, and for EVENT-TIME-partitioned batches
@@ -32,82 +31,65 @@ within-batch collapse drops rows that are genuine state changes in
 the merged order (b1 = A@1,A@5 collapses away A@5; b2 = B@3 then
 serves A,B instead of A,B,A). ``append_scd2_index`` therefore
 REFUSES a batch whose min event time is not strictly greater than
-every other stored batch's max (span manifest check; exact
+every other stored batch's max (logged span check; exact
 redeliveries of the same batch id pass — they replace their own
-partition). Late/out-of-order data requires a base rebuild, exactly
+files). Late/out-of-order data requires a base rebuild, exactly
 as a watermark violation would in the streaming pipeline.
 
-Batch layout matches dedup_index/ann_index/gate_index/event_index:
-every load lands under ``batch=<id>``; a base rebuild clears the
-subtree first; redelivering a batch id overwrites its own partition
-(idempotent), so the foreachBatch streaming sink is at-least-once
-safe.
+The table is written and read through ``store.py``'s commit log,
+like dedup_index/ann_index/gate_index/event_index: a base build
+replaces it, an append commits its rows as one batch, and
+redelivering a batch id replaces its own files (idempotent), so the
+foreachBatch streaming sink is at-least-once safe.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafana_spark.operators import events as ev_ops
+from kafana_spark.store import BASE, batch_meta, read_table, write_table
 
 CHANGES_DIR = "changes"
-MANIFEST_DIR = "manifest"
 
 
-def _batch_span(df: DataFrame, time_col: str,
-                seq_col: str) -> tuple[int | None, int | None]:
-    """(min, max) event-time microseconds of a batch — one tiny agg."""
+def _batch_span(df: DataFrame, time_col: str) -> dict:
+    """``{"min_us", "max_us"}`` event-time span of a batch — one tiny
+    agg."""
     r = df.agg(F.min(F.unix_micros(F.col(time_col))).alias("mn"),
                F.max(F.unix_micros(F.col(time_col))).alias("mx")) \
         .first()
-    return r.mn, r.mx
+    return {"min_us": r.mn, "max_us": r.mx}
 
 
-def _write_manifest(spark: SparkSession, path: str, batch: str,
-                    mn: int | None, mx: int | None) -> None:
-    spark.createDataFrame([(batch, mn, mx)],
-                          "batch_id string, min_us long, max_us long") \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(f"{path}/{MANIFEST_DIR}/batch={batch}")
-
-
-def _enforce_event_time_partitioning(spark: SparkSession, path: str,
-                                     batch: str, mn: int | None,
-                                     mx: int | None) -> None:
+def _enforce_event_time_partitioning(path: str, batch: str,
+                                     span: dict) -> None:
     """The merge law (module docstring) holds ONLY for event-time-
     partitioned batches: the within-batch collapse drops rows that a
     LATER-ARRIVING-but-EARLIER-IN-TIME batch would have split into
     genuine state changes, and the serve-time re-collapse cannot
-    recover them. Enforce it at append time from the stored batch
-    spans (one row per batch — tiny): a new batch must start strictly
+    recover them. Enforce it at append time from the logged batch
+    spans (one per batch — tiny): a new batch must start strictly
     after every other stored batch ends. An exact redelivery (same
     batch id, same span) is always allowed — it replaces its own
-    partition (ADVICE.md r7 medium)."""
+    files (ADVICE.md r7 medium)."""
+    mn = span["min_us"]
     if mn is None:
         return  # empty batch carries no events to mis-order
-    if not os.path.isdir(f"{path}/{MANIFEST_DIR}"):
-        return  # pre-manifest store: nothing recorded to compare
-    rows = spark.read.parquet(f"{path}/{MANIFEST_DIR}") \
-        .select("batch_id", "min_us", "max_us").collect()
-    for r in rows:
-        if r.batch_id == batch:
-            if (r.min_us, r.max_us) == (mn, mx):
-                return  # pure redelivery — idempotent overwrite
-            continue  # same id, new span: judge against the others
-    overlap = [r for r in rows
-               if r.batch_id != batch and r.max_us is not None
-               and mn <= r.max_us]
+    spans = batch_meta(f"{path}/{CHANGES_DIR}")
+    if spans.get(batch) == span:
+        return  # pure redelivery — idempotent replace
+    overlap = {b: s["max_us"] for b, s in spans.items()
+               if b != batch and s and s["max_us"] is not None
+               and mn <= s["max_us"]}
     if overlap:
-        worst = max(r.max_us for r in overlap)
         raise ValueError(
             f"scd2 index batch {batch!r} starts at {mn} us but stored "
-            f"batch(es) {[r.batch_id for r in overlap]} extend to "
-            f"{worst} us — batches must be strictly event-time "
-            f"partitioned (the scd2_changes merge-law contract); "
-            f"rebuild the base with build_scd2_index instead")
+            f"batch(es) {sorted(overlap)} extend to "
+            f"{max(overlap.values())} us — batches must be strictly "
+            f"event-time partitioned (the scd2_changes merge-law "
+            f"contract); rebuild the base with build_scd2_index instead")
 
 
 def build_scd2_index(df: DataFrame, path: str, *,
@@ -115,27 +97,19 @@ def build_scd2_index(df: DataFrame, path: str, *,
                      state_col: str = "event_type",
                      time_col: str = "ts",
                      seq_col: str = "event_id",
-                     batch: str = "base") -> None:
+                     batch: str = BASE) -> None:
     """Collapse the changelog to change rows and persist them. A base
-    build clears stale batch partitions first; a non-base build is an
-    incremental write and rides the SAME event-time-partitioning
+    build replaces every stored batch; a non-base build is an
+    incremental append and rides the SAME event-time-partitioning
     enforcement as ``append_scd2_index`` — an overlapping batch must
     raise on every write path, or a build-instead-of-append call
     silently corrupts the served history (ADVICE r8)."""
-    from kafana_spark.ann_index import _clear_batched_dir
-
-    if batch == "base":
-        _clear_batched_dir(f"{path}/{CHANGES_DIR}")
-        _clear_batched_dir(f"{path}/{MANIFEST_DIR}")
-    else:
-        mn0, mx0 = _batch_span(df, time_col, seq_col)
-        _enforce_event_time_partitioning(df.sparkSession, path, batch,
-                                         mn0, mx0)
-    ev_ops.scd2_changes(df, key_col, state_col, time_col, seq_col) \
-        .write.mode("overwrite") \
-        .parquet(f"{path}/{CHANGES_DIR}/batch={batch}")
-    mn, mx = _batch_span(df, time_col, seq_col)
-    _write_manifest(df.sparkSession, path, batch, mn, mx)
+    span = _batch_span(df, time_col)
+    if batch != BASE:
+        _enforce_event_time_partitioning(path, batch, span)
+    write_table(ev_ops.scd2_changes(df, key_col, state_col, time_col,
+                                    seq_col),
+                f"{path}/{CHANGES_DIR}", batch, meta=span)
 
 
 def append_scd2_index(df_new: DataFrame, path: str, batch: str, *,
@@ -145,18 +119,12 @@ def append_scd2_index(df_new: DataFrame, path: str, batch: str, *,
                       seq_col: str = "event_id") -> None:
     """Fold a new EVENT-TIME-later batch into the index: one collapse
     over only the new rows (no base re-read). A redelivered batch id
-    replaces its own partition. The event-time-partitioning contract
-    is ENFORCED from the stored batch-span manifest — an out-of-order
-    or overlapping batch raises instead of silently corrupting the
+    replaces its own files. The event-time-partitioning contract is
+    ENFORCED from the logged batch spans — an out-of-order or
+    overlapping batch raises instead of silently corrupting the
     served history (the merge law does not hold for it)."""
-    spark = df_new.sparkSession
-    mn, mx = _batch_span(df_new, time_col, seq_col)
-    _enforce_event_time_partitioning(spark, path, batch, mn, mx)
-    ev_ops.scd2_changes(df_new, key_col, state_col, time_col,
-                        seq_col) \
-        .write.mode("overwrite") \
-        .parquet(f"{path}/{CHANGES_DIR}/batch={batch}")
-    _write_manifest(spark, path, batch, mn, mx)
+    build_scd2_index(df_new, path, key_col=key_col, state_col=state_col,
+                     time_col=time_col, seq_col=seq_col, batch=batch)
 
 
 def changes_from_store(spark: SparkSession, path: str, *,
@@ -167,7 +135,7 @@ def changes_from_store(spark: SparkSession, path: str, *,
     """All stored change rows merged across batches: one re-collapse
     (idempotent) removes across-boundary no-change rows, yielding
     exactly the full-stream change frame."""
-    raw = spark.read.parquet(f"{path}/{CHANGES_DIR}").drop("batch")
+    raw = read_table(spark, f"{path}/{CHANGES_DIR}")
     return ev_ops.scd2_changes(raw, key_col, state_col, time_col,
                                seq_col)
 
@@ -212,9 +180,9 @@ def scd2_stream_sink(path: str, *, key_col: str = "user_id",
                      time_col: str = "ts",
                      seq_col: str = "event_id"):
     """foreachBatch sink maintaining the dimension from streaming
-    ingest: each micro-batch collapses to its change rows under
-    ``batch=<epoch_id>`` — at-least-once redelivery replaces its own
-    partition, so every change counts once in the served history."""
+    ingest: each micro-batch collapses to its change rows, appended as
+    batch ``<epoch_id>`` — at-least-once redelivery replaces its own
+    files, so every change counts once in the served history."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         append_scd2_index(batch_df, path, batch=str(epoch_id),

@@ -278,47 +278,6 @@ def _compile_record_encoder(schema: Any):
     return enc_rec
 
 
-def _compile_value_decoder(schema: Any):
-    """(buf, pos) -> (val, pos) closure, or None for nested shapes."""
-    t = schema["type"] if isinstance(schema, dict) else schema
-    if isinstance(schema, list):                     # union
-        branches = []
-        for b in schema:
-            fn = _compile_value_decoder(b)
-            if fn is None:
-                return None
-            branches.append(fn)
-        branches = tuple(branches)
-
-        def dec_union(buf, pos, _b=branches, _zz=_zigzag_decode):
-            idx, pos = _zz(buf, pos)
-            return _b[idx](buf, pos)
-        return dec_union
-    if t == "null":
-        return lambda buf, pos: (None, pos)
-    if t == "boolean":
-        return lambda buf, pos: (buf[pos] != 0, pos + 1)
-    if t in ("int", "long"):
-        return _zigzag_decode
-    if t == "float":
-        return lambda buf, pos, _u=struct.unpack_from: (
-            _u("<f", buf, pos)[0], pos + 4)
-    if t == "double":
-        return lambda buf, pos, _u=struct.unpack_from: (
-            _u("<d", buf, pos)[0], pos + 8)
-    if t == "string":
-        def dec_str(buf, pos, _zz=_zigzag_decode):
-            n, pos = _zz(buf, pos)
-            return buf[pos:pos + n].decode("utf-8"), pos + n
-        return dec_str
-    if t == "bytes":
-        def dec_bytes(buf, pos, _zz=_zigzag_decode):
-            n, pos = _zz(buf, pos)
-            return bytes(buf[pos:pos + n]), pos + n
-        return dec_bytes
-    return None
-
-
 def _gen_varint(dst: str, ind: str) -> str:
     """Source for an inlined zigzag-varint read into ``dst`` (single-
     byte fast path, loop for the rest)."""

@@ -14,6 +14,13 @@ docker-compose.yml:72-78). Design:
   happen only after it. Readers read the latest snapshot's files with
   the logged schema, so a crash at any step leaves the old or the new
   snapshot visible (Structured Streaming's file-sink log, SIGMOD 2018).
+  The same log backs every table the library persists (the index
+  families, rollups, model tables): ``append_table`` commits one batch
+  (redelivery replaces it; optional per-batch ``meta`` in its entry),
+  ``replace_table`` one rebuild that drops every live file, and
+  ``read_table`` reads the snapshot — with whatever partition columns
+  the caller passes (the store ``topic``/``ds``, the token index
+  ``bucket``, the rest none).
   Appends may race each other and one maintenance call
   (``compact``/``merge_upsert``/``retention``) at a time. Bloom filters
   on ``key``/``_id`` go only on the files ``compact``/``merge_upsert``
@@ -33,7 +40,6 @@ from __future__ import annotations
 
 import contextlib
 import datetime as dt
-import glob
 import json
 import os
 import shutil
@@ -50,6 +56,14 @@ from kafana_spark.ingest import TOMBSTONE, doc_id
 
 PARTITION_COLS = ("topic", "ds")
 LOG_DIR = "_log"
+#: ops whose entry lists the whole live set: replay starts at the newest
+_BASE_OPS = ("compact", "replace")
+#: the batch id of a ``replace`` commit's files
+BASE = "base"
+#: ``compact`` re-splits a partition's output past this many rows
+COMPACT_MAX_RECORDS = 1_000_000
+#: ``compact`` sorts each rewritten partition by these columns
+COMPACT_CLUSTER_BY = ("key", "offset")
 
 
 def with_store_partitions(docs: DataFrame) -> DataFrame:
@@ -75,9 +89,30 @@ def _bloomed(writer):
     return writer
 
 
-def _partition_dirs(root: str) -> list[str]:
-    """The ``topic=/ds=`` partition dirs under ``root``."""
-    return glob.glob(os.path.join(glob.escape(root), "topic=*", "ds=*"))
+def _writer(df: DataFrame, partition_by=()):
+    """``df``'s writer into a stage dir, partitioned by ``partition_by``."""
+    return df.write.mode("overwrite").partitionBy(*partition_by)
+
+
+def _data_files(root: str):
+    """Root-relative paths of the parquet files under ``root``, outside
+    the ``_``/``.`` dirs readers ignore (``_log``, ``_staging``)."""
+    for d, dirs, names in os.walk(root):
+        dirs[:] = [n for n in dirs if not n.startswith(("_", "."))]
+        for n in names:
+            if n.endswith(".parquet"):
+                yield os.path.relpath(os.path.join(d, n), root)
+
+
+def _partition_values(rel_dir: str) -> dict:
+    """``{column: value}`` of a ``col=value/…`` partition dir."""
+    return {k: unquote(v) for k, v in
+            (d.split("=", 1) for d in rel_dir.split(os.sep) if d)}
+
+
+def _owned(rel: str, batch: str) -> bool:
+    """Whether a table file belongs to batch ``batch``."""
+    return os.path.basename(rel).startswith(f"{batch}-part-")
 
 
 class CommitConflict(RuntimeError):
@@ -86,8 +121,8 @@ class CommitConflict(RuntimeError):
 
 @dataclass
 class _Snapshot:
-    """The store at ``version``: live files (store-relative path → its
-    ``topic``/``ds``), stored schema, whether its ``_id``s are unique,
+    """The table at ``version``: live files (table-relative path → its
+    partition values), stored schema, whether its ``_id``s are unique,
     and the entries replayed."""
     version: int = -1
     files: dict = field(default_factory=dict)
@@ -115,8 +150,8 @@ def _load(base: str, version: int) -> dict:
 
 
 def _snapshot(base: str) -> _Snapshot:
-    """The latest snapshot, replayed from the newest ``compact`` entry
-    (which lists every live file) onward."""
+    """The latest snapshot, replayed from the newest ``compact`` or
+    ``replace`` entry (which lists every live file) onward."""
     try:
         names = os.listdir(os.path.join(base, LOG_DIR))
     except FileNotFoundError:
@@ -125,7 +160,7 @@ def _snapshot(base: str) -> _Snapshot:
     for v in sorted((int(n[:-5]) for n in names if n.endswith(".json")),
                     reverse=True):
         chain.append(_load(base, v))
-        if chain[-1]["op"] == "compact":
+        if chain[-1]["op"] in _BASE_OPS:
             break
     snap = _Snapshot()
     for entry in reversed(chain):
@@ -135,13 +170,14 @@ def _snapshot(base: str) -> _Snapshot:
 
 def _commit(base: str, snap: _Snapshot, op: str, add: dict,
             remove: list[str] = (), schema: str | None = None,
-            batch: str | None = None) -> None:
+            batch: str | None = None, meta: dict | None = None) -> None:
     """Publish ``add``/``remove`` as the next version after ``snap``
     (a temp file hard-linked to the version name: whole or absent) and
     advance ``snap`` to it. On a lost race the newer entries are
-    replayed and the commit retried: a batch re-derives the files it
-    replaces, so appends never conflict; other commits raise
-    ``CommitConflict`` if a file they remove is already gone.
+    replayed and the commit retried: an ``append`` re-derives the files
+    of its batch it replaces and a ``replace`` every live file, so
+    neither conflicts; other commits raise ``CommitConflict`` if a file
+    they remove is already gone.
 
     The entry's ``unique_ids`` says no two live rows share an ``_id``:
     true after a ``compact`` that rewrote every live file, inherited
@@ -152,9 +188,10 @@ def _commit(base: str, snap: _Snapshot, op: str, add: dict,
     tmp = os.path.join(base, LOG_DIR, f".{uuid.uuid4().hex}.tmp")
     try:
         while True:
-            if batch is not None:   # a replayed batch replaces its own
-                remove = {p for p in snap.files if os.path.basename(p)
-                          .startswith(f"{batch}-part-")}
+            if op == "append":      # a replayed batch replaces its own
+                remove = {p for p in snap.files if _owned(p, batch)}
+            elif op == "replace":   # a rebuild defines the whole table
+                remove = set(snap.files)
             elif not remove <= snap.files.keys():
                 raise CommitConflict(
                     f"{op} on {base}: a newer commit removed its files")
@@ -162,12 +199,14 @@ def _commit(base: str, snap: _Snapshot, op: str, add: dict,
                      "schema": schema or snap.schema, "add": add,
                      "remove": sorted(remove),
                      "unique_ids": op == "retention" and snap.unique_ids}
-            if op == "compact":     # the whole live set: replay starts here
+            if meta is not None:
+                entry["meta"] = meta
+            if op in _BASE_OPS:     # the whole live set: replay starts here
                 kept = {p: v for p, v in snap.files.items()
                         if p not in remove}
                 entry["add"] = kept | add
                 # a batch appended during the rewrite may repeat its ids
-                entry["unique_ids"] = not kept
+                entry["unique_ids"] = op == "compact" and not kept
             with open(tmp, "w") as fh:
                 json.dump(entry, fh)
                 fh.flush()
@@ -192,35 +231,29 @@ def _collect_garbage(base: str, snap: _Snapshot,
     writer's in-flight files. Emptied partition dirs stay: a concurrent
     writer may be moving a file into one."""
     dead = {p for e in snap.entries for p in e["remove"]}
-    for part in _partition_dirs(base):
-        for name in os.listdir(part):
-            rel = os.path.relpath(os.path.join(part, name), base)
-            if rel not in snap.files and (
-                    rel in dead
-                    or (owner and name.startswith(f"{owner}-part-"))):
-                os.remove(os.path.join(part, name))
+    for rel in _data_files(base):
+        if rel not in snap.files and (
+                rel in dead or (owner and _owned(rel, owner))):
+            os.remove(os.path.join(base, rel))
 
 
 def _land(base: str, snap: _Snapshot, op: str, owner: str, write,
           remove: list[str] = (), schema: str | None = None,
-          batch: str | None = None) -> dict:
-    """``write(stage)`` a partitioned parquet copy to ``_staging/<owner>``,
-    move its files into ``topic=/ds=`` as ``<owner>-<name>``, commit
-    them, then collect garbage. Returns the added files."""
+          batch: str | None = None, meta: dict | None = None) -> dict:
+    """``write(stage)`` a parquet copy to ``_staging/<owner>``, move its
+    files into the same partition dirs under ``base`` as
+    ``<owner>-<name>``, commit them, then collect garbage. Returns the
+    added files."""
     stage = os.path.join(base, "_staging", owner)
     write(stage)
     add = {}
-    for part in _partition_dirs(stage):
-        rel_dir = os.path.relpath(part, stage)
-        topic, ds = (unquote(d.split("=", 1)[1])
-                     for d in rel_dir.split(os.sep))
+    for rel in sorted(_data_files(stage)):
+        rel_dir, name = os.path.split(rel)
         os.makedirs(os.path.join(base, rel_dir), exist_ok=True)
-        for name in sorted(os.listdir(part)):
-            if name.endswith(".parquet"):
-                rel = os.path.join(rel_dir, f"{owner}-{name}")
-                os.rename(os.path.join(part, name), os.path.join(base, rel))
-                add[rel] = {"topic": topic, "ds": ds}
-    _commit(base, snap, op, add, remove, schema, batch)
+        dst = os.path.join(rel_dir, f"{owner}-{name}")
+        os.rename(os.path.join(stage, rel), os.path.join(base, dst))
+        add[dst] = _partition_values(rel_dir)
+    _commit(base, snap, op, add, remove, schema, batch, meta)
     _collect_garbage(base, snap, owner)
     shutil.rmtree(stage, ignore_errors=True)
     return add
@@ -231,34 +264,101 @@ def _read(spark: SparkSession, base: str, schema: str | None,
     """The given snapshot files under ``base``, read with the stored
     schema (no inference job); partition columns come from the paths."""
     if schema is None:
-        raise FileNotFoundError(f"no store commit log under {base}")
+        raise FileNotFoundError(f"no commit log under {base}")
     return (spark.read.schema(StructType.fromJson(json.loads(schema)))
             .option("basePath", base)
             .parquet(*(os.path.join(base, p) for p in files)))
 
 
-def _store_schema(docs: DataFrame) -> str:
-    """``docs``' schema as a store read returns it: partition cols last."""
-    return StructType(sorted(docs.schema,
-                             key=lambda f: f.name in PARTITION_COLS)).json()
+def _store_schema(df: DataFrame, partition_by) -> str:
+    """``df``'s schema as a read returns it: partition cols last."""
+    return StructType(sorted(df.schema,
+                             key=lambda f: f.name in partition_by)).json()
+
+
+def _land_frame(path: str, op: str, batch: str, df: DataFrame,
+                partition_by, meta: dict | None) -> None:
+    """Land ``df`` as batch ``batch``'s files in one ``op`` commit."""
+    base = path.rstrip("/")
+    _land(base, _snapshot(base), op, batch,
+          lambda stage: _writer(df, partition_by).parquet(stage),
+          schema=_store_schema(df, partition_by), batch=batch, meta=meta)
+
+
+def append_table(df: DataFrame, path: str, batch: str,
+                 partition_by: tuple[str, ...] = (),
+                 meta: dict | None = None) -> None:
+    """Append ``df`` to the table at ``path`` as batch ``batch``: one
+    ``append`` commit of its ``<batch>-part-*`` files, partitioned by
+    ``partition_by``. Re-appending a committed batch id removes that
+    batch's old files in the same commit, so a redelivered batch
+    replaces its own instead of duplicating; until the commit, and
+    for good if the write fails, the old files stay live. ``meta`` (a
+    JSON-able dict of per-batch facts) is kept in the log entry and
+    returned by ``batch_meta``."""
+    _land_frame(path, "append", batch, df, partition_by, meta)
+
+
+def replace_table(df: DataFrame, path: str,
+                  partition_by: tuple[str, ...] = (),
+                  meta: dict | None = None) -> None:
+    """Make ``df`` the whole table at ``path`` (a rebuild): one
+    ``replace`` commit removes every live file — a batch appended
+    while it ran too — and adds ``df``'s files as batch ``BASE``.
+    Replay starts at it, so earlier batches and their ``meta`` are
+    forgotten. A failed write commits nothing: the table reads as
+    before."""
+    _land_frame(path, "replace", BASE, df, partition_by, meta)
+
+
+def write_table(df: DataFrame, path: str, batch: str = BASE,
+                partition_by: tuple[str, ...] = (),
+                meta: dict | None = None) -> None:
+    """``replace_table`` for batch ``BASE`` (a build), else
+    ``append_table`` as batch ``batch``."""
+    _land_frame(path, "replace" if batch == BASE else "append", batch,
+                df, partition_by, meta)
+
+
+def read_table(spark: SparkSession, path: str,
+               skip_batch: str | None = None) -> DataFrame:
+    """The latest snapshot of the table at ``path``, read with the
+    logged schema; without the files of batch ``skip_batch`` if
+    given. Raises ``FileNotFoundError`` if nothing was committed."""
+    base = path.rstrip("/")
+    snap = _snapshot(base)
+    return _read(spark, base, snap.schema,
+                 [p for p in snap.files
+                  if skip_batch is None or not _owned(p, skip_batch)])
+
+
+def table_files(path: str) -> dict:
+    """The latest snapshot's live files (absolute path → partition
+    values); empty if nothing was committed."""
+    base = path.rstrip("/")
+    return {os.path.join(base, p): v
+            for p, v in _snapshot(base).files.items()}
+
+
+def batch_meta(path: str) -> dict:
+    """``{batch id: meta}`` of every batch committed to the table at
+    ``path`` since its last ``replace`` (``meta`` is ``None`` where
+    the commit recorded none)."""
+    return {e["batch"]: e.get("meta")
+            for e in _snapshot(path.rstrip("/")).entries
+            if e["batch"] is not None}
 
 
 def write_store(docs: DataFrame, path: str,
                 batch_id: str | None = None) -> None:
     """Append enriched documents to the store as batch ``batch_id`` (a
-    fresh uuid when omitted): one ``append`` commit of its
-    ``<batch_id>-part-*`` files. Re-writing a committed batch id removes
-    that batch's old files in the same commit, so a replayed batch
-    replaces its own instead of duplicating; a retry after a crash
-    deletes what the crashed attempt left uncommitted.
+    fresh uuid when omitted), partitioned by ``topic``/``ds``: one
+    ``append_table`` commit. A replayed batch id replaces its own
+    files instead of duplicating; a retry after a crash deletes what
+    the crashed attempt left uncommitted.
     """
-    bid = batch_id or uuid.uuid4().hex
-    base = path.rstrip("/")
-    docs = with_store_partitions(docs)
-    _land(base, _snapshot(base), "append", bid,
-          lambda stage: (docs.write.mode("overwrite")
-                         .partitionBy(*PARTITION_COLS).parquet(stage)),
-          schema=_store_schema(docs), batch=bid)
+    append_table(with_store_partitions(docs), path,
+                 batch_id or uuid.uuid4().hex, PARTITION_COLS)
 
 
 def merge_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
@@ -291,8 +391,7 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
                          "_id", "left_anti")
     merged = keep.unionByName(up.select(*existing.columns))
     add = _land(base, snap, "merge", "merge",
-                lambda stage: _bloomed(merged.write.mode("overwrite")
-                                       .partitionBy(*PARTITION_COLS))
+                lambda stage: _bloomed(_writer(merged, PARTITION_COLS))
                 .parquet(stage), remove=old)
     return len({os.path.dirname(p) for p in add})
 
@@ -316,9 +415,7 @@ def read_store(spark: SparkSession, path: str, dedup: bool = True) -> DataFrame:
     return df.dropDuplicates(["_id"])
 
 
-def compact(spark: SparkSession, path: str,
-            max_records_per_file: int = 1_000_000,
-            cluster_by: tuple[str, ...] = ("key", "offset")) -> None:
+def compact(spark: SparkSession, path: str) -> None:
     """Rewrite the store so each (topic, ds) partition holds few,
     full-size files — the OPTIMIZE twin of the reference's "define some
     rollover conditions" advice (/root/reference/README.md:14).
@@ -326,8 +423,9 @@ def compact(spark: SparkSession, path: str,
     Streaming ingest leaves one small file per micro-batch per
     partition; at 100 TB that's death by file listing. One shuffle
     keyed on the partition columns lands each partition in one task;
-    ``maxRecordsPerFile`` re-splits partitions that exceed the target
-    so file size stays bounded on the high side too.
+    ``maxRecordsPerFile`` (``COMPACT_MAX_RECORDS``) re-splits
+    partitions that exceed the target so file size stays bounded on
+    the high side too.
 
     The same shuffle drops replayed records: rows are deduplicated on
     (topic, ds, _id) inside each task, which needs no second exchange.
@@ -337,7 +435,7 @@ def compact(spark: SparkSession, path: str,
     marks the snapshot ``unique_ids`` so reads skip their own dedup —
     unless a batch was appended between the read and the commit.
 
-    ``cluster_by`` sorts rows within each rewritten partition (a
+    ``COMPACT_CLUSTER_BY`` sorts rows within each rewritten partition (a
     Z-ORDER-lite): parquet row-group min/max stats on the sort columns
     become disjoint ranges, so needle queries (`key = X`) skip most
     row groups instead of scanning the day.
@@ -352,14 +450,13 @@ def compact(spark: SparkSession, path: str,
     # clustering is exact and rides the repartition's exchange
     out = _read(spark, base, snap.schema, snap.files) \
         .repartition(*PARTITION_COLS) \
-        .dropDuplicates([*PARTITION_COLS, "_id"])
-    if cluster_by:
-        out = out.sortWithinPartitions(*PARTITION_COLS, *cluster_by)
+        .dropDuplicates([*PARTITION_COLS, "_id"]) \
+        .sortWithinPartitions(*PARTITION_COLS, *COMPACT_CLUSTER_BY)
     _land(base, snap, "compact", "compact",
           lambda stage: _bloomed(
-              out.write.mode("overwrite")
-              .option("maxRecordsPerFile", str(max_records_per_file))
-              .partitionBy(*PARTITION_COLS)).parquet(stage),
+              _writer(out, PARTITION_COLS)
+              .option("maxRecordsPerFile", str(COMPACT_MAX_RECORDS)))
+          .parquet(stage),
           remove=list(snap.files))
 
 
@@ -428,18 +525,7 @@ def delete_by_query(docs: DataFrame, predicate) -> DataFrame:
     the victim batch); with a real multi-partition topic the spec is
     non-trivial.
     """
-    victims = latest_state(docs).where(predicate)
-    maxoff = (docs.groupBy("topic", "partition")
-              .agg(F.max("offset").alias("__mo")))
-    w = Window.partitionBy("topic", "partition").orderBy("key")
-    tomb = (victims.join(maxoff, ["topic", "partition"])
-            .withColumn("offset", F.col("__mo") + F.row_number().over(w))
-            .drop("__mo")
-            .withColumn("message", F.col("message")
-                        .withField("value", F.lit(TOMBSTONE)))
-            .withColumn("_id", doc_id())
-            .select(*docs.columns))
-    return docs.unionByName(tomb)
+    return update_by_query(docs, predicate, {"value": F.lit(TOMBSTONE)})
 
 
 def update_by_query(docs: DataFrame, predicate,
@@ -459,13 +545,13 @@ def update_by_query(docs: DataFrame, predicate,
     maxoff = (docs.groupBy("topic", "partition")
               .agg(F.max("offset").alias("__mo")))
     w = Window.partitionBy("topic", "partition").orderBy("key")
-    upd = victims.join(maxoff, ["topic", "partition"]) \
-        .withColumn("offset", F.col("__mo") + F.row_number().over(w)) \
-        .drop("__mo")
     msg = F.col("message")
-    for field, col in set_fields.items():
-        msg = msg.withField(field, col)
-    upd = (upd.withColumn("message", msg)
+    for name, col in set_fields.items():
+        msg = msg.withField(name, col)
+    upd = (victims.join(maxoff, ["topic", "partition"])
+           .withColumn("offset", F.col("__mo") + F.row_number().over(w))
+           .drop("__mo")
+           .withColumn("message", msg)
            .withColumn("_id", doc_id())
            .select(*docs.columns))
     return docs.unionByName(upd)

@@ -11,6 +11,35 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def live_batches(table: str) -> list[str]:
+    """The batch ids owning the live files of a stored table's
+    snapshot (files are named ``<batch>-part-*``)."""
+    from kafana_spark.store import table_files
+
+    return sorted({os.path.basename(f).split("-part-")[0]
+                   for f in table_files(table)})
+
+
+
+#: the message a ``fail_on`` frame raises with
+INJECTED_FAILURE = "injected write failure"
+
+
+def fail_on(df, col: str, when):
+    """``df`` with ``col`` passed through a Python UDF that raises on
+    the rows where the Column ``when`` holds: a job that computes
+    ``col`` fails part-way, after other tasks may have written."""
+    from pyspark.sql import functions as F
+
+    @F.udf(returnType=df.schema[col].dataType)
+    def boom(v, hit):
+        if hit:
+            raise RuntimeError(INJECTED_FAILURE)
+        return v
+
+    return df.withColumn(col, boom(F.col(col), when))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from kafana_spark.session import get_spark

@@ -10,7 +10,7 @@ from kafana_spark import ann_index
 from kafana_spark.operators import similarity
 from kafana_spark.session import tune_session
 from kafana_spark.sources.tables import load_table
-from tests.conftest import SF_SMOKE
+from tests.conftest import INJECTED_FAILURE, SF_SMOKE, fail_on, live_batches
 
 
 def embs(spark):
@@ -181,12 +181,10 @@ def test_pq_stream_sink_redelivery_safe(spark, tmp_path):
 
 
 def test_rebuild_clears_stale_append_batches(spark, tmp_path):
-    """An overwrite rebuild must drop batch=<id> partitions left by
-    prior appends: their assignments were computed against the OLD
-    centroids and would silently corrupt probe results (and duplicate
-    every appended vec_id in its probed cells). ADVICE.md r5."""
-    import os
-
+    """A rebuild must drop the batches left by prior appends: their
+    assignments were computed against the OLD centroids and would
+    silently corrupt probe results (and duplicate every appended
+    vec_id in its probed cells). ADVICE.md r5."""
     e = embs(spark)
     q = similarity.modulo_queries(e, 100)
     root = str(tmp_path / "annidx")
@@ -196,8 +194,8 @@ def test_rebuild_clears_stale_append_batches(spark, tmp_path):
                                n_assign=2, batch="day1")
     # rebuild over the FULL corpus (the rebuild-on-drift flow)
     ann_index.build_ann_index(e, root, centroid_mod=40, n_assign=2)
-    batches = sorted(os.listdir(os.path.join(root, ann_index.ASSIGN_DIR)))
-    assert batches == ["batch=base"]
+    # only the rebuild's own files are live
+    assert live_batches(f"{root}/{ann_index.ASSIGN_DIR}") == ["base"]
     fresh = str(tmp_path / "fresh")
     ann_index.build_ann_index(e, fresh, centroid_mod=40, n_assign=2)
     a = ann_index.ann_topk_from_index(spark, root, q, k=10, n_probe=3)
@@ -205,11 +203,34 @@ def test_rebuild_clears_stale_append_batches(spark, tmp_path):
     assert result_set(a) == result_set(b)
 
 
+def test_failed_redelivery_keeps_the_batch_live(spark, tmp_path):
+    """A redelivery of an appended batch whose write job fails must
+    commit nothing: the batch's earlier copy stays live and the index
+    serves exactly what it served before the attempt."""
+    import pytest
+
+    e = embs(spark)
+    q = similarity.modulo_queries(e, 100)
+    root = str(tmp_path / "annidx")
+    day1 = e.where(F.col("vec_id") % 2 != 0)
+    ann_index.build_ann_index(e.where(F.col("vec_id") % 2 == 0), root,
+                              centroid_mod=40)
+    ann_index.append_ann_index(day1, root, batch="day1")
+    before = result_set(ann_index.ann_topk_from_index(spark, root, q, k=10))
+    last = day1.agg(F.max("vec_id")).first()[0]
+    with pytest.raises(Exception, match=INJECTED_FAILURE):
+        ann_index.append_ann_index(
+            fail_on(day1, "embedding", F.col("vec_id") == last), root,
+            batch="day1")
+    assert live_batches(f"{root}/{ann_index.ASSIGN_DIR}") == \
+        ["base", "day1"]
+    assert result_set(
+        ann_index.ann_topk_from_index(spark, root, q, k=10)) == before
+
+
 def test_pq_rebuild_clears_stale_append_batches(spark, tmp_path):
     """Same contract for the PQ index: rebuilt codebooks must never be
     joined against codes encoded under the old codebooks."""
-    import os
-
     e = embs(spark)
     q = similarity.modulo_queries(e, 100)
     root = str(tmp_path / "pqidx")
@@ -221,7 +242,7 @@ def test_pq_rebuild_clears_stale_append_batches(spark, tmp_path):
     ann_index.build_pq_index(e, root, dim=64, m_total=16, ksub=32,
                              train_mod=3)
     for sub in (ann_index.PQ_CODE_DIR, ann_index.PQ_VEC_DIR):
-        assert sorted(os.listdir(os.path.join(root, sub))) == ["batch=base"]
+        assert live_batches(f"{root}/{sub}") == ["base"]
     fresh = str(tmp_path / "fresh")
     ann_index.build_pq_index(e, fresh, dim=64, m_total=16, ksub=32,
                              train_mod=3)
@@ -298,9 +319,9 @@ def test_lsh_stream_sink_redelivery_safe(spark, tmp_path):
 
 
 def test_lsh_rebuild_clears_stale_append_batches(spark, tmp_path):
-    """An overwrite rebuild must not leave stale batch=<id> code dirs
-    behind — they would double-count every appended vector in the
-    bucket join (the ADVICE r5 staleness class)."""
+    """A rebuild must not leave stale appended code batches live —
+    they would double-count every appended vector in the bucket join
+    (the ADVICE r5 staleness class)."""
     e = embs(spark)
     q = similarity.modulo_queries(e, 100)
     root = str(tmp_path / "lshidx")

@@ -1,7 +1,7 @@
 """Merge-law guards for the id-keyed stored families (r8 verdict #6).
 
 Each family's serve-time merge is exact only for ROW-DISJOINT batches.
-These tests prove the guards added in batch_manifest.py:
+These tests prove the guards in batch_manifest.py:
 
 - every family RAISES on the retry footgun (same rows re-appended
   under a FRESH batch id — the ``batch=None`` uuid default);
@@ -19,10 +19,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from kafana_spark import (ann_index, batch_manifest, dedup_index,
-                          event_index, gate_index)
+from kafana_spark import ann_index, dedup_index, event_index, gate_index
 from kafana_spark.session import tune_session
 from kafana_spark.sources.tables import load_table
+from kafana_spark.store import append_table, read_table
 from tests.conftest import SF_SMOKE
 
 
@@ -171,14 +171,13 @@ def test_ann_serve_dedups_duplicated_vectors(spark, tmp_path):
     # plant a duplicated slice under a second batch id, bypassing the
     # guard the way a pre-guard index could have been built
     dup = e.where(F.col("vec_id") % 7 == 0)
-    cents = spark.read.parquet(f"{root_dup}/{ann_index.CENT_DIR}")
+    cents = read_table(spark, f"{root_dup}/{ann_index.CENT_DIR}")
     from kafana_spark.operators.similarity import (_ivf_assign,
                                                    _vectors,
                                                    _with_norm)
 
-    _ivf_assign(_with_norm(_vectors(dup)), cents, 1) \
-        .write.mode("overwrite") \
-        .parquet(f"{root_dup}/{ann_index.ASSIGN_DIR}/batch=ghost")
+    append_table(_ivf_assign(_with_norm(_vectors(dup)), cents, 1),
+                 f"{root_dup}/{ann_index.ASSIGN_DIR}", "ghost")
     a = sorted(map(tuple, ann_index.ann_topk_from_index(
         spark, root_clean, q, k=5).collect()))
     b = sorted(map(tuple, ann_index.ann_topk_from_index(

@@ -1,0 +1,96 @@
+"""One write protocol: only the commit module writes persisted tables.
+
+Every table the library persists is written through ``store.py``'s
+commit log (``append_table`` / ``replace_table`` / ``write_store`` …),
+so a failed write leaves the previous snapshot readable. A module that
+drives a ``DataFrameWriter`` itself, or deletes a tree with
+``shutil.rmtree``, brings back a second protocol whose failed
+overwrite destroys what it replaces. This guard fails on either.
+"""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+PKG = pathlib.Path(__file__).resolve().parents[1] / "kafana_spark"
+COMMIT_MODULE = PKG / "store.py"
+
+#: (module, function) pairs allowed to drive a DataFrameWriter, and why
+EXEMPT = {
+    ("operators/relational.py", "build_bucketed_warehouse"):
+        "saveAsTable: bucketing is catalog metadata, which a parquet "
+        "commit log cannot carry",
+}
+
+
+def _chain(node: ast.AST) -> list[str]:
+    """Attribute names along a call/attribute receiver chain."""
+    names = []
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        else:
+            node = node.func
+    return names
+
+
+def _violations(source: str, rel: str) -> list[str]:
+    """``file:line what`` for each writer call, bare ``.parquet(``
+    call and ``rmtree`` in ``source`` (module ``rel``)."""
+    out = []
+
+    def visit(node: ast.AST, func: str | None) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        where = f"{rel}:{getattr(node, 'lineno', '?')}"
+        if isinstance(node, ast.Attribute) and node.attr == "rmtree":
+            out.append(f"{where} shutil.rmtree")
+        if isinstance(node, ast.Call) and \
+                isinstance(node.func, ast.Attribute):
+            chain = _chain(node.func)
+            # ``df.write.<…>(`` — not ``fh.write(…)``
+            if "write" in chain[1:] and (rel, func) not in EXEMPT:
+                out.append(f"{where} DataFrameWriter")
+            elif chain[0] == "parquet" and "read" not in chain:
+                out.append(f"{where} .parquet( outside spark.read")
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(ast.parse(source), None)
+    return list(dict.fromkeys(out))
+
+
+def test_only_the_commit_module_writes_tables():
+    modules = sorted(p for p in PKG.rglob("*.py") if p != COMMIT_MODULE)
+    assert modules
+    bad = [v for p in modules
+           for v in _violations(p.read_text(),
+                                p.relative_to(PKG).as_posix())]
+    assert bad == [], (
+        "write persisted tables through kafana_spark.store "
+        "(append_table / replace_table / write_table), not a "
+        "DataFrameWriter or rmtree:\n" + "\n".join(bad))
+
+
+def test_guard_flags_writers_and_rmtree_only():
+    """The guard itself: a writer chain, a bare ``.parquet(`` and an
+    ``rmtree`` are flagged; reads, file-handle writes and the
+    exemption are not."""
+    probe = (
+        "import shutil\n"
+        "def f(df, spark, p, fh, w):\n"
+        "    df.write.mode('overwrite').parquet(p)\n"
+        "    shutil.rmtree(p)\n"
+        "    w.parquet(p)\n"
+        "    spark.read.parquet(p)\n"
+        "    spark.read.schema('a int').option('x', 1).parquet(p)\n"
+        "    fh.write('x')\n"
+        "def build_bucketed_warehouse(df):\n"
+        "    df.write.saveAsTable('t')\n")
+    assert _violations(probe, "operators/relational.py") == [
+        "operators/relational.py:3 DataFrameWriter",
+        "operators/relational.py:4 shutil.rmtree",
+        "operators/relational.py:5 .parquet( outside spark.read"]
+    assert _violations(probe, "m.py")[-1] == "m.py:10 DataFrameWriter"

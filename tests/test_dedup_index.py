@@ -14,7 +14,8 @@ from kafana_spark import dedup_index
 from kafana_spark.operators import dedup
 from kafana_spark.session import tune_session
 from kafana_spark.sources.tables import load_table
-from tests.conftest import SF_SMOKE
+from tests.conftest import INJECTED_FAILURE, SF_SMOKE, fail_on
+from tests.conftest import live_batches
 
 THRESH = 0.5
 
@@ -119,12 +120,10 @@ def test_clusters_from_index_equals_dup_clusters(spark, tmp_path):
 
 
 def test_rebuild_clears_stale_append_batches(spark, tmp_path):
-    """A full rebuild (batch='base') must clear batch dirs left by
+    """A full rebuild (batch='base') must drop the batches left by
     appends/stream epochs — surviving (doc_id, h) shingle rows would
     double-count every jaccard intersection (ADVICE.md r5). Per-batch
-    appends must still be incremental (not clear siblings)."""
-    import os
-
+    appends must still be incremental (not drop siblings)."""
     d = docs(spark)
     root = str(tmp_path / "ndidx")
     half = d.where(F.col("doc_id") % 2 == 0)
@@ -132,15 +131,31 @@ def test_rebuild_clears_stale_append_batches(spark, tmp_path):
     dedup_index.append_dedup_index(d.where(F.col("doc_id") % 2 != 0),
                                    root, batch="day1")
     # append kept both batches (incremental contract intact)
-    assert sorted(os.listdir(os.path.join(root, dedup_index.SH_DIR))) == \
-        ["batch=base", "batch=day1"]
+    assert live_batches(f"{root}/{dedup_index.SH_DIR}") == \
+        ["base", "day1"]
     dedup_index.build_dedup_index(d, root)   # rebuild-on-drift
     for sub in (dedup_index.SIG_DIR, dedup_index.BAND_DIR,
                 dedup_index.SH_DIR):
-        assert sorted(os.listdir(os.path.join(root, sub))) == ["batch=base"]
+        assert live_batches(f"{root}/{sub}") == ["base"]
     got = dedup_index.near_dup_from_index(spark, root, THRESH)
     expect = dedup.minhash_near_dup(d, THRESH)
     assert pairs_set(got) == pairs_set(expect)
+
+
+def test_failed_rebuild_keeps_previous_index(spark, tmp_path):
+    """A rebuild whose write job fails must commit nothing: the
+    previous index keeps serving the same pairs."""
+    d = docs(spark)
+    root = str(tmp_path / "ndidx")
+    dedup_index.build_dedup_index(d, root)
+    before = pairs_set(dedup_index.near_dup_from_index(spark, root, THRESH))
+    assert before
+    last = d.agg(F.max("doc_id")).first()[0]
+    with pytest.raises(Exception, match=INJECTED_FAILURE):
+        dedup_index.build_dedup_index(
+            fail_on(d, "text", F.col("doc_id") == last), root)
+    assert pairs_set(
+        dedup_index.near_dup_from_index(spark, root, THRESH)) == before
 
 
 def test_substr_spans_from_index_equal_inline(spark, tmp_path):
@@ -173,17 +188,14 @@ def test_substr_stream_sink_redelivery_safe(spark, tmp_path):
 
 
 def test_substr_rebuild_clears_stale_batches(spark, tmp_path):
-    import os
-
     d = docs(spark)
     root = str(tmp_path / "subidx")
     dedup_index.build_substr_index(d.where(F.col("doc_id") % 2 == 0),
                                    root)
     dedup_index.build_substr_index(d.where(F.col("doc_id") % 2 != 0),
-                                   root, mode="overwrite", batch="day1")
+                                   root, batch="day1")
     dedup_index.build_substr_index(d, root)    # full rebuild
-    assert sorted(os.listdir(
-        os.path.join(root, dedup_index.GRAM_DIR))) == ["batch=base"]
+    assert live_batches(f"{root}/{dedup_index.GRAM_DIR}") == ["base"]
 
 
 def test_serve_materialize_truncates_lineage_local_branch(spark):

@@ -557,10 +557,11 @@ def test_x132_shuffles_one_row_per_key_not_per_event(spark):
 
 
 def test_stored_percolator_roundtrip_append_and_stream(spark, tmp_path):
-    import glob
     from kafana_spark.operators.relevance import (
         build_percolator_index, percolate, percolate_from_store,
         percolator_alert_sink, register_percolator_queries)
+    from kafana_spark.store import read_table
+    from tests.conftest import live_batches
     df = spark.createDataFrame(
         [(0, "a b c"), (1, "a b"), (2, "x y")],
         "doc_id: long, text: string")
@@ -582,10 +583,9 @@ def test_stored_percolator_roundtrip_append_and_stream(spark, tmp_path):
     sink = percolator_alert_sink(root, out)
     sink(df, 0)
     sink(df, 0)    # redelivery
-    files = glob.glob(f"{out}/batch=0/*.parquet")
-    assert files
+    assert live_batches(out) == ["0"]
     digests = {r.query_id: r.n_hits
-               for r in spark.read.parquet(out).collect()}
+               for r in read_table(spark, out).collect()}
     assert digests == {"q1": 2, "q2": 1, "q3": 1}
 
 
@@ -962,7 +962,8 @@ def test_bpe_store_roundtrip_matches_direct_encode(spark, tmp_path):
     stored = [tuple(r) for r in bpe_encode_from_store(df, root).collect()]
     assert direct == stored
     # the store holds the ordered merge table itself
-    m = spark.read.parquet(root + "/bpe_merges")
+    from kafana_spark.store import read_table
+    m = read_table(spark, root + "/bpe_merges")
     assert [r.pair for r in m.orderBy("rnd").collect()] \
         == ["a b", "a_b c", "a_b a_b_c"]
 

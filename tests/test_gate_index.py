@@ -12,6 +12,7 @@ from kafana_spark.operators.text import (
 )
 from kafana_spark.session import tune_session
 from kafana_spark.sources.tables import load_table
+from kafana_spark.store import read_table
 from tests.conftest import SF_SMOKE
 
 
@@ -58,13 +59,13 @@ def test_append_gates_under_frozen_model(spark, tmp_path):
     for r in gopher_rules(newb).collect():
         assert app[r.doc_id].g_gopher == r.keep
     # NB under stored weights: appended docs are all held-out
-    w = spark.read.parquet(f"{root}/model/nb_weights")
-    prior = spark.read.parquet(f"{root}/model/nb_prior")
+    w = read_table(spark, f"{root}/model/nb_weights")
+    prior = read_table(spark, f"{root}/model/nb_prior")
     for r in nb_score(newb, w, prior).collect():
         assert app[r.doc_id].g_nb == r.pred
     # fair gate: frozen per-lang cut, unknown lang -> False
-    cuts = {r.lang: r.cut_bp for r in spark.read.parquet(
-        f"{root}/model/lang_cuts").collect()}
+    cuts = {r.lang: r.cut_bp for r in read_table(
+        spark, f"{root}/model/lang_cuts").collect()}
     q = {r.doc_id: r.quality_bp
          for r in quality_score(newb).collect()}
     langs = {r.doc_id: r.lang

@@ -14,6 +14,7 @@ from kafana_spark.index import (
 )
 from kafana_spark.ingest import enrich, events_as_kafka_records
 from kafana_spark.sources.tables import load_table
+from kafana_spark.store import read_table
 from tests.conftest import SF_SMOKE
 
 
@@ -95,6 +96,6 @@ def test_stream_sink_builds_index_redelivery_safe(spark, tmp_path):
     assert sorted(r._id for r in via_index.collect()) \
         == sorted(r._id for r in direct.collect())
     # no duplicate postings from the replay
-    postings = spark.read.parquet(idx)
+    postings = read_table(spark, idx)
     assert postings.count() == postings.dropDuplicates(
         ["_id", "token"]).count()

@@ -4,11 +4,13 @@ losslessly, HLL sketches merge within tolerance, and incremental
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafana_spark.rollup import build_rollup, rollup_range
 from kafana_spark.session import tune_session
 from kafana_spark.sources.tables import load_table
+from kafana_spark.store import read_table
 from tests.conftest import SF_SMOKE
 
 DS0, DS1 = "2024-01-05", "2024-01-20"
@@ -143,13 +145,70 @@ def test_rollup_stream_sink_maintains_parquet(spark, tmp_path):
     sink(b1, 0)
     sink(b2, 1)
     got = {(r.event_type, r.ds): (r.cnt, round(r.sum_value, 6))
-           for r in spark.read.parquet(out).collect()}
+           for r in read_table(spark, out).collect()}
     expect_df = build_rollup(
         b1.unionByName(b2).withColumn("ds", F.to_date("ts")),
         by=("event_type",), value_col="value")
     exp = {(r.event_type, r.ds): (r.cnt, round(r.sum_value, 6))
            for r in expect_df.collect()}
     assert got == exp
+
+
+@pytest.mark.parametrize("failure", ["compute", "write"])
+def test_rollup_stream_sink_failed_batch_keeps_prior_rollup(
+        spark, tmp_path, failure):
+    """A micro-batch whose job fails must leave the prior rollup
+    intact, so its redelivery merges into it and the rollup equals a
+    one-shot build over both batches. ``compute``: a UDF raises on one
+    row. ``write``: the parquet writer rejects a row part-way through
+    the write (a pre-1582 date under the EXCEPTION rebase mode), after
+    every row was computed."""
+    import datetime
+
+    from kafana_spark.rollup import rollup_stream_sink
+    from tests.conftest import INJECTED_FAILURE, fail_on
+
+    tune_session(spark)
+    ev = load_table(spark, SF_SMOKE, "events") \
+        .select("event_type", "ts", "value")
+    b1 = ev.where(F.to_date("ts") <= "2024-01-10")
+    b2 = ev.where(F.to_date("ts") > "2024-01-08")
+    out = str(tmp_path / "rollup")
+    sink = rollup_stream_sink(out, by=("event_type",), time_col="ts",
+                              value_col="value")
+
+    def rollup_rows():
+        return {(r.event_type, r.ds): (r.cnt, round(r.sum_value, 6))
+                for r in read_table(spark, out).collect()}
+
+    sink(b1, 0)
+    before = rollup_rows()
+    if failure == "compute":
+        last = b2.agg(F.max("ts")).first()[0]
+        bad, conf = fail_on(b2, "value", F.col("ts") == last), {}
+        raised = INJECTED_FAILURE
+    else:
+        ancient = F.lit(datetime.datetime(1000, 1, 1)) \
+            .cast(b2.schema["ts"].dataType)
+        bad = b2.unionByName(b2.limit(1).withColumn("ts", ancient))
+        conf = {"spark.sql.parquet.datetimeRebaseModeInWrite": "EXCEPTION"}
+        raised = "TASK_WRITE_FAILED"
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        with pytest.raises(Exception, match=raised):
+            sink(bad, 1)
+    finally:
+        for k in conf:
+            spark.conf.unset(k)
+    assert rollup_rows() == before
+    sink(b2, 1)    # the redelivery
+    expect_df = build_rollup(
+        b1.unionByName(b2).withColumn("ds", F.to_date("ts")),
+        by=("event_type",), value_col="value")
+    assert rollup_rows() == {
+        (r.event_type, r.ds): (r.cnt, round(r.sum_value, 6))
+        for r in expect_df.collect()}
 
 
 def test_date_histogram_gapfill_zero_buckets(spark):
@@ -182,7 +241,7 @@ def test_streaming_topk_from_rollup(spark, tmp_path):
         sink(b, i)
 
     got = [(r.event_type, r.cnt) for r in
-           topk_from_rollup(spark.read.parquet(out), k=3,
+           topk_from_rollup(read_table(spark, out), k=3,
                             by=("event_type",)).collect()]
     exp = [(r.event_type, r.cnt) for r in
            ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))

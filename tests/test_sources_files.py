@@ -100,7 +100,7 @@ def test_compact_cluster_by_sorts_within_files(spark, tmp_path):
 
     ev = load_table(spark, SF_SMOKE, "events").limit(300)
     write_store(enrich(events_as_kafka_records(ev)), str(tmp_path / "s"))
-    compact(spark, str(tmp_path / "s"), cluster_by=("key", "offset"))
+    compact(spark, str(tmp_path / "s"))
 
     df = (spark.read.parquet(str(tmp_path / "s"))
           .withColumn("f", F.input_file_name()))

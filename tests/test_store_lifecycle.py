@@ -15,7 +15,8 @@ from kafana_spark.ingest import enrich, events_as_kafka_records
 from kafana_spark.operators.skew import salted_agg, salted_join
 from kafana_spark.sources.tables import load_table
 from kafana_spark.store import (
-    compact, merge_upsert, read_store, retention, write_store,
+    append_table, batch_meta, compact, merge_upsert, read_store,
+    read_table, replace_table, retention, table_files, write_store,
 )
 from tests.conftest import SF_SMOKE
 
@@ -322,6 +323,44 @@ def test_append_during_compact_survives(spark, tmp_path, crash):
         == {r._id for r in docs.select("_id").collect()}
     assert not _unique_ids(store)
     _assert_no_leftovers(spark, store)
+
+
+def test_replace_drops_a_batch_appended_during_it(spark, tmp_path,
+                                                  crash):
+    """Unlike compact, a rebuild defines the whole table: a batch
+    committed between replace_table's write and its commit is dropped
+    with the rest, its meta forgotten and its files deleted."""
+    t = str(tmp_path / "t")
+    append_table(spark.range(10), t, "a", meta={"n": 10})
+    crash.arm("rename", action=lambda: append_table(
+        spark.range(10, 15), t, "b", meta={"n": 5}))
+
+    replace_table(spark.range(100, 103), t)
+
+    assert sorted(r.id for r in read_table(spark, t).collect()) == \
+        [100, 101, 102]
+    assert batch_meta(t) == {"base": None}
+    assert {os.path.realpath(f) for f in parquet_files(t)} == \
+        {os.path.realpath(f) for f in table_files(t)}
+
+
+def test_table_batches_partitions_and_skip_batch(spark, tmp_path):
+    """append_table lands a batch under its partition dirs with its
+    meta; a redelivered id replaces its own files; read_table can
+    leave one batch's files out."""
+    t = str(tmp_path / "t")
+    df = spark.range(6).withColumn("bucket", (F.col("id") % 2).cast("int"))
+    append_table(df.where("id < 3"), t, "a", ("bucket",), meta={"k": 1})
+    append_table(df.where("id >= 3"), t, "b", ("bucket",))
+    append_table(df.where("id >= 4"), t, "b", ("bucket",))  # redelivery
+
+    assert batch_meta(t) == {"a": {"k": 1}, "b": None}
+    assert {v["bucket"] for v in table_files(t).values()} == {"0", "1"}
+    assert read_table(spark, t).columns == ["id", "bucket"]
+    assert sorted(r.id for r in read_table(spark, t).collect()) == \
+        [0, 1, 2, 4, 5]
+    assert sorted(r.id for r in
+                  read_table(spark, t, skip_batch="a").collect()) == [4, 5]
 
 
 def test_racing_commits_both_land(spark, tmp_path, crash):
