@@ -8,7 +8,9 @@ ANN twin of the dedup index in ``dedup_index.py``).
 
 Layout under one index root — each table written and read through
 ``store.py``'s commit log (a build is one ``replace_table``, a new
-batch one ``append_table`` under its id, a read the table's snapshot):
+batch one ``append_table`` under its id, a read the table's snapshot;
+a stream appends each micro-batch through
+``streaming.pipeline.batch_sink``):
 
 - ``<path>/centroids``   — (cid, cv, cnrm): the coarse quantizer.
 - ``<path>/assignments`` — (vec_id, v, nrm, cid): one row per corpus
@@ -83,7 +85,9 @@ def append_ann_index(df: DataFrame, path: str, n_assign: int = 1,
     Append-only: existing assignment rows never change. Centroids are
     not refit — monitor drift and rebuild when cell occupancy skews
     (the standard IVF maintenance trade). Pass ``batch`` (ingest day,
-    epoch) for idempotent re-runs; a random id is drawn otherwise.
+    stream batch) for idempotent re-runs; a random id is drawn
+    otherwise — a redelivery under the same id REPLACES that batch's
+    files instead of duplicating assignment rows.
 
     Merge-law audit (r8 verdict #6): duplicated vectors across
     batches CANNOT corrupt a serve — every probe path dedups
@@ -97,23 +101,6 @@ def append_ann_index(df: DataFrame, path: str, n_assign: int = 1,
     centroids = read_table(df.sparkSession, f"{path}/{CENT_DIR}")
     append_table(_ivf_assign(_with_norm(_vectors(df)), centroids,
                              n_assign), table, bid, meta=meta)
-
-
-def ann_index_stream_sink(path: str, n_assign: int = 1):
-    """foreachBatch sink keeping the IVF index fresh under streaming
-    ingest: each micro-batch of new vectors is assigned against the
-    STORED centroids (no refit — the append_ann_index contract) and
-    appended as batch ``<epoch_id>``, so an at-least-once redelivery
-    REPLACES that batch's files instead of duplicating assignment rows
-    (duplicates would surface the same vec_id twice per probed cell) —
-    the store sink's idempotency contract.
-    """
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        append_ann_index(batch_df, path, n_assign,
-                         batch=str(epoch_id))
-
-    return _sink
 
 
 def ann_topk_from_index(spark: SparkSession, path: str,
@@ -174,32 +161,20 @@ def _lloyd_batch_stats(batch_df: DataFrame, centroids: DataFrame,
                               for j in range(dim)]).alias("s")))
 
 
-def lloyd_stats_stream_sink(path: str, n_assign: int = 1,
-                            dim: int = 64):
-    """foreachBatch sink maintaining the Lloyd index under streaming
-    ingest: each micro-batch is (a) assigned against the STORED
-    centroids and appended probe-servable, and (b) reduced to its
-    exact sufficient statistics, both appended as batch
-    ``<epoch_id>`` — an at-least-once redelivery REPLACES that batch's
-    files, so the later centroid refresh counts every vector once (the
-    ann/dedup/token sink idempotency discipline)."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        bid, table = str(epoch_id), f"{path}/{ASSIGN_DIR}"
-        # the stats are SUMMED at refresh time (event_index-class
-        # merge law), so the fingerprint tripwire guards them too:
-        # the same vectors under a fresh epoch would double the
-        # sufficient statistics and skew every refreshed centroid
-        meta = bm.fresh_batch_meta(batch_df, "vec_id", table, bid)
-        centroids = read_table(batch_df.sparkSession,
-                               f"{path}/{CENT_DIR}")
-        append_table(_ivf_assign(_with_norm(_vectors(batch_df)),
-                                 centroids, n_assign),
-                     table, bid, meta=meta)
-        append_table(_lloyd_batch_stats(batch_df, centroids, dim),
-                     f"{path}/{LLOYD_STATS_DIR}", bid)
-
-    return _sink
+def append_lloyd_index(df: DataFrame, path: str, n_assign: int = 1,
+                       dim: int = 64, batch: str | None = None) -> None:
+    """Append a NEW batch to the Lloyd index: (a) assigned against the
+    STORED centroids and appended probe-servable, and (b) reduced to
+    its exact sufficient statistics, both as batch ``batch`` (a random
+    id when none is given) — a redelivery REPLACES that batch's files,
+    so the later centroid refresh counts every vector once."""
+    bid = batch or uuid.uuid4().hex
+    # the stats are SUMMED at refresh time (event_index-class merge
+    # law), so append_ann_index's fingerprint tripwire guards them too
+    append_ann_index(df, path, n_assign, batch=bid)
+    centroids = read_table(df.sparkSession, f"{path}/{CENT_DIR}")
+    append_table(_lloyd_batch_stats(df, centroids, dim),
+                 f"{path}/{LLOYD_STATS_DIR}", bid)
 
 
 def refresh_lloyd_centroids(spark: SparkSession, path: str,
@@ -303,19 +278,6 @@ def append_pq_index(df: DataFrame, path: str, dim: int = 64,
     append_table(_vectors(df), f"{path}/{PQ_VEC_DIR}", bid)
 
 
-def pq_index_stream_sink(path: str, dim: int = 64, m_total: int = 16):
-    """foreachBatch sink for the PQ index: encode each new micro-batch
-    against the STORED codebooks, append codes + refine vectors as
-    batch ``<epoch_id>`` (redelivery replaces it, same discipline as
-    ann_index_stream_sink)."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        append_pq_index(batch_df, path, dim, m_total,
-                        batch=str(epoch_id))
-
-    return _sink
-
-
 def pq_topk_from_index(spark: SparkSession, path: str,
                        queries: DataFrame, k: int = 10,
                        pool: int | None = 100, dim: int = 64,
@@ -363,18 +325,6 @@ def append_lsh_index(df: DataFrame, path: str, dim: int = 64,
     planes = read_table(df.sparkSession, f"{path}/{LSH_PLANE_DIR}")
     append_table(lsh_codes(_with_norm(_vectors(df)), planes, dim),
                  table, bid, meta=meta)
-
-
-def lsh_index_stream_sink(path: str, dim: int = 64):
-    """foreachBatch sink for the LSH index: sign each micro-batch
-    against the STORED planes, appended as batch ``<epoch_id>``
-    (redelivery replaces it, same discipline as
-    ann_index_stream_sink)."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        append_lsh_index(batch_df, path, dim, batch=str(epoch_id))
-
-    return _sink
 
 
 def lsh_topk_from_index(spark: SparkSession, path: str,
@@ -506,7 +456,7 @@ def build_binary_index(df: DataFrame, path: str, dim: int = 64) -> None:
 def append_binary_index(df_new: DataFrame, path: str, batch: str,
                         dim: int = 64) -> None:
     """Pack and append a new batch — stateless encode, idempotent
-    per-batch replace (the ann/dedup sink discipline).
+    per-batch replace (the ann/dedup append discipline).
     Fingerprint tripwire as in ``append_ann_index``."""
     meta = bm.fresh_batch_meta(df_new, "vec_id",
                                f"{path}/{BIN_WORDS_DIR}", batch)
@@ -542,15 +492,3 @@ def binary_topk_from_index(spark: SparkSession, path: str,
             f"index or pass the dim it was built with "
             f"({stored_words * 32})")
     return hamming_topk_from_parts(words, vecs, queries, k, pool, dim)
-
-
-def binary_index_stream_sink(path: str, dim: int = 64):
-    """foreachBatch sink maintaining the binary index under streaming
-    ingest: each micro-batch is appended as batch ``<epoch_id>``, so
-    at-least-once redelivery replaces its own files."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        append_binary_index(batch_df, path, batch=str(epoch_id),
-                            dim=dim)
-
-    return _sink

@@ -20,8 +20,10 @@ Each table is written and read through ``store.py``'s commit log: a
 build is one ``replace_table`` per table, a batch one ``append_table``
 under its id, a read the table's snapshot. All are append-only for
 new documents (per-doc functions — no global state), so daily-batch
-maintenance is one map-side pass over the new docs. Queries then run
-LSH banding + exact verify FROM the store, touching no text:
+maintenance is one map-side pass over the new docs, and a stream
+appends each micro-batch through ``streaming.pipeline.batch_sink``.
+Queries then run LSH banding + exact verify FROM the store, touching
+no text:
 
 - ``near_dup_from_index``  — all verified pairs in the index.
 - ``incremental_from_index`` — NEW batch × indexed corpus, the
@@ -45,15 +47,28 @@ from kafana_spark.operators.dedup import (
     minhash_signature,
 )
 from kafana_spark.session import serve_materialize
-from kafana_spark.store import BASE, read_table, write_table
+from kafana_spark.store import append_table, read_table, replace_table
 
 SIG_DIR = "signatures"
 BAND_DIR = "bands"
 SH_DIR = "shingles"
 
 
-def build_dedup_index(df: DataFrame, path: str, text_col: str = "text",
-                      batch: str = BASE) -> None:
+def _index_tables(df: DataFrame, text_col: str, commit) -> None:
+    """Sign and shingle ``df`` and ``commit(frame, sub)`` each of the
+    three tables."""
+    sh = hashed_shingle_set(df, text_col=text_col)
+    sig = minhash_signature(sh).persist()
+    try:
+        commit(sig, SIG_DIR)
+        commit(lsh_bands(sig), BAND_DIR)
+    finally:
+        sig.unpersist()
+    commit(sh, SH_DIR)
+
+
+def build_dedup_index(df: DataFrame, path: str,
+                      text_col: str = "text") -> None:
     """Sign + shingle the corpus once and persist the three tables.
 
     One map-side pass over the text (shingle explode), one combinable
@@ -61,36 +76,13 @@ def build_dedup_index(df: DataFrame, path: str, text_col: str = "text",
     input is — at 100 TB partition the input by ingest day and this
     becomes the per-day index build.
 
-    The default ``batch=BASE`` is a full rebuild: one ``replace_table``
-    per table drops every appended batch, whose surviving (doc_id, h)
-    shingle rows would otherwise double-count every jaccard
-    intersection those docs participate in (ADVICE.md r5). Any other
-    id appends that batch (a redelivery replaces its own files).
-
-    Incremental loads ENFORCE the merge-law precondition (r8 verdict
-    #6): batches must be doc-disjoint, or the duplicated (doc_id, h)
-    shingle rows silently inflate every jaccard the doc participates
-    in. Two guards (batch_manifest.py): the content-fingerprint
-    tripwire (same rows under a NEW batch id — the uuid-retry footgun
-    — raises) and an exact doc_id semi-join against the stored
-    signatures of the other batches (one row per doc, column-pruned).
-    Same-id redelivery replaces its own files and passes both.
+    A build is a full rebuild: one ``replace_table`` per table drops
+    every appended batch, whose surviving (doc_id, h) shingle rows
+    would otherwise double-count every jaccard intersection those docs
+    participate in (ADVICE.md r5).
     """
-    sig_table = f"{path}/{SIG_DIR}"
-    meta = None
-    if batch != BASE:
-        meta = bm.fresh_batch_meta(df, "doc_id", sig_table, batch)
-        if meta["n"]:
-            bm.enforce_disjoint_ids(df, sig_table, batch, "doc_id",
-                                    "dedup index")
-    sh = hashed_shingle_set(df, text_col=text_col)
-    sig = minhash_signature(sh).persist()
-    try:
-        write_table(sig, sig_table, batch, meta=meta)
-        write_table(lsh_bands(sig), f"{path}/{BAND_DIR}", batch)
-    finally:
-        sig.unpersist()
-    write_table(sh, f"{path}/{SH_DIR}", batch)
+    _index_tables(df, text_col,
+                  lambda frame, sub: replace_table(frame, f"{path}/{sub}"))
 
 
 def append_dedup_index(df: DataFrame, path: str,
@@ -98,31 +90,31 @@ def append_dedup_index(df: DataFrame, path: str,
                        batch: str | None = None) -> None:
     """Add new documents to an existing index (append-only: signatures
     and shingles are per-doc functions, so no existing row changes).
-    Each append gets its own batch id — pass one (ingest day, epoch)
-    for idempotent re-runs, or let a random one be drawn."""
-    build_dedup_index(df, path, text_col=text_col,
-                      batch=batch or uuid.uuid4().hex)
+    Each append gets its own batch id — pass one (ingest day, stream
+    batch) for idempotent re-runs, or let a random one be drawn. A
+    redelivered id replaces its own files, so a replayed micro-batch
+    never doubles its (doc_id, h) shingle rows, and a crash mid-write
+    heals the same way: nothing was committed, and the retry's commit
+    replaces whatever the log holds for it.
 
-
-def dedup_index_stream_sink(path: str, text_col: str = "text"):
-    """foreachBatch sink keeping the near-dup index fresh under
-    streaming ingest — use with
-    ``stream.writeStream.foreachBatch(dedup_index_stream_sink(p))``.
-
-    Idempotent under at-least-once redelivery, the contract the store
-    sink keeps: each micro-batch is appended as batch ``<epoch_id>``,
-    so a replayed batch REPLACES its own files instead of appending a
-    duplicate (a plain append would double the (doc_id, h) shingle
-    rows and inflate every jaccard intersection the doc participates
-    in). A crash mid-write heals the same way: nothing was committed,
-    and the retry's commit replaces whatever the log holds for it.
+    Appends ENFORCE the merge-law precondition (r8 verdict #6):
+    batches must be doc-disjoint, or the duplicated (doc_id, h)
+    shingle rows silently inflate every jaccard the doc participates
+    in. Two guards (batch_manifest.py): the content-fingerprint
+    tripwire (same rows under a NEW batch id — the uuid-retry footgun
+    — raises) and an exact doc_id semi-join against the stored
+    signatures of the other batches (one row per doc, column-pruned).
+    Same-id redelivery replaces its own files and passes both.
     """
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        build_dedup_index(batch_df, path, text_col=text_col,
-                          batch=str(epoch_id))
-
-    return _sink
+    bid = batch or uuid.uuid4().hex
+    sig_table = f"{path}/{SIG_DIR}"
+    meta = bm.fresh_batch_meta(df, "doc_id", sig_table, bid)
+    if meta["n"]:
+        bm.enforce_disjoint_ids(df, sig_table, bid, "doc_id",
+                                "dedup index")
+    _index_tables(df, text_col, lambda frame, sub: append_table(
+        frame, f"{path}/{sub}", bid,
+        meta=meta if sub == SIG_DIR else None))
 
 
 def near_dup_from_index(spark: SparkSession, path: str,
@@ -253,32 +245,31 @@ def incremental_from_index(new: DataFrame, path: str,
 GRAM_DIR = "grams"
 
 
-def build_substr_index(df: DataFrame, path: str, k: int | None = None,
-                       text_col: str = "text", batch: str = BASE) -> None:
-    """Persist the positional k-gram index the ExactSubstr family
-    shares: (doc_id, pos, h) — a pure per-document function, so the
-    same commit, append and rebuild discipline as the minhash index
-    above applies (``batch=BASE`` replaces the table; any other id
-    appends that batch)."""
+def _gram_index(df: DataFrame, k: int | None, text_col: str) -> DataFrame:
     from kafana_spark.operators.dedup import (
         EXSUB_K, positional_gram_index,
     )
 
-    write_table(positional_gram_index(df, k or EXSUB_K, text_col=text_col),
-                f"{path}/{GRAM_DIR}", batch)
+    return positional_gram_index(df, k or EXSUB_K, text_col=text_col)
 
 
-def substr_index_stream_sink(path: str, k: int | None = None,
-                             text_col: str = "text"):
-    """foreachBatch sink for the gram index — each micro-batch is
-    appended as batch ``<epoch_id>``, redelivery-safe like the other
-    index sinks."""
+def build_substr_index(df: DataFrame, path: str, k: int | None = None,
+                       text_col: str = "text") -> None:
+    """Persist the positional k-gram index the ExactSubstr family
+    shares: (doc_id, pos, h) — a pure per-document function, so the
+    same commit, append and rebuild discipline as the minhash index
+    above applies: a build replaces the table."""
+    replace_table(_gram_index(df, k, text_col), f"{path}/{GRAM_DIR}")
 
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        build_substr_index(batch_df, path, k, text_col=text_col,
-                           batch=str(epoch_id))
 
-    return _sink
+def append_substr_index(df: DataFrame, path: str, k: int | None = None,
+                        text_col: str = "text",
+                        batch: str | None = None) -> None:
+    """Append ``df``'s grams to the gram index as batch ``batch`` (a
+    redelivered id replaces its own grams; a random id when none is
+    given)."""
+    append_table(_gram_index(df, k, text_col), f"{path}/{GRAM_DIR}",
+                 batch or uuid.uuid4().hex)
 
 
 def spans_from_index(spark: SparkSession, path: str,

@@ -27,8 +27,9 @@ lossless, the x57/x148/x172 price-list discipline.
 Every table is written and read through ``store.py``'s commit log,
 like dedup_index/ann_index/gate_index: a base build replaces each
 table, an append commits its rows as one batch, and redelivering a
-batch id replaces its own files (idempotent), so the foreachBatch
-streaming sink is at-least-once safe.
+batch id replaces its own files (idempotent), so a stream fed through
+``streaming.pipeline.batch_sink(ckpt, append_event_index, path)`` is
+at-least-once safe.
 """
 
 from __future__ import annotations
@@ -39,12 +40,14 @@ from pyspark.sql import functions as F
 from kafana_spark import batch_manifest as bm
 from kafana_spark.operators import events as ev_ops
 from kafana_spark.operators.events import US_PER_DAY, US_PER_HOUR
-from kafana_spark.store import BASE, read_table, write_table
+from kafana_spark.store import append_table, read_table, replace_table
 
 DAILY_DIR = "daily"
 USER_DAYS_DIR = "user_days"
 HOURLY_DIR = "hourly"
 TYPE_HOURLY_DIR = "type_hourly"
+#: the tables ``_rollups`` returns, in its order
+ROLLUP_DIRS = (DAILY_DIR, USER_DAYS_DIR, HOURLY_DIR, TYPE_HOURLY_DIR)
 
 
 def _rollups(df: DataFrame, time_col: str, key_col: str,
@@ -66,14 +69,6 @@ def _rollups(df: DataFrame, time_col: str, key_col: str,
     return daily, user_days, hourly, type_hourly
 
 
-def _write_rollups(rollups, path: str, batch: str,
-                   meta: dict | None = None) -> None:
-    for frame, sub in zip(rollups, (DAILY_DIR, USER_DAYS_DIR,
-                                    HOURLY_DIR, TYPE_HOURLY_DIR)):
-        write_table(frame, f"{path}/{sub}", batch,
-                    meta=meta if sub == DAILY_DIR else None)
-
-
 def build_event_index(df: DataFrame, path: str, *,
                       time_col: str = "ts", key_col: str = "user_id",
                       type_col: str = "event_type",
@@ -81,8 +76,9 @@ def build_event_index(df: DataFrame, path: str, *,
     """One pass over the events (three combinable aggregates sharing
     the projected base frame), four rollup tables out, each replacing
     the table's appended batches."""
-    _write_rollups(_rollups(df, time_col, key_col, type_col,
-                            err_type), path, BASE)
+    for frame, sub in zip(_rollups(df, time_col, key_col, type_col,
+                                   err_type), ROLLUP_DIRS):
+        replace_table(frame, f"{path}/{sub}")
 
 
 def append_event_index(df_new: DataFrame, path: str, batch: str, *,
@@ -105,8 +101,10 @@ def append_event_index(df_new: DataFrame, path: str, batch: str, *,
     it by construction)."""
     meta = bm.fresh_batch_meta(df_new, seq_col, f"{path}/{DAILY_DIR}",
                                batch)
-    _write_rollups(_rollups(df_new, time_col, key_col, type_col,
-                            err_type), path, batch, meta)
+    for frame, sub in zip(_rollups(df_new, time_col, key_col, type_col,
+                                   err_type), ROLLUP_DIRS):
+        append_table(frame, f"{path}/{sub}", batch,
+                     meta=meta if sub == DAILY_DIR else None)
 
 
 def daily_from_store(spark: SparkSession, path: str) -> DataFrame:
@@ -195,20 +193,3 @@ def trend_from_store(spark: SparkSession, path: str) -> DataFrame:
     d = (th.select("t", F.expr("hour div 24").alias("day"), "observed")
          .groupBy("t", "day").agg(F.sum("observed").alias("c")))
     return ev_ops.trend_from_daily(d)
-
-
-def event_stream_sink(path: str, *, time_col: str = "ts",
-                      key_col: str = "user_id",
-                      type_col: str = "event_type",
-                      err_type: str = "error"):
-    """foreachBatch sink maintaining the rollups from streaming
-    ingest: each micro-batch is appended as batch ``<epoch_id>`` via
-    ``append_event_index`` — at-least-once redelivery replaces its
-    own files, so every event counts once in the served series."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        append_event_index(batch_df, path, batch=str(epoch_id),
-                           time_col=time_col, key_col=key_col,
-                           type_col=type_col, err_type=err_type)
-
-    return _sink

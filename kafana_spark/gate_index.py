@@ -28,7 +28,9 @@ Every table is written and read through ``store.py``'s commit log,
 like dedup_index/ann_index: a build replaces each table (so appended
 batches gated under an OLD model cannot survive a model refresh), an
 append commits its gate rows as one batch, and reads see the latest
-snapshot.
+snapshot. A stream gates each micro-batch under the frozen model
+through ``streaming.pipeline.batch_sink(ckpt, append_gate_index,
+path)``.
 """
 
 from __future__ import annotations
@@ -173,25 +175,3 @@ def source_gate_matrix_from_store(spark: SparkSession,
                     F.expr("10000 * sn div n_docs").cast("long")
                     .alias("nb_bp"))
             .orderBy("source"))
-
-
-def gate_stream_sink(path: str, *,
-                     min_words: int = 20, max_words: int = 1000,
-                     min_mwl_x10: int = 40, max_mwl_x10: int = 100,
-                     min_stop: int = 2, max_dup2_bp: int = 1500):
-    """foreachBatch sink gating streaming ingest under the FROZEN
-    model: each micro-batch is appended as batch ``<epoch_id>`` via
-    ``append_gate_index`` (per-doc functions + stored weights/cuts
-    only — no global state recomputed per micro-batch), so an
-    at-least-once redelivery REPLACES its own files and the
-    served reports count every doc once (the ann/dedup/token sink
-    idempotency discipline)."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        append_gate_index(batch_df, path, batch=str(epoch_id),
-                          min_words=min_words, max_words=max_words,
-                          min_mwl_x10=min_mwl_x10,
-                          max_mwl_x10=max_mwl_x10, min_stop=min_stop,
-                          max_dup2_bp=max_dup2_bp)
-
-    return _sink

@@ -10,9 +10,9 @@ against a 100 TB store.
 
 Scale shape:
 - build: explode distinct tokens per doc (map-only) → one append
-  commit (``store.append_table``) partitioned by
-  ``bucket = pmod(xxhash64(token), n_buckets)``. No shuffle beyond the
-  write's own partitioning.
+  commit (``append_token_index`` → ``store.append_table``) partitioned
+  by ``bucket = pmod(xxhash64(token), n_buckets)``. No shuffle beyond
+  the write's own partitioning.
 - lookup: the bucket of the queried term is a LITERAL, so the scan
   of the index snapshot reads one bucket's files (partition pruning,
   pinned by test); the
@@ -21,7 +21,9 @@ Scale shape:
   row groups.
 - maintenance: append-only — new documents append their postings; the
   index needs no rewrite (a token's postings may span files within its
-  bucket; the reader unions them for free).
+  bucket; the reader unions them for free). A stream keeps it fresh
+  through ``streaming.pipeline.batch_sink(ckpt, append_token_index,
+  path)``; a redelivered micro-batch replaces its own postings.
 """
 
 from __future__ import annotations
@@ -59,10 +61,15 @@ def build_token_index(docs: DataFrame, field: str = "message.value",
         .withColumn("bucket", _bucket(F.col("token"))))
 
 
-def write_token_index(postings: DataFrame, path: str) -> None:
-    """Persist postings sharded by token-hash bucket (append-only): one
-    append commit as a fresh batch."""
-    append_table(postings, path, uuid.uuid4().hex, BUCKET_COLS)
+def append_token_index(docs: DataFrame, path: str,
+                       field: str = "message.value", id_col: str = "_id",
+                       batch: str | None = None) -> None:
+    """Append the postings of ``docs`` (``build_token_index``) sharded
+    by token-hash bucket: one append commit as batch ``batch`` (a
+    redelivered id replaces its own postings), or as a fresh batch
+    when none is given."""
+    append_table(build_token_index(docs, field=field, id_col=id_col),
+                 path, batch or uuid.uuid4().hex, BUCKET_COLS)
 
 
 def lookup_ids(spark: SparkSession, index_path: str, term: str) -> DataFrame:
@@ -103,23 +110,3 @@ def index_size_report(spark: SparkSession, index_path: str) -> dict:
     return {"buckets": len({v["bucket"] for v in files.values()}),
             "files": len(files),
             "postings": sum(pq.read_metadata(f).num_rows for f in files)}
-
-
-def token_index_stream_sink(path: str, field: str = "message.value",
-                            id_col: str = "_id"):
-    """foreachBatch sink keeping the token index fresh under streaming
-    ingest — the third index with streaming maintenance, next to the
-    near-dup and ANN sinks (dedup_index / ann_index).
-
-    Each micro-batch is appended as batch ``<epoch_id>`` — an
-    at-least-once redelivery REPLACES its epoch's postings instead of
-    appending duplicates; ``lookup_ids`` works unchanged — the bucket
-    filter still prunes to one bucket's files.
-    """
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        append_table(build_token_index(batch_df, field=field,
-                                       id_col=id_col),
-                     path, str(epoch_id), BUCKET_COLS)
-
-    return _sink

@@ -619,10 +619,12 @@ def build_order_rollup(orders: DataFrame, path: str, *,
                        batch: str = "base") -> None:
     """Persist the per-batch daily revenue partials (ds, day,
     day_cents) as one append commit of batch ``batch`` (a redelivered
-    id replaces its own partials). Cents sums are distributive, so
-    per-batch partials merged with SUM are exact — the same
-    mergeability contract as the event-rollup index (event_index.py),
-    proven by serving x255's oracle from a two-batch build.
+    id replaces its own partials; a stream appends each micro-batch
+    through ``streaming.pipeline.batch_sink``). Cents sums are
+    distributive, so per-batch partials merged with SUM are exact —
+    the same mergeability contract as the event-rollup index
+    (event_index.py), proven by serving x255's oracle from a
+    two-batch build.
     """
     append_table(_daily_revenue(orders), f"{path}/{DAILY_REV_DIR}", batch)
 
@@ -648,20 +650,6 @@ def running_from_daily(daily: DataFrame) -> DataFrame:
         F.sum("day_cents").over(w_cum).alias("cum_cents"),
         F.sum("day_cents").over(w_7d).alias("trailing_7d_cents"))
         .orderBy("ds"))
-
-
-def order_stream_sink(path: str):
-    """foreachBatch sink maintaining the order-rollup index from
-    streaming ingest: each micro-batch's daily-revenue partials are
-    appended as batch ``<epoch_id>`` (the event_index.py sink
-    contract) — at-least-once redelivery replaces its own files, so
-    every order counts once in the served running series.
-    """
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        build_order_rollup(batch_df, path, batch=str(epoch_id))
-
-    return _sink
 
 
 def order_of_record(lineitem: DataFrame, part: DataFrame) -> DataFrame:

@@ -32,7 +32,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from kafana_spark.functions import tokens
-from kafana_spark.store import BASE, append_table, read_table, write_table
+from kafana_spark.store import append_table, read_table, replace_table
 
 #: Lucene/ES BM25 defaults (k1, b) — org.apache.lucene.search
 #: .similarities.BM25Similarity.
@@ -980,32 +980,24 @@ def _percolate_qdf(df: DataFrame, qdf: DataFrame, id_col: str,
             .orderBy("query_id"))
 
 
+def _perc_rows(spark, queries: Mapping[str, Sequence[str]],
+               seq: int) -> DataFrame:
+    """(query_id, term, n_required, seq) rows of registration ``seq``."""
+    return spark.createDataFrame(
+        [(qid, t, len(ts), seq)
+         for qid, ts in sorted(queries.items()) for t in ts],
+        "query_id string, term string, n_required int, seq int")
+
+
 def build_percolator_index(spark, queries: Mapping[str, Sequence[str]],
-                           path: str, batch: str = BASE) -> None:
+                           path: str) -> None:
     """Persist registered percolator queries — ES stores percolator
     queries AS index documents, and this is that store: (query_id,
     term, n_required) rows under the same commit and rebuild
-    discipline as the other persisted indexes (``batch=BASE`` replaces
-    the table; any other id appends its registrations
-    incrementally)."""
-    # registration order: base is seq 0, incremental batch N is seq
-    # N+1 — the offset keeps batch="0" strictly AFTER base (a tie
-    # would make the latest-wins max-seq filter keep BOTH definitions
-    # of a re-registered query_id: inflated n_matched, never-firing
-    # alert). Non-numeric / negative batch ids raise loudly rather
-    # than storing an unorderable version.
-    if batch == BASE:
-        seq = 0
-    else:
-        seq = int(batch) + 1
-        if seq <= 0:
-            raise ValueError(
-                f"percolator batch id must be >= 0 (got {batch!r})")
-    qrows = [(qid, t, len(ts), seq)
-             for qid, ts in sorted(queries.items()) for t in ts]
-    write_table(spark.createDataFrame(
-        qrows, "query_id string, term string, n_required int, seq int"),
-        f"{path}/{PERC_DIR}", batch)
+    discipline as the other persisted indexes. A build replaces the
+    table as registration seq 0; ``register_percolator_queries``
+    appends later registrations."""
+    replace_table(_perc_rows(spark, queries, 0), f"{path}/{PERC_DIR}")
 
 
 def percolate_from_store(df: DataFrame, path: str,
@@ -1033,25 +1025,34 @@ def register_percolator_queries(spark,
     """Incrementally register new alert queries as batch ``batch``
     (idempotent per batch id — re-registration replaces its own
     batch only, the redelivery-safe discipline of the other index
-    sinks)."""
-    build_percolator_index(spark, queries, path, batch=batch)
+    appends)."""
+    # registration order: base is seq 0, incremental batch N is seq
+    # N+1 — the offset keeps batch="0" strictly AFTER base (a tie
+    # would make the latest-wins max-seq filter keep BOTH definitions
+    # of a re-registered query_id: inflated n_matched, never-firing
+    # alert). Non-numeric / negative batch ids raise loudly rather
+    # than storing an unorderable version.
+    seq = int(batch) + 1
+    if seq <= 0:
+        raise ValueError(
+            f"percolator batch id must be >= 0 (got {batch!r})")
+    append_table(_perc_rows(spark, queries, seq), f"{path}/{PERC_DIR}",
+                 batch)
 
 
-def percolator_alert_sink(queries_path: str, out_path: str,
-                          id_col: str = "doc_id",
-                          text_col: str = "text"):
-    """foreachBatch sink: percolate each document micro-batch against
-    the stored queries and append the per-epoch alert digests to
-    ``out_path`` as batch ``<epoch>`` (redelivery-safe: an epoch
-    replay replaces its own digests)."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        out = percolate_from_store(batch_df, queries_path,
-                                   id_col=id_col, text_col=text_col)
-        append_table(out.withColumn("epoch", F.lit(int(epoch_id))),
-                     out_path, str(epoch_id))
-
-    return _sink
+def append_percolator_alerts(batch_df: DataFrame, queries_path: str,
+                             out_path: str, batch: str, *,
+                             id_col: str = "doc_id",
+                             text_col: str = "text") -> None:
+    """Percolate a document batch against the stored queries and
+    append its alert digests to ``out_path`` as batch ``batch``, with
+    the id in a ``batch`` column (a redelivery replaces its own
+    digests). A stream alerts per micro-batch through
+    ``streaming.pipeline.batch_sink(ckpt, append_percolator_alerts,
+    queries_path, out_path)``."""
+    out = percolate_from_store(batch_df, queries_path,
+                               id_col=id_col, text_col=text_col)
+    append_table(out.withColumn("batch", F.lit(batch)), out_path, batch)
 
 
 def msearch_bm25(df: DataFrame, searches, k: int = 5,

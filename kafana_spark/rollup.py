@@ -18,9 +18,11 @@ rollup itself is built incrementally (one new ds row-group per group per
 day; ``unionByName`` of daily builds is the maintenance path — sketches
 and partial metrics merge across builds exactly like across days).
 
-The streaming sinks persist through ``store.py``'s commit log: the
-rollup sink replaces its table once per micro-batch, the count-min
-sink appends one batch per epoch; readers see the latest snapshot.
+Both streamed tables persist through ``store.py``'s commit log as
+appended partials: ``append_rollup`` and ``append_cms_sketch`` commit
+one batch's partials under its id (``streaming.pipeline.batch_sink``
+gives each micro-batch its own), and ``rollup_from_store`` /
+``cms_from_store`` merge the latest snapshot's partials at read time.
 
 Exactness contract: everything except the ``ndv_*`` columns is
 bit-equal to aggregating the raw data (x37 hash-checks that through the
@@ -35,9 +37,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kafana_spark.store import (
-    append_table, read_table, replace_table, table_files,
-)
+from kafana_spark.store import append_table, read_table
 
 #: HLL precision: 2^12 registers ≈ 1.6% relative standard error
 HLL_LG_K = 12
@@ -106,6 +106,15 @@ def update_rollup(existing: DataFrame | None, batch: DataFrame,
     untouched = existing.join(touched_keys, keys, "left_anti")
     touched = existing.join(touched_keys, keys, "left_semi") \
         .unionByName(delta)
+    return untouched.unionByName(
+        _merge_partials(touched, keys, value_col, distinct_cols))
+
+
+def _merge_partials(partials: DataFrame, keys: Sequence[str],
+                    value_col: str | None,
+                    distinct_cols: Sequence[str]) -> DataFrame:
+    """One rollup row per ``keys``: counts and sums add, min/max fold,
+    HLL sketches union — exact merges of ``build_rollup`` partials."""
     aggs = [F.sum("cnt").alias("cnt")]
     if value_col is not None:
         aggs += [F.sum(f"sum_{value_col}").alias(f"sum_{value_col}"),
@@ -113,8 +122,7 @@ def update_rollup(existing: DataFrame | None, batch: DataFrame,
                  F.max(f"max_{value_col}").alias(f"max_{value_col}")]
     for c in distinct_cols:
         aggs.append(F.hll_union_agg(f"hll_{c}").alias(f"hll_{c}"))
-    merged = touched.groupBy(*keys).agg(*aggs)
-    return untouched.unionByName(merged)
+    return partials.groupBy(*keys).agg(*aggs)
 
 
 def topk_from_rollup(rollup: DataFrame, k: int = 10,
@@ -124,39 +132,39 @@ def topk_from_rollup(rollup: DataFrame, k: int = 10,
 
     This is the scale-correct "streaming top-k terms" — Structured
     Streaming can only sort in complete output mode (full state
-    rebroadcast per trigger), whereas rollup_stream_sink keeps
+    rebroadcast per trigger), whereas ``append_rollup`` keeps
     mergeable per-day partials fresh per micro-batch and the top-k is
     a rollup-sized read view (TakeOrdered over ~|groups|·|days| rows,
-    never the raw stream). Pair with ``rollup_stream_sink``.
+    never the raw stream). Pair with ``rollup_from_store``.
     """
     return (rollup.groupBy(*by).agg(F.sum("cnt").alias("cnt"))
             .orderBy(F.col("cnt").desc(), *by).limit(k))
 
 
-def rollup_stream_sink(path: str, by: Sequence[str] = ("topic",),
-                       time_col: str = "ts", ds_col: str = "ds",
-                       value_col: str | None = None,
-                       distinct_cols: Sequence[str] = ()):
-    """foreachBatch sink keeping a parquet rollup continuously up to
-    date: each micro-batch re-merges only the (group, day) keys it
-    touches. Use with
-    ``stream.writeStream.foreachBatch(rollup_stream_sink(...))``.
-
-    Each micro-batch is one ``replace_table`` commit of the merged
-    rollup. The snapshot it read stays live until that commit, so the
-    read-modify-write never races its own scan, and a failed
-    micro-batch leaves the prior rollup intact for its redelivery.
+def append_rollup(df: DataFrame, path: str, batch: str, *,
+                  by: Sequence[str] = ("topic",), time_col: str = "ts",
+                  ds_col: str = "ds", value_col: str | None = None,
+                  distinct_cols: Sequence[str] = ()) -> None:
+    """Append ``df``'s daily partials (``build_rollup`` by the UTC day
+    of ``time_col``) to the rollup table at ``path`` as batch
+    ``batch``. Nothing stored is read or rewritten: a redelivered id
+    replaces its own partials, and ``rollup_from_store`` merges every
+    batch's. Streams feed it through ``streaming.pipeline.batch_sink``.
     """
+    days = df.withColumn(ds_col, F.to_date(time_col))
+    append_table(build_rollup(days, by=by, ds_col=ds_col,
+                              value_col=value_col,
+                              distinct_cols=distinct_cols), path, batch)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        days = batch_df.withColumn(ds_col, F.to_date(time_col))
-        existing = read_table(spark, path) if table_files(path) else None
-        replace_table(update_rollup(existing, days, by=by, ds_col=ds_col,
-                                    value_col=value_col,
-                                    distinct_cols=distinct_cols), path)
 
-    return _sink
+def rollup_from_store(spark, path: str, by: Sequence[str] = ("topic",),
+                      ds_col: str = "ds", value_col: str | None = None,
+                      distinct_cols: Sequence[str] = ()) -> DataFrame:
+    """The stored rollup, one row per (by…, ds): the appended partials
+    merged with ``update_rollup``'s aggregation — equal to
+    ``build_rollup`` over every batch's rows."""
+    return _merge_partials(read_table(spark, path), [*by, ds_col],
+                           value_col, distinct_cols)
 
 
 # --------------------------------------------------- count-min sketch
@@ -223,19 +231,14 @@ def cms_estimate(sketch: DataFrame, terms: DataFrame,
                  .alias("cms_cnt")))
 
 
-def cms_stream_sink(path: str, col: str = "text"):
-    """foreachBatch sink for streaming CMS maintenance: each
-    micro-batch's partial sketch is appended as batch ``<epoch_id>``
-    (redelivery REPLACES, never double-counts — the same per-epoch
-    discipline as every other index sink here), and
-    ``cms_from_store`` folds the partials bucket-wise at read time —
-    exact by linearity, so the served sketch always equals the
-    one-shot sketch of everything ingested."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        append_table(cms_sketch(batch_df, col), path, str(epoch_id))
-
-    return _sink
+def append_cms_sketch(df: DataFrame, path: str, batch: str, *,
+                      col: str = "text") -> None:
+    """Append ``df``'s partial sketch to the CMS table at ``path`` as
+    batch ``batch`` (a redelivered id REPLACES its own partial, never
+    double-counts); ``cms_from_store`` folds the partials bucket-wise
+    at read time — exact by linearity, so the served sketch always
+    equals the one-shot sketch of everything appended."""
+    append_table(cms_sketch(df, col), path, batch)
 
 
 def cms_from_store(spark, path: str) -> DataFrame:

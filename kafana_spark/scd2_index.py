@@ -39,8 +39,9 @@ as a watermark violation would in the streaming pipeline.
 The table is written and read through ``store.py``'s commit log,
 like dedup_index/ann_index/gate_index/event_index: a base build
 replaces it, an append commits its rows as one batch, and
-redelivering a batch id replaces its own files (idempotent), so the
-foreachBatch streaming sink is at-least-once safe.
+redelivering a batch id replaces its own files (idempotent), so a
+stream fed through ``streaming.pipeline.batch_sink(ckpt,
+append_scd2_index, path)`` is at-least-once safe.
 """
 
 from __future__ import annotations
@@ -49,7 +50,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafana_spark.operators import events as ev_ops
-from kafana_spark.store import BASE, batch_meta, read_table, write_table
+from kafana_spark.store import (
+    append_table, batch_meta, read_table, replace_table,
+)
 
 CHANGES_DIR = "changes"
 
@@ -96,20 +99,14 @@ def build_scd2_index(df: DataFrame, path: str, *,
                      key_col: str = "user_id",
                      state_col: str = "event_type",
                      time_col: str = "ts",
-                     seq_col: str = "event_id",
-                     batch: str = BASE) -> None:
-    """Collapse the changelog to change rows and persist them. A base
-    build replaces every stored batch; a non-base build is an
-    incremental append and rides the SAME event-time-partitioning
-    enforcement as ``append_scd2_index`` — an overlapping batch must
-    raise on every write path, or a build-instead-of-append call
-    silently corrupts the served history (ADVICE r8)."""
-    span = _batch_span(df, time_col)
-    if batch != BASE:
-        _enforce_event_time_partitioning(path, batch, span)
-    write_table(ev_ops.scd2_changes(df, key_col, state_col, time_col,
-                                    seq_col),
-                f"{path}/{CHANGES_DIR}", batch, meta=span)
+                     seq_col: str = "event_id") -> None:
+    """Collapse the changelog to change rows and persist them as the
+    base: one ``replace_table`` drops every stored batch. The base's
+    event-time span is logged like an append's, so later appends must
+    start after it."""
+    replace_table(ev_ops.scd2_changes(df, key_col, state_col, time_col,
+                                      seq_col),
+                  f"{path}/{CHANGES_DIR}", meta=_batch_span(df, time_col))
 
 
 def append_scd2_index(df_new: DataFrame, path: str, batch: str, *,
@@ -123,8 +120,11 @@ def append_scd2_index(df_new: DataFrame, path: str, batch: str, *,
     ENFORCED from the logged batch spans — an out-of-order or
     overlapping batch raises instead of silently corrupting the
     served history (the merge law does not hold for it)."""
-    build_scd2_index(df_new, path, key_col=key_col, state_col=state_col,
-                     time_col=time_col, seq_col=seq_col, batch=batch)
+    span = _batch_span(df_new, time_col)
+    _enforce_event_time_partitioning(path, batch, span)
+    append_table(ev_ops.scd2_changes(df_new, key_col, state_col,
+                                     time_col, seq_col),
+                 f"{path}/{CHANGES_DIR}", batch, meta=span)
 
 
 def changes_from_store(spark: SparkSession, path: str, *,
@@ -173,20 +173,3 @@ def scd2_state_at_from_store(spark: SparkSession, probes_df: DataFrame,
                       F.col(key_col),
                       F.col(time_col).alias("p_ts")))
     return ev_ops.scd2_state_at_from_dim(dim, probes, key_col)
-
-
-def scd2_stream_sink(path: str, *, key_col: str = "user_id",
-                     state_col: str = "event_type",
-                     time_col: str = "ts",
-                     seq_col: str = "event_id"):
-    """foreachBatch sink maintaining the dimension from streaming
-    ingest: each micro-batch collapses to its change rows, appended as
-    batch ``<epoch_id>`` — at-least-once redelivery replaces its own
-    files, so every change counts once in the served history."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        append_scd2_index(batch_df, path, batch=str(epoch_id),
-                          key_col=key_col, state_col=state_col,
-                          time_col=time_col, seq_col=seq_col)
-
-    return _sink

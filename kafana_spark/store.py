@@ -311,15 +311,6 @@ def replace_table(df: DataFrame, path: str,
     _land_frame(path, "replace", BASE, df, partition_by, meta)
 
 
-def write_table(df: DataFrame, path: str, batch: str = BASE,
-                partition_by: tuple[str, ...] = (),
-                meta: dict | None = None) -> None:
-    """``replace_table`` for batch ``BASE`` (a build), else
-    ``append_table`` as batch ``batch``."""
-    _land_frame(path, "replace" if batch == BASE else "append", batch,
-                df, partition_by, meta)
-
-
 def read_table(spark: SparkSession, path: str,
                skip_batch: str | None = None) -> DataFrame:
     """The latest snapshot of the table at ``path``, read with the

@@ -10,17 +10,20 @@ and idempotent indexing by _id (kafana.http:76). Spark equivalents:
 - checkpointing replaces Connect's offset storage
 - ``trigger(availableNow=True)`` drains everything then stops — the
   batch-equivalence harness (SURVEY.md §5.3.3)
-- exactly-once: every micro-batch is one ``store.write_store`` commit
-  on the store's ``_log/``, under a batch id keyed by checkpoint and
-  epoch — a replayed batch replaces its own files in one commit
-  (Structured Streaming's epoch-keyed foreachBatch sink + metadata log)
+- exactly-once: ``batch_sink`` is the one ``foreachBatch`` function
+  for every table. It hands each micro-batch to a table's own append
+  entry point under ``stream_batch_id(checkpoint, epoch)``, so a
+  replayed batch replaces its own files in one commit on the table's
+  ``_log/``, and two streams into one table (each with its own
+  checkpoint) never replace each other's batches (Structured
+  Streaming's epoch-keyed foreachBatch sink + metadata log). The
+  store's own ingest, ``ingest_stream_exactly_once``, is built on it.
 
 Streaming aggregations (the C12 streaming twin + watermarks/session
 windows the reference lacks, SURVEY.md §2.D):
 - windowed_counts: tumbling/sliding date-histogram with late-data bound
 - sessionize: session windows per key
 """
-
 from __future__ import annotations
 
 import hashlib
@@ -34,10 +37,38 @@ from kafana_spark.store import write_store
 
 
 def stream_batch_id(checkpoint: str, epoch_id: int) -> str:
-    """Store batch id of micro-batch ``epoch_id`` of the stream
-    checkpointed at ``checkpoint``: scoped by both, so two streams into
-    one store never replace each other's batches."""
+    """Batch id of micro-batch ``epoch_id`` of the stream checkpointed
+    at ``checkpoint``: scoped by both, so two streams into one table
+    never replace each other's batches."""
     return f"{hashlib.sha1(checkpoint.encode()).hexdigest()[:16]}-{epoch_id}"
+
+
+def batch_sink(checkpoint: str, append, *args, **kwargs):
+    """The ``foreachBatch`` function that feeds the stream checkpointed
+    at ``checkpoint`` into a table: micro-batch ``epoch_id`` becomes
+    ``append(batch_df, *args, batch=stream_batch_id(checkpoint,
+    epoch_id), **kwargs)``, where ``append`` is the table family's own
+    append entry point (``dedup_index.append_dedup_index``,
+    ``rollup.append_rollup`` …). Pass the same ``checkpoint`` as the
+    stream's ``checkpointLocation``: an at-least-once redelivery of an
+    epoch then replaces that batch's files, and another stream into
+    the same table appends beside it.
+
+        stream.writeStream.foreachBatch(
+            batch_sink(ckpt, dedup_index.append_dedup_index, root))
+    """
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        append(batch_df, *args,
+               batch=stream_batch_id(checkpoint, epoch_id), **kwargs)
+
+    return sink
+
+
+def _append_enriched(records: DataFrame, store_path: str,
+                     value_col: str, batch: str) -> None:
+    """Enrich one envelope batch and append it to the store as
+    ``batch``."""
+    write_store(enrich(records, value_col), store_path, batch)
 
 
 def ingest_stream_exactly_once(records: DataFrame, store_path: str,
@@ -48,17 +79,14 @@ def ingest_stream_exactly_once(records: DataFrame, store_path: str,
     decoded struct value, as sources/kafka.py:kafka_envelope emits) and
     append it to the store exactly once, without a table format.
 
-    Each micro-batch goes through ``store.write_store`` as batch
-    ``stream_batch_id(checkpoint, epoch_id)``, so a batch replayed after
-    a failure between store and checkpoint commit replaces its own files
-    — the ES sink's idempotent upsert by _id (kafana.http:76).
+    Each micro-batch goes through ``store.write_store`` under its
+    ``batch_sink`` id, so a batch replayed after a failure between
+    store and checkpoint commit replaces its own files — the ES sink's
+    idempotent upsert by _id (kafana.http:76).
     """
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        write_store(enrich(batch_df, value_col), store_path,
-                    stream_batch_id(checkpoint, epoch_id))
-
     writer = (records.writeStream
-              .foreachBatch(write_batch)
+              .foreachBatch(batch_sink(checkpoint, _append_enriched,
+                                       store_path, value_col))
               .option("checkpointLocation", checkpoint))
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -10,6 +10,7 @@ from kafana_spark import ann_index
 from kafana_spark.operators import similarity
 from kafana_spark.session import tune_session
 from kafana_spark.sources.tables import load_table
+from kafana_spark.streaming.pipeline import batch_sink
 from tests.conftest import INJECTED_FAILURE, SF_SMOKE, fail_on, live_batches
 
 
@@ -145,7 +146,8 @@ def test_ivf_stream_sink_redelivery_safe(spark, tmp_path):
     root2 = str(tmp_path / "annidx2")
     ann_index.build_ann_index(e.where(F.col("vec_id") % 40 == 0), root2,
                               centroid_mod=40, n_assign=2)
-    sink = ann_index.ann_index_stream_sink(root2, n_assign=2)
+    sink = batch_sink(str(tmp_path / "ckpt"), ann_index.append_ann_index,
+                      root2, n_assign=2)
     rest = e.where(F.col("vec_id") % 40 != 0)
     sink(rest.where(F.col("vec_id") % 2 == 0), 0)
     sink(rest.where(F.col("vec_id") % 2 == 1), 1)
@@ -166,7 +168,8 @@ def test_pq_stream_sink_redelivery_safe(spark, tmp_path):
     from pyspark.sql import functions as F
     ann_index.build_pq_index(e.where(F.col("vec_id") % 3 == 0), root2,
                              m_total=16, ksub=32, train_mod=3)
-    sink = ann_index.pq_index_stream_sink(root2, m_total=16)
+    sink = batch_sink(str(tmp_path / "ckpt"), ann_index.append_pq_index,
+                      root2, m_total=16)
     rest = e.where(F.col("vec_id") % 3 != 0)
     sink(rest.where(F.col("vec_id") % 2 == 0), 0)
     sink(rest.where(F.col("vec_id") % 2 == 1), 1)
@@ -308,7 +311,8 @@ def test_lsh_stream_sink_redelivery_safe(spark, tmp_path):
     ann_index.build_lsh_index(e, root)
     root2 = str(tmp_path / "lshidx2")
     ann_index.build_lsh_index(e.where(F.col("vec_id") % 2 == 1), root2)
-    sink = ann_index.lsh_index_stream_sink(root2)
+    sink = batch_sink(str(tmp_path / "ckpt"), ann_index.append_lsh_index,
+                      root2)
     rest = e.where(F.col("vec_id") % 2 == 0)
     sink(rest.where(F.col("vec_id") % 4 == 0), 0)
     sink(rest.where(F.col("vec_id") % 4 == 2), 1)
@@ -362,7 +366,8 @@ def test_lloyd_store_refresh_matches_inline_update(spark, tmp_path):
     root = str(tmp_path / "lloydm")
     ann_index.build_lloyd_index(base, root, centroid_mod=40,
                                 n_iters=2, dim=64)
-    sink = ann_index.lloyd_stats_stream_sink(root)
+    sink = batch_sink(str(tmp_path / "ckpt"),
+                      ann_index.append_lloyd_index, root)
     sink(rest.where(F.col("vec_id") % 4 == 1), 0)
     sink(rest.where(F.col("vec_id") % 4 == 3), 1)
     sink(rest.where(F.col("vec_id") % 4 == 3), 1)   # redelivery
@@ -467,7 +472,8 @@ def test_binary_index_stream_sink(spark, tmp_path):
     base = e.where(F.col("vec_id") % 2 == 0)
     rest = e.where(F.col("vec_id") % 2 == 1)
     ann_index.build_binary_index(base, root, dim=64)
-    sink = ann_index.binary_index_stream_sink(root)
+    sink = batch_sink(str(tmp_path / "ckpt"),
+                      ann_index.append_binary_index, root)
     sink(rest.where(F.col("vec_id") % 4 == 1), 0)
     sink(rest.where(F.col("vec_id") % 4 == 3), 1)
     sink(rest.where(F.col("vec_id") % 4 == 3), 1)   # redelivery

@@ -6,6 +6,14 @@ so a failed write leaves the previous snapshot readable. A module that
 drives a ``DataFrameWriter`` itself, or deletes a tree with
 ``shutil.rmtree``, brings back a second protocol whose failed
 overwrite destroys what it replaces. This guard fails on either.
+
+One stream sink: every micro-batch enters a table through
+``streaming.pipeline.batch_sink``, which alone turns (checkpoint,
+epoch) into a batch id. A ``foreachBatch`` closure elsewhere that
+names its batch by the epoch alone lets two streams into one table
+replace each other's batches; a build-or-append switch on the batch
+id (the old ``write_table``) hides an append inside a build. The
+second guard fails on either.
 """
 
 from __future__ import annotations
@@ -70,7 +78,7 @@ def test_only_the_commit_module_writes_tables():
                                 p.relative_to(PKG).as_posix())]
     assert bad == [], (
         "write persisted tables through kafana_spark.store "
-        "(append_table / replace_table / write_table), not a "
+        "(append_table / replace_table), not a "
         "DataFrameWriter or rmtree:\n" + "\n".join(bad))
 
 
@@ -94,3 +102,58 @@ def test_guard_flags_writers_and_rmtree_only():
         "operators/relational.py:4 shutil.rmtree",
         "operators/relational.py:5 .parquet( outside spark.read"]
     assert _violations(probe, "m.py")[-1] == "m.py:10 DataFrameWriter"
+
+
+SINK_MODULE = PKG / "streaming" / "pipeline.py"
+
+
+def _sink_violations(source: str, rel: str) -> list[str]:
+    """``file:line what`` for each ``epoch_id`` parameter and each call
+    of ``stream_batch_id`` (outside the sink module) and ``write_table``
+    (anywhere) in ``source``."""
+    out = []
+    sink_module = rel == SINK_MODULE.relative_to(PKG).as_posix()
+    for node in ast.walk(ast.parse(source)):
+        where = f"{rel}:{getattr(node, 'lineno', '?')}"
+        if isinstance(node, ast.arg) and node.arg == "epoch_id" \
+                and not sink_module:
+            out.append(f"{where} epoch_id parameter")
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else \
+                getattr(f, "id", None)
+            if name == "stream_batch_id" and not sink_module:
+                out.append(f"{where} stream_batch_id call")
+            elif name == "write_table":
+                out.append(f"{where} write_table call")
+    return sorted(out)
+
+
+def test_one_sink_path():
+    bad = [v for p in sorted(PKG.rglob("*.py"))
+           for v in _sink_violations(p.read_text(),
+                                     p.relative_to(PKG).as_posix())]
+    assert bad == [], (
+        "feed streams through streaming.pipeline.batch_sink(checkpoint, "
+        "append, ...) and write with append_table / replace_table:\n"
+        + "\n".join(bad))
+
+
+def test_sink_guard_flags_epoch_closures_and_write_table():
+    """The guard itself: an ``epoch_id`` closure, a ``stream_batch_id``
+    call and a ``write_table`` call are flagged outside the sink
+    module; inside it only ``write_table`` is."""
+    probe = (
+        "def sink(path):\n"
+        "    def _sink(batch_df, epoch_id):\n"
+        "        append(batch_df, path, str(epoch_id))\n"
+        "        store.write_table(batch_df, path)\n"
+        "    return _sink\n"
+        "def f(ckpt):\n"
+        "    return stream_batch_id(ckpt, 0)\n")
+    assert _sink_violations(probe, "index.py") == [
+        "index.py:2 epoch_id parameter",
+        "index.py:4 write_table call",
+        "index.py:7 stream_batch_id call"]
+    assert _sink_violations(probe, "streaming/pipeline.py") == [
+        "streaming/pipeline.py:4 write_table call"]

@@ -14,6 +14,7 @@ from kafana_spark import dedup_index
 from kafana_spark.operators import dedup
 from kafana_spark.session import tune_session
 from kafana_spark.sources.tables import load_table
+from kafana_spark.streaming.pipeline import batch_sink
 from tests.conftest import INJECTED_FAILURE, SF_SMOKE, fail_on
 from tests.conftest import live_batches
 
@@ -78,7 +79,8 @@ def test_stream_sink_builds_index_redelivery_safe(spark, tmp_path):
     replayed batch instead of duplicating its shingle rows."""
     d = docs(spark)
     root = str(tmp_path / "ndidx")
-    sink = dedup_index.dedup_index_stream_sink(root)
+    sink = batch_sink(str(tmp_path / "ckpt"),
+                      dedup_index.append_dedup_index, root)
     batches = [d.where(F.col("doc_id") % 3 == i) for i in range(3)]
     sink(batches[0], 0)
     sink(batches[1], 1)
@@ -96,7 +98,8 @@ def test_incremental_after_stream_batches(spark, tmp_path):
     old = d.where(F.col("doc_id") % 2 == 0)
     new = d.where(F.col("doc_id") % 2 == 1)
     root = str(tmp_path / "ndidx")
-    sink = dedup_index.dedup_index_stream_sink(root)
+    sink = batch_sink(str(tmp_path / "ckpt"),
+                      dedup_index.append_dedup_index, root)
     sink(old.where(F.col("doc_id") % 4 == 0), 0)
     sink(old.where(F.col("doc_id") % 4 == 2), 1)
     got = dedup_index.incremental_from_index(new, root, THRESH)
@@ -120,7 +123,7 @@ def test_clusters_from_index_equals_dup_clusters(spark, tmp_path):
 
 
 def test_rebuild_clears_stale_append_batches(spark, tmp_path):
-    """A full rebuild (batch='base') must drop the batches left by
+    """A full rebuild must drop the batches left by
     appends/stream epochs — surviving (doc_id, h) shingle rows would
     double-count every jaccard intersection (ADVICE.md r5). Per-batch
     appends must still be incremental (not drop siblings)."""
@@ -175,7 +178,8 @@ def test_substr_stream_sink_redelivery_safe(spark, tmp_path):
     sink must serve exactly the one-shot spans."""
     d = docs(spark)
     root = str(tmp_path / "subidx")
-    sink = dedup_index.substr_index_stream_sink(root)
+    sink = batch_sink(str(tmp_path / "ckpt"),
+                      dedup_index.append_substr_index, root)
     batches = [d.where(F.col("doc_id") % 3 == i) for i in range(3)]
     sink(batches[0], 0)
     sink(batches[1], 1)
@@ -192,8 +196,8 @@ def test_substr_rebuild_clears_stale_batches(spark, tmp_path):
     root = str(tmp_path / "subidx")
     dedup_index.build_substr_index(d.where(F.col("doc_id") % 2 == 0),
                                    root)
-    dedup_index.build_substr_index(d.where(F.col("doc_id") % 2 != 0),
-                                   root, batch="day1")
+    dedup_index.append_substr_index(d.where(F.col("doc_id") % 2 != 0),
+                                    root, batch="day1")
     dedup_index.build_substr_index(d, root)    # full rebuild
     assert live_batches(f"{root}/{dedup_index.GRAM_DIR}") == ["base"]
 

@@ -558,9 +558,10 @@ def test_x132_shuffles_one_row_per_key_not_per_event(spark):
 
 def test_stored_percolator_roundtrip_append_and_stream(spark, tmp_path):
     from kafana_spark.operators.relevance import (
-        build_percolator_index, percolate, percolate_from_store,
-        percolator_alert_sink, register_percolator_queries)
+        append_percolator_alerts, build_percolator_index, percolate,
+        percolate_from_store, register_percolator_queries)
     from kafana_spark.store import read_table
+    from kafana_spark.streaming.pipeline import batch_sink, stream_batch_id
     from tests.conftest import live_batches
     df = spark.createDataFrame(
         [(0, "a b c"), (1, "a b"), (2, "x y")],
@@ -578,12 +579,12 @@ def test_stored_percolator_roundtrip_append_and_stream(spark, tmp_path):
     got = {r.query_id: r.n_hits
            for r in percolate_from_store(df, root).collect()}
     assert got == {"q1": 2, "q2": 1, "q3": 1}
-    # alert sink: per-epoch digests, redelivery overwrites its epoch
-    out = str(tmp_path / "alerts")
-    sink = percolator_alert_sink(root, out)
+    # alert sink: per-batch digests, redelivery overwrites its batch
+    out, ckpt = str(tmp_path / "alerts"), str(tmp_path / "ckpt")
+    sink = batch_sink(ckpt, append_percolator_alerts, root, out)
     sink(df, 0)
     sink(df, 0)    # redelivery
-    assert live_batches(out) == ["0"]
+    assert live_batches(out) == [stream_batch_id(ckpt, 0)]
     digests = {r.query_id: r.n_hits
                for r in read_table(spark, out).collect()}
     assert digests == {"q1": 2, "q2": 1, "q3": 1}

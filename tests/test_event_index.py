@@ -12,6 +12,7 @@ from kafana_spark import event_index
 from kafana_spark.operators import events as ev_ops
 from kafana_spark.session import tune_session
 from kafana_spark.sources.tables import load_table
+from kafana_spark.streaming.pipeline import batch_sink
 from tests.conftest import SF_SMOKE
 
 RULES = (("r_err", "error", 12000), ("r_click", "click", 11000))
@@ -100,7 +101,8 @@ def test_event_stream_sink_maintains_store(spark, tmp_path):
     root = str(tmp_path / "evidx")
     event_index.build_event_index(d.where(F.col("event_id") % 2 == 0),
                                   root)
-    sink = event_index.event_stream_sink(root)
+    sink = batch_sink(str(tmp_path / "ckpt"),
+                      event_index.append_event_index, root)
     rest = d.where(F.col("event_id") % 2 == 1)
     sink(rest.where(F.col("event_id") % 4 == 1), 0)
     sink(rest.where(F.col("event_id") % 4 == 3), 1)

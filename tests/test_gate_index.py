@@ -13,6 +13,7 @@ from kafana_spark.operators.text import (
 from kafana_spark.session import tune_session
 from kafana_spark.sources.tables import load_table
 from kafana_spark.store import read_table
+from kafana_spark.streaming.pipeline import batch_sink
 from tests.conftest import SF_SMOKE
 
 
@@ -116,7 +117,8 @@ def test_gate_stream_sink_maintains_store(spark, tmp_path):
     rest = d.where(F.col("doc_id") % 2 == 1)
     root = str(tmp_path / "gidx")
     gate_index.build_gate_index(base, root)
-    sink = gate_index.gate_stream_sink(root)
+    sink = batch_sink(str(tmp_path / "ckpt"),
+                      gate_index.append_gate_index, root)
     sink(rest.where(F.col("doc_id") % 4 == 1), 0)
     sink(rest.where(F.col("doc_id") % 4 == 3), 1)
     sink(rest.where(F.col("doc_id") % 4 == 3), 1)   # redelivery

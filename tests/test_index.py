@@ -6,11 +6,10 @@ from pyspark.sql import functions as F
 
 from kafana_spark.index import (
     N_BUCKETS,
-    build_token_index,
+    append_token_index,
     lookup_ids,
     search_via_index,
     tokenize_field,
-    write_token_index,
 )
 from kafana_spark.ingest import enrich, events_as_kafka_records
 from kafana_spark.sources.tables import load_table
@@ -26,7 +25,7 @@ def _store_docs(spark):
 def test_index_search_equals_direct_scan(spark, tmp_path):
     docs = _store_docs(spark)
     idx = str(tmp_path / "idx")
-    write_token_index(build_token_index(docs), idx)
+    append_token_index(docs, idx)
 
     term = "error"
     via_index = search_via_index(spark, idx, docs, term)
@@ -40,7 +39,7 @@ def test_index_search_equals_direct_scan(spark, tmp_path):
 def test_lookup_prunes_to_one_bucket(spark, tmp_path):
     docs = _store_docs(spark)
     idx = str(tmp_path / "idx")
-    write_token_index(build_token_index(docs), idx)
+    append_token_index(docs, idx)
 
     import re
 
@@ -63,8 +62,8 @@ def test_index_append_only_maintenance(spark, tmp_path):
     half1 = docs.limit(150)
     half2 = docs.subtract(half1)
     idx = str(tmp_path / "idx")
-    write_token_index(build_token_index(half1), idx)
-    write_token_index(build_token_index(half2), idx)  # append
+    append_token_index(half1, idx)
+    append_token_index(half2, idx)  # append
 
     term = "purchase"
     got = sorted(r._id for r in
@@ -77,12 +76,12 @@ def test_index_append_only_maintenance(spark, tmp_path):
 def test_stream_sink_builds_index_redelivery_safe(spark, tmp_path):
     """Epoch-partitioned sink: micro-batches (incl. a redelivered
     epoch) must yield exactly the one-shot index's postings — the
-    overwrite-per-epoch discipline shared with the dedup/ANN sinks."""
-    from kafana_spark.index import token_index_stream_sink
+    overwrite-per-epoch discipline shared with the dedup/ANN appends."""
+    from kafana_spark.streaming.pipeline import batch_sink
 
     docs = _store_docs(spark)
     idx = str(tmp_path / "sidx")
-    sink = token_index_stream_sink(idx)
+    sink = batch_sink(str(tmp_path / "ckpt"), append_token_index, idx)
     batches = [docs.where(F.col("offset") % 3 == i) for i in range(3)]
     sink(batches[0], 0)
     sink(batches[1], 1)

@@ -6,6 +6,7 @@ import datetime as dt
 from pyspark.sql import Row, functions as F
 
 from kafana_spark.operators import dedup, relational
+from kafana_spark.streaming.pipeline import batch_sink
 
 
 def _ts(s):
@@ -450,7 +451,8 @@ def test_order_stream_sink_redelivery_safe(spark, tmp_path):
     root = str(tmp_path / "ordidx_stream")
     relational.build_order_rollup(
         orders.where(F.col("o_orderkey") % 2 == 0), root)
-    sink = relational.order_stream_sink(root)
+    sink = batch_sink(str(tmp_path / "ckpt"),
+                      relational.build_order_rollup, root)
     rest = orders.where(F.col("o_orderkey") % 2 == 1)
     sink(rest.where(F.col("o_orderkey") % 4 == 1), 0)
     sink(rest.where(F.col("o_orderkey") % 4 == 3), 1)

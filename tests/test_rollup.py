@@ -7,10 +7,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from kafana_spark.rollup import build_rollup, rollup_range
+from kafana_spark.rollup import (
+    append_rollup, build_rollup, rollup_from_store, rollup_range,
+)
 from kafana_spark.session import tune_session
 from kafana_spark.sources.tables import load_table
-from kafana_spark.store import read_table
+from kafana_spark.streaming.pipeline import batch_sink
 from tests.conftest import SF_SMOKE
 
 DS0, DS1 = "2024-01-05", "2024-01-20"
@@ -132,26 +134,45 @@ def test_update_rollup_unions_only_touched_keys(spark):
 def test_rollup_stream_sink_maintains_parquet(spark, tmp_path):
     """foreachBatch sink: two manual batch invocations leave a rollup
     equal to a one-shot build over both batches."""
-    from kafana_spark.rollup import rollup_stream_sink
-
     tune_session(spark)
     ev = load_table(spark, SF_SMOKE, "events") \
         .select("event_type", "ts", "value")
     b1 = ev.where(F.to_date("ts") <= "2024-01-10")
     b2 = ev.where(F.to_date("ts") > "2024-01-08")
     out = str(tmp_path / "rollup")
-    sink = rollup_stream_sink(out, by=("event_type",), time_col="ts",
-                              value_col="value")
+    sink = batch_sink(str(tmp_path / "ckpt"), append_rollup, out,
+                      by=("event_type",), time_col="ts", value_col="value")
     sink(b1, 0)
     sink(b2, 1)
     got = {(r.event_type, r.ds): (r.cnt, round(r.sum_value, 6))
-           for r in read_table(spark, out).collect()}
+           for r in rollup_from_store(spark, out, by=("event_type",),
+                                      value_col="value").collect()}
     expect_df = build_rollup(
         b1.unionByName(b2).withColumn("ds", F.to_date("ts")),
         by=("event_type",), value_col="value")
     exp = {(r.event_type, r.ds): (r.cnt, round(r.sum_value, 6))
            for r in expect_df.collect()}
     assert got == exp
+
+
+def test_rollup_sink_counts_a_redelivered_epoch_once(spark, tmp_path):
+    """At-least-once delivery hands the sink one committed epoch
+    twice; the redelivery replaces that batch's partials, so its rows
+    count once (cnt 3, not 6)."""
+    import datetime
+
+    b = spark.createDataFrame(
+        [("click", datetime.datetime(2024, 1, 5, h), 1.0)
+         for h in (1, 2, 3)], "event_type string, ts timestamp, value double")
+    out = str(tmp_path / "rollup")
+    sink = batch_sink(str(tmp_path / "ckpt"), append_rollup, out,
+                      by=("event_type",), time_col="ts", value_col="value")
+    sink(b, 0)
+    sink(b, 0)    # redelivery of the committed epoch
+    got = [(r.event_type, str(r.ds), r.cnt, r.sum_value) for r in
+           rollup_from_store(spark, out, by=("event_type",),
+                             value_col="value").collect()]
+    assert got == [("click", "2024-01-05", 3, 3.0)]
 
 
 @pytest.mark.parametrize("failure", ["compute", "write"])
@@ -165,7 +186,6 @@ def test_rollup_stream_sink_failed_batch_keeps_prior_rollup(
     every row was computed."""
     import datetime
 
-    from kafana_spark.rollup import rollup_stream_sink
     from tests.conftest import INJECTED_FAILURE, fail_on
 
     tune_session(spark)
@@ -174,12 +194,13 @@ def test_rollup_stream_sink_failed_batch_keeps_prior_rollup(
     b1 = ev.where(F.to_date("ts") <= "2024-01-10")
     b2 = ev.where(F.to_date("ts") > "2024-01-08")
     out = str(tmp_path / "rollup")
-    sink = rollup_stream_sink(out, by=("event_type",), time_col="ts",
-                              value_col="value")
+    sink = batch_sink(str(tmp_path / "ckpt"), append_rollup, out,
+                      by=("event_type",), time_col="ts", value_col="value")
 
     def rollup_rows():
         return {(r.event_type, r.ds): (r.cnt, round(r.sum_value, 6))
-                for r in read_table(spark, out).collect()}
+                for r in rollup_from_store(spark, out, by=("event_type",),
+                                           value_col="value").collect()}
 
     sink(b1, 0)
     before = rollup_rows()
@@ -228,21 +249,23 @@ def test_streaming_topk_from_rollup(spark, tmp_path):
     """Continuous top-k: after N micro-batches through the rollup sink,
     the rollup-served top-k equals the exact top-k over the full raw
     history — the streaming-top-k contract without complete-mode sorts."""
-    from kafana_spark.rollup import rollup_stream_sink, topk_from_rollup
+    from kafana_spark.rollup import topk_from_rollup
 
     tune_session(spark)
     ev = load_table(spark, SF_SMOKE, "events") \
         .select("event_type", "ts", "value")
     batches = [ev.where(F.dayofmonth("ts") % 3 == i) for i in range(3)]
     out = str(tmp_path / "rollup")
-    sink = rollup_stream_sink(out, by=("event_type",), time_col="ts",
-                              value_col="value")
+    sink = batch_sink(str(tmp_path / "ckpt"), append_rollup, out,
+                      by=("event_type",), time_col="ts", value_col="value")
     for i, b in enumerate(batches):
         sink(b, i)
 
     got = [(r.event_type, r.cnt) for r in
-           topk_from_rollup(read_table(spark, out), k=3,
-                            by=("event_type",)).collect()]
+           topk_from_rollup(rollup_from_store(spark, out,
+                                              by=("event_type",),
+                                              value_col="value"),
+                            k=3, by=("event_type",)).collect()]
     exp = [(r.event_type, r.cnt) for r in
            ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
            .orderBy(F.col("cnt").desc(), "event_type").limit(3).collect()]
@@ -281,11 +304,13 @@ def test_cms_merge_equals_one_shot_sketch(spark):
 
 
 def test_cms_stream_sink_redelivery_equals_one_shot(spark, tmp_path):
-    from kafana_spark.rollup import cms_from_store, cms_sketch, cms_stream_sink
+    from kafana_spark.rollup import (
+        append_cms_sketch, cms_from_store, cms_sketch,
+    )
 
     d = load_table(spark, SF_SMOKE, "documents")
     root = str(tmp_path / "cms")
-    sink = cms_stream_sink(root)
+    sink = batch_sink(str(tmp_path / "ckpt"), append_cms_sketch, root)
     batches = [d.where(F.col("doc_id") % 3 == i) for i in range(3)]
     sink(batches[0], 0)
     sink(batches[1], 1)

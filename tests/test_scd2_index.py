@@ -15,6 +15,7 @@ from kafana_spark import scd2_index
 from kafana_spark.operators import events as ev_ops
 from kafana_spark.session import tune_session
 from kafana_spark.sources.tables import load_table
+from kafana_spark.streaming.pipeline import batch_sink
 from tests.conftest import SF_SMOKE
 
 COLS = ["event_id", "ts", "user_id", "event_type", "value"]
@@ -96,7 +97,8 @@ def test_stream_sink_maintains_store(spark, tmp_path):
     early, late = _time_halves(d)
     late1, late2 = _time_halves(late)
     scd2_index.build_scd2_index(early, root)
-    sink = scd2_index.scd2_stream_sink(root)
+    sink = batch_sink(str(tmp_path / "ckpt"),
+                      scd2_index.append_scd2_index, root)
     sink(late1, 0)
     sink(late2, 1)
     sink(late2, 1)   # redelivery replaces its own partition
@@ -190,9 +192,9 @@ def test_append_empty_batch_is_noop_for_ordering(spark, tmp_path):
 
 
 def test_build_nonbase_batch_enforces_ordering(spark, tmp_path):
-    """ADVICE r8: build_scd2_index with a non-'base' batch id is an
-    incremental write and must ride the SAME event-time enforcement
-    as append — an overlapping batch raises on every write path."""
+    """ADVICE r8: an incremental write must ride the event-time
+    enforcement against the base's logged span — an overlapping batch
+    raises on every write path (appends are the only one)."""
     import pytest
 
     root = str(tmp_path / "scd2idx")
@@ -200,9 +202,9 @@ def test_build_nonbase_batch_enforces_ordering(spark, tmp_path):
     overlap = make(spark, [(ts(3), 1, "b", 1.0)])
     scd2_index.build_scd2_index(b1, root)
     with pytest.raises(ValueError, match="event-time"):
-        scd2_index.build_scd2_index(overlap, root, batch="b2")
-    # a genuinely later batch via build is accepted and serves exactly
+        scd2_index.append_scd2_index(overlap, root, batch="b2")
+    # a genuinely later batch is accepted and serves exactly
     ok = make(spark, [(ts(10), 1, "b", 1.0)])
-    scd2_index.build_scd2_index(ok, root, batch="b2")
+    scd2_index.append_scd2_index(ok, root, batch="b2")
     out = scd2_index.scd2_dim_from_store(spark, root).collect()
     assert [(r.state, r.version) for r in out] == [("a", 1), ("b", 2)]

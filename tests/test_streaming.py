@@ -19,7 +19,8 @@ from kafana_spark.sources.kafka import (
 from kafana_spark.sources.tables import load_table
 from kafana_spark.store import compact, read_store, retention, write_store
 from kafana_spark.streaming.pipeline import (
-    ingest_stream_exactly_once, sessionize, stream_batch_id, windowed_counts,
+    batch_sink, ingest_stream_exactly_once, sessionize, stream_batch_id,
+    windowed_counts,
 )
 from tests.conftest import SF_SMOKE
 
@@ -349,31 +350,86 @@ def test_dedup_stream_drops_cross_microbatch_redeliveries(spark, tmp_path):
     assert got.select("_id").distinct().count() == 40
 
 
+def _drain(spark, df, tmp_path, name: str, append, *args,
+           files: int = 1) -> None:
+    """Stream ``df`` (staged as ``files`` parquet files, one per
+    micro-batch) into ``append`` through ``batch_sink``, checkpointed
+    at ``<tmp_path>/ckpt_<name>``."""
+    staged, ckpt = str(tmp_path / f"staged_{name}"), \
+        str(tmp_path / f"ckpt_{name}")
+    df.repartition(files).write.parquet(staged)
+    stream = (spark.readStream.schema(df.schema)
+              .option("maxFilesPerTrigger", 1).parquet(staged))
+    (stream.writeStream
+     .foreachBatch(batch_sink(ckpt, append, *args))
+     .option("checkpointLocation", ckpt)
+     .trigger(availableNow=True).start()
+     .awaitTermination(120))
+
+
 def test_dedup_index_sink_through_real_writestream(spark, tmp_path):
-    """End-to-end: readStream → writeStream.foreachBatch(
-    dedup_index_stream_sink) — the index a real stream builds serves
-    identically to the recompute-everything pipeline."""
+    """End-to-end: readStream → writeStream.foreachBatch(batch_sink(
+    ckpt, append_dedup_index, root)) — the index a real stream builds
+    serves identically to the recompute-everything pipeline."""
     from kafana_spark import dedup_index
     from kafana_spark.operators import dedup
-    from kafana_spark.sources.tables import load_table
-    from tests.conftest import SF_SMOKE
 
     docs = load_table(spark, SF_SMOKE, "documents") \
         .select("doc_id", "text")
-    staged = str(tmp_path / "staged")
-    # several files → several micro-batches under maxFilesPerTrigger
-    docs.repartition(3).write.parquet(staged)
-    stream = (spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", 1).parquet(staged))
     root = str(tmp_path / "ndidx")
-    q = (stream.writeStream
-         .foreachBatch(dedup_index.dedup_index_stream_sink(root))
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    # several files → several micro-batches under maxFilesPerTrigger
+    _drain(spark, docs, tmp_path, "docs", dedup_index.append_dedup_index,
+           root, files=3)
 
     got = {(r.da, r.db, r.jaccard) for r in
            dedup_index.near_dup_from_index(spark, root, 0.5).collect()}
     expect = {(r.da, r.db, r.jaccard) for r in
               dedup.minhash_near_dup(docs, 0.5).collect()}
+    assert got == expect
+
+
+def test_two_streams_into_one_cms_table_keep_both(spark, tmp_path):
+    """Two streams, each with its own checkpoint, into one CMS table:
+    their epoch-0 batches get different ids, so the served sketch is
+    the one-shot sketch of both inputs (24 tokens), not the last
+    stream's alone."""
+    from kafana_spark.rollup import (
+        append_cms_sketch, cms_from_store, cms_sketch,
+    )
+
+    a = spark.createDataFrame(
+        [(0, "alpha beta gamma delta epsilon"),
+         (1, "zeta eta theta iota kappa")], "doc_id long, text string")
+    b = spark.createDataFrame(
+        [(2, "alpha beta gamma delta epsilon zeta eta"),
+         (3, "lambda mu nu xi omicron pi rho")], "doc_id long, text string")
+    root = str(tmp_path / "cms")
+    _drain(spark, a, tmp_path, "a", append_cms_sketch, root)
+    _drain(spark, b, tmp_path, "b", append_cms_sketch, root)
+
+    got = {(r.j, r.b): r.cnt for r in cms_from_store(spark, root).collect()}
+    want = {(r.j, r.b): r.cnt for r in
+            cms_sketch(a.unionByName(b), "text").collect()}
+    assert sum(c for (j, _), c in got.items() if j == 0) == 24
+    assert got == want
+
+
+def test_two_streams_into_one_dedup_index_keep_both(spark, tmp_path):
+    """Two streams, each with its own checkpoint, into one near-dup
+    index serve the pairs of the union of their inputs."""
+    from kafana_spark import dedup_index
+    from kafana_spark.operators import dedup
+
+    docs = load_table(spark, SF_SMOKE, "documents") \
+        .select("doc_id", "text")
+    root = str(tmp_path / "ndidx")
+    for name, parity in (("even", 0), ("odd", 1)):
+        _drain(spark, docs.where(F.col("doc_id") % 2 == parity), tmp_path,
+               name, dedup_index.append_dedup_index, root, files=2)
+
+    got = {(r.da, r.db, r.jaccard) for r in
+           dedup_index.near_dup_from_index(spark, root, 0.5).collect()}
+    expect = {(r.da, r.db, r.jaccard) for r in
+              dedup.minhash_near_dup(docs, 0.5).collect()}
+    assert any(da % 2 == 0 or db % 2 == 0 for da, db, _ in expect)
     assert got == expect
