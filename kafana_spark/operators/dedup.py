@@ -1507,6 +1507,12 @@ def knn_clusters(df: DataFrame, k: int = 5, centroid_mod: int = 40,
     n²); labels run over the pruned mutual edge list only (hybrid
     union-find / distributed propagation, same driver-memory gate as
     dup_clusters); csize is one per-cluster window over labels.
+
+    ``graph``: a precomputed directed edge frame from ``knn_graph``
+    with the same ``k`` and quantizer parameters, used instead of
+    building one (so several consumers share one scoring pass). It
+    must have the columns ``qid``, ``vec_id``, ``cos`` and ``rank``;
+    ``mutual_knn`` raises ``ValueError`` otherwise.
     """
     from kafana_spark.operators.similarity import mutual_knn
 
@@ -1567,6 +1573,10 @@ def cluster_sample(df: DataFrame, k: int = 5, centroid_mod: int = 40,
     makes one fat window partition — cap it upstream with
     ``min_cos`` (edges below the floor are cut, splitting weakly
     connected regions) before reaching for a two-phase rank.
+
+    ``graph``: passed to ``knn_clusters``, under the same contract — a
+    ``knn_graph`` edge frame with ``qid``, ``vec_id``, ``cos`` and
+    ``rank``, else ``ValueError``.
     """
     cl = knn_clusters(df, k, centroid_mod, n_probe, n_assign, min_cos,
                       method=method, centroid_k=centroid_k,

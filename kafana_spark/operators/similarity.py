@@ -621,6 +621,22 @@ def knn_graph(df: DataFrame, k: int = 5, centroid_mod: int = 40,
                     n_assign, centroid_k=centroid_k)
 
 
+#: the columns of a directed k-NN edge frame, ``knn_graph``'s output
+KNN_GRAPH_COLS = ("qid", "vec_id", "cos", "rank")
+
+
+def _given_graph(graph: DataFrame) -> DataFrame:
+    """A caller's ``graph=`` edge frame, checked for ``KNN_GRAPH_COLS``:
+    a frame missing one raises ``ValueError`` here instead of failing
+    to resolve deep in the consumer's plan."""
+    missing = [c for c in KNN_GRAPH_COLS if c not in graph.columns]
+    if missing:
+        raise ValueError(
+            f"graph= lacks knn_graph column(s) {missing}: pass a directed "
+            f"edge frame with columns {list(KNN_GRAPH_COLS)}")
+    return graph
+
+
 def mutual_knn(df: DataFrame, k: int = 5, centroid_mod: int = 40,
                n_probe: int = 2, n_assign: int = 1,
                method: str = "modulo",
@@ -648,7 +664,7 @@ def mutual_knn(df: DataFrame, k: int = 5, centroid_mod: int = 40,
     # of ONE graph (the v5 funnel's outlier drop + cluster quota)
     # pass a materialized copy so the Arrow-kernel scoring leg runs
     # once (PythonUDF stages are not exchange-reusable).
-    g = graph if graph is not None else knn_graph(
+    g = _given_graph(graph) if graph is not None else knn_graph(
         df, k, centroid_mod, n_probe, n_assign, method, centroid_k)
     return _mutual_from_directed(g)
 
@@ -1628,8 +1644,12 @@ def knn_outliers(df: DataFrame, k: int = 5, centroid_mod: int = 40,
 
     Scale: one combinable aggregate over the n·k edge frame, a
     broadcast-size left join back to ids, and a TakeOrdered —
-    no window, no full sort."""
-    g = graph if graph is not None else knn_graph(
+    no window, no full sort.
+
+    ``graph``: a precomputed ``knn_graph`` edge frame, as for
+    ``mutual_knn``; one without ``KNN_GRAPH_COLS`` raises
+    ``ValueError``."""
+    g = _given_graph(graph) if graph is not None else knn_graph(
         df, k, centroid_mod, n_probe, n_assign, method, centroid_k)
     cb = g.select("qid",
                   F.round(F.col("cos") * 10000).cast("long")

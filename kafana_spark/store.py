@@ -4,12 +4,23 @@ Replaces the reference's Elasticsearch index (ES 6.8, one index per
 topic, dynamic mapping — /root/reference/kafana.http:72-78,
 docker-compose.yml:72-78). Design:
 
-- append-only Parquet partitioned by ``topic`` (≈ per-topic index) and
-  ``ds`` (UTC date of record timestamp, ≈ rollover/retention boundary,
-  /root/reference/README.md:14). Partition pruning replaces ES shard
-  routing; parquet min/max + dictionary stats replace the skip index.
-- one commit log: every writer lands ``<owner>-part-*`` files under
-  ``topic=/ds=`` and publishes them as one atomically created
+- two tiers of append-only Parquet. The HOT tier is what ingest
+  writes: each micro-batch lands as one file per input partition at
+  the store root, unpartitioned and sorted by ``topic``/``timestamp``
+  (``HOT_SORT_BY``), so a batch's cost does not grow with the days and
+  topics it spans. The COLD tier is what ``compact`` and
+  ``merge_upsert`` write: files partitioned by ``topic`` (≈ per-topic
+  index) and ``ds`` (UTC date of record timestamp, ≈ rollover/retention
+  boundary, the reference's README.md:14). Partition pruning replaces
+  ES shard routing; parquet min/max + dictionary stats replace the
+  skip index. A file's ``_log/`` value, not its directory, names its
+  tier: a cold file's is its ``{topic, ds}``, a hot file's its stats
+  ``{ds_min, ds_max, topics}``. ``read_store`` reads the two tiers
+  apart and unions them by name. Do not read the store with
+  ``spark.read.parquet(<root>)``: on a store that holds both tiers it
+  silently reads only the ``topic=`` dirs and skips the hot files.
+- one commit log: every writer lands ``<owner>-part-*`` files in its
+  tier and publishes them as one atomically created
   ``_log/<version>.json`` entry of added and removed files; deletes
   happen only after it. Readers read the latest snapshot's files with
   the logged schema, so a crash at any step leaves the old or the new
@@ -19,17 +30,18 @@ docker-compose.yml:72-78). Design:
   (redelivery replaces it; optional per-batch ``meta`` in its entry),
   ``replace_table`` one rebuild that drops every live file, and
   ``read_table`` reads the snapshot — with whatever partition columns
-  the caller passes (the store ``topic``/``ds``, the token index
-  ``bucket``, the rest none).
+  the caller passes (the token index ``bucket``, the rest none). The
+  store's own writers and ``read_store`` use the same commit.
   Appends may race each other and one maintenance call
   (``compact``/``merge_upsert``/``retention``) at a time. Bloom filters
   on ``key``/``_id`` go only on the files ``compact``/``merge_upsert``
   rewrite.
 - idempotency on replay (ES upsert by _id, kafana.http:76): a replayed
-  batch id replaces its own files, and ``compact`` keeps one row per
-  ``_id``. Its log entry marks the snapshot's ``_id``s unique, and
-  ``read_store(dedup=True)`` runs ``dropDuplicates("_id")`` only on a
-  snapshot that is not so marked (appended to since the last compact).
+  batch id replaces its own files, and ``compact`` moves every hot
+  file into the cold tier keeping one row per ``_id``. Its log entry
+  marks the snapshot's ``_id``s unique, and ``read_store(dedup=True)``
+  runs ``dropDuplicates("_id")`` only on a snapshot that is not so
+  marked (appended to since the last compact).
 - "latest state per key" is a VIEW over the changelog (README.md:11:
   "rather a change log than a table"), ordered by (partition, offset)
   within key — Kafka ordering is per-partition, so offset, not
@@ -40,6 +52,7 @@ from __future__ import annotations
 
 import contextlib
 import datetime as dt
+import functools
 import json
 import os
 import shutil
@@ -47,7 +60,7 @@ import uuid
 from dataclasses import dataclass, field
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
@@ -64,6 +77,8 @@ BASE = "base"
 COMPACT_MAX_RECORDS = 1_000_000
 #: ``compact`` sorts each rewritten partition by these columns
 COMPACT_CLUSTER_BY = ("key", "offset")
+#: a hot file's rows are sorted by these columns
+HOT_SORT_BY = ("topic", "timestamp")
 
 
 def with_store_partitions(docs: DataFrame) -> DataFrame:
@@ -110,6 +125,19 @@ def _partition_values(rel_dir: str) -> dict:
             (d.split("=", 1) for d in rel_dir.split(os.sep) if d)}
 
 
+def _is_hot(value: dict) -> bool:
+    """Whether a store file's log value is a hot file's stats."""
+    return "topics" in value
+
+
+def _span(value: dict) -> tuple[list, str | None, str | None]:
+    """(topics, first ds, last ds) a store file's rows may hold; the days
+    are ``None`` for a hot file without rows."""
+    if _is_hot(value):
+        return value["topics"], value["ds_min"], value["ds_max"]
+    return [value["topic"]], value["ds"], value["ds"]
+
+
 def _owned(rel: str, batch: str) -> bool:
     """Whether a table file belongs to batch ``batch``."""
     return os.path.basename(rel).startswith(f"{batch}-part-")
@@ -122,8 +150,8 @@ class CommitConflict(RuntimeError):
 @dataclass
 class _Snapshot:
     """The table at ``version``: live files (table-relative path → its
-    partition values), stored schema, whether its ``_id``s are unique,
-    and the entries replayed."""
+    log value: partition values, or a hot store file's stats), stored
+    schema, whether its ``_id``s are unique, and the entries replayed."""
     version: int = -1
     files: dict = field(default_factory=dict)
     schema: str | None = None
@@ -227,14 +255,18 @@ def _commit(base: str, snap: _Snapshot, op: str, add: dict,
 def _collect_garbage(base: str, snap: _Snapshot,
                      owner: str | None = None) -> None:
     """Delete files ``snap`` does not hold that a replayed entry removed
-    or a crashed attempt of ``owner`` left uncommitted — never another
-    writer's in-flight files. Emptied partition dirs stay: a concurrent
-    writer may be moving a file into one."""
+    or a crashed attempt of ``owner`` left uncommitted, then ``owner``'s
+    staging dir — never another writer's in-flight files. Emptied
+    partition dirs stay: a concurrent writer may be moving a file into
+    one."""
     dead = {p for e in snap.entries for p in e["remove"]}
     for rel in _data_files(base):
         if rel not in snap.files and (
                 rel in dead or (owner and _owned(rel, owner))):
             os.remove(os.path.join(base, rel))
+    if owner:
+        shutil.rmtree(os.path.join(base, "_staging", owner),
+                      ignore_errors=True)
 
 
 def _land(base: str, snap: _Snapshot, op: str, owner: str, write,
@@ -242,27 +274,28 @@ def _land(base: str, snap: _Snapshot, op: str, owner: str, write,
           batch: str | None = None, meta: dict | None = None) -> dict:
     """``write(stage)`` a parquet copy to ``_staging/<owner>``, move its
     files into the same partition dirs under ``base`` as
-    ``<owner>-<name>``, commit them, then collect garbage. Returns the
-    added files."""
+    ``<owner>-<name>``, commit them, then collect garbage. Each file's
+    log value is what ``write`` returned, or its partition values if
+    that is ``None``. Returns the added files."""
     stage = os.path.join(base, "_staging", owner)
-    write(stage)
+    value = write(stage)
     add = {}
     for rel in sorted(_data_files(stage)):
         rel_dir, name = os.path.split(rel)
         os.makedirs(os.path.join(base, rel_dir), exist_ok=True)
         dst = os.path.join(rel_dir, f"{owner}-{name}")
         os.rename(os.path.join(stage, rel), os.path.join(base, dst))
-        add[dst] = _partition_values(rel_dir)
+        add[dst] = _partition_values(rel_dir) if value is None else value
     _commit(base, snap, op, add, remove, schema, batch, meta)
     _collect_garbage(base, snap, owner)
-    shutil.rmtree(stage, ignore_errors=True)
     return add
 
 
 def _read(spark: SparkSession, base: str, schema: str | None,
           files) -> DataFrame:
     """The given snapshot files under ``base``, read with the stored
-    schema (no inference job); partition columns come from the paths."""
+    schema (no inference job); partition columns come from the paths
+    (a file at ``base`` itself has none: its columns are its data)."""
     if schema is None:
         raise FileNotFoundError(f"no commit log under {base}")
     return (spark.read.schema(StructType.fromJson(json.loads(schema)))
@@ -270,10 +303,46 @@ def _read(spark: SparkSession, base: str, schema: str | None,
             .parquet(*(os.path.join(base, p) for p in files)))
 
 
+def _read_tiers(spark: SparkSession, base: str, schema: str | None,
+                files: dict) -> DataFrame:
+    """The given store files (path → log value): the cold ones with
+    ``topic``/``ds`` from their paths, the hot ones with them from their
+    data, unioned by name. Files of one tier read as one scan."""
+    tiers = [[p for p, v in files.items() if _is_hot(v) == hot]
+             for hot in (False, True)]
+    frames = [_read(spark, base, schema, t) for t in tiers if t] \
+        or [_read(spark, base, schema, [])]
+    return functools.reduce(DataFrame.unionByName, frames)
+
+
 def _store_schema(df: DataFrame, partition_by) -> str:
     """``df``'s schema as a read returns it: partition cols last."""
     return StructType(sorted(df.schema,
                              key=lambda f: f.name in partition_by)).json()
+
+
+def _land_hot(base: str, snap: _Snapshot, op: str, owner: str,
+              df: DataFrame, remove: list[str] = (),
+              batch: str | None = None) -> dict:
+    """Land ``df`` (store columns) as hot files in one ``op`` commit:
+    unpartitioned, no shuffle, one file per input partition, each sorted
+    by ``HOT_SORT_BY``. Every file's log value is the stats of the whole
+    write — its first and last ``ds`` and its sorted topics — which
+    ``observe`` gathers inside the write job."""
+    stats = Observation()
+    out = (df.observe(stats, F.min("ds").alias("ds_min"),
+                      F.max("ds").alias("ds_max"),
+                      F.array_sort(F.collect_set("topic")).alias("topics"))
+           .sortWithinPartitions(*HOT_SORT_BY))
+
+    def write(stage):
+        _writer(out).parquet(stage)
+        got = stats.get
+        return {"ds_min": got["ds_min"] and got["ds_min"].isoformat(),
+                "ds_max": got["ds_max"] and got["ds_max"].isoformat(),
+                "topics": got["topics"]}
+    return _land(base, snap, op, owner, write, remove,
+                 _store_schema(df, PARTITION_COLS), batch)
 
 
 def _land_frame(path: str, op: str, batch: str, df: DataFrame,
@@ -324,8 +393,9 @@ def read_table(spark: SparkSession, path: str,
 
 
 def table_files(path: str) -> dict:
-    """The latest snapshot's live files (absolute path → partition
-    values); empty if nothing was committed."""
+    """The latest snapshot's live files (absolute path → log value:
+    partition values, or a hot store file's stats); empty if nothing
+    was committed."""
     base = path.rstrip("/")
     return {os.path.join(base, p): v
             for p, v in _snapshot(base).files.items()}
@@ -342,14 +412,28 @@ def batch_meta(path: str) -> dict:
 
 def write_store(docs: DataFrame, path: str,
                 batch_id: str | None = None) -> None:
-    """Append enriched documents to the store as batch ``batch_id`` (a
-    fresh uuid when omitted), partitioned by ``topic``/``ds``: one
-    ``append_table`` commit. A replayed batch id replaces its own
-    files instead of duplicating; a retry after a crash deletes what
-    the crashed attempt left uncommitted.
+    """Append enriched documents to the store's hot tier as batch
+    ``batch_id`` (a fresh uuid when omitted): one ``append`` commit of
+    its ``<batch_id>-part-*`` files at the store root, one per input
+    partition, sorted by ``HOT_SORT_BY``, each logged with the batch's
+    ``ds`` range and topics. A replayed batch id replaces its own files
+    instead of duplicating; a retry after a crash deletes what the
+    crashed attempt left uncommitted.
     """
-    append_table(with_store_partitions(docs), path,
-                 batch_id or uuid.uuid4().hex, PARTITION_COLS)
+    base = path.rstrip("/")
+    batch = batch_id or uuid.uuid4().hex
+    _land_hot(base, _snapshot(base), "append", batch,
+              with_store_partitions(docs), batch=batch)
+
+
+def _touches(value: dict, touched: set) -> bool:
+    """Whether a store file may hold rows of a ``(topic, ds)`` in
+    ``touched``: by its partition values if cold, its stats if hot."""
+    if not _is_hot(value):
+        return (value["topic"], value["ds"]) in touched
+    topics, lo, hi = _span(value)
+    return lo is not None and any(t in topics and lo <= d <= hi
+                                  for t, d in touched)
 
 
 def merge_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
@@ -357,17 +441,19 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
     ``MERGE WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT`` contract as
     partition-granular copy-on-write on the store's commit log.
 
-    Only the snapshot files of partitions named by the updates are
-    READ; rows whose ``_id`` is being replaced are anti-joined out
-    (updates broadcast — small next to the store) and the union is
-    written as new files. One ``merge`` commit adds them and removes the
-    files read, so a reader sees every update or none. Untouched
-    partitions keep their files byte-identical.
+    Only the snapshot files that may hold a ``(topic, ds)`` named by
+    the updates are READ: the cold files of those partitions and the
+    hot files whose stats overlap one. Rows whose ``_id`` is being
+    replaced are anti-joined out (updates broadcast — small next to the
+    store) and the union is written as new files in the cold layout,
+    so a hot file read moves there whole. One ``merge`` commit adds
+    them and removes the files read, so a reader sees every update or
+    none. Untouched partitions keep their files byte-identical.
 
     Assumes updates keep each record's original ``ds`` (true by
     construction: ``ds`` derives from the record timestamp, which is
     part of the record identity in the changelog model). Returns the
-    number of partitions rewritten.
+    number of partitions written.
     """
     base = path.rstrip("/")
     snap = _snapshot(base)
@@ -375,22 +461,23 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
         else updates
     touched = {(r[0], str(r[1]))
                for r in up.select(*PARTITION_COLS).distinct().collect()}
-    old = [p for p, v in snap.files.items()
-           if (v["topic"], v["ds"]) in touched]
-    existing = _read(spark, base, snap.schema, old)
+    old = {p: v for p, v in snap.files.items() if _touches(v, touched)}
+    existing = _read_tiers(spark, base, snap.schema, old)
     keep = existing.join(F.broadcast(up.select("_id").distinct()),
                          "_id", "left_anti")
     merged = keep.unionByName(up.select(*existing.columns))
     add = _land(base, snap, "merge", "merge",
                 lambda stage: _bloomed(_writer(merged, PARTITION_COLS))
-                .parquet(stage), remove=old)
+                .parquet(stage), remove=list(old))
     return len({os.path.dirname(p) for p in add})
 
 
 def read_store(spark: SparkSession, path: str, dedup: bool = True) -> DataFrame:
     """Read exactly the latest snapshot's files, with the logged schema
     (an empty snapshot reads as an empty frame; files no commit lists
-    are never seen); optionally dedup replayed records by _id.
+    are never seen); optionally dedup replayed records by _id. The cold
+    and the hot tier are read apart and unioned by name; a snapshot of
+    one tier (a compacted store has only cold files) is one file scan.
 
     Dedup mirrors the ES sink's idempotent upsert (same _id ⇒ one
     logical document). All replays of an _id are byte-identical by
@@ -400,21 +487,22 @@ def read_store(spark: SparkSession, path: str, dedup: bool = True) -> DataFrame:
     """
     base = path.rstrip("/")
     snap = _snapshot(base)
-    df = _read(spark, base, snap.schema, snap.files)
+    df = _read_tiers(spark, base, snap.schema, snap.files)
     if not dedup or snap.unique_ids:
         return df
     return df.dropDuplicates(["_id"])
 
 
 def compact(spark: SparkSession, path: str) -> None:
-    """Rewrite the store so each (topic, ds) partition holds few,
-    full-size files — the OPTIMIZE twin of the reference's "define some
-    rollover conditions" advice (/root/reference/README.md:14).
+    """Move the whole store into the cold tier, each (topic, ds)
+    partition in few, full-size files — the OPTIMIZE twin of the
+    reference's "define some rollover conditions" advice (its
+    README.md:14).
 
-    Streaming ingest leaves one small file per micro-batch per
-    partition; at 100 TB that's death by file listing. One shuffle
-    keyed on the partition columns lands each partition in one task;
-    ``maxRecordsPerFile`` (``COMPACT_MAX_RECORDS``) re-splits
+    Streaming ingest leaves one small hot file per micro-batch; at
+    100 TB that's death by file listing, and no partition pruning. One
+    shuffle keyed on the partition columns lands each partition in one
+    task; ``maxRecordsPerFile`` (``COMPACT_MAX_RECORDS``) re-splits
     partitions that exceed the target so file size stays bounded on
     the high side too.
 
@@ -431,15 +519,15 @@ def compact(spark: SparkSession, path: str) -> None:
     become disjoint ranges, so needle queries (`key = X`) skip most
     row groups instead of scanning the day.
 
-    One ``compact`` commit swaps the snapshot it read for the rewritten
-    files; the store path exists throughout, and a batch appended
-    between the read and the commit stays live.
+    One ``compact`` commit swaps the snapshot it read, hot and cold,
+    for the rewritten files; the store path exists throughout, and a
+    batch appended between the read and the commit stays live (hot).
     """
     base = path.rstrip("/")
     snap = _snapshot(base)
     # same _id ⇒ same record ⇒ same ds: dedup within the (topic, ds)
     # clustering is exact and rides the repartition's exchange
-    out = _read(spark, base, snap.schema, snap.files) \
+    out = _read_tiers(spark, base, snap.schema, snap.files) \
         .repartition(*PARTITION_COLS) \
         .dropDuplicates([*PARTITION_COLS, "_id"]) \
         .sortWithinPartitions(*PARTITION_COLS, *COMPACT_CLUSTER_BY)
@@ -452,25 +540,43 @@ def compact(spark: SparkSession, path: str) -> None:
 
 
 def retention(path: str, cutoff_ds: str) -> list[str]:
-    """Drop ds partitions strictly older than ``cutoff_ds``
+    """Drop the rows of days strictly older than ``cutoff_ds``
     (``YYYY-MM-DD``; anything else raises ``ValueError`` before
-    anything is removed).
+    anything is removed) — the retention/rollover-deletion half of the
+    reference's index-size bound.
 
-    Metadata-only: one ``retention`` commit removes the partitions'
-    files, no data rewrite — the retention/rollover-deletion half of
-    the reference's index-size bound. Returns the removed partition
-    paths.
+    One ``retention`` commit removes the cold partitions of those days
+    and the hot files whose last ``ds`` is before the cutoff, with no
+    data rewrite. A hot file whose ``ds`` range straddles the cutoff is
+    rewritten without its older rows (a job on the active Spark
+    session), and the same commit swaps it for the rewrite. Removing
+    rows keeps the snapshot's ``_id``s unique if they were. Returns the
+    removed partition dirs and hot files.
     """
     if dt.date.fromisoformat(cutoff_ds).isoformat() != cutoff_ds:
         raise ValueError(f"retention cutoff {cutoff_ds!r} is not YYYY-MM-DD")
     base = path.rstrip("/")
     snap = _snapshot(base)
+    old, straddling = {}, {}
     # canonical ISO days compare in date order as strings
-    old = [p for p, v in snap.files.items() if v["ds"] < cutoff_ds]
-    if old:
-        _commit(base, snap, "retention", {}, old)
-    _collect_garbage(base, snap)
-    return sorted({os.path.join(base, os.path.dirname(p)) for p in old})
+    for p, v in snap.files.items():
+        _, lo, hi = _span(v)
+        if hi is not None and hi < cutoff_ds:
+            old[p] = v
+        elif lo is not None and lo < cutoff_ds:     # only a hot file
+            straddling[p] = v
+    removed = old | straddling
+    if straddling:
+        kept = _read_tiers(SparkSession.active(), base, snap.schema,
+                           straddling).where(F.col("ds") >= cutoff_ds)
+        _land_hot(base, snap, "retention", "retention", kept,
+                  remove=list(removed))
+    else:
+        if old:
+            _commit(base, snap, "retention", {}, list(old))
+        _collect_garbage(base, snap, "retention")
+    return sorted({os.path.join(base, p if _is_hot(v) else os.path.dirname(p))
+                   for p, v in removed.items()})
 
 
 def latest_state(docs: DataFrame, drop_tombstones: bool = True) -> DataFrame:

@@ -115,18 +115,19 @@ def test_q01_scans_only_needed_columns(spark):
 # ------------------------------------------------- store partition pruning
 
 def test_store_prunes_topic_partitions(spark, tmp_path):
-    """topic is a store partition column (= per-topic ES index); a
-    single-topic query must prune at the metadata level, visible as a
-    PartitionFilters entry and a pruned partition count."""
+    """topic is a partition column of the compacted store (= per-topic
+    ES index); a single-topic query must prune at the metadata level,
+    visible as a PartitionFilters entry and a pruned partition count."""
     from kafana_spark.ingest import enrich, events_as_kafka_records
     from kafana_spark.sources.tables import load_table
-    from kafana_spark.store import write_store
+    from kafana_spark.store import compact, write_store
 
     ev = load_table(spark, SF_SMOKE, "events").limit(100)
     recs = events_as_kafka_records(ev)
     for t in ("foo", "bar"):
         write_store(enrich(recs.withColumn("topic", F.lit(t))),
                     str(tmp_path / "store"))
+    compact(spark, str(tmp_path / "store"))
 
     df = (spark.read.parquet(str(tmp_path / "store"))
           .where(F.col("topic") == "foo"))
@@ -160,6 +161,29 @@ def test_compacted_store_reads_without_dedup_shuffle(spark, tmp_path):
     plan = plan_of(read_store(spark, store))
     assert "Exchange" not in plan, plan
     assert "Aggregate" not in plan, plan
+
+
+def test_compacted_store_reads_as_one_scan(spark, tmp_path):
+    """A compacted snapshot has no hot files, so read_store plans one
+    FileScan and no Union, as before the hot tier; a batch appended
+    after the compact adds the hot tier's scan under a Union."""
+    from kafana_spark.ingest import enrich, events_as_kafka_records
+    from kafana_spark.sources.tables import load_table
+    from kafana_spark.store import compact, read_store, write_store
+
+    store = str(tmp_path / "store")
+    _redelivered_store(spark, store)
+    compact(spark, store)
+
+    plan = plan_of(read_store(spark, store))
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
+    assert "Union" not in plan, plan
+
+    write_store(enrich(events_as_kafka_records(
+        load_table(spark, SF_SMOKE, "events").limit(10))), store)
+    plan = plan_of(read_store(spark, store, dedup=False))
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2, plan
+    assert "Union" in plan, plan
 
 
 def test_compact_dedups_inside_its_one_shuffle(spark, tmp_path,

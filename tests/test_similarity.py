@@ -416,6 +416,27 @@ def test_knn_graph_contract_and_mutual_subset(spark):
     assert got == expect and got
 
 
+def test_graph_passthrough_rejects_a_frame_without_edge_columns(spark):
+    """``graph=`` must be a ``knn_graph`` edge frame: one that lacks
+    ``rank`` (here a mutual-edge frame's columns) raises ``ValueError``
+    naming it, in ``mutual_knn``, ``knn_outliers`` and the clusters
+    built on them; the real graph passes through unchanged."""
+    import pytest
+
+    from kafana_spark.operators.dedup import cluster_sample, knn_clusters
+
+    e = embs(spark)
+    g = similarity.knn_graph(e, k=5, centroid_mod=40, n_probe=2)
+    bad = g.withColumnRenamed("rank", "rank_ab")
+    for call in (similarity.mutual_knn, similarity.knn_outliers,
+                 knn_clusters, cluster_sample):
+        with pytest.raises(ValueError, match="rank"):
+            call(e, k=5, centroid_mod=40, n_probe=2, graph=bad)
+    assert sorted(map(tuple, similarity.mutual_knn(e, graph=g).collect())) \
+        == sorted(map(tuple, similarity.mutual_knn(
+            e, k=5, centroid_mod=40, n_probe=2).collect()))
+
+
 def test_lloyd_update_folds_batch_stats_closed_form(spark):
     """Hand-computed 2-dim mini-batch fold: base {0,2,4} walks one
     round (c0=(0,0), c4=(.95,1.0) in µunits), batch {1,3,5} assigns

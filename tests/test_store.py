@@ -8,7 +8,9 @@ import os
 from pyspark.sql import functions as F
 
 from kafana_spark.ingest import enrich
-from kafana_spark.store import latest_state, read_store, write_store
+from kafana_spark.store import (
+    compact, latest_state, read_store, table_files, write_store,
+)
 from tests.test_ingest import BAR_VALUE, bar_records
 
 TS1 = dt.datetime(2024, 1, 1, 10, 0)
@@ -27,10 +29,20 @@ def docs(spark):
 
 def test_store_roundtrip_and_partition_layout(spark, tmp_path):
     path = str(tmp_path / "store")
-    write_store(docs(spark), path)
-    # partitioned by topic and ds → pruning-friendly layout on disk
+    # a micro-batch of one input partition (one source file or Kafka
+    # topic-partition) → one hot file at the store root, logged with its
+    # day range and topics
+    write_store(docs(spark).coalesce(1), path)
+    (value,) = table_files(path).values()
+    assert value == {"ds_min": "2024-01-01", "ds_max": "2024-01-02",
+                     "topics": ["bar"]}
+    assert [f for f in os.listdir(path) if f.endswith(".parquet")] \
+        == [os.path.basename(f) for f in table_files(path)]
+    # compact moves it into topic/ds dirs → pruning-friendly layout
+    compact(spark, path)
     assert os.path.isdir(os.path.join(path, "topic=bar", "ds=2024-01-01"))
     assert os.path.isdir(os.path.join(path, "topic=bar", "ds=2024-01-02"))
+    assert [f for f in os.listdir(path) if f.endswith(".parquet")] == []
     out = read_store(spark, path)
     assert out.count() == 5
     assert set(out.columns) >= {"message", "timestamp", "topic", "partition",

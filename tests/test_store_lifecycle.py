@@ -39,10 +39,10 @@ def _by_id(df):
 
 def test_compact_reduces_files_preserves_rows(spark, tmp_path):
     """Compaction keeps one row per ``_id`` (the 4 appends are full
-    redeliveries) and changes no deduplicated read."""
+    redeliveries), changes no deduplicated read, and moves the hot
+    files into the cold layout: one file per (topic, ds) dir."""
     store = tmp_path / "store"
     _build_store(spark, store, appends=4)
-    before_files = len(parquet_files(store))
     before = read_store(spark, str(store), dedup=False)
     before_ids = set(r._id for r in before.select("_id").distinct().collect())
     before_rows = _by_id(read_store(spark, str(store)))
@@ -54,7 +54,11 @@ def test_compact_reduces_files_preserves_rows(spark, tmp_path):
     assert set(r._id for r in after.select("_id").distinct().collect()) \
         == before_ids
     assert _by_id(read_store(spark, str(store))) == before_rows
-    assert len(parquet_files(store)) < before_files
+    dirs = [os.path.relpath(os.path.dirname(f), store)
+            for f in table_files(str(store))]
+    assert sorted(dirs) == sorted(
+        os.path.join(f"topic={r.topic}", f"ds={r.ds}")
+        for r in after.select("topic", "ds").distinct().collect())
 
 
 def test_retention_drops_old_ds_partitions(spark, tmp_path):
@@ -134,6 +138,7 @@ def test_merge_upsert_updates_inserts_and_leaves_rest_untouched(
     ev = load_table(spark, SF_SMOKE, "events").limit(400)
     docs = enrich(events_as_kafka_records(ev))
     write_store(docs, store)
+    compact(spark, store)       # every file holds one partition
 
     full = with_store_partitions(docs)
     parts = [tuple(r) for r in
@@ -195,8 +200,9 @@ def _events_docs(spark, n=200):
 
 
 def _replay_setup(spark, store):
-    """A committed batch replayed whole: same rows, fresh files."""
-    docs = _events_docs(spark)
+    """A committed batch of two files replayed whole: same rows, fresh
+    files."""
+    docs = _events_docs(spark).repartition(2)
     write_store(docs, store, "b0")
     return lambda: write_store(docs, store, "b0"), lambda pre: pre
 
@@ -220,7 +226,9 @@ def _merge_setup(spark, store):
 
 
 def _retention_setup(spark, store):
-    write_store(_events_docs(spark), store)
+    """Two hot files whose days straddle the cutoff: retention rewrites
+    both."""
+    write_store(_events_docs(spark).repartition(2), store)
     cutoff = sorted({d for _, _, d in _rows(spark, store)})[1]
     return (lambda: retention(store, cutoff),
             lambda pre: [r for r in pre if r[2] >= cutoff])
@@ -233,8 +241,7 @@ SETUPS = {"write_store": _replay_setup, "compact": _compact_setup,
 
 
 @pytest.mark.parametrize("op,step", [
-    (op, step) for op in SETUPS for step in ("rename", "commit", "delete")
-    if (op, step) != ("retention", "rename")])     # retention renames nothing
+    (op, step) for op in SETUPS for step in ("rename", "commit", "delete")])
 def test_crash_shows_one_snapshot_and_retry_lands(spark, tmp_path, crash,
                                                   op, step):
     """A crash before the commit (mid-move or at the log link) leaves
@@ -527,3 +534,118 @@ def test_unflagged_compact_entry_still_dedups_on_read(spark, tmp_path):
     assert read_store(spark, store, dedup=False).count() == 250
     assert read_store(spark, store).count() == 200
     _assert_dedup_read_exact(spark, store)
+
+
+# ------------------------------------------------- the hot and cold tiers
+
+def _hot_files(store):
+    """The snapshot's hot files: path → logged stats."""
+    from kafana_spark.store import _is_hot, _snapshot
+
+    return {p: v for p, v in _snapshot(store).files.items() if _is_hot(v)}
+
+
+def _full_rows(df):
+    """(_id, key, topic, ds, offset) of every row, sorted."""
+    return sorted((r._id, r.key, r.topic, str(r.ds), r.offset) for r in
+                  df.select("_id", "key", "topic", "ds", "offset").collect())
+
+
+def test_mixed_snapshot_reads_both_tiers(spark, tmp_path):
+    """A compacted store plus one hot batch that repeats 30 compacted
+    ``_id``s: the plain read holds the rows of both tiers, the
+    deduplicated read one row per ``_id``."""
+    from kafana_spark.store import with_store_partitions
+
+    store = str(tmp_path / "store")
+    docs = with_store_partitions(_events_docs(spark, 300))
+    cold = docs.orderBy("_id").limit(200)
+    hot = docs.orderBy(F.col("_id").desc()).limit(130)
+    write_store(cold.drop("ds"), store, "b0")
+    compact(spark, store)
+    write_store(hot.drop("ds"), store, "b1")
+    assert _hot_files(store) and len(_hot_files(store)) \
+        < len(table_files(store))
+
+    assert _full_rows(read_store(spark, store, dedup=False)) \
+        == sorted(_full_rows(cold) + _full_rows(hot))
+    assert _full_rows(read_store(spark, store)) == _full_rows(docs)
+    _assert_dedup_read_exact(spark, store)
+
+
+def test_retention_drops_and_rewrites_hot_files(spark, tmp_path):
+    """A hot file whose days all precede the cutoff is dropped; one that
+    straddles it is rewritten without its older rows and logged with
+    the rewrite's stats, in the same commit. Both are returned."""
+    from kafana_spark.store import _snapshot, with_store_partitions
+
+    store = str(tmp_path / "store")
+    docs = with_store_partitions(_events_docs(spark))
+    days = sorted(str(r.ds) for r in docs.select("ds").distinct().collect())
+    cutoff = days[2]
+    write_store(docs.where(F.col("ds") < cutoff).drop("ds").coalesce(1),
+                store, "old")
+    write_store(docs.drop("ds").coalesce(1), store, "all")
+    files = _hot_files(store)
+    (old,) = [p for p in files if p.startswith("old-part-")]
+    (straddling,) = [p for p in files if p.startswith("all-part-")]
+    stats = files[straddling]
+    assert files[old]["ds_max"] < cutoff
+    assert (stats["ds_min"], stats["ds_max"]) == (days[0], days[-1])
+    pre, version = _rows(spark, store), _snapshot(store).version
+
+    removed = retention(store, cutoff)
+
+    assert removed == sorted(os.path.join(store, p)
+                             for p in (old, straddling))
+    assert _snapshot(store).version == version + 1
+    assert _rows(spark, store) == [r for r in pre if r[2] >= cutoff]
+    assert list(_hot_files(store).values()) == [
+        {"ds_min": cutoff, "ds_max": days[-1], "topics": stats["topics"]}]
+    _assert_no_leftovers(spark, store)
+
+
+def test_merge_upsert_moves_a_touched_hot_file_to_cold(spark, tmp_path):
+    """An update of a row in a hot file removes that file and lands all
+    its rows, updated, in the cold layout; the cold partitions the hot
+    file's stats do not overlap keep their files."""
+    store = str(tmp_path / "store")
+    docs = _events_docs(spark, 300)
+    ids = sorted(r._id for r in docs.select("_id").collect())
+    write_store(docs.where(F.col("_id") < ids[150]), store, "c")
+    compact(spark, store)
+    hot = docs.where(F.col("_id") >= ids[150])
+    write_store(hot.coalesce(1), store, "h")
+    ((hot_file, stats),) = _hot_files(store).items()
+    kept_cold = {p for p, v in table_files(store).items()
+                 if "ds" in v and not
+                 stats["ds_min"] <= v["ds"] <= stats["ds_max"]}
+    pre = _rows(spark, store)
+
+    merge_upsert(spark, store, hot.where(F.col("_id") == ids[-1])
+                 .withColumn("key", F.lit("MERGED")))
+
+    assert _rows(spark, store) == sorted(
+        (i, "MERGED" if i == ids[-1] else k, d) for i, k, d in pre)
+    assert _hot_files(store) == {}
+    assert not os.path.exists(os.path.join(store, hot_file))
+    assert kept_cold <= set(table_files(store))
+    _assert_no_leftovers(spark, store)
+
+
+def test_write_store_runs_as_many_jobs_as_the_partitioned_write(spark,
+                                                                tmp_path):
+    """The hot file's stats come from ``observe`` inside its write job:
+    one ``write_store`` of the limit-fed fixture runs two jobs (the
+    limit's shuffle stage and the write), as the ``partitionBy`` write
+    it replaced did."""
+    store = str(tmp_path / "store")
+    docs = _events_docs(spark)
+    sc = spark.sparkContext
+    group = f"write-store-{os.path.basename(tmp_path)}"
+    sc.setJobGroup(group, group)
+    try:
+        write_store(docs, store)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
