@@ -16,9 +16,9 @@ Scale shape:
 - lookup: the bucket of the queried term is a LITERAL, so the scan
   of the index snapshot reads one bucket's files (partition pruning,
   pinned by test); the
-  surviving posting ids semi-join the store on ``_id``, where the
-  bloom filters on ``_id`` in compacted files (store.BLOOM_COLS) skip
-  row groups.
+  surviving posting ids semi-join the store on ``_id`` (a broadcast
+  join, which reads the store's files whole: the index saves the
+  token match, not the scan).
 - maintenance: append-only — new documents append their postings; the
   index needs no rewrite (a token's postings may span files within its
   bucket; the reader unions them for free). A stream keeps it fresh

@@ -616,7 +616,7 @@ DAILY_REV_DIR = "daily_rev"
 
 
 def build_order_rollup(orders: DataFrame, path: str, *,
-                       batch: str = "base") -> None:
+                       batch: str = "initial") -> None:
     """Persist the per-batch daily revenue partials (ds, day,
     day_cents) as one append commit of batch ``batch`` (a redelivered
     id replaces its own partials; a stream appends each micro-batch

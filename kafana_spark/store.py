@@ -33,9 +33,8 @@ docker-compose.yml:72-78). Design:
   the caller passes (the token index ``bucket``, the rest none). The
   store's own writers and ``read_store`` use the same commit.
   Appends may race each other and one maintenance call
-  (``compact``/``merge_upsert``/``retention``) at a time. Bloom filters
-  on ``key``/``_id`` go only on the files ``compact``/``merge_upsert``
-  rewrite.
+  (``compact``/``merge_upsert``/``retention``) at a time. A batch id
+  names files, so it must be a safe token (``_check_batch``).
 - idempotency on replay (ES upsert by _id, kafana.http:76): a replayed
   batch id replaces its own files, and ``compact`` moves every hot
   file into the cold tier keeping one row per ``_id``. Its log entry
@@ -73,7 +72,7 @@ LOG_DIR = "_log"
 _BASE_OPS = ("compact", "replace")
 #: the batch id of a ``replace`` commit's files
 BASE = "base"
-#: ``compact`` re-splits a partition's output past this many rows
+#: a cold write re-splits a partition's output past this many rows
 COMPACT_MAX_RECORDS = 1_000_000
 #: ``compact`` sorts each rewritten partition by these columns
 COMPACT_CLUSTER_BY = ("key", "offset")
@@ -84,24 +83,6 @@ HOT_SORT_BY = ("topic", "timestamp")
 def with_store_partitions(docs: DataFrame) -> DataFrame:
     """Add the store partition column ``ds`` (UTC date of timestamp)."""
     return docs.withColumn("ds", F.to_date("timestamp"))
-
-
-#: needle-query columns that get parquet bloom filters in the files
-#: ``compact`` and ``merge_upsert`` rewrite: `key = X` / `_id = Y`
-#: lookups skip row groups whose bloom excludes the value — the ES
-#: exact-term index stand-in (expected-ndv sized for ~1M keys per file).
-BLOOM_COLS = ("key", "_id")
-BLOOM_NDV = 1_000_000
-
-
-def _bloomed(writer):
-    """Attach the store's parquet bloom-filter options to a writer."""
-    for c in BLOOM_COLS:
-        writer = (writer
-                  .option(f"parquet.bloom.filter.enabled#{c}", "true")
-                  .option(f"parquet.bloom.filter.expected.ndv#{c}",
-                          str(BLOOM_NDV)))
-    return writer
 
 
 def _writer(df: DataFrame, partition_by=()):
@@ -141,6 +122,17 @@ def _span(value: dict) -> tuple[list, str | None, str | None]:
 def _owned(rel: str, batch: str) -> bool:
     """Whether a table file belongs to batch ``batch``."""
     return os.path.basename(rel).startswith(f"{batch}-part-")
+
+
+def _check_batch(batch: str) -> str:
+    """``batch`` if it is one file-name token (``_staging/<batch>``
+    stays in the table) that owns no other batch's or maintenance
+    call's ``-part-`` files; else ``ValueError``."""
+    if (not batch or "/" in batch or os.sep in batch
+            or batch.startswith(("_", ".")) or "-part-" in batch
+            or batch in (BASE, "compact", "merge", "retention")):
+        raise ValueError(f"unsafe batch id {batch!r}")
+    return batch
 
 
 class CommitConflict(RuntimeError):
@@ -345,6 +337,16 @@ def _land_hot(base: str, snap: _Snapshot, op: str, owner: str,
                  _store_schema(df, PARTITION_COLS), batch)
 
 
+def _land_cold(base: str, snap: _Snapshot, op: str, df: DataFrame,
+               remove: list[str]) -> dict:
+    """Land ``df`` (store columns) as ``op``'s files in one ``op`` commit
+    removing ``remove``: partitioned by ``PARTITION_COLS``, at most
+    ``COMPACT_MAX_RECORDS`` rows per file. Returns the added files."""
+    writer = _writer(df, PARTITION_COLS).option(
+        "maxRecordsPerFile", str(COMPACT_MAX_RECORDS))
+    return _land(base, snap, op, op, writer.parquet, remove)
+
+
 def _land_frame(path: str, op: str, batch: str, df: DataFrame,
                 partition_by, meta: dict | None) -> None:
     """Land ``df`` as batch ``batch``'s files in one ``op`` commit."""
@@ -364,8 +366,9 @@ def append_table(df: DataFrame, path: str, batch: str,
     replaces its own instead of duplicating; until the commit, and
     for good if the write fails, the old files stay live. ``meta`` (a
     JSON-able dict of per-batch facts) is kept in the log entry and
-    returned by ``batch_meta``."""
-    _land_frame(path, "append", batch, df, partition_by, meta)
+    returned by ``batch_meta``. An unsafe ``batch`` (``_check_batch``)
+    raises ``ValueError`` before anything is written."""
+    _land_frame(path, "append", _check_batch(batch), df, partition_by, meta)
 
 
 def replace_table(df: DataFrame, path: str,
@@ -418,10 +421,11 @@ def write_store(docs: DataFrame, path: str,
     partition, sorted by ``HOT_SORT_BY``, each logged with the batch's
     ``ds`` range and topics. A replayed batch id replaces its own files
     instead of duplicating; a retry after a crash deletes what the
-    crashed attempt left uncommitted.
+    crashed attempt left uncommitted. An unsafe ``batch_id`` raises
+    ``ValueError`` before anything is written (``_check_batch``).
     """
     base = path.rstrip("/")
-    batch = batch_id or uuid.uuid4().hex
+    batch = uuid.uuid4().hex if batch_id is None else _check_batch(batch_id)
     _land_hot(base, _snapshot(base), "append", batch,
               with_store_partitions(docs), batch=batch)
 
@@ -445,10 +449,11 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
     the updates are READ: the cold files of those partitions and the
     hot files whose stats overlap one. Rows whose ``_id`` is being
     replaced are anti-joined out (updates broadcast — small next to the
-    store) and the union is written as new files in the cold layout,
-    so a hot file read moves there whole. One ``merge`` commit adds
-    them and removes the files read, so a reader sees every update or
-    none. Untouched partitions keep their files byte-identical.
+    store) and the union is written in the cold layout by
+    ``compact``'s writer (``_land_cold``), so a hot file read moves
+    there whole. One ``merge`` commit adds the new files and removes
+    the files read, so a reader sees every update or none. Untouched
+    partitions keep their files byte-identical.
 
     Assumes updates keep each record's original ``ds`` (true by
     construction: ``ds`` derives from the record timestamp, which is
@@ -466,9 +471,7 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
     keep = existing.join(F.broadcast(up.select("_id").distinct()),
                          "_id", "left_anti")
     merged = keep.unionByName(up.select(*existing.columns))
-    add = _land(base, snap, "merge", "merge",
-                lambda stage: _bloomed(_writer(merged, PARTITION_COLS))
-                .parquet(stage), remove=list(old))
+    add = _land_cold(base, snap, "merge", merged, list(old))
     return len({os.path.dirname(p) for p in add})
 
 
@@ -502,9 +505,8 @@ def compact(spark: SparkSession, path: str) -> None:
     Streaming ingest leaves one small hot file per micro-batch; at
     100 TB that's death by file listing, and no partition pruning. One
     shuffle keyed on the partition columns lands each partition in one
-    task; ``maxRecordsPerFile`` (``COMPACT_MAX_RECORDS``) re-splits
-    partitions that exceed the target so file size stays bounded on
-    the high side too.
+    task; ``_land_cold`` splits it into files of at most
+    ``COMPACT_MAX_RECORDS`` rows.
 
     The same shuffle drops replayed records: rows are deduplicated on
     (topic, ds, _id) inside each task, which needs no second exchange.
@@ -515,9 +517,9 @@ def compact(spark: SparkSession, path: str) -> None:
     unless a batch was appended between the read and the commit.
 
     ``COMPACT_CLUSTER_BY`` sorts rows within each rewritten partition (a
-    Z-ORDER-lite): parquet row-group min/max stats on the sort columns
-    become disjoint ranges, so needle queries (`key = X`) skip most
-    row groups instead of scanning the day.
+    Z-ORDER-lite); that alone skips data for needle lookups: row-group
+    min/max stats on ``key`` become disjoint ranges, so `key = X` skips
+    every row group whose range misses ``X``, at any store size.
 
     One ``compact`` commit swaps the snapshot it read, hot and cold,
     for the rewritten files; the store path exists throughout, and a
@@ -531,12 +533,7 @@ def compact(spark: SparkSession, path: str) -> None:
         .repartition(*PARTITION_COLS) \
         .dropDuplicates([*PARTITION_COLS, "_id"]) \
         .sortWithinPartitions(*PARTITION_COLS, *COMPACT_CLUSTER_BY)
-    _land(base, snap, "compact", "compact",
-          lambda stage: _bloomed(
-              _writer(out, PARTITION_COLS)
-              .option("maxRecordsPerFile", str(COMPACT_MAX_RECORDS)))
-          .parquet(stage),
-          remove=list(snap.files))
+    _land_cold(base, snap, "compact", out, list(snap.files))
 
 
 def retention(path: str, cutoff_ds: str) -> list[str]:

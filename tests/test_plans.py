@@ -120,7 +120,7 @@ def test_store_prunes_topic_partitions(spark, tmp_path):
     visible as a PartitionFilters entry and a pruned partition count."""
     from kafana_spark.ingest import enrich, events_as_kafka_records
     from kafana_spark.sources.tables import load_table
-    from kafana_spark.store import compact, write_store
+    from kafana_spark.store import compact, read_store, write_store
 
     ev = load_table(spark, SF_SMOKE, "events").limit(100)
     recs = events_as_kafka_records(ev)
@@ -129,7 +129,7 @@ def test_store_prunes_topic_partitions(spark, tmp_path):
                     str(tmp_path / "store"))
     compact(spark, str(tmp_path / "store"))
 
-    df = (spark.read.parquet(str(tmp_path / "store"))
+    df = (read_store(spark, str(tmp_path / "store"))
           .where(F.col("topic") == "foo"))
     plan = plan_of(df)
     m = re.search(r"PartitionFilters: \[[^\]]*topic[^\]]*\]", plan)
@@ -194,9 +194,9 @@ def test_compact_dedups_inside_its_one_shuffle(spark, tmp_path,
 
     store = str(tmp_path / "store")
     _redelivered_store(spark, store)
-    written, bloomed = [], store_mod._bloomed
-    monkeypatch.setattr(store_mod, "_bloomed",
-                        lambda w: written.append(w._df) or bloomed(w))
+    written, land_cold = [], store_mod._land_cold
+    monkeypatch.setattr(store_mod, "_land_cold",
+                        lambda *a: written.append(a[3]) or land_cold(*a))
 
     store_mod.compact(spark, store)
 
@@ -259,14 +259,14 @@ def test_extracted_json_key_pushes_down_to_store_scan(spark, tmp_path):
     equivalent is opaque to pushdown and parses every row."""
     from kafana_spark.ingest import enrich, events_as_kafka_records
     from kafana_spark.sources.tables import load_table
-    from kafana_spark.store import write_store
+    from kafana_spark.store import read_store, write_store
 
     ev = load_table(spark, SF_SMOKE, "events").limit(200)
     recs = events_as_kafka_records(ev)
     docs = enrich(recs, extract_json={"props_k": ("props", "$.k", "int")})
     write_store(docs, str(tmp_path / "store"))
 
-    stored = spark.read.parquet(str(tmp_path / "store"))
+    stored = read_store(spark, str(tmp_path / "store"), dedup=False)
     df = stored.where(F.col("props_k") > 80).select("_id", "props_k")
     plan = plan_of(df)
     assert re.search(r"PushedFilters: \[[^\]]*props_k[^\]]*\]", plan), plan

@@ -94,10 +94,10 @@ def test_numeric_vs_quoted_literal(docs):
 def test_pushdown_of_compiled_predicate(spark, docs, tmp_path):
     """The compiled predicate must reach the parquet scan like a
     hand-written filter."""
-    from kafana_spark.store import write_store
+    from kafana_spark.store import read_store, write_store
 
     write_store(docs, str(tmp_path / "s"))
-    df = spark.read.parquet(str(tmp_path / "s"))
+    df = read_store(spark, str(tmp_path / "s"), dedup=False)
     plan = (df.where(compile_query_string("offset >= 100"))
             ._jdf.queryExecution().executedPlan().toString())
     assert "GreaterThanOrEqual(offset,100)" in plan
@@ -145,10 +145,10 @@ def test_quoted_values_are_never_special(docs):
 
 
 def test_prefix_star_stays_sargable(spark, docs, tmp_path):
-    from kafana_spark.store import write_store
+    from kafana_spark.store import read_store, write_store
 
     write_store(docs, str(tmp_path / "s"))
-    df = spark.read.parquet(str(tmp_path / "s"))
+    df = read_store(spark, str(tmp_path / "s"), dedup=False)
     plan = (df.where(compile_query_string("key: 12*"))
             ._jdf.queryExecution().executedPlan().toString())
     assert "StringStartsWith(key,12)" in plan

@@ -95,14 +95,14 @@ def test_compact_cluster_by_sorts_within_files(spark, tmp_path):
     each rewritten partition file, keys are sorted."""
     from kafana_spark.ingest import events_as_kafka_records
     from kafana_spark.sources.tables import load_table
-    from kafana_spark.store import compact, write_store
+    from kafana_spark.store import compact, read_store, write_store
     from tests.conftest import SF_SMOKE
 
     ev = load_table(spark, SF_SMOKE, "events").limit(300)
     write_store(enrich(events_as_kafka_records(ev)), str(tmp_path / "s"))
     compact(spark, str(tmp_path / "s"))
 
-    df = (spark.read.parquet(str(tmp_path / "s"))
+    df = (read_store(spark, str(tmp_path / "s"), dedup=False)
           .withColumn("f", F.input_file_name()))
     rows = df.select("f", "key", "offset").collect()
     by_file: dict = {}

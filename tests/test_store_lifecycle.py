@@ -64,7 +64,7 @@ def test_compact_reduces_files_preserves_rows(spark, tmp_path):
 def test_retention_drops_old_ds_partitions(spark, tmp_path):
     store = tmp_path / "store"
     _build_store(spark, store, appends=1)
-    ds_vals = sorted(r.ds for r in spark.read.parquet(str(store))
+    ds_vals = sorted(r.ds for r in read_store(spark, str(store), dedup=False)
                      .select("ds").distinct().collect())
     assert len(ds_vals) >= 2, "fixture needs multiple days"
     cutoff = str(ds_vals[1])
@@ -72,7 +72,7 @@ def test_retention_drops_old_ds_partitions(spark, tmp_path):
     removed = retention(str(store), cutoff)
 
     assert removed, "should remove at least one partition"
-    left = spark.read.parquet(str(store))
+    left = read_store(spark, str(store), dedup=False)
     assert left.where(F.col("ds") < cutoff).count() == 0
     assert left.where(F.col("ds") >= cutoff).count() > 0
 
@@ -106,26 +106,64 @@ def test_salted_agg_matches_plain_agg(spark):
     assert got == plain
 
 
-def test_store_writes_bloom_filters_on_needle_columns(spark, tmp_path):
-    """compact attaches parquet bloom filters to key/_id — verified by
-    the byte overhead vs a bloom-less write of identical data in the
-    same layout (the pyarrow in this env doesn't expose bloom offsets
-    directly). A ~1M-NDV filter outweighs a small file's data many
-    times over, while row order alone moves its size by a few percent."""
-    import os
-
+def test_compacted_store_is_plain_parquet_size(spark, tmp_path):
+    """A compacted store's live files take no more than twice the bytes
+    of a plain ``partitionBy(topic, ds)`` write of the same rows: its
+    files carry no per-file index that outweighs their data (row order
+    alone moves a file's size by a few percent)."""
     from kafana_spark.store import PARTITION_COLS, with_store_partitions
 
     ev = load_table(spark, SF_SMOKE, "events").limit(500)
     docs = enrich(events_as_kafka_records(ev))
 
-    write_store(docs, str(tmp_path / "with_bloom"))
-    compact(spark, str(tmp_path / "with_bloom"))
+    write_store(docs, str(tmp_path / "store"))
+    compact(spark, str(tmp_path / "store"))
     (with_store_partitions(docs).repartition(*PARTITION_COLS).write
-     .partitionBy(*PARTITION_COLS).parquet(str(tmp_path / "no_bloom")))
+     .partitionBy(*PARTITION_COLS).parquet(str(tmp_path / "plain")))
 
-    size = lambda p: sum(os.path.getsize(f) for f in parquet_files(p))
-    assert size(tmp_path / "with_bloom") > 2 * size(tmp_path / "no_bloom")
+    stored = sum(map(os.path.getsize, table_files(str(tmp_path / "store"))))
+    plain = sum(map(os.path.getsize, parquet_files(tmp_path / "plain")))
+    assert stored <= 2 * plain, (stored, plain)
+
+
+@pytest.fixture(scope="module")
+def guarded_tables(spark, tmp_path_factory):
+    """A compacted store and a rebuilt table holding one appended batch,
+    both of ``docs``: the targets an unsafe batch id would clobber."""
+    root = tmp_path_factory.mktemp("guarded")
+    docs = enrich(events_as_kafka_records(
+        load_table(spark, SF_SMOKE, "events").limit(100)))
+    store, table = str(root / "store"), str(root / "table")
+    write_store(docs, store, "b0")
+    compact(spark, store)
+    replace_table(docs.select("_id"), table)
+    append_table(docs.select("_id"), table, "b0")
+    return root, store, table, docs
+
+
+@pytest.mark.parametrize("bad", [
+    "", "a/b", "../../escaped", "_x", ".x", "b0-part-1",
+    "base", "compact", "merge", "retention"])
+def test_unsafe_batch_id_is_rejected_before_any_write(spark, guarded_tables,
+                                                      bad):
+    """A batch id names its files and its ``_staging/<id>`` dir. An id
+    with a path separator would stage (and garbage-collect) outside the
+    table; an owner name or a ``-part-`` id owns other writers' files,
+    so appending under it would replace them (``compact`` then an
+    append as ``"compact"`` drops the whole cold tier). Both appenders
+    raise before writing, and every table reads as before."""
+    root, store, table, docs = guarded_tables
+    before = table_files(store), table_files(table)
+
+    with pytest.raises(ValueError):
+        write_store(docs, store, bad)
+    with pytest.raises(ValueError):
+        append_table(docs.select("_id"), table, bad)
+
+    assert (table_files(store), table_files(table)) == before
+    assert read_store(spark, store).count() == 100
+    assert read_table(spark, table).count() == 200
+    assert sorted(os.listdir(root)) == ["store", "table"]
 
 
 def test_merge_upsert_updates_inserts_and_leaves_rest_untouched(

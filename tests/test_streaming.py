@@ -171,14 +171,14 @@ def test_exactly_once_replayed_batch_overwrites(spark, tmp_path):
     store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
 
     _stream(spark, staged, records.schema, store, ckpt)
-    first = spark.read.parquet(store)
+    first = read_store(spark, store, dedup=False)
     first_ids = sorted(r._id for r in first.select("_id").collect())
     assert len(first_ids) == 200
 
     # simulate redelivery: the sink's write of batch 0, again
     write_store(enrich(records), store, stream_batch_id(ckpt, 0))
 
-    replayed = spark.read.parquet(store)
+    replayed = read_store(spark, store, dedup=False)
     assert replayed.count() == 200  # no duplicates
     assert sorted(r._id for r in replayed.select("_id").collect()) == first_ids
 
