@@ -37,17 +37,18 @@ def _ordered_keys(extension_keys: list[str]) -> list[str]:
     (r3-signed — the oldest remaining signatures) filling the window,
     with the r4-signed blocks last.
 
-    Round 13 (current): round 12 signed q01–q22 + x252–x279 all green
-    (CORRECTNESS_r12), so the never-signed block is x280–x300
-    (21 keys); the 7 spare window slots fall to the x29–x56 r3-signed
-    band (the oldest remaining signatures), beginning the re-sign
-    ladder — the window yields q01–q22 + x280–x300 + x29–x35.
-    Signature ages after r12: x280+: never driver-signed
-    (judge-verified green via check_oracle but the driver record is
-    the contract), x29–x56: r3 (oldest remaining), x01–x17/x57–x67:
-    r4, x18–x28/x68–x84: r5, x85–x112: r6, x113–x140 minus x130: r7,
-    x130/x141–x167: r8, x168–x195: r9, x196–x223: r10,
-    x224–x251: r11, x252–x279: r12 (freshest).
+    Round 14 (current): round 13 signed q01–q22 + x280–x301 + x29–x34
+    all green (CORRECTNESS_r13), so no registered key is unsigned and
+    the 28 window slots after the q-set go to the re-sign ladder: the
+    r3-signed band x35–x56 (now the oldest signatures), then the first
+    six r4-signed keys by number — the window yields q01–q22 + x35–x56
+    + x01–x06. A key numbered above x301 is never driver-signed and
+    fronts every signed band. Signature rounds after r13 (the rank's
+    first element): x35–x56: r3 (oldest), x01–x17/x57–x67: r4,
+    x18–x28/x68–x84: r5, x85–x112: r6, x113–x140 minus x130: r7,
+    x130/x141–x167: r8, x168–x195: r9, x196–x223: r10, x224–x251: r11,
+    x252–x279: r12, x29–x34/x280–x301: r13 (freshest). Each new
+    CORRECTNESS_r{N}.json moves its window into a new freshest band.
     """
 
     def rank(k: str) -> tuple[int, int, str]:
@@ -56,28 +57,30 @@ def _ordered_keys(extension_keys: list[str]) -> list[str]:
                 n = int(k[1:].split("_", 1)[0])
             except ValueError:
                 n = 999
-            if n >= 280:
-                return (1, n, k)  # never driver-signed, oldest first
-            if 29 <= n <= 56:
-                return (2, n, k)  # r3-signed: oldest current signatures
+            if n > 301:
+                return (0, n, k)  # never driver-signed, oldest first
+            if 35 <= n <= 56:
+                return (3, n, k)  # r3-signed: oldest current signatures
             if (1 <= n <= 17) or (57 <= n <= 67):
-                return (3, n, k)  # r4-signed
+                return (4, n, k)
             if (18 <= n <= 28) or (68 <= n <= 84):
-                return (4, n, k)  # r5-signed
+                return (5, n, k)
             if 85 <= n <= 112:
-                return (5, n, k)  # r6-signed
+                return (6, n, k)
             if n == 130 or 141 <= n <= 167:
-                return (7, n, k)  # r8-signed
+                return (8, n, k)
             if 168 <= n <= 195:
-                return (8, n, k)  # r9-signed
+                return (9, n, k)
             if 196 <= n <= 223:
-                return (9, n, k)  # r10-signed
+                return (10, n, k)
             if 224 <= n <= 251:
-                return (10, n, k)  # r11-signed
+                return (11, n, k)
             if 252 <= n <= 279:
-                return (11, n, k)  # r12-signed (freshest)
-            return (6, n, k)      # x113–x140 (minus x130): r7
-        return (12, 0, k)
+                return (12, n, k)
+            if (29 <= n <= 34) or (280 <= n <= 301):
+                return (13, n, k)  # r13-signed (freshest)
+            return (7, n, k)      # x113–x140 (minus x130): r7
+        return (99, 0, k)         # non-x keys: after every x band
 
     return sorted(extension_keys, key=rank)
 

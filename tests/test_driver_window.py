@@ -97,15 +97,15 @@ def test_window_fronts_red_then_never_signed_keys():
         f"{expected_front} — rotate _ordered_keys bands")
 
 
-def test_round13_window_is_q_set_plus_x280_x300_plus_resign():
-    """Belt-and-braces explicit pin for THIS round (r13): r12 signed
-    x252–x279 green, so x280–x300 are the last never-signed block
-    (21 keys) and the 7 spare slots begin the re-sign ladder with the
-    r3-signed band (x301, the r13 production twin, is never-signed
-    too and slots in after x300)."""
+def test_round14_window_is_q_set_plus_x35_x56_plus_x01_x06():
+    """Belt-and-braces explicit pin for THIS round (r14): r13 signed
+    x280–x301 and x29–x34 green, so no registered key is never-signed
+    and all 28 slots go to the re-sign ladder: the r3-signed band
+    x35–x56 (the oldest signatures, 22 keys), then the first six
+    r4-signed keys by number, x01–x06."""
     w = _window()
     ns = [_xnum(k) for k in w[22:]]
-    assert ns == list(range(280, 302)) + list(range(29, 35)), ns
+    assert ns == list(range(35, 57)) + list(range(1, 7)), ns
 
 
 def test_oracle_keys_match_query_keys():
