@@ -8,7 +8,10 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -25,62 +28,55 @@ def entry(spark: SparkSession) -> DataFrame:
     return q14_revenue(spark, "/root/testdata/sf0.001")
 
 
+#: Where the driver drops its ``CORRECTNESS_r{N}.json`` records.
+RECORDS_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def _green(row) -> bool:
+    """A record row that passed. ``err == "no_oracle"`` is the
+    documented rows-only check, not a failure."""
+    return (isinstance(row, dict)
+            and (not row.get("err") or row["err"] == "no_oracle")
+            and all(row.get(c, True) is not False
+                    for c in ("rows_match", "schema_match", "hash_match")))
+
+
+def _latest_rows() -> dict[str, tuple[int, object]]:
+    """``{key: (round, row)}``: each key's row in the newest record
+    that has one."""
+    rounds = {}
+    for p in glob.glob(os.path.join(RECORDS_DIR, "CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
+        if m:
+            rounds[int(m.group(1))] = p
+    latest = {}
+    for rnd in sorted(rounds):
+        with open(rounds[rnd]) as f:
+            for k, row in json.load(f).items():
+                latest[k] = (rnd, row)
+    return latest
+
+
 def _ordered_keys(extension_keys: list[str]) -> list[str]:
-    """Driver-window-aware ordering of the extension block.
+    """The extension block in driver-window order, derived from the
+    ``CORRECTNESS_r*.json`` records in ``RECORDS_DIR``.
 
-    The driver records at most the first 50 ``queries()`` entries in
-    CORRECTNESS_r{N}.json. Round 4's window signed q01–q22 + x57–x67 +
-    x01–x17 on the CURRENT testdata; x18–x28's only driver rows (r2)
-    predate the round-3 testdata regeneration, so round 5 yields
-    q01–q22 (the declared contract, always first), then x18–x28 for
-    fresh signatures, then the new round-5 keys (x68+), then x29–x56
-    (r3-signed — the oldest remaining signatures) filling the window,
-    with the r4-signed blocks last.
-
-    Round 14 (current): round 13 signed q01–q22 + x280–x301 + x29–x34
-    all green (CORRECTNESS_r13), so no registered key is unsigned and
-    the 28 window slots after the q-set go to the re-sign ladder: the
-    r3-signed band x35–x56 (now the oldest signatures), then the first
-    six r4-signed keys by number — the window yields q01–q22 + x35–x56
-    + x01–x06. A key numbered above x301 is never driver-signed and
-    fronts every signed band. Signature rounds after r13 (the rank's
-    first element): x35–x56: r3 (oldest), x01–x17/x57–x67: r4,
-    x18–x28/x68–x84: r5, x85–x112: r6, x113–x140 minus x130: r7,
-    x130/x141–x167: r8, x168–x195: r9, x196–x223: r10, x224–x251: r11,
-    x252–x279: r12, x29–x34/x280–x301: r13 (freshest). Each new
-    CORRECTNESS_r{N}.json moves its window into a new freshest band.
+    The driver signs only the first 50 ``queries()`` entries of a
+    round, so the keys that most need a signature come first: keys
+    whose latest row is red, then keys that no record has signed, then
+    green keys from the oldest signature round to the newest. Within
+    each group keys sort by key number. A new record re-orders the
+    window by itself.
     """
+    latest = _latest_rows()
 
-    def rank(k: str) -> tuple[int, int, str]:
-        if k.startswith("x"):
-            try:
-                n = int(k[1:].split("_", 1)[0])
-            except ValueError:
-                n = 999
-            if n > 301:
-                return (0, n, k)  # never driver-signed, oldest first
-            if 35 <= n <= 56:
-                return (3, n, k)  # r3-signed: oldest current signatures
-            if (1 <= n <= 17) or (57 <= n <= 67):
-                return (4, n, k)
-            if (18 <= n <= 28) or (68 <= n <= 84):
-                return (5, n, k)
-            if 85 <= n <= 112:
-                return (6, n, k)
-            if n == 130 or 141 <= n <= 167:
-                return (8, n, k)
-            if 168 <= n <= 195:
-                return (9, n, k)
-            if 196 <= n <= 223:
-                return (10, n, k)
-            if 224 <= n <= 251:
-                return (11, n, k)
-            if 252 <= n <= 279:
-                return (12, n, k)
-            if (29 <= n <= 34) or (280 <= n <= 301):
-                return (13, n, k)  # r13-signed (freshest)
-            return (7, n, k)      # x113–x140 (minus x130): r7
-        return (99, 0, k)         # non-x keys: after every x band
+    def rank(k: str) -> tuple:
+        m = re.match(r"x(\d+)", k)
+        n = int(m.group(1)) if m else float("inf")
+        if k not in latest:
+            return (1, 0, n, k)
+        rnd, row = latest[k]
+        return (2, rnd, n, k) if _green(row) else (0, 0, n, k)
 
     return sorted(extension_keys, key=rank)
 

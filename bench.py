@@ -15,8 +15,8 @@ Usage: python bench.py [--min-of N] [--detail] [key ...]
 - ``--detail`` (implied by a key subset): per-query secs/load1 lists in
   the output JSON, load sampled before every run.
 
-One code path for driver runs AND quiet-box adjudications (r11 verdict
-#5): tools/quiet_bench.py is now a thin wrapper over this file.
+One code path for driver runs AND quiet-box adjudications: an
+adjudication is ``python bench.py --min-of 3 --detail <keys>``.
 """
 
 from __future__ import annotations

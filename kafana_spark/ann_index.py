@@ -32,8 +32,6 @@ store roundtrip against the same DuckDB oracle as x08.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,29 +76,28 @@ def build_ann_index(df: DataFrame, path: str, centroid_mod: int = 40,
                   f"{path}/{ASSIGN_DIR}")
 
 
-def append_ann_index(df: DataFrame, path: str, n_assign: int = 1,
-                     batch: str | None = None) -> None:
+def append_ann_index(df: DataFrame, path: str, n_assign: int = 1, *,
+                     batch: str) -> None:
     """Assign a NEW batch against the STORED centroids and append.
 
     Append-only: existing assignment rows never change. Centroids are
     not refit — monitor drift and rebuild when cell occupancy skews
-    (the standard IVF maintenance trade). Pass ``batch`` (ingest day,
-    stream batch) for idempotent re-runs; a random id is drawn
-    otherwise — a redelivery under the same id REPLACES that batch's
-    files instead of duplicating assignment rows.
+    (the standard IVF maintenance trade). ``batch`` names the append
+    (ingest day, stream batch): a redelivery under the same id
+    REPLACES that batch's files instead of duplicating assignment
+    rows.
 
     Merge-law audit (r8 verdict #6): duplicated vectors across
     batches CANNOT corrupt a serve — every probe path dedups
     candidates per (qid, vec_id) — so only the cheap fingerprint
     tripwire runs here: the same rows re-appended under a fresh
-    batch id (the uuid-retry footgun) raise instead of bloating the
-    probed cells."""
-    bid = batch or uuid.uuid4().hex
+    batch id (the fresh-id retry footgun) raise instead of bloating
+    the probed cells."""
     table = f"{path}/{ASSIGN_DIR}"
-    meta = bm.fresh_batch_meta(df, "vec_id", table, bid)
+    meta = bm.fresh_batch_meta(df, "vec_id", table, batch)
     centroids = read_table(df.sparkSession, f"{path}/{CENT_DIR}")
     append_table(_ivf_assign(_with_norm(_vectors(df)), centroids,
-                             n_assign), table, bid, meta=meta)
+                             n_assign), table, batch, meta=meta)
 
 
 def ann_topk_from_index(spark: SparkSession, path: str,
@@ -162,19 +159,18 @@ def _lloyd_batch_stats(batch_df: DataFrame, centroids: DataFrame,
 
 
 def append_lloyd_index(df: DataFrame, path: str, n_assign: int = 1,
-                       dim: int = 64, batch: str | None = None) -> None:
+                       dim: int = 64, *, batch: str) -> None:
     """Append a NEW batch to the Lloyd index: (a) assigned against the
     STORED centroids and appended probe-servable, and (b) reduced to
-    its exact sufficient statistics, both as batch ``batch`` (a random
-    id when none is given) — a redelivery REPLACES that batch's files,
-    so the later centroid refresh counts every vector once."""
-    bid = batch or uuid.uuid4().hex
+    its exact sufficient statistics, both as batch ``batch`` — a
+    redelivery REPLACES that batch's files, so the later centroid
+    refresh counts every vector once."""
     # the stats are SUMMED at refresh time (event_index-class merge
     # law), so append_ann_index's fingerprint tripwire guards them too
-    append_ann_index(df, path, n_assign, batch=bid)
+    append_ann_index(df, path, n_assign, batch=batch)
     centroids = read_table(df.sparkSession, f"{path}/{CENT_DIR}")
     append_table(_lloyd_batch_stats(df, centroids, dim),
-                 f"{path}/{LLOYD_STATS_DIR}", bid)
+                 f"{path}/{LLOYD_STATS_DIR}", batch)
 
 
 def refresh_lloyd_centroids(spark: SparkSession, path: str,
@@ -263,19 +259,18 @@ def build_pq_index(df: DataFrame, path: str, dim: int = 64,
 
 
 def append_pq_index(df: DataFrame, path: str, dim: int = 64,
-                    m_total: int = 16, batch: str | None = None) -> None:
-    """Encode a NEW batch against the STORED codebooks and append —
-    append-only like the IVF assignments; rebuild codebooks on drift.
-    Pass ``batch`` for idempotent re-runs; random id otherwise.
-    Fingerprint tripwire as in ``append_ann_index`` (serve paths
-    dedup candidates, so only the fresh-id retry footgun raises)."""
+                    m_total: int = 16, *, batch: str) -> None:
+    """Encode a NEW batch against the STORED codebooks and append as
+    batch ``batch`` — append-only like the IVF assignments; rebuild
+    codebooks on drift. Fingerprint tripwire as in
+    ``append_ann_index`` (serve paths dedup candidates, so only the
+    fresh-id retry footgun raises)."""
     cb = read_table(df.sparkSession, f"{path}/{PQ_CB_DIR}")
-    bid = batch or uuid.uuid4().hex
     table = f"{path}/{PQ_CODE_DIR}"
-    meta = bm.fresh_batch_meta(df, "vec_id", table, bid)
-    append_table(pq_encode(df, cb, m_total, dim // m_total), table, bid,
+    meta = bm.fresh_batch_meta(df, "vec_id", table, batch)
+    append_table(pq_encode(df, cb, m_total, dim // m_total), table, batch,
                  meta=meta)
-    append_table(_vectors(df), f"{path}/{PQ_VEC_DIR}", bid)
+    append_table(_vectors(df), f"{path}/{PQ_VEC_DIR}", batch)
 
 
 def pq_topk_from_index(spark: SparkSession, path: str,
@@ -313,18 +308,17 @@ def build_lsh_index(df: DataFrame, path: str, n_tables: int = 6,
                   f"{path}/{LSH_CODE_DIR}")
 
 
-def append_lsh_index(df: DataFrame, path: str, dim: int = 64,
-                     batch: str | None = None) -> None:
-    """Sign a NEW batch against the STORED planes and append —
-    append-only like the IVF assignments; planes never drift (they are
-    anchored to the original corpus sample), rebuild to re-anchor.
-    Fingerprint tripwire as in ``append_ann_index``."""
-    bid = batch or uuid.uuid4().hex
+def append_lsh_index(df: DataFrame, path: str, dim: int = 64, *,
+                     batch: str) -> None:
+    """Sign a NEW batch against the STORED planes and append as batch
+    ``batch`` — append-only like the IVF assignments; planes never
+    drift (they are anchored to the original corpus sample), rebuild
+    to re-anchor. Fingerprint tripwire as in ``append_ann_index``."""
     table = f"{path}/{LSH_CODE_DIR}"
-    meta = bm.fresh_batch_meta(df, "vec_id", table, bid)
+    meta = bm.fresh_batch_meta(df, "vec_id", table, batch)
     planes = read_table(df.sparkSession, f"{path}/{LSH_PLANE_DIR}")
     append_table(lsh_codes(_with_norm(_vectors(df)), planes, dim),
-                 table, bid, meta=meta)
+                 table, batch, meta=meta)
 
 
 def lsh_topk_from_index(spark: SparkSession, path: str,

@@ -8,8 +8,9 @@ parity across batches is legitimate (pinned by the families' own
 merge tests). The documented-but-previously-unenforced precondition
 is plain set-disjointness, and its worst violation in practice is a
 RETRY FOOTGUN: re-appending the same rows under a fresh batch id
-(the ``batch=None`` → uuid4 default), which double-counts every
-shingle/gate/rollup row while each batch individually looks healthy.
+(a retry that names a new id instead of its original one), which
+double-counts every shingle/gate/rollup row while each batch
+individually looks healthy.
 
 Two guards, matched to what each family's store can support:
 
@@ -55,7 +56,7 @@ def fresh_batch_meta(df: DataFrame, id_col: str, table: str,
     bit_xor of xxhash64(id) — one combinable agg), to be kept in its
     append entry. Raises if another batch of ``table`` carries the
     same fingerprint — the same rows are being re-appended under a
-    NEW batch id (a retried append that drew a fresh uuid), which
+    NEW batch id (a retried append that named a fresh id), which
     would double-count every row at serve time. Same-id redelivery
     passes: it replaces its own files."""
     r = df.agg(F.count(F.lit(1)).alias("n"),

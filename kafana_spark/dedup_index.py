@@ -36,8 +36,6 @@ tests/test_dedup_index.py.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -86,12 +84,10 @@ def build_dedup_index(df: DataFrame, path: str,
 
 
 def append_dedup_index(df: DataFrame, path: str,
-                       text_col: str = "text",
-                       batch: str | None = None) -> None:
+                       text_col: str = "text", *, batch: str) -> None:
     """Add new documents to an existing index (append-only: signatures
     and shingles are per-doc functions, so no existing row changes).
-    Each append gets its own batch id — pass one (ingest day, stream
-    batch) for idempotent re-runs, or let a random one be drawn. A
+    Each append names its own batch id (ingest day, stream batch). A
     redelivered id replaces its own files, so a replayed micro-batch
     never doubles its (doc_id, h) shingle rows, and a crash mid-write
     heals the same way: nothing was committed, and the retry's commit
@@ -101,19 +97,18 @@ def append_dedup_index(df: DataFrame, path: str,
     batches must be doc-disjoint, or the duplicated (doc_id, h)
     shingle rows silently inflate every jaccard the doc participates
     in. Two guards (batch_manifest.py): the content-fingerprint
-    tripwire (same rows under a NEW batch id — the uuid-retry footgun
-    — raises) and an exact doc_id semi-join against the stored
+    tripwire (same rows under a NEW batch id — the fresh-id retry
+    footgun — raises) and an exact doc_id semi-join against the stored
     signatures of the other batches (one row per doc, column-pruned).
     Same-id redelivery replaces its own files and passes both.
     """
-    bid = batch or uuid.uuid4().hex
     sig_table = f"{path}/{SIG_DIR}"
-    meta = bm.fresh_batch_meta(df, "doc_id", sig_table, bid)
+    meta = bm.fresh_batch_meta(df, "doc_id", sig_table, batch)
     if meta["n"]:
-        bm.enforce_disjoint_ids(df, sig_table, bid, "doc_id",
+        bm.enforce_disjoint_ids(df, sig_table, batch, "doc_id",
                                 "dedup index")
     _index_tables(df, text_col, lambda frame, sub: append_table(
-        frame, f"{path}/{sub}", bid,
+        frame, f"{path}/{sub}", batch,
         meta=meta if sub == SIG_DIR else None))
 
 
@@ -263,13 +258,10 @@ def build_substr_index(df: DataFrame, path: str, k: int | None = None,
 
 
 def append_substr_index(df: DataFrame, path: str, k: int | None = None,
-                        text_col: str = "text",
-                        batch: str | None = None) -> None:
+                        text_col: str = "text", *, batch: str) -> None:
     """Append ``df``'s grams to the gram index as batch ``batch`` (a
-    redelivered id replaces its own grams; a random id when none is
-    given)."""
-    append_table(_gram_index(df, k, text_col), f"{path}/{GRAM_DIR}",
-                 batch or uuid.uuid4().hex)
+    redelivered id replaces its own grams)."""
+    append_table(_gram_index(df, k, text_col), f"{path}/{GRAM_DIR}", batch)
 
 
 def spans_from_index(spark: SparkSession, path: str,

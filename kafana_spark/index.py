@@ -28,8 +28,6 @@ Scale shape:
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,13 +61,12 @@ def build_token_index(docs: DataFrame, field: str = "message.value",
 
 def append_token_index(docs: DataFrame, path: str,
                        field: str = "message.value", id_col: str = "_id",
-                       batch: str | None = None) -> None:
+                       *, batch: str) -> None:
     """Append the postings of ``docs`` (``build_token_index``) sharded
     by token-hash bucket: one append commit as batch ``batch`` (a
-    redelivered id replaces its own postings), or as a fresh batch
-    when none is given."""
+    redelivered id replaces its own postings)."""
     append_table(build_token_index(docs, field=field, id_col=id_col),
-                 path, batch or uuid.uuid4().hex, BUCKET_COLS)
+                 path, batch, BUCKET_COLS)
 
 
 def lookup_ids(spark: SparkSession, index_path: str, term: str) -> DataFrame:

@@ -70,44 +70,10 @@ def rollup_range(rollup: DataFrame, ds0: str, ds1: str,
     runs in milliseconds regardless of raw-data scale."""
     sel = rollup.where((F.col(ds_col) >= F.lit(ds0).cast("date"))
                        & (F.col(ds_col) <= F.lit(ds1).cast("date")))
-    aggs = [F.sum("cnt").alias("cnt")]
-    if value_col is not None:
-        aggs += [F.sum(f"sum_{value_col}").alias(f"sum_{value_col}"),
-                 F.min(f"min_{value_col}").alias(f"min_{value_col}"),
-                 F.max(f"max_{value_col}").alias(f"max_{value_col}")]
-    for c in distinct_cols:
-        aggs.append(
-            F.hll_sketch_estimate(F.hll_union_agg(f"hll_{c}"))
-            .alias(f"ndv_{c}"))
-    return sel.groupBy(*by).agg(*aggs)
-
-
-def update_rollup(existing: DataFrame | None, batch: DataFrame,
-                  by: Sequence[str] = ("topic",), ds_col: str = "ds",
-                  value_col: str | None = None,
-                  distinct_cols: Sequence[str] = ()) -> DataFrame:
-    """Incremental continuous-aggregate maintenance: merge one batch's
-    daily partials into an existing rollup so the result equals
-    ``build_rollup`` over the full history (partials and HLL sketches
-    merge associatively — pinned by test).
-
-    Partition-granular, like store.merge_upsert: rollup rows for
-    UNTOUCHED (group, day) keys pass through without re-aggregation —
-    only keys present in the batch are re-merged. A late event for an
-    old day therefore costs one semi/anti join against the (tiny)
-    rollup plus a re-aggregation of the touched rows only.
-    """
-    delta = build_rollup(batch, by=by, ds_col=ds_col, value_col=value_col,
-                         distinct_cols=distinct_cols)
-    if existing is None:
-        return delta
-    keys = [*by, ds_col]
-    touched_keys = delta.select(*keys).distinct()
-    untouched = existing.join(touched_keys, keys, "left_anti")
-    touched = existing.join(touched_keys, keys, "left_semi") \
-        .unionByName(delta)
-    return untouched.unionByName(
-        _merge_partials(touched, keys, value_col, distinct_cols))
+    merged = _merge_partials(sel, by, value_col, distinct_cols)
+    ndv = {f"hll_{c}": f"ndv_{c}" for c in distinct_cols}
+    return merged.select(*(F.hll_sketch_estimate(c).alias(ndv[c])
+                           if c in ndv else c for c in merged.columns))
 
 
 def _merge_partials(partials: DataFrame, keys: Sequence[str],
@@ -161,8 +127,8 @@ def rollup_from_store(spark, path: str, by: Sequence[str] = ("topic",),
                       ds_col: str = "ds", value_col: str | None = None,
                       distinct_cols: Sequence[str] = ()) -> DataFrame:
     """The stored rollup, one row per (by…, ds): the appended partials
-    merged with ``update_rollup``'s aggregation — equal to
-    ``build_rollup`` over every batch's rows."""
+    merged by ``_merge_partials`` — equal to ``build_rollup`` over
+    every batch's rows."""
     return _merge_partials(read_table(spark, path), [*by, ds_col],
                            value_col, distinct_cols)
 

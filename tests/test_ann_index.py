@@ -45,7 +45,7 @@ def test_append_assigns_against_stored_centroids(spark, tmp_path):
     ann_index.build_ann_index(e.where(F.col("vec_id") % 40 == 0), root2,
                               centroid_mod=40, n_assign=2)
     ann_index.append_ann_index(e.where(F.col("vec_id") % 40 != 0), root2,
-                               n_assign=2)
+                               n_assign=2, batch="rest")
     a = ann_index.ann_topk_from_index(spark, root, q, k=10, n_probe=3)
     b = ann_index.ann_topk_from_index(spark, root2, q, k=10, n_probe=3)
     assert result_set(a) == result_set(b)
@@ -102,7 +102,7 @@ def test_pq_append_encodes_against_stored_codebooks(spark, tmp_path):
     ann_index.build_pq_index(e.where(F.col("vec_id") % 3 == 0), root2,
                              m_total=16, ksub=32, train_mod=3)
     ann_index.append_pq_index(e.where(F.col("vec_id") % 3 != 0), root2,
-                              m_total=16)
+                              m_total=16, batch="rest")
     to_set = lambda df: {(r.qid, r.vec_id, r.d2u, r.rank)
                          for r in df.collect()}
     a = ann_index.pq_topk_from_index(spark, root, q, k=10, pool=100,
@@ -296,7 +296,8 @@ def test_lsh_append_signs_against_stored_planes(spark, tmp_path):
     ann_index.build_lsh_index(e, root)
     root2 = str(tmp_path / "lshidx2")
     ann_index.build_lsh_index(e.where(F.col("vec_id") % 2 == 1), root2)
-    ann_index.append_lsh_index(e.where(F.col("vec_id") % 2 == 0), root2)
+    ann_index.append_lsh_index(e.where(F.col("vec_id") % 2 == 0), root2,
+                               batch="even")
     a = ann_index.lsh_topk_from_index(spark, root, q, k=10)
     b = ann_index.lsh_topk_from_index(spark, root2, q, k=10)
     assert result_set(a) == result_set(b)
@@ -330,7 +331,8 @@ def test_lsh_rebuild_clears_stale_append_batches(spark, tmp_path):
     q = similarity.modulo_queries(e, 100)
     root = str(tmp_path / "lshidx")
     ann_index.build_lsh_index(e.where(F.col("vec_id") % 2 == 1), root)
-    ann_index.append_lsh_index(e.where(F.col("vec_id") % 2 == 0), root)
+    ann_index.append_lsh_index(e.where(F.col("vec_id") % 2 == 0), root,
+                               batch="even")
     ann_index.build_lsh_index(e, root)           # rebuild-on-drift
     fresh = str(tmp_path / "fresh")
     ann_index.build_lsh_index(e, fresh)

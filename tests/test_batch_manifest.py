@@ -48,10 +48,10 @@ def test_dedup_index_rejects_same_rows_under_fresh_id(spark, tmp_path):
                                   root)
     newb = d.where(F.col("doc_id") % 2 == 1)
     dedup_index.append_dedup_index(newb, root, batch="day1")
-    # retry that forgot the batch id draws a fresh uuid — must raise,
-    # not silently double every (doc_id, h) shingle row
+    # a retry under a fresh batch id must raise, not silently double
+    # every (doc_id, h) shingle row
     with pytest.raises(ValueError, match="fingerprint"):
-        dedup_index.append_dedup_index(newb, root)
+        dedup_index.append_dedup_index(newb, root, batch="day1-retry")
     # same-id redelivery replaces its own partition: idempotent
     dedup_index.append_dedup_index(newb, root, batch="day1")
 
@@ -103,7 +103,7 @@ def test_ann_index_rejects_same_rows_under_fresh_id(spark, tmp_path):
     newb = e.where(F.col("vec_id") % 2 == 1)
     ann_index.append_ann_index(newb, root, batch="day1")
     with pytest.raises(ValueError, match="fingerprint"):
-        ann_index.append_ann_index(newb, root)  # fresh uuid retry
+        ann_index.append_ann_index(newb, root, batch="day1-retry")
     ann_index.append_ann_index(newb, root, batch="day1")  # redeliver
 
 

@@ -43,7 +43,8 @@ def test_append_maintenance_is_lossless(spark, tmp_path):
     d = docs(spark)
     root = str(tmp_path / "ndidx")
     dedup_index.build_dedup_index(d.where(F.col("doc_id") % 2 == 0), root)
-    dedup_index.append_dedup_index(d.where(F.col("doc_id") % 2 == 1), root)
+    dedup_index.append_dedup_index(d.where(F.col("doc_id") % 2 == 1), root,
+                                   batch="odd")
     got = dedup_index.near_dup_from_index(spark, root, THRESH)
     expect = dedup.minhash_near_dup(d, THRESH)
     assert pairs_set(got) == pairs_set(expect)

@@ -97,15 +97,53 @@ def test_window_fronts_red_then_never_signed_keys():
         f"{expected_front} — rotate _ordered_keys bands")
 
 
-def test_round14_window_is_q_set_plus_x35_x56_plus_x01_x06():
-    """Belt-and-braces explicit pin for THIS round (r14): r13 signed
-    x280–x301 and x29–x34 green, so no registered key is never-signed
-    and all 28 slots go to the re-sign ladder: the r3-signed band
-    x35–x56 (the oldest signatures, 22 keys), then the first six
-    r4-signed keys by number, x01–x06."""
-    w = _window()
-    ns = [_xnum(k) for k in w[22:]]
-    assert ns == list(range(35, 57)) + list(range(1, 7)), ns
+def _window_from(monkeypatch, records_dir):
+    import __spark_entry__ as m
+
+    monkeypatch.setattr(m, "RECORDS_DIR", str(records_dir))
+    return _window()
+
+
+def _copy_records(dest, next_round: dict) -> None:
+    """The repo's CORRECTNESS records plus a synthetic next round."""
+    import shutil
+
+    for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        shutil.copy(p, dest)
+    n = max(_correctness_rounds()) + 1
+    with open(dest / f"CORRECTNESS_r{n}.json", "w") as f:
+        json.dump(next_round, f)
+
+
+def test_window_rotates_from_the_records_alone(tmp_path, monkeypatch):
+    """A new record re-orders the window with no code edit: once the
+    next round signs today's window green, the stalest green keys
+    front it; a key that round marks red comes first; with no record
+    at all the window is in key-number order."""
+    import __spark_entry__ as m
+
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "err": None}
+    window = _window()
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    ns = [_xnum(k) for k in _window_from(monkeypatch, empty)[22:]]
+    assert ns == list(range(1, 29)), ns
+
+    signed = tmp_path / "signed"
+    signed.mkdir()
+    _copy_records(signed, {k: green for k in window})
+    ns = [_xnum(k) for k in _window_from(monkeypatch, signed)[22:]]
+    assert ns == (list(range(7, 18)) + list(range(57, 68))
+                  + list(range(18, 24))), ns
+
+    red_key = next(k for k in m.queries() if _xnum(k) == 200)
+    red = tmp_path / "red"
+    red.mkdir()
+    _copy_records(red, {red_key: {**green, "hash_match": False}})
+    ns = [_xnum(k) for k in _window_from(monkeypatch, red)[22:]]
+    assert ns == [200] + list(range(35, 57)) + list(range(1, 6)), ns
 
 
 def test_oracle_keys_match_query_keys():

@@ -25,7 +25,7 @@ def _store_docs(spark):
 def test_index_search_equals_direct_scan(spark, tmp_path):
     docs = _store_docs(spark)
     idx = str(tmp_path / "idx")
-    append_token_index(docs, idx)
+    append_token_index(docs, idx, batch="b0")
 
     term = "error"
     via_index = search_via_index(spark, idx, docs, term)
@@ -39,7 +39,7 @@ def test_index_search_equals_direct_scan(spark, tmp_path):
 def test_lookup_prunes_to_one_bucket(spark, tmp_path):
     docs = _store_docs(spark)
     idx = str(tmp_path / "idx")
-    append_token_index(docs, idx)
+    append_token_index(docs, idx, batch="b0")
 
     import re
 
@@ -62,8 +62,8 @@ def test_index_append_only_maintenance(spark, tmp_path):
     half1 = docs.limit(150)
     half2 = docs.subtract(half1)
     idx = str(tmp_path / "idx")
-    append_token_index(half1, idx)
-    append_token_index(half2, idx)  # append
+    append_token_index(half1, idx, batch="half1")
+    append_token_index(half2, idx, batch="half2")  # append
 
     term = "purchase"
     got = sorted(r._id for r in

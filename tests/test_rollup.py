@@ -77,24 +77,24 @@ def test_incremental_builds_merge_like_one_shot(spark):
         assert m[et].ndv_user_id == o[et].ndv_user_id
 
 
-def test_update_rollup_equals_full_rebuild(spark):
-    """Incremental maintenance with OVERLAPPING days: merging the late
-    batch re-aggregates only touched (group, day) keys and the result
-    matches a one-shot build over the full history."""
-    from kafana_spark.rollup import update_rollup
-
-    ev = events(spark)
-    first = ev.where(F.col("ds") <= "2024-01-15")
-    late = ev.where(F.col("ds") > "2024-01-10")      # overlaps 5 days
-    full = ev.where(F.col("ds") <= "2024-01-15") \
-        .unionByName(ev.where(F.col("ds") > "2024-01-10"))
-
-    base = build_rollup(first, by=("event_type",), value_col="value",
-                        distinct_cols=("user_id",))
-    merged = update_rollup(base, late, by=("event_type",),
-                           value_col="value", distinct_cols=("user_id",))
-    expect = build_rollup(full, by=("event_type",), value_col="value",
-                          distinct_cols=("user_id",))
+def test_appended_rollup_equals_full_rebuild(spark, tmp_path):
+    """Incremental maintenance with OVERLAPPING days: two appended
+    batches that share 5 days merge, at read time, into exactly the
+    one-shot build over the full history."""
+    tune_session(spark)
+    ev = load_table(spark, SF_SMOKE, "events") \
+        .select("event_type", "ts", "value", "user_id")
+    first = ev.where(F.to_date("ts") <= "2024-01-15")
+    late = ev.where(F.to_date("ts") > "2024-01-10")    # overlaps 5 days
+    out = str(tmp_path / "rollup")
+    for bid, b in (("first", first), ("late", late)):
+        append_rollup(b, out, bid, by=("event_type",), time_col="ts",
+                      value_col="value", distinct_cols=("user_id",))
+    merged = rollup_from_store(spark, out, by=("event_type",),
+                               value_col="value", distinct_cols=("user_id",))
+    expect = build_rollup(
+        first.unionByName(late).withColumn("ds", F.to_date("ts")),
+        by=("event_type",), value_col="value", distinct_cols=("user_id",))
 
     got = {(r.event_type, r.ds): r for r in merged.collect()}
     exp = {(r.event_type, r.ds): r for r in expect.collect()}
@@ -104,31 +104,6 @@ def test_update_rollup_equals_full_rebuild(spark):
         assert abs(got[k].sum_value - er.sum_value) < 1e-6
         assert got[k].min_value == er.min_value
         assert got[k].max_value == er.max_value
-
-
-def test_update_rollup_unions_only_touched_keys(spark):
-    """Untouched (group, day) rollup rows pass through the anti-join
-    branch byte-identically (no re-aggregation of old partials)."""
-    from kafana_spark.rollup import update_rollup
-
-    ev = events(spark)
-    base = build_rollup(ev.where(F.col("ds") <= "2024-01-10"),
-                        by=("event_type",), value_col="value")
-    late = ev.where(F.col("ds") == "2024-01-10")      # touches 1 day
-    merged = update_rollup(base, late, by=("event_type",),
-                           value_col="value")
-    untouched_before = {(r.event_type, r.ds): r.cnt for r in base
-                        .where(F.col("ds") < "2024-01-10").collect()}
-    untouched_after = {(r.event_type, r.ds): r.cnt for r in merged
-                       .where(F.col("ds") < "2024-01-10").collect()}
-    assert untouched_before == untouched_after
-    doubled = {r.event_type: r.cnt for r in merged
-               .where(F.col("ds") == F.lit("2024-01-10").cast("date"))
-               .collect()}
-    single = {r.event_type: r.cnt for r in base
-              .where(F.col("ds") == F.lit("2024-01-10").cast("date"))
-              .collect()}
-    assert doubled == {k: 2 * v for k, v in single.items()}
 
 
 def test_rollup_stream_sink_maintains_parquet(spark, tmp_path):
