@@ -45,11 +45,6 @@ def search_key(df: DataFrame, key, topics: Sequence[str] | None = None) -> DataF
     return out
 
 
-def search_field(df: DataFrame, field: str, value) -> DataFrame:
-    """C4: filter on a (possibly nested) document field across topics."""
-    return df.where(F.col(field) == F.lit(value))
-
-
 def search_text(df: DataFrame, needle: str, field: str = "message.value",
                 token: bool = False,
                 bloom_col: str | None = None) -> DataFrame:

@@ -8,13 +8,13 @@ docker-compose.yml:72-78). Design:
   writes: each micro-batch lands as one file per input partition at
   the store root, unpartitioned and sorted by ``topic``/``timestamp``
   (``HOT_SORT_BY``), so a batch's cost does not grow with the days and
-  topics it spans. The COLD tier is what ``compact`` and
-  ``merge_upsert`` write: files partitioned by ``topic`` (≈ per-topic
-  index) and ``ds`` (UTC date of record timestamp, ≈ rollover/retention
-  boundary, the reference's README.md:14). Partition pruning replaces
-  ES shard routing; parquet min/max + dictionary stats replace the
-  skip index. A file's ``_log/`` value, not its directory, names its
-  tier: a cold file's is its ``{topic, ds}``, a hot file's its stats
+  topics it spans. The COLD tier is what ``compact`` writes: files
+  partitioned by ``topic`` (≈ per-topic index) and ``ds`` (UTC date of
+  record timestamp, ≈ rollover/retention boundary, the reference's
+  README.md:14). Partition pruning replaces ES shard routing; parquet
+  min/max + dictionary stats replace the skip index. A file's
+  ``_log/`` value, not its directory, names its tier: a cold file's
+  is its ``{topic, ds}``, a hot file's its stats
   ``{ds_min, ds_max, topics}``. ``read_store`` reads the two tiers
   apart and unions them by name. Do not read the store with
   ``spark.read.parquet(<root>)``: on a store that holds both tiers it
@@ -33,14 +33,17 @@ docker-compose.yml:72-78). Design:
   the caller passes (the token index ``bucket``, the rest none). The
   store's own writers and ``read_store`` use the same commit.
   Appends may race each other and one maintenance call
-  (``compact``/``merge_upsert``/``retention``) at a time. A batch id
-  names files, so it must be a safe token (``_check_batch``).
+  (``compact``/``retention``) at a time. A batch id names files, so
+  it must be a safe token (``_check_batch``).
 - idempotency on replay (ES upsert by _id, kafana.http:76): a replayed
   batch id replaces its own files, and ``compact`` moves every hot
   file into the cold tier keeping one row per ``_id``. Its log entry
   marks the snapshot's ``_id``s unique, and ``read_store(dedup=True)``
   runs ``dropDuplicates("_id")`` only on a snapshot that is not so
-  marked (appended to since the last compact).
+  marked (appended to since the last compact). No writer rewrites a
+  stored ``_id``: an update appends a new record at a new offset
+  (``update_by_query``), so every replay of an ``_id`` is the same
+  bytes and either dedup may keep any of them.
 - "latest state per key" is a VIEW over the changelog (README.md:11:
   "rather a change log than a table"), ordered by (partition, offset)
   within key — Kafka ordering is per-partition, so offset, not
@@ -130,6 +133,7 @@ def _check_batch(batch: str) -> str:
     call's ``-part-`` files; else ``ValueError``."""
     if (not batch or "/" in batch or os.sep in batch
             or batch.startswith(("_", ".")) or "-part-" in batch
+            # "merge": older stores may still hold ``merge-part-*`` files
             or batch in (BASE, "compact", "merge", "retention")):
         raise ValueError(f"unsafe batch id {batch!r}")
     return batch
@@ -202,7 +206,7 @@ def _commit(base: str, snap: _Snapshot, op: str, add: dict,
     The entry's ``unique_ids`` says no two live rows share an ``_id``:
     true after a ``compact`` that rewrote every live file, inherited
     through a ``retention`` (removing files keeps ids unique), false
-    after an append or a merge."""
+    after an append."""
     remove = set(remove)
     os.makedirs(os.path.join(base, LOG_DIR), exist_ok=True)
     tmp = os.path.join(base, LOG_DIR, f".{uuid.uuid4().hex}.tmp")
@@ -337,16 +341,6 @@ def _land_hot(base: str, snap: _Snapshot, op: str, owner: str,
                  _store_schema(df, PARTITION_COLS), batch)
 
 
-def _land_cold(base: str, snap: _Snapshot, op: str, df: DataFrame,
-               remove: list[str]) -> dict:
-    """Land ``df`` (store columns) as ``op``'s files in one ``op`` commit
-    removing ``remove``: partitioned by ``PARTITION_COLS``, at most
-    ``COMPACT_MAX_RECORDS`` rows per file. Returns the added files."""
-    writer = _writer(df, PARTITION_COLS).option(
-        "maxRecordsPerFile", str(COMPACT_MAX_RECORDS))
-    return _land(base, snap, op, op, writer.parquet, remove)
-
-
 def _land_frame(path: str, op: str, batch: str, df: DataFrame,
                 partition_by, meta: dict | None) -> None:
     """Land ``df`` as batch ``batch``'s files in one ``op`` commit."""
@@ -430,51 +424,6 @@ def write_store(docs: DataFrame, path: str,
               with_store_partitions(docs), batch=batch)
 
 
-def _touches(value: dict, touched: set) -> bool:
-    """Whether a store file may hold rows of a ``(topic, ds)`` in
-    ``touched``: by its partition values if cold, its stats if hot."""
-    if not _is_hot(value):
-        return (value["topic"], value["ds"]) in touched
-    topics, lo, hi = _span(value)
-    return lo is not None and any(t in topics and lo <= d <= hi
-                                  for t, d in touched)
-
-
-def merge_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
-    """MERGE (upsert on ``_id``) into the store: the Delta/Iceberg
-    ``MERGE WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT`` contract as
-    partition-granular copy-on-write on the store's commit log.
-
-    Only the snapshot files that may hold a ``(topic, ds)`` named by
-    the updates are READ: the cold files of those partitions and the
-    hot files whose stats overlap one. Rows whose ``_id`` is being
-    replaced are anti-joined out (updates broadcast — small next to the
-    store) and the union is written in the cold layout by
-    ``compact``'s writer (``_land_cold``), so a hot file read moves
-    there whole. One ``merge`` commit adds the new files and removes
-    the files read, so a reader sees every update or none. Untouched
-    partitions keep their files byte-identical.
-
-    Assumes updates keep each record's original ``ds`` (true by
-    construction: ``ds`` derives from the record timestamp, which is
-    part of the record identity in the changelog model). Returns the
-    number of partitions written.
-    """
-    base = path.rstrip("/")
-    snap = _snapshot(base)
-    up = with_store_partitions(updates) if "ds" not in updates.columns \
-        else updates
-    touched = {(r[0], str(r[1]))
-               for r in up.select(*PARTITION_COLS).distinct().collect()}
-    old = {p: v for p, v in snap.files.items() if _touches(v, touched)}
-    existing = _read_tiers(spark, base, snap.schema, old)
-    keep = existing.join(F.broadcast(up.select("_id").distinct()),
-                         "_id", "left_anti")
-    merged = keep.unionByName(up.select(*existing.columns))
-    add = _land_cold(base, snap, "merge", merged, list(old))
-    return len({os.path.dirname(p) for p in add})
-
-
 def read_store(spark: SparkSession, path: str, dedup: bool = True) -> DataFrame:
     """Read exactly the latest snapshot's files, with the logged schema
     (an empty snapshot reads as an empty frame; files no commit lists
@@ -505,7 +454,7 @@ def compact(spark: SparkSession, path: str) -> None:
     Streaming ingest leaves one small hot file per micro-batch; at
     100 TB that's death by file listing, and no partition pruning. One
     shuffle keyed on the partition columns lands each partition in one
-    task; ``_land_cold`` splits it into files of at most
+    task, which the ``partitionBy`` write splits into files of at most
     ``COMPACT_MAX_RECORDS`` rows.
 
     The same shuffle drops replayed records: rows are deduplicated on
@@ -533,7 +482,10 @@ def compact(spark: SparkSession, path: str) -> None:
         .repartition(*PARTITION_COLS) \
         .dropDuplicates([*PARTITION_COLS, "_id"]) \
         .sortWithinPartitions(*PARTITION_COLS, *COMPACT_CLUSTER_BY)
-    _land_cold(base, snap, "compact", out, list(snap.files))
+    writer = _writer(out, PARTITION_COLS).option(
+        "maxRecordsPerFile", str(COMPACT_MAX_RECORDS))
+    _land(base, snap, "compact", "compact", writer.parquet,
+          list(snap.files))
 
 
 def retention(path: str, cutoff_ds: str) -> list[str]:

@@ -14,6 +14,13 @@ names its batch by the epoch alone lets two streams into one table
 replace each other's batches; a build-or-append switch on the batch
 id (the old ``write_table``) hides an append inside a build. The
 second guard fails on either.
+
+One way to change the store: a redelivered batch replaces its own
+files, ``compact`` and ``read_store`` keep one row per ``_id``, and an
+update appends a new record. The commit log's ops are exactly
+``append``, ``replace``, ``compact`` and ``retention``; a writer that
+rewrites stored rows under a new op must also change the third
+guard's op set.
 """
 
 from __future__ import annotations
@@ -157,3 +164,59 @@ def test_sink_guard_flags_epoch_closures_and_write_table():
         "index.py:7 stream_batch_id call"]
     assert _sink_violations(probe, "streaming/pipeline.py") == [
         "streaming/pipeline.py:4 write_table call"]
+
+
+#: the commit log's ops
+OPS = {"append", "replace", "compact", "retention"}
+#: the store.py helpers that take an op, and its positional index
+OP_ARG = {"_commit": 2, "_land": 2, "_land_hot": 2, "_land_frame": 1}
+
+
+def _ops(source: str) -> set[str]:
+    """The ``op`` argument of every ``OP_ARG`` call in ``source``: its
+    string literal, else its source text — unless it is a helper
+    passing on its own ``op`` parameter."""
+    out = set()
+
+    def visit(node: ast.AST, func: str | None) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Name) \
+                and node.func.id in OP_ARG:
+            i = OP_ARG[node.func.id]
+            arg = node.args[i] if len(node.args) > i else \
+                {k.arg: k.value for k in node.keywords}["op"]
+            if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+                out.add(arg.value)
+            elif not (func in OP_ARG and isinstance(arg, ast.Name)
+                      and arg.id == "op"):
+                out.add(ast.unparse(arg))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(ast.parse(source), None)
+    return out
+
+
+def test_commit_log_op_set():
+    assert _ops(COMMIT_MODULE.read_text()) == OPS, (
+        "the store changes only by append, replace, compact and "
+        "retention commits; update a record by appending a new one")
+
+
+def test_op_guard_collects_literals_and_foreign_expressions():
+    """The guard itself: literal ops of all four helpers, positional or
+    keyword, are collected; a helper passing on its own ``op`` is not,
+    and any other non-literal op is, as its source text."""
+    probe = (
+        "def _land_frame(path, op, batch, df):\n"
+        "    _land(path, None, op, batch, df)\n"
+        "def f(base, snap, df, op):\n"
+        "    _commit(base, snap, 'append', {})\n"
+        "    _land_hot(base, snap, op='retention', owner='r', df=df)\n"
+        "    _land_frame(base, 'merge', 'b', df)\n"
+        "    _land(base, snap, op, 'x', df)\n"
+        "    _commit(base, snap, 'replace' if df else 'merge', {})\n"
+        "    other(base, snap, 'upsert')\n")
+    assert _ops(probe) == {"append", "retention", "merge", "op",
+                           "'replace' if df else 'merge'"}

@@ -194,9 +194,9 @@ def test_compact_dedups_inside_its_one_shuffle(spark, tmp_path,
 
     store = str(tmp_path / "store")
     _redelivered_store(spark, store)
-    written, land_cold = [], store_mod._land_cold
-    monkeypatch.setattr(store_mod, "_land_cold",
-                        lambda *a: written.append(a[3]) or land_cold(*a))
+    written, writer = [], store_mod._writer
+    monkeypatch.setattr(store_mod, "_writer",
+                        lambda df, *a: written.append(df) or writer(df, *a))
 
     store_mod.compact(spark, store)
 

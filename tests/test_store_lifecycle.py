@@ -1,5 +1,5 @@
-"""Store lifecycle (compaction, merge, retention, crashes and races on the
-commit log) and skew utilities."""
+"""Store lifecycle (compaction, retention, crashes and races on the commit
+log) and skew utilities."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ from kafana_spark.ingest import enrich, events_as_kafka_records
 from kafana_spark.operators.skew import salted_agg, salted_join
 from kafana_spark.sources.tables import load_table
 from kafana_spark.store import (
-    append_table, batch_meta, compact, merge_upsert, read_store,
+    append_table, batch_meta, compact, read_store,
     read_table, replace_table, retention, table_files, write_store,
 )
 from tests.conftest import SF_SMOKE
@@ -166,51 +166,6 @@ def test_unsafe_batch_id_is_rejected_before_any_write(spark, guarded_tables,
     assert sorted(os.listdir(root)) == ["store", "table"]
 
 
-def test_merge_upsert_updates_inserts_and_leaves_rest_untouched(
-        spark, tmp_path):
-    import os
-
-    from kafana_spark.store import merge_upsert, with_store_partitions
-
-    store = str(tmp_path / "store")
-    ev = load_table(spark, SF_SMOKE, "events").limit(400)
-    docs = enrich(events_as_kafka_records(ev))
-    write_store(docs, store)
-    compact(spark, store)       # every file holds one partition
-
-    full = with_store_partitions(docs)
-    parts = [tuple(r) for r in
-             full.select("topic", "ds").distinct().orderBy("ds").collect()]
-    assert len(parts) >= 2, "fixture must span several ds partitions"
-    touched_ds = str(parts[0][1])
-
-    # one UPDATE of an existing _id (new key value) + one INSERT with a
-    # fresh _id, both landing in the oldest ds partition
-    victim = (full.where(F.col("ds") == touched_ds).limit(1)
-              .drop("ds").collect()[0])
-    upd = (docs.where(F.col("_id") == victim._id)
-           .withColumn("key", F.lit("UPDATED")))
-    ins = (docs.where(F.col("_id") == victim._id)
-           .withColumn("_id", F.lit("synthetic+0+999999"))
-           .withColumn("offset", F.lit(999999).cast("long")))
-    before = {f: os.path.getmtime(f) for f in parquet_files(store)}
-
-    n = merge_upsert(spark, store, upd.unionByName(ins))
-    assert n == 1                       # exactly one partition rewritten
-
-    got = read_store(spark, store)
-    assert got.where(F.col("_id") == victim._id).collect()[0].key \
-        == "UPDATED"
-    assert got.where(F.col("_id") == "synthetic+0+999999").count() == 1
-    assert got.count() == full.count() + 1     # no dup of the updated _id
-    # untouched partitions keep byte-identical files
-    untouched = {f: m for f, m in before.items()
-                 if f"ds={touched_ds}" not in f}
-    after = {f: os.path.getmtime(f) for f in parquet_files(store)
-             if f"ds={touched_ds}" not in f}
-    assert after == untouched
-
-
 def _rows(spark, store):
     """(_id, key, ds) of every row in the store's snapshot, sorted."""
     return sorted((r._id, r.key, str(r.ds)) for r in
@@ -252,17 +207,6 @@ def _compact_setup(spark, store):
     return lambda: compact(spark, store), lambda pre: sorted(set(pre))
 
 
-def _merge_setup(spark, store):
-    docs = _events_docs(spark, 400)
-    write_store(docs, store)
-    victim = min(r._id for r in docs.select("_id").collect())
-    upd = (docs.where(F.col("_id") == victim)
-           .withColumn("key", F.lit("RECOVERED")))
-    return (lambda: merge_upsert(spark, store, upd),
-            lambda pre: sorted((i, "RECOVERED" if i == victim else k, d)
-                               for i, k, d in pre))
-
-
 def _retention_setup(spark, store):
     """Two hot files whose days straddle the cutoff: retention rewrites
     both."""
@@ -275,7 +219,7 @@ def _retention_setup(spark, store):
 #: op → setup(spark, store): builds the store, returns the call and
 #: the post-call rows as a function of the pre-call rows
 SETUPS = {"write_store": _replay_setup, "compact": _compact_setup,
-          "merge_upsert": _merge_setup, "retention": _retention_setup}
+          "retention": _retention_setup}
 
 
 @pytest.mark.parametrize("op,step", [
@@ -303,49 +247,27 @@ def test_crash_shows_one_snapshot_and_retry_lands(spark, tmp_path, crash,
     _assert_no_leftovers(spark, store)
 
 
-def test_merge_recovers_interrupted_swap(spark, tmp_path, crash):
-    """A merge that crashed between moving its files into the partitions
-    leaves the pre-merge snapshot readable; the next merge — with other
-    updates — lands its own rows and deletes the crashed one's moved
-    files and the junk it abandoned in its staging dir."""
+def test_compact_recovers_interrupted_swap(spark, tmp_path, crash):
+    """A compact that crashed between moving its files into the
+    partitions leaves the pre-compact snapshot readable; the next
+    compact lands the compacted rows and deletes the crashed one's
+    moved files and the junk it abandoned in its staging dir."""
     store = str(tmp_path / "store")
-    docs = _events_docs(spark, 400)
-    write_store(docs, store)
-    ids = sorted(r._id for r in docs.select("_id").collect())
+    call, expect = _compact_setup(spark, store)
     pre = _rows(spark, store)
 
     crash.arm("rename", n=2)
     with pytest.raises(crash.Crash):
-        merge_upsert(spark, store, docs.where(F.col("_id") == ids[0])
-                     .withColumn("key", F.lit("CRASHED")))
+        call()
     assert _rows(spark, store) == pre
-    junk = os.path.join(store, "_staging", "merge", "part-junk.parquet")
+    junk = os.path.join(store, "_staging", "compact", "part-junk.parquet")
     os.makedirs(os.path.dirname(junk), exist_ok=True)
     with open(junk, "wb") as fh:
         fh.write(b"not a parquet file")
 
-    merge_upsert(spark, store, docs.where(F.col("_id") == ids[-1])
-                 .withColumn("key", F.lit("RECOVERED")))
+    call()
 
-    assert _rows(spark, store) == sorted(
-        (i, "RECOVERED" if i == ids[-1] else k, d) for i, k, d in pre)
-    _assert_no_leftovers(spark, store)
-
-
-def test_merge_upsert_clears_its_marker(spark, tmp_path):
-    """A completed merge leaves no in-flight state behind: its staging
-    dir is gone and the files it replaced are deleted, so every parquet
-    file on disk is a snapshot file."""
-    store = str(tmp_path / "store")
-    docs = _events_docs(spark)
-    write_store(docs, store)
-    before = set(parquet_files(store))
-
-    merge_upsert(spark, store, docs.limit(1).withColumn(
-        "key", F.lit("UPD")))
-
-    assert not os.path.exists(os.path.join(store, "_staging", "merge"))
-    assert set(parquet_files(store)) != before
+    assert _rows(spark, store) == expect(pre)
     _assert_no_leftovers(spark, store)
 
 
@@ -533,22 +455,15 @@ def test_append_after_compact_clears_unique_flag(spark, tmp_path):
     _assert_dedup_read_exact(spark, store)
 
 
-def test_retention_keeps_and_merge_clears_unique_flag(spark, tmp_path):
+def test_retention_keeps_unique_flag(spark, tmp_path):
     store = str(tmp_path / "store")
-    docs = _redelivered_store(spark, store)
+    _redelivered_store(spark, store)
     compact(spark, store)
     cutoff = sorted({d for _, _, d in _rows(spark, store)})[1]
 
     assert retention(store, cutoff)
 
     assert _unique_ids(store)
-    _assert_dedup_read_exact(spark, store)
-
-    kept = docs.where(F.to_date("timestamp") >= cutoff)
-    merge_upsert(spark, store,
-                 kept.limit(1).withColumn("key", F.lit("MERGED")))
-
-    assert not _unique_ids(store)
     _assert_dedup_read_exact(spark, store)
 
 
@@ -640,34 +555,6 @@ def test_retention_drops_and_rewrites_hot_files(spark, tmp_path):
     assert _rows(spark, store) == [r for r in pre if r[2] >= cutoff]
     assert list(_hot_files(store).values()) == [
         {"ds_min": cutoff, "ds_max": days[-1], "topics": stats["topics"]}]
-    _assert_no_leftovers(spark, store)
-
-
-def test_merge_upsert_moves_a_touched_hot_file_to_cold(spark, tmp_path):
-    """An update of a row in a hot file removes that file and lands all
-    its rows, updated, in the cold layout; the cold partitions the hot
-    file's stats do not overlap keep their files."""
-    store = str(tmp_path / "store")
-    docs = _events_docs(spark, 300)
-    ids = sorted(r._id for r in docs.select("_id").collect())
-    write_store(docs.where(F.col("_id") < ids[150]), store, "c")
-    compact(spark, store)
-    hot = docs.where(F.col("_id") >= ids[150])
-    write_store(hot.coalesce(1), store, "h")
-    ((hot_file, stats),) = _hot_files(store).items()
-    kept_cold = {p for p, v in table_files(store).items()
-                 if "ds" in v and not
-                 stats["ds_min"] <= v["ds"] <= stats["ds_max"]}
-    pre = _rows(spark, store)
-
-    merge_upsert(spark, store, hot.where(F.col("_id") == ids[-1])
-                 .withColumn("key", F.lit("MERGED")))
-
-    assert _rows(spark, store) == sorted(
-        (i, "MERGED" if i == ids[-1] else k, d) for i, k, d in pre)
-    assert _hot_files(store) == {}
-    assert not os.path.exists(os.path.join(store, hot_file))
-    assert kept_cold <= set(table_files(store))
     _assert_no_leftovers(spark, store)
 
 
