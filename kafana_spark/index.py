@@ -1,12 +1,15 @@
 """Inverted token index — the Elasticsearch posting-list twin.
 
 The reference delegates full-text search to ES, whose core structure is
-the inverted index: term → posting list of document ids. The store-side
-stand-ins (per-row token/trigram blooms, `operators/text.py`) skip
-row-groups probabilistically; this module is the exact version for the
-terms worth a real index: a (token, _id) table SHARDED BY TOKEN HASH,
-so a term lookup prunes to one shard — O(postings) work per query
-against a 100 TB store.
+the inverted index: term → posting list of document ids. This module
+is the library's one full-text accelerator; without it a C5 search is
+an exact scan (``query.search_text``). It is a (token, _id) table
+SHARDED BY TOKEN HASH, so a term lookup prunes to one shard — O(postings)
+work per query against a 100 TB store. Per-row bloom columns cannot
+stand in for it: parquet cannot skip a row group on a per-row column,
+so every row is still read and tested. Tokens come from
+``query.tokenize_field``, the tokenizer the scan uses, so the index
+and the scan answer a term alike.
 
 Scale shape:
 - build: explode distinct tokens per doc (map-only) → one append
@@ -31,18 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafana_spark.query import tokenize_field
 from kafana_spark.store import append_table, read_table, table_files
 
 N_BUCKETS = 64
 BUCKET_COLS = ("bucket",)
-
-
-def tokenize_field(col: F.Column) -> F.Column:
-    """Distinct lowercase word tokens of a field (ES standard-analyzer
-    flavored: split on non-alphanumerics, drop empties)."""
-    return F.array_distinct(F.filter(
-        F.split(F.lower(col), r"[^a-z0-9]+"),
-        lambda t: t != F.lit("")))
 
 
 def _bucket(col: F.Column) -> F.Column:

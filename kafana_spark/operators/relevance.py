@@ -199,9 +199,7 @@ def highlight(df: DataFrame, term: str, ctx: int = HIGHLIGHT_CTX,
     space is consumed — the documented ES-highlighter divergence.
 
     Scale: pure map-side string expressions; the only shuffle is the
-    final presentation sort. The ingest-time token bloom
-    (operators/text.py) prunes non-matching row groups before this
-    plan runs.
+    final presentation sort.
     """
     padded = F.concat(F.lit(" "), F.col(text_col), F.lit(" "))
     needle = F.lit(" " + term + " ")

@@ -814,123 +814,6 @@ def vocab_topk(df: DataFrame, k: int = 30,
     return counts.withColumn("rk", F.row_number().over(w).cast("int"))
 
 
-# ------------------------------------------------------------ token bloom
-
-#: sized for ~200 distinct tokens/doc: fill ≈ 1-e^(-3·200/1024) ≈ 0.44,
-#: FPR ≈ 0.44³ ≈ 9% — 128 bytes/row buys ~10× scan reduction on
-#: selective terms
-BLOOM_BITS = 1024         # 16 longs per row
-BLOOM_HASHES = 3
-
-
-def _bloom_from_terms(terms: "F.Column", bits: int, k: int) -> "F.Column":
-    """Fold an array<string> of terms into a bits-wide bloom
-    (array<long>, bits/64 words). Write-time-only cost; the interpreted
-    HOF is acceptable here because it runs once per ingested row, never
-    per query."""
-    words = bits // 64
-    zero = F.array_repeat(F.lit(0).cast("long"), words)
-
-    def set_bit(w, mask):
-        # closure factory: PySpark validates HOF lambda arity including
-        # defaulted params, so bind w/mask outside the lambda
-        return lambda x, i: F.when(i == w, x.bitwiseOR(mask)).otherwise(x)
-
-    def add_term(acc, t):
-        out = acc
-        for seed in range(k):
-            b = F.pmod(F.xxhash64(F.lit(seed), t), F.lit(bits))
-            w = (b / 64).cast("int")
-            mask = F.call_function(
-                "shiftleft", F.lit(1).cast("long"), (b % 64).cast("int"))
-            out = F.transform(out, set_bit(w, mask))
-        return out
-
-    return F.aggregate(terms, zero, add_term)
-
-
-def token_bloom(text_col: "F.Column", bits: int = BLOOM_BITS,
-                k: int = BLOOM_HASHES) -> "F.Column":
-    """Per-row token bloom filter as ``array<long>`` (bits/64 words).
-
-    The additive C5 skipping column from SURVEY §7.3.6: stored beside
-    the document, it lets token searches prefilter rows with pure
-    bitwise math before the expensive contains/token scan. Build cost
-    is write-time only; false positives only cost a redundant verify.
-    """
-    return _bloom_from_terms(
-        F.array_distinct(tokens(F.lower(text_col))), bits, k)
-
-
-#: trigram bloom sizing: ~n_chars distinct trigrams per doc (≈400 at
-#: 500 chars). 4096 bits / 3 hashes → fill ≈ 1-e^(-1200/4096) ≈ 0.25,
-#: per-trigram FPR ≈ 0.25³ ≈ 1.6% — and a query needle of length L
-#: ANDs its L-2 trigrams, driving the row FPR down geometrically.
-#: 512 B/row buys substring-search skipping, which tokens cannot give.
-TRIGRAM_BLOOM_BITS = 4096
-
-
-def char_trigrams(text_col: "F.Column") -> "F.Column":
-    """Distinct lowercase character 3-grams of a string column.
-
-    Zipped shifted char-slices, not ``transform(idx, i ->
-    substring(t, i, 3))`` — the lambda body's ``lower()`` would be
-    re-evaluated per character position (O(len²) char work per row;
-    the r12 HOF-audit bug class). The three slices are arguments,
-    evaluated once per row; the lambda only concats struct fields."""
-    chars = F.split(F.lower(text_col), "")
-    m = F.size(chars) - 2
-    zipped = F.arrays_zip(F.slice(chars, 1, m), F.slice(chars, 2, m),
-                          F.slice(chars, 3, m))
-    grams = F.array_distinct(F.transform(
-        zipped, lambda s: F.concat(s["0"], s["1"], s["2"])))
-    return F.when(m >= 1, grams) \
-        .otherwise(F.array().cast("array<string>"))
-
-
-def trigram_bloom(text_col: "F.Column", bits: int = TRIGRAM_BLOOM_BITS,
-                  k: int = BLOOM_HASHES) -> "F.Column":
-    """Per-row character-trigram bloom: the substring-search (non-token
-    C5 `contains`) skipping column. A needle matches a row only if ALL
-    of the needle's trigrams are present, so testing each needle
-    trigram against the bloom prefilters rows before the contains scan
-    — no false negatives, FPR shrinks with needle length."""
-    return _bloom_from_terms(char_trigrams(text_col), bits, k)
-
-
-def bloom_might_contain(bloom_col: "F.Column", term: str,
-                        bits: int = BLOOM_BITS,
-                        k: int = BLOOM_HASHES) -> "F.Column":
-    """Membership test against a token_bloom column — false positives
-    possible (verify after), false negatives impossible. The term's
-    hash is constant-folded by Catalyst, so per row this is k array
-    lookups + ANDs."""
-    cond = F.lit(True)
-    t = F.lit(term.lower())
-    for seed in range(k):
-        b = F.pmod(F.xxhash64(F.lit(seed), t), F.lit(bits))
-        word = F.element_at(bloom_col, (b / 64).cast("int") + 1)
-        mask = F.call_function(
-            "shiftleft", F.lit(1).cast("long"), (b % 64).cast("int"))
-        cond = cond & (word.bitwiseAND(mask) != 0)
-    return cond
-
-
-def bloom_might_contain_substring(bloom_col: "F.Column", needle: str,
-                                  bits: int = TRIGRAM_BLOOM_BITS,
-                                  k: int = BLOOM_HASHES) -> "F.Column":
-    """Substring prefilter against a trigram_bloom column: every
-    trigram of the needle must test positive. Needles shorter than 3
-    chars have no trigrams — the filter degrades to always-true (the
-    exact contains scan still runs). All hashes constant-fold."""
-    s = needle.lower()
-    cond = F.lit(True)
-    for i in range(len(s) - 2):
-        cond = cond & bloom_might_contain(bloom_col, s[i:i + 3],
-                                          bits=bits, k=k)
-    return cond
-
-
 # ----------------------------------------------------- rolling-hash chunks
 
 CHUNK_SCHEMA = "doc_id long, chunk_idx int, chunk_hash long, chunk_len int"

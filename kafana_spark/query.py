@@ -45,35 +45,29 @@ def search_key(df: DataFrame, key, topics: Sequence[str] | None = None) -> DataF
     return out
 
 
+def tokenize_field(col: Column) -> Column:
+    """Distinct lowercase word tokens of a field (ES standard-analyzer
+    flavored: split on non-alphanumerics, drop empties). The one
+    tokenizer of C5 token search: the scan below and the token index
+    (``index.py``) both use it, so they answer a term alike."""
+    return F.array_distinct(F.filter(
+        F.split(F.lower(col), r"[^a-z0-9]+"),
+        lambda t: t != F.lit("")))
+
+
 def search_text(df: DataFrame, needle: str, field: str = "message.value",
-                token: bool = False,
-                bloom_col: str | None = None) -> DataFrame:
+                token: bool = False) -> DataFrame:
     """C5: substring or whole-token search over the stringified value.
 
-    ``bloom_col`` names a skipping column stored beside the document —
-    a token_bloom for token search, a trigram_bloom for substring
-    search (operators/text.py). The bloom test prefilters rows with
-    bitwise math and the exact match verifies survivors — identical
-    results, a fraction of the scan work.
+    Both are exact scans: substring is ``contains``, a token match tests
+    ``tokenize_field``'s tokens. For a selective term over a large
+    store, ``index.search_via_index`` answers the token search from the
+    inverted token index instead.
     """
     if token:
-        tokens = F.split(F.lower(F.col(field)), r"\W+")
-        match = F.array_contains(tokens, needle.lower())
-        if bloom_col is not None:
-            from kafana_spark.operators.text import bloom_might_contain
-
-            return df.where(bloom_might_contain(F.col(bloom_col), needle)
-                            & match)
-        return df.where(match)
-    match = F.col(field).contains(needle)
-    if bloom_col is not None:
-        from kafana_spark.operators.text import (
-            bloom_might_contain_substring,
-        )
-
-        return df.where(
-            bloom_might_contain_substring(F.col(bloom_col), needle) & match)
-    return df.where(match)
+        return df.where(F.array_contains(tokenize_field(F.col(field)),
+                                         needle.lower()))
+    return df.where(F.col(field).contains(needle))
 
 
 def search(df: DataFrame, qs: str,

@@ -133,6 +133,9 @@ def _decode(schema: Any, buf: bytes, pos: int) -> tuple[Any, int]:
     t = schema["type"] if isinstance(schema, dict) else schema
     if isinstance(schema, list):                     # union
         idx, pos = _zigzag_decode(buf, pos)
+        if not 0 <= idx < len(schema):
+            raise ValueError(f"union index {idx} outside {len(schema)} "
+                             f"branches")
         return _decode(schema[idx], buf, pos)
     if t == "null":
         return None, pos
@@ -278,21 +281,23 @@ def _compile_record_encoder(schema: Any):
     return enc_rec
 
 
-def _gen_varint(dst: str, ind: str) -> str:
-    """Source for an inlined zigzag-varint read into ``dst`` (single-
+def _gen_uvarint(ind: str) -> str:
+    """Source for an inlined unsigned-varint read into ``_u`` (single-
     byte fast path, loop for the rest)."""
     return (
-        f"{ind}_b = buf[pos]; pos += 1\n"
-        f"{ind}if _b & 0x80:\n"
-        f"{ind}    _u = _b & 0x7F; _s = 7\n"
+        f"{ind}_u = buf[pos]; pos += 1\n"
+        f"{ind}if _u & 0x80:\n"
+        f"{ind}    _u &= 0x7F; _s = 7\n"
         f"{ind}    while True:\n"
         f"{ind}        _b = buf[pos]; pos += 1\n"
         f"{ind}        _u |= (_b & 0x7F) << _s\n"
         f"{ind}        if not _b & 0x80: break\n"
-        f"{ind}        _s += 7\n"
-        f"{ind}    {dst} = (_u >> 1) ^ -(_u & 1)\n"
-        f"{ind}else:\n"
-        f"{ind}    {dst} = (_b >> 1) ^ -(_b & 1)\n")
+        f"{ind}        _s += 7\n")
+
+
+def _gen_varint(dst: str, ind: str) -> str:
+    """Source for an inlined zigzag-varint read into ``dst``."""
+    return _gen_uvarint(ind) + f"{ind}{dst} = (_u >> 1) ^ -(_u & 1)\n"
 
 
 def _gen_value_decoder(schema: Any, dst: str, ind: str) -> str | None:
@@ -302,16 +307,19 @@ def _gen_value_decoder(schema: Any, dst: str, ind: str) -> str | None:
     if isinstance(schema, list):                     # union
         if len(schema) != 2:
             return None
-        # union index is zigzag(i) for i < 2 → always one byte
+        # the whole varint, as the walker reads it; branch i is
+        # zigzag(i) = 2i, and any other index raises
         branches = []
-        for i, b in enumerate(schema):
+        for b in schema:
             src = _gen_value_decoder(b, dst, ind + "    ")
             if src is None:
                 return None
-            branches.append((_zigzag_encode(i)[0], src))
-        out = f"{ind}_b = buf[pos]; pos += 1\n"
-        out += f"{ind}if _b == {branches[0][0]}:\n{branches[0][1]}"
-        out += f"{ind}else:\n{branches[1][1]}"
+            branches.append(src)
+        out = _gen_uvarint(ind)
+        out += f"{ind}if _u == 0:\n{branches[0]}"
+        out += f"{ind}elif _u == 2:\n{branches[1]}"
+        out += (f"{ind}else:\n{ind}    raise ValueError(f'union index "
+                f"{{(_u >> 1) ^ -(_u & 1)}} outside 2 branches')\n")
         return out
     if t == "null":
         return f"{ind}{dst} = None\n"

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -38,6 +39,14 @@ FULL = json.dumps({
             "fields": [{"name": "x", "type": "int"},
                        {"name": "ok", "type": "boolean"}]}]},
     ],
+})
+
+# the flat x30 event schema: the compiled codecs' shape
+EVENT = json.dumps({
+    "type": "record", "name": "event",
+    "fields": [{"name": "event_type", "type": "string"},
+               {"name": "value", "type": ["null", "double"]},
+               {"name": "props", "type": ["null", "string"]}],
 })
 
 
@@ -165,11 +174,7 @@ def test_compiled_codec_matches_walker(et, val, props):
         _encode,
     )
 
-    schema = json.loads(
-        '{"type": "record", "name": "event", "fields": ['
-        '{"name": "event_type", "type": "string"}, '
-        '{"name": "value", "type": ["null", "double"]}, '
-        '{"name": "props", "type": ["null", "string"]}]}')
+    schema = json.loads(EVENT)
     enc_c = _compile_record_encoder(schema)
     dec_c = _compile_record_decoder(schema)
     assert enc_c is not None and dec_c is not None
@@ -192,3 +197,43 @@ def test_compiled_codec_falls_back_on_nested_shapes():
     full = json.loads(FULL)
     assert _compile_record_encoder(full) is None
     assert _compile_record_decoder(full) is None
+
+
+def test_union_index_outside_the_union_raises():
+    """A union index must name a branch: zigzag -1 (byte 1) and 2
+    (byte 4) raise in the walker and in the compiled decoder alike,
+    never fall into a branch."""
+    from kafana_spark.sources.avro_codec import _compile_record_decoder
+
+    u = json.dumps({"type": "record", "name": "u",
+                    "fields": [{"name": "v", "type": ["null", "long"]}]})
+    dec_c = _compile_record_decoder(json.loads(u))
+    for payload, idx in ((bytes([1, 14]), -1), (bytes([4, 14]), 2)):
+        with pytest.raises(ValueError, match=f"union index {idx} "):
+            decode_record(u, payload)
+        with pytest.raises(ValueError, match=f"union index {idx} "):
+            dec_c(payload, 0)
+
+
+def _outcome(fn, *args):
+    try:
+        return "ok", repr(fn(*args))     # repr: NaN == NaN
+    except Exception as e:  # noqa: BLE001 — the outcome IS the error
+        return "raised", type(e).__name__
+
+
+@settings(max_examples=300, deadline=None)
+@given(payload=st.binary(max_size=40))
+def test_compiled_decoder_agrees_with_walker_on_any_bytes(payload):
+    """Kafka payloads come from outside the program: on arbitrary bytes
+    the compiled decoder and the walker both raise the same error or
+    both return the same (value, pos)."""
+    from kafana_spark.sources.avro_codec import (
+        _compile_record_decoder,
+        _decode,
+    )
+
+    schema = json.loads(EVENT)
+    dec_c = _compile_record_decoder(schema)
+    assert _outcome(dec_c, payload, 0) == \
+        _outcome(_decode, schema, payload, 0)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from kafana_spark import query
 from kafana_spark.index import (
     N_BUCKETS,
     append_token_index,
@@ -23,6 +24,9 @@ def _store_docs(spark):
 
 
 def test_index_search_equals_direct_scan(spark, tmp_path):
+    """The index and the token scan share one tokenizer, so they answer
+    every term alike — including the field names of the JSON render:
+    ``event_type`` is the two tokens ``event`` and ``type`` to both."""
     docs = _store_docs(spark)
     idx = str(tmp_path / "idx")
     append_token_index(docs, idx, batch="b0")
@@ -34,6 +38,13 @@ def test_index_search_equals_direct_scan(spark, tmp_path):
     assert sorted(r._id for r in via_index.collect()) \
         == sorted(r._id for r in direct.collect())
     assert via_index.count() > 0
+
+    for term in ("error", "type", "event_type"):
+        got = sorted(r._id for r in
+                     search_via_index(spark, idx, docs, term).collect())
+        scan = sorted(r._id for r in query.search_text(
+            docs, term, token=True).collect())
+        assert got == scan, (term, len(got), len(scan))
 
 
 def test_lookup_prunes_to_one_bucket(spark, tmp_path):

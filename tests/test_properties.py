@@ -234,32 +234,26 @@ def test_exact_substr_spans_match_reference(spark, texts, k):
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_gram_functions_match_python_reference(spark, texts, n):
-    """shingles/grams/char_trigrams (r12 zipped-slice shapes) == plain
+    """shingles/grams (r12 zipped-slice shapes) == plain
     Python references on adversarial strings — consecutive/leading/
     trailing spaces (empty tokens), docs shorter than n, mixed case.
     Guards the semantics the zip rewrite must preserve: split(" ")
-    keeps empty tokens, grams keep multiplicity, shingles/trigrams
-    dedupe keeping first occurrence."""
+    keeps empty tokens, grams keep multiplicity, shingles dedupe
+    keeping first occurrence."""
     from kafana_spark.functions import grams, shingles
-    from kafana_spark.operators.text import char_trigrams
 
     df = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
     got = df.select(
         "doc_id", shingles(F.col("text"), n).alias("sh"),
-        grams(F.col("text"), n).alias("gr"),
-        char_trigrams(F.col("text")).alias("tg")).collect()
+        grams(F.col("text"), n).alias("gr")).collect()
     for r in got:
         t = texts[r.doc_id]
         toks = t.split(" ")
         ref_gr = [" ".join(toks[i:i + n])
                   for i in range(len(toks) - n + 1)]
         ref_sh = list(dict.fromkeys(ref_gr))
-        low = t.lower()
-        ref_tg = list(dict.fromkeys(
-            low[i:i + 3] for i in range(len(low) - 2)))
         assert r.gr == ref_gr, (t, r.gr, ref_gr)
         assert r.sh == ref_sh, (t, r.sh, ref_sh)
-        assert r.tg == ref_tg, (t, r.tg, ref_tg)
 
 
 @given(texts=st.lists(

@@ -127,33 +127,6 @@ def test_confluent_wire_format_roundtrip(spark):
     assert out[1].payload is None and out[1].sid is None  # tombstone-safe
 
 
-def test_stateful_running_counts_across_microbatches(spark, tmp_path):
-    """applyInPandasWithState: state carries across micro-batches — the
-    final per-key total equals the batch groupBy count."""
-    from kafana_spark.streaming.stateful import running_counts
-
-    records = records_df(spark)
-    staged = str(tmp_path / "staged")
-    # two files → with maxFilesPerTrigger=1, two micro-batches
-    records.limit(120).write.parquet(staged)
-    records.subtract(records.limit(120)).write.mode("append").parquet(staged)
-
-    stream = (spark.readStream.schema(records.schema)
-              .option("maxFilesPerTrigger", "1").parquet(staged))
-    out = running_counts(stream, key_col="key")
-    q = (out.writeStream.format("memory").queryName("rc")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    # update mode emits one row per key per batch; lifetime total = max
-    got = {r.key: r.mx for r in spark.sql(
-        "SELECT key, MAX(events) AS mx FROM rc GROUP BY key").collect()}
-    want = {r.key: r.cnt for r in records.groupBy(
-        F.col("key").cast("string").alias("key"))
-        .agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    assert got == want
-
-
 def _stream(spark, staged, schema, store, ckpt):
     """Drain the new files under ``staged`` into ``store`` through the
     exactly-once sink, as one micro-batch."""
@@ -268,42 +241,6 @@ def test_stream_interval_join_matches_batch(spark, tmp_path):
     got = sorted((r.offset, r.r_offset) for r in
                  spark.sql("SELECT offset, r_offset FROM ssj").collect())
     assert got == want
-
-
-def test_stateful_sessionizer_event_time_timeout(spark, tmp_path):
-    """Custom session operator (applyInPandasWithState + event-time
-    timeout): a session is emitted either when a new burst starts
-    beyond the gap, or when the watermark passes last_event + gap;
-    a still-open session at stream end stays unemitted (append-mode
-    streaming semantics)."""
-    import time as _time
-    from kafana_spark.streaming.stateful import sessionize_stateful
-
-    schema = "key string, timestamp timestamp"
-    batches = [
-        [("u", dt.datetime(2024, 1, 1, 0, 0)),
-         ("u", dt.datetime(2024, 1, 1, 0, 10))],
-        [("u", dt.datetime(2024, 1, 1, 3, 0))],   # closes session 1
-        [("u", dt.datetime(2024, 1, 1, 9, 0))],   # times out session 2
-    ]
-    for b in batches:
-        spark.createDataFrame(b, schema).coalesce(1) \
-            .write.mode("append").parquet(str(tmp_path / "in"))
-        _time.sleep(1.2)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(str(tmp_path / "in")))
-    out = sessionize_stateful(stream, gap_seconds=1800)
-    q = (out.writeStream.format("memory").queryName("ssf")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    rows = [(r.start_us, r.end_us, r.events) for r in
-            spark.sql("SELECT * FROM ssf ORDER BY start_us").collect()]
-    us = lambda h, m=0: int(dt.datetime(
-        2024, 1, 1, h, m, tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
-    assert rows == [(us(0), us(0, 10), 2), (us(3), us(3), 1)]
 
 
 def test_dedup_stream_drops_cross_microbatch_redeliveries(spark, tmp_path):

@@ -99,88 +99,6 @@ def test_rolling_chunks_match_scalar_reference(spark):
         {k: sorted(v) for k, v in want.items()}
 
 
-def test_token_bloom_no_false_negatives_and_prunes(spark):
-    """Bloom prefilter: identical results to the exact token search,
-    and genuinely selective (most non-matching rows are pruned by the
-    bloom alone)."""
-    from pyspark.sql import functions as F
-
-    from kafana_spark import query
-    from kafana_spark.operators.text import bloom_might_contain, token_bloom
-    from kafana_spark.sources.tables import load_table
-    from tests.conftest import SF_SMOKE
-
-    docs = (load_table(spark, SF_SMOKE, "documents")
-            .withColumn("tb", token_bloom(F.col("text"))))
-
-    # pick a genuinely selective term (the synthetic vocabulary is tiny,
-    # so common words appear in ~80% of docs — useless for a skip test)
-    rare = (docs.select(F.explode(F.split(F.lower("text"), " ")).alias("t"),
-                        "doc_id")
-            .groupBy("t").agg(F.count_distinct("doc_id").alias("df"))
-            .where(F.col("df").between(3, 25))
-            .orderBy("df", "t").first())
-    term = rare.t
-
-    exact = query.search_text(docs, term, field="text", token=True)
-    bloomed = query.search_text(docs, term, field="text", token=True,
-                                bloom_col="tb")
-    e = sorted(r.doc_id for r in exact.select("doc_id").collect())
-    b = sorted(r.doc_id for r in bloomed.select("doc_id").collect())
-    assert e == b and e, "bloom must not change token-search results"
-
-    total = docs.count()
-    passed = docs.where(bloom_might_contain(F.col("tb"), term)).count()
-    assert passed < total * 0.5, (term, passed, total)
-    assert passed >= len(e)  # no false negatives by construction
-
-
-def test_trigram_bloom_substring_search_no_false_negatives(spark):
-    """Trigram bloom prefilter for NON-token substring search: identical
-    results to plain contains, and selective on a rare needle."""
-    from pyspark.sql import functions as F
-
-    from kafana_spark import query
-    from kafana_spark.operators.text import (
-        bloom_might_contain_substring,
-        trigram_bloom,
-    )
-    from kafana_spark.sources.tables import load_table
-    from tests.conftest import SF_SMOKE
-
-    docs = (load_table(spark, SF_SMOKE, "documents")
-            .withColumn("gb", trigram_bloom(F.col("text"))))
-
-    # derive a genuinely rare needle (the synthetic vocabulary is tiny:
-    # most tokens appear in ~75% of docs, useless for a skip test)
-    rare = (docs.select(F.explode(F.split(F.lower("text"), " ")).alias("t"),
-                        "doc_id")
-            .groupBy("t").agg(F.count_distinct("doc_id").alias("df"))
-            .where((F.col("df").between(3, 25)) & (F.length("t") >= 3))
-            .orderBy("df", "t").first())
-    needle = rare.t
-    exact = sorted(r.doc_id for r in query.search_text(
-        docs, needle, field="text").select("doc_id").collect())
-    bloomed = sorted(r.doc_id for r in query.search_text(
-        docs, needle, field="text", bloom_col="gb")
-        .select("doc_id").collect())
-    assert exact == bloomed and exact
-
-    total = docs.count()
-    passed = docs.where(
-        bloom_might_contain_substring(F.col("gb"), needle)).count()
-    assert passed >= len(exact)          # no false negatives
-    assert passed < total * 0.5, (needle, passed, total)
-
-    # short needles (< 3 chars) degrade to the exact scan, not a miss
-    short_exact = sorted(r.doc_id for r in query.search_text(
-        docs, "qu", field="text").select("doc_id").collect())
-    short_bloom = sorted(r.doc_id for r in query.search_text(
-        docs, "qu", field="text", bloom_col="gb")
-        .select("doc_id").collect())
-    assert short_exact == short_bloom
-
-
 def test_repetition_stats_separates_loops_from_prose(spark):
     rows = [
         (1, "spam ham spam ham spam ham spam ham"),   # one bigram loop
