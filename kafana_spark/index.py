@@ -8,7 +8,7 @@ SHARDED BY TOKEN HASH, so a term lookup prunes to one shard — O(postings)
 work per query against a 100 TB store. Per-row bloom columns cannot
 stand in for it: parquet cannot skip a row group on a per-row column,
 so every row is still read and tested. Tokens come from
-``query.tokenize_field``, the tokenizer the scan uses, so the index
+``query.tokenize_field``, which splits as the scan does, so the index
 and the scan answer a term alike.
 
 Scale shape:

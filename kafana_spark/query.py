@@ -4,11 +4,15 @@ Each function compiles a Kibana-style request to a declarative DataFrame
 plan (SURVEY.md §2.C, C1-C18), exactly the way Kibana compiles UI
 actions to ES query DSL (/root/reference/README.md:15,24,26-42). All
 predicates are plain Column expressions so Catalyst pushes them into the
-parquet scan (partition pruning on topic/ds + min-max skipping).
+store's scan: into the parquet scan (partition pruning on topic/ds +
+min-max skipping) for a store ``read_store`` reads from files, and into
+the in-memory scan (batch pruning on column stats) for one it serves
+from its cache.
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -48,8 +52,8 @@ def search_key(df: DataFrame, key, topics: Sequence[str] | None = None) -> DataF
 def tokenize_field(col: Column) -> Column:
     """Distinct lowercase word tokens of a field (ES standard-analyzer
     flavored: split on non-alphanumerics, drop empties). The one
-    tokenizer of C5 token search: the scan below and the token index
-    (``index.py``) both use it, so they answer a term alike."""
+    tokenizer of C5 token search: the token index (``index.py``) uses
+    it and the scan below splits alike, so they answer a term alike."""
     return F.array_distinct(F.filter(
         F.split(F.lower(col), r"[^a-z0-9]+"),
         lambda t: t != F.lit("")))
@@ -60,13 +64,19 @@ def search_text(df: DataFrame, needle: str, field: str = "message.value",
     """C5: substring or whole-token search over the stringified value.
 
     Both are exact scans: substring is ``contains``, a token match tests
-    ``tokenize_field``'s tokens. For a selective term over a large
-    store, ``index.search_via_index`` answers the token search from the
-    inverted token index instead.
+    ``tokenize_field``'s tokens. The scan splits the field as
+    ``tokenize_field`` does but skips its empty-token filter and
+    distinct, which cannot change whether a non-empty alphanumeric
+    needle is among the tokens; any other needle matches no token. For
+    a selective term over a large store, ``index.search_via_index``
+    answers the token search from the inverted token index instead.
     """
     if token:
-        return df.where(F.array_contains(tokenize_field(F.col(field)),
-                                         needle.lower()))
+        term = needle.lower()
+        if not re.fullmatch("[a-z0-9]+", term):
+            return df.where(F.lit(False))
+        return df.where(F.array_contains(
+            F.split(F.lower(F.col(field)), "[^a-z0-9]+"), term))
     return df.where(F.col(field).contains(needle))
 
 

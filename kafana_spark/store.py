@@ -44,6 +44,17 @@ docker-compose.yml:72-78). Design:
   stored ``_id``: an update appends a new record at a new offset
   (``update_by_query``), so every replay of an ``_id`` is the same
   bytes and either dedup may keep any of them.
+- serving from memory: ``read_store`` keeps each store's cold tier
+  cached, keyed by (session, store path, logged schema, sorted cold
+  files), and reuses it until a commit changes that key. Logged files
+  never change, so the log makes invalidation exact: only ``compact``,
+  ``retention`` and a schema change move the key, and streaming appends
+  (hot files, scanned on every read) do not churn it. The cache holds
+  at most ``SERVE_CACHE_BYTES`` of cold files over all stores, least
+  recently served evicted first; a larger cold tier reads as a file
+  scan. A cached tier prunes in-memory batches by their
+  column stats instead of parquet partitions and row groups, and its
+  rows carry no input file name.
 - "latest state per key" is a VIEW over the changelog (README.md:11:
   "rather a change log than a table"), ordered by (partition, offset)
   within key — Kafka ordering is per-partition, so offset, not
@@ -58,10 +69,13 @@ import functools
 import json
 import os
 import shutil
+import threading
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from urllib.parse import unquote
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -81,6 +95,13 @@ COMPACT_MAX_RECORDS = 1_000_000
 COMPACT_CLUSTER_BY = ("key", "offset")
 #: a hot file's rows are sorted by these columns
 HOT_SORT_BY = ("topic", "timestamp")
+#: on-disk parquet bytes of cold tiers ``read_store`` may keep cached,
+#: summed over every store. Spark's local-mode default heap is 1 GiB,
+#: of which unified (storage + execution) memory is about 430 MB; a
+#: decoded in-memory columnar copy of parquet runs a few times its
+#: file size, so 64 MiB of files leaves most of that pool to execution
+#: (a cached block that does not fit spills to local disk).
+SERVE_CACHE_BYTES = 64 << 20
 
 
 def with_store_partitions(docs: DataFrame) -> DataFrame:
@@ -299,14 +320,74 @@ def _read(spark: SparkSession, base: str, schema: str | None,
             .parquet(*(os.path.join(base, p) for p in files)))
 
 
+@dataclass
+class _Served:
+    """A cold tier ``read_store`` keeps cached: its key (session, base,
+    schema, sorted files), the cached frame and its files' bytes."""
+    key: tuple
+    frame: DataFrame
+    nbytes: int
+
+
+#: store base → its cached cold tier, least recently served first
+_served: OrderedDict[str, _Served] = OrderedDict()
+_served_lock = threading.Lock()
+
+
+def _unserve(base: str) -> None:
+    """Drop ``base``'s cached cold tier (the caller holds the lock)."""
+    frame = _served.pop(base).frame
+    with contextlib.suppress(Py4JError):    # its session was stopped
+        frame.unpersist()
+
+
+def _evict(room: int) -> None:
+    """Drop the least recently served cold tiers until the rest and
+    ``room`` more bytes fit ``SERVE_CACHE_BYTES`` (the caller holds the
+    lock)."""
+    while _served and sum(s.nbytes for s in _served.values()) + room \
+            > SERVE_CACHE_BYTES:
+        _unserve(next(iter(_served)))
+
+
+def _serve(spark: SparkSession, base: str, schema: str | None,
+           files) -> DataFrame:
+    """``_read`` of a store's cold files, cached across calls while the
+    same session asks for the same schema and files (logged files never
+    change, so a hit is exact) and the files' bytes fit
+    ``SERVE_CACHE_BYTES``; a cold tier over the budget reads as a plain
+    scan. A miss replaces the store's older entry and evicts the least
+    recently served stores until the budget holds the new one; entries
+    of any other session are dropped."""
+    files = tuple(sorted(files))
+    key = (spark, base, schema, files)
+    with _served_lock:
+        for b in [b for b, s in _served.items()
+                  if s.key[0] is not spark or (b == base and s.key != key)]:
+            _unserve(b)
+        _evict(0)   # hold the entries to the current budget
+        if base in _served:
+            _served.move_to_end(base)
+            return _served[base].frame
+        df = _read(spark, base, schema, files)
+        nbytes = sum(os.path.getsize(os.path.join(base, p)) for p in files)
+        if nbytes > SERVE_CACHE_BYTES:
+            return df
+        _evict(nbytes)
+        _served[base] = _Served(key, df.cache(), nbytes)
+        return df
+
+
 def _read_tiers(spark: SparkSession, base: str, schema: str | None,
-                files: dict) -> DataFrame:
+                files: dict, read_cold=_read) -> DataFrame:
     """The given store files (path → log value): the cold ones with
-    ``topic``/``ds`` from their paths, the hot ones with them from their
-    data, unioned by name. Files of one tier read as one scan."""
-    tiers = [[p for p, v in files.items() if _is_hot(v) == hot]
-             for hot in (False, True)]
-    frames = [_read(spark, base, schema, t) for t in tiers if t] \
+    ``topic``/``ds`` from their paths, read by ``read_cold``, the hot
+    ones with them from their data, unioned by name. Files of one tier
+    read as one scan."""
+    cold, hot = [[p for p, v in files.items() if _is_hot(v) == h]
+                 for h in (False, True)]
+    frames = [read(spark, base, schema, t)
+              for read, t in ((read_cold, cold), (_read, hot)) if t] \
         or [_read(spark, base, schema, [])]
     return functools.reduce(DataFrame.unionByName, frames)
 
@@ -428,18 +509,31 @@ def read_store(spark: SparkSession, path: str, dedup: bool = True) -> DataFrame:
     """Read exactly the latest snapshot's files, with the logged schema
     (an empty snapshot reads as an empty frame; files no commit lists
     are never seen); optionally dedup replayed records by _id. The cold
-    and the hot tier are read apart and unioned by name; a snapshot of
-    one tier (a compacted store has only cold files) is one file scan.
+    and the hot tier are read apart and unioned by name.
+
+    The cold tier is served from memory: the first read caches it, keyed
+    by (session, store path, logged schema, sorted cold files), and
+    later reads reuse the cached frame until a commit changes that key —
+    only ``compact``, ``retention`` or a schema change do, since logged
+    files never change, so the cache never serves a stale snapshot. The
+    hot tier is scanned on every read, so appends show at once; a
+    snapshot with no hot files returns the same cached frame each time.
+    A cold tier whose files exceed ``SERVE_CACHE_BYTES`` reads as a
+    plain file scan with partition pruning; serving a store evicts the
+    least recently served ones the budget cannot also hold. A cached
+    cold tier's rows carry no file: ``input_file_name()`` reads ``""``
+    and ``inputFiles()`` lists nothing; ``table_files`` names the
+    snapshot's files.
 
     Dedup mirrors the ES sink's idempotent upsert (same _id ⇒ one
     logical document). All replays of an _id are byte-identical by
     construction, so any winner is correct. A snapshot the log marks
     ``unique_ids`` (``compact`` deduplicated it at write) is returned
-    as the plain file scan; any other pays a ``dropDuplicates`` shuffle.
+    as is; any other pays a ``dropDuplicates`` shuffle over both tiers.
     """
     base = path.rstrip("/")
     snap = _snapshot(base)
-    df = _read_tiers(spark, base, snap.schema, snap.files)
+    df = _read_tiers(spark, base, snap.schema, snap.files, read_cold=_serve)
     if not dedup or snap.unique_ids:
         return df
     return df.dropDuplicates(["_id"])

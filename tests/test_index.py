@@ -39,7 +39,8 @@ def test_index_search_equals_direct_scan(spark, tmp_path):
         == sorted(r._id for r in direct.collect())
     assert via_index.count() > 0
 
-    for term in ("error", "type", "event_type"):
+    # "" and "a-b" are no token: both paths answer nothing
+    for term in ("error", "type", "event_type", "", "a-b"):
         got = sorted(r._id for r in
                      search_via_index(spark, idx, docs, term).collect())
         scan = sorted(r._id for r in query.search_text(

@@ -114,10 +114,14 @@ def test_q01_scans_only_needed_columns(spark):
 
 # ------------------------------------------------- store partition pruning
 
-def test_store_prunes_topic_partitions(spark, tmp_path):
+def test_store_prunes_topic_partitions(spark, tmp_path, monkeypatch):
     """topic is a partition column of the compacted store (= per-topic
     ES index); a single-topic query must prune at the metadata level,
-    visible as a PartitionFilters entry and a pruned partition count."""
+    visible as a PartitionFilters entry. That is the plan of a store
+    whose cold tier exceeds the serving cache's budget (0 here); below
+    it the cached tier prunes its in-memory batches on the same
+    predicate, to the same answer."""
+    from kafana_spark import store as store_mod
     from kafana_spark.ingest import enrich, events_as_kafka_records
     from kafana_spark.sources.tables import load_table
     from kafana_spark.store import compact, read_store, write_store
@@ -129,11 +133,26 @@ def test_store_prunes_topic_partitions(spark, tmp_path):
                     str(tmp_path / "store"))
     compact(spark, str(tmp_path / "store"))
 
-    df = (read_store(spark, str(tmp_path / "store"))
-          .where(F.col("topic") == "foo"))
-    plan = plan_of(df)
+    def foo():
+        return (read_store(spark, str(tmp_path / "store"))
+                .where(F.col("topic") == "foo"))
+
+    with monkeypatch.context() as mp:
+        mp.setattr(store_mod, "SERVE_CACHE_BYTES", 0)
+        scanned = foo()
+        plan = plan_of(scanned)
+        scan_ids = sorted(r._id for r in scanned.select("_id").collect())
     m = re.search(r"PartitionFilters: \[[^\]]*topic[^\]]*\]", plan)
     assert m, plan
+
+    cached = foo()
+    plan = plan_of(cached)
+    m = re.search(r"\(\d+\) InMemoryTableScan\n(?:.*\n)*?Arguments: (.*)",
+                  plan)
+    assert m and re.search(r"\(topic#\d+ = foo\)", m.group(1)), plan
+    assert "PartitionFilters" not in plan, plan
+    assert sorted(r._id for r in cached.select("_id").collect()) == scan_ids
+    assert len(scan_ids) == 100
 
 
 def _redelivered_store(spark, path):

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from kafana_spark.ingest import enrich
 from kafana_spark.sources.files import as_envelope, read_records
 from kafana_spark.streaming.pipeline import windowed_counts
@@ -95,19 +93,16 @@ def test_compact_cluster_by_sorts_within_files(spark, tmp_path):
     each rewritten partition file, keys are sorted."""
     from kafana_spark.ingest import events_as_kafka_records
     from kafana_spark.sources.tables import load_table
-    from kafana_spark.store import compact, read_store, write_store
+    from kafana_spark.store import compact, table_files, write_store
     from tests.conftest import SF_SMOKE
 
     ev = load_table(spark, SF_SMOKE, "events").limit(300)
     write_store(enrich(events_as_kafka_records(ev)), str(tmp_path / "s"))
     compact(spark, str(tmp_path / "s"))
 
-    df = (read_store(spark, str(tmp_path / "s"), dedup=False)
-          .withColumn("f", F.input_file_name()))
-    rows = df.select("f", "key", "offset").collect()
-    by_file: dict = {}
-    for r in rows:
-        by_file.setdefault(r.f, []).append((r.key, r.offset))
-    assert by_file
-    for f, pairs in by_file.items():
-        assert pairs == sorted(pairs), f"file not clustered: {f}"
+    files = table_files(str(tmp_path / "s"))
+    assert files
+    for f in files:
+        pairs = [(r.key, r.offset) for r in
+                 spark.read.parquet(f).select("key", "offset").collect()]
+        assert pairs and pairs == sorted(pairs), f"file not clustered: {f}"

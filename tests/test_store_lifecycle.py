@@ -6,7 +6,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-from urllib.parse import unquote, urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -173,17 +172,17 @@ def _rows(spark, store):
                   .select("_id", "key", "ds").collect())
 
 
-def _live_files(spark, store):
-    """Local paths of the snapshot's files."""
-    return {os.path.realpath(unquote(urlparse(u).path))
-            for u in read_store(spark, store, dedup=False).inputFiles()}
+def _live_files(store):
+    """Local paths of the snapshot's files (from the log: a cold tier
+    ``read_store`` serves from memory has no input files)."""
+    return {os.path.realpath(f) for f in table_files(store)}
 
 
 def _assert_no_leftovers(spark, store):
     """Every parquet file on disk is a snapshot file, and no staged
     write is left behind."""
     on_disk = {os.path.realpath(f) for f in parquet_files(store)}
-    assert on_disk == _live_files(spark, store)
+    assert on_disk == _live_files(store)
     assert glob.glob(os.path.join(store, "_staging", "*")) == []
 
 
@@ -234,7 +233,7 @@ def test_crash_shows_one_snapshot_and_retry_lands(spark, tmp_path, crash,
     store = str(tmp_path / "store")
     call, expect = SETUPS[op](spark, store)
     pre = _rows(spark, store)
-    pre_files = _live_files(spark, store)
+    pre_files = _live_files(store)
     crash.arm(step, n=2 if step == "rename" else 1)
     with pytest.raises(crash.Crash):
         call()
@@ -243,7 +242,7 @@ def test_crash_shows_one_snapshot_and_retry_lands(spark, tmp_path, crash,
     call()
 
     assert _rows(spark, store) == expect(pre)
-    assert _live_files(spark, store) != pre_files   # the retry committed
+    assert _live_files(store) != pre_files   # the retry committed
     _assert_no_leftovers(spark, store)
 
 
@@ -574,3 +573,173 @@ def test_write_store_runs_as_many_jobs_as_the_partitioned_write(spark,
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
+# ------------------------------------------- serving the cold tier from memory
+
+def _answer(df):
+    """Sorted ``_id``s and ``count()`` of a frame."""
+    return sorted(r._id for r in df.select("_id").collect()), df.count()
+
+
+def _assert_fresh(spark, store, monkeypatch):
+    """A deduplicated read equals a read that bypasses the serving
+    cache (budget 0); returns its answer."""
+    import kafana_spark.store as store_mod
+
+    got = _answer(read_store(spark, store))
+    with monkeypatch.context() as m:
+        m.setattr(store_mod, "SERVE_CACHE_BYTES", 0)
+        assert _answer(read_store(spark, store)) == got
+    return got
+
+
+def _served_store(spark, store, n=70):
+    """The first ``n`` of 100 docs, compacted and read once, so the
+    serving cache holds the store's cold tier; returns all 100 docs."""
+    docs = _events_docs(spark, 100)
+    write_store(docs.orderBy("_id").limit(n), store, "b0")
+    compact(spark, store)
+    assert read_store(spark, store) is read_store(spark, store)
+    assert read_store(spark, store).is_cached
+    return docs
+
+
+def test_served_store_shows_an_append_after_compact(spark, tmp_path,
+                                                    monkeypatch):
+    """The hot tier is scanned on every read: an append after the
+    cached read shows at once, and its 70 redelivered ``_id``s are still
+    deduplicated."""
+    store = str(tmp_path / "store")
+    docs = _served_store(spark, store)
+
+    write_store(docs, store, "b1")
+
+    ids, n = _assert_fresh(spark, store, monkeypatch)
+    assert ids == sorted(r._id for r in docs.select("_id").collect())
+    assert n == 100
+
+
+def test_served_store_shows_a_second_compact(spark, tmp_path,
+                                             monkeypatch):
+    store = str(tmp_path / "store")
+    docs = _served_store(spark, store)
+    write_store(docs, store, "b1")
+
+    compact(spark, store)
+
+    ids, n = _assert_fresh(spark, store, monkeypatch)
+    assert (len(set(ids)), n) == (100, 100)
+
+
+def test_served_store_shows_retention(spark, tmp_path, monkeypatch):
+    store = str(tmp_path / "store")
+    _served_store(spark, store, n=100)
+    pre = _rows(spark, store)
+    cutoff = sorted({d for _, _, d in pre})[1]
+
+    assert retention(store, cutoff)
+
+    ids, n = _assert_fresh(spark, store, monkeypatch)
+    assert ids == [i for i, _, d in pre if d >= cutoff]
+    assert 0 < n < 100
+
+
+def test_served_store_shows_a_widened_schema(spark, tmp_path, monkeypatch):
+    """An append that adds a column changes the logged schema, so the
+    cold tier is read again with it: the new column is readable."""
+    store = str(tmp_path / "store")
+    _served_store(spark, store)
+    wide = enrich(events_as_kafka_records(
+        load_table(spark, SF_SMOKE, "events").limit(100)),
+        extract_json={"props_k": ("props", "$.k", "int")})
+
+    write_store(wide, store, "b1")
+
+    _assert_fresh(spark, store, monkeypatch)
+    has_k = F.col("props_k").isNotNull()
+    assert read_store(spark, store, dedup=False).where(has_k).count() \
+        == wide.where(has_k).count() > 0
+
+
+@pytest.fixture(scope="module")
+def three_stores(spark, tmp_path_factory):
+    """Three compacted stores of the same 100 docs, and the bytes of
+    each one's cold tier."""
+    root = tmp_path_factory.mktemp("served")
+    docs = _events_docs(spark, 100)
+    stores = [str(root / s) for s in "abc"]
+    for s in stores:
+        write_store(docs, s, "b0")
+        compact(spark, s)
+    return stores, [sum(map(os.path.getsize, table_files(s)))
+                    for s in stores]
+
+
+def test_serving_cache_evicts_least_recently_served(spark, three_stores,
+                                                    monkeypatch):
+    """Under a budget that holds two of three stores' cold tiers,
+    serving the third evicts the least recently served; a cold tier
+    over the budget is a plain scan; another session's entries are
+    dropped."""
+    import kafana_spark.store as store_mod
+
+    stores, (a, b, c) = three_stores
+    monkeypatch.setattr(store_mod, "SERVE_CACHE_BYTES", a + max(b, c))
+    fa, fb = (read_store(spark, s) for s in stores[:2])
+    assert read_store(spark, stores[0]) is fa    # a is now the newest
+
+    fc = read_store(spark, stores[2])
+
+    assert (fa.is_cached, fb.is_cached, fc.is_cached) == (True, False, True)
+
+    monkeypatch.setattr(store_mod, "SERVE_CACHE_BYTES", a - 1)
+    over = read_store(spark, stores[0])
+    assert not over.is_cached and not fa.is_cached
+    assert over.count() == 100
+
+    monkeypatch.setattr(store_mod, "SERVE_CACHE_BYTES", a)
+    fa = read_store(spark, stores[0])
+    assert fa.is_cached
+    assert read_store(spark.newSession(), stores[0]).count() == 100
+    assert not fa.is_cached
+
+
+def test_serving_cache_holds_under_racing_readers(spark, three_stores,
+                                                  monkeypatch):
+    """Eight threads read three stores through a cache that holds two:
+    every miss evicts, yet the cache stays within its budget and no
+    cached frame escapes it (a lost update would leak one)."""
+    import sys
+    import threading
+
+    import kafana_spark.store as store_mod
+
+    stores, (a, b, c) = three_stores
+    monkeypatch.setattr(store_mod, "SERVE_CACHE_BYTES", a + max(b, c))
+    got, errors = [], []
+
+    def reader(i):
+        try:
+            for j in range(12):
+                got.append(read_store(spark, stores[(i + j) % 3]))
+        except Exception as exc:     # reported below, with the thread's
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(i,))
+                   for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and len(got) == 96
+    served = [s.frame for s in store_mod._served.values()]
+    assert sum(s.nbytes for s in store_mod._served.values()) \
+        <= store_mod.SERVE_CACHE_BYTES
+    assert {id(f) for f in got if f.is_cached} <= {id(f) for f in served}
