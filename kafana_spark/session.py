@@ -10,6 +10,9 @@ sane on a real cluster:
   known-small by construction
 - shuffle partitions sized by env (``SPARK_GRAFT_CPUS``) for local runs;
   on a cluster AQE coalescing makes the initial number less critical
+- streaming checkpoint logs written through the FileSystem API and no
+  ``_SUCCESS`` marker: each saves Hadoop's shell forks on every
+  micro-batch (SCALE.md, "Session defaults")
 """
 
 from __future__ import annotations
@@ -65,6 +68,19 @@ def get_spark(
         # took a needle request on a 56-file store from 2 jobs to 3
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
                 "100000")
+        # Without libhadoop, Hadoop forks a shell process for chmod and
+        # readlink (about 3 ms of CPU each). The default FileContext
+        # checkpoint manager forks readlink 8 times per offset/commit
+        # file; the FileSystem one writes the same temp file and renames
+        # it into place (POSIX rename locally: whole or absent)
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager")
+        # _SUCCESS and its .crc cost 2 forks per write; a store write's
+        # marker dies with its staging dir, and its _log/ entry is what
+        # says the write happened
+        .config("spark.hadoop.mapreduce.fileoutputcommitter."
+                "marksuccessfuljobs", "false")
     )
     if driver_mem:
         builder = builder.config("spark.driver.memory", driver_mem)

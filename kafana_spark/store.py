@@ -335,10 +335,12 @@ _served_lock = threading.Lock()
 
 
 def _unserve(base: str) -> None:
-    """Drop ``base``'s cached cold tier (the caller holds the lock)."""
-    frame = _served.pop(base).frame
-    with contextlib.suppress(Py4JError):    # its session was stopped
-        frame.unpersist()
+    """Drop ``base``'s cached cold tier, if any (the caller holds the
+    lock)."""
+    served = _served.pop(base, None)
+    if served is not None:
+        with contextlib.suppress(Py4JError):    # its session was stopped
+            served.frame.unpersist()
 
 
 def _evict(room: int) -> None:
@@ -489,18 +491,18 @@ def batch_meta(path: str) -> dict:
 
 
 def write_store(docs: DataFrame, path: str,
-                batch_id: str | None = None) -> None:
+                batch: str | None = None) -> None:
     """Append enriched documents to the store's hot tier as batch
-    ``batch_id`` (a fresh uuid when omitted): one ``append`` commit of
-    its ``<batch_id>-part-*`` files at the store root, one per input
+    ``batch`` (a fresh uuid when omitted): one ``append`` commit of
+    its ``<batch>-part-*`` files at the store root, one per input
     partition, sorted by ``HOT_SORT_BY``, each logged with the batch's
     ``ds`` range and topics. A replayed batch id replaces its own files
     instead of duplicating; a retry after a crash deletes what the
-    crashed attempt left uncommitted. An unsafe ``batch_id`` raises
+    crashed attempt left uncommitted. An unsafe ``batch`` raises
     ``ValueError`` before anything is written (``_check_batch``).
     """
     base = path.rstrip("/")
-    batch = uuid.uuid4().hex if batch_id is None else _check_batch(batch_id)
+    batch = uuid.uuid4().hex if batch is None else _check_batch(batch)
     _land_hot(base, _snapshot(base), "append", batch,
               with_store_partitions(docs), batch=batch)
 
@@ -518,7 +520,9 @@ def read_store(spark: SparkSession, path: str, dedup: bool = True) -> DataFrame:
     files never change, so the cache never serves a stale snapshot. The
     hot tier is scanned on every read, so appends show at once; a
     snapshot with no hot files returns the same cached frame each time.
-    A cold tier whose files exceed ``SERVE_CACHE_BYTES`` reads as a
+    A snapshot with no cold files drops the store's cached cold tier
+    (``retention`` past every cold day). A cold tier whose files exceed
+    ``SERVE_CACHE_BYTES`` reads as a
     plain file scan with partition pruning; serving a store evicts the
     least recently served ones the budget cannot also hold. A cached
     cold tier's rows carry no file: ``input_file_name()`` reads ``""``
@@ -533,6 +537,9 @@ def read_store(spark: SparkSession, path: str, dedup: bool = True) -> DataFrame:
     """
     base = path.rstrip("/")
     snap = _snapshot(base)
+    if all(map(_is_hot, snap.files.values())):
+        with _served_lock:      # no cold tier left to serve
+            _unserve(base)
     df = _read_tiers(spark, base, snap.schema, snap.files, read_cold=_serve)
     if not dedup or snap.unique_ids:
         return df

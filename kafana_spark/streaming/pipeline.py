@@ -6,7 +6,9 @@ and idempotent indexing by _id (kafana.http:76). Spark equivalents:
 
 - any streaming DataFrame (Kafka, file, rate) flows through the SAME
   ``kafana_spark.ingest.enrich`` used in batch — batch/stream parity is
-  Structured Streaming's contract, and tests assert we keep it
+  Structured Streaming's contract, and tests assert we keep it.
+  ``enrich`` is applied once, to the stream, not rebuilt in every
+  micro-batch: the sink only writes the enriched batch
 - checkpointing replaces Connect's offset storage
 - ``trigger(availableNow=True)`` drains everything then stops — the
   batch-equivalence harness (SURVEY.md §5.3.3)
@@ -17,7 +19,8 @@ and idempotent indexing by _id (kafana.http:76). Spark equivalents:
   ``_log/``, and two streams into one table (each with its own
   checkpoint) never replace each other's batches (Structured
   Streaming's epoch-keyed foreachBatch sink + metadata log). The
-  store's own ingest, ``ingest_stream_exactly_once``, is built on it.
+  store's own ingest, ``ingest_stream_exactly_once``, is built on it
+  with ``store.write_store`` as the append.
 
 Streaming aggregations (the C12 streaming twin + watermarks/session
 windows the reference lacks, SURVEY.md §2.D):
@@ -64,13 +67,6 @@ def batch_sink(checkpoint: str, append, *args, **kwargs):
     return sink
 
 
-def _append_enriched(records: DataFrame, store_path: str,
-                     value_col: str, batch: str) -> None:
-    """Enrich one envelope batch and append it to the store as
-    ``batch``."""
-    write_store(enrich(records, value_col), store_path, batch)
-
-
 def ingest_stream_exactly_once(records: DataFrame, store_path: str,
                                checkpoint: str,
                                value_col: str = "value_struct",
@@ -79,14 +75,14 @@ def ingest_stream_exactly_once(records: DataFrame, store_path: str,
     decoded struct value, as sources/kafka.py:kafka_envelope emits) and
     append it to the store exactly once, without a table format.
 
-    Each micro-batch goes through ``store.write_store`` under its
+    ``enrich`` is applied once, to the stream; each micro-batch of
+    enriched documents goes through ``store.write_store`` under its
     ``batch_sink`` id, so a batch replayed after a failure between
     store and checkpoint commit replaces its own files — the ES sink's
     idempotent upsert by _id (kafana.http:76).
     """
-    writer = (records.writeStream
-              .foreachBatch(batch_sink(checkpoint, _append_enriched,
-                                       store_path, value_col))
+    writer = (enrich(records, value_col).writeStream
+              .foreachBatch(batch_sink(checkpoint, write_store, store_path))
               .option("checkpointLocation", checkpoint))
     if available_now:
         writer = writer.trigger(availableNow=True)

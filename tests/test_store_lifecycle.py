@@ -645,6 +645,22 @@ def test_served_store_shows_retention(spark, tmp_path, monkeypatch):
     assert 0 < n < 100
 
 
+def test_retention_of_every_cold_day_drops_the_served_tier(spark, tmp_path):
+    """A log left with no cold files drops the store's cached cold tier
+    at the next read instead of keeping it pinned until eviction."""
+    import kafana_spark.store as store_mod
+
+    store = str(tmp_path / "store")
+    _served_store(spark, store, n=100)
+    served = read_store(spark, store)
+
+    assert retention(store, "9999-12-31")
+
+    assert read_store(spark, store).count() == 0
+    assert not served.is_cached
+    assert store not in store_mod._served
+
+
 def test_served_store_shows_a_widened_schema(spark, tmp_path, monkeypatch):
     """An append that adds a column changes the logged schema, so the
     cold tier is read again with it: the new column is readable."""

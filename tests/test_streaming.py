@@ -17,7 +17,9 @@ from kafana_spark.sources.kafka import (
     confluent_schema_id, frame_confluent, strip_confluent_header,
 )
 from kafana_spark.sources.tables import load_table
-from kafana_spark.store import compact, read_store, retention, write_store
+from kafana_spark.store import (
+    compact, read_store, retention, with_store_partitions, write_store,
+)
 from kafana_spark.streaming.pipeline import (
     batch_sink, ingest_stream_exactly_once, sessionize, stream_batch_id,
     windowed_counts,
@@ -49,16 +51,46 @@ def test_stream_batch_parity(spark, tmp_path):
     b = read_store(spark, batch_store)
     s = read_store(spark, str(tmp_path / "stream_store"))
     assert b.count() == s.count() == 200
-
-    # identical documents modulo row order (canonical JSON per doc;
-    # exceptAll on nested structs trips INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND
-    # in Spark 4.1, so compare serialized rows instead)
-    def canon(df):
-        return sorted(
-            r.j for r in df.select(F.to_json(F.struct(*sorted(df.columns)))
-                                   .alias("j")).collect())
-
     assert canon(b) == canon(s)
+
+
+def canon(df):
+    """``df``'s rows as sorted canonical JSON: identical documents
+    modulo row order (exceptAll on nested structs trips
+    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND in Spark 4.1, so compare
+    serialized rows instead)."""
+    return sorted(
+        r.j for r in df.select(F.to_json(F.struct(*sorted(df.columns)))
+                               .alias("j")).collect())
+
+
+def test_stream_is_enriched_once(spark, tmp_path, monkeypatch):
+    """``enrich`` is applied to the stream once, not rebuilt in every
+    micro-batch: 3 files drained as 3 batches make one call, and the
+    store holds the batch pipeline's documents."""
+    import kafana_spark.streaming.pipeline as pipeline
+
+    calls = []
+
+    def counting_enrich(*args, **kwargs):
+        calls.append(args)
+        return enrich(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "enrich", counting_enrich)
+    records = records_df(spark)
+    staged = str(tmp_path / "staged")
+    records.repartition(3).write.parquet(staged)
+    stream = (spark.readStream.schema(records.schema)
+              .option("maxFilesPerTrigger", 1).parquet(staged))
+    store = str(tmp_path / "store")
+
+    q = ingest_stream_exactly_once(stream, store, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 3
+    assert len(calls) == 1
+    assert canon(read_store(spark, store)) \
+        == canon(with_store_partitions(enrich(records)))
 
 
 def test_stream_restart_is_idempotent(spark, tmp_path):
