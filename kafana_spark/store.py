@@ -52,9 +52,12 @@ docker-compose.yml:72-78). Design:
   (hot files, scanned on every read) do not churn it. The cache holds
   at most ``SERVE_CACHE_BYTES`` of cold files over all stores, least
   recently served evicted first; a larger cold tier reads as a file
-  scan. A cached tier prunes in-memory batches by their
-  column stats instead of parquet partitions and row groups, and its
-  rows carry no input file name.
+  scan. A cold tier of at most ``spark.sql.files.openCostInBytes`` is
+  cached as one partition, so a request over it alone plans no
+  Exchange and runs one task; a larger tier, or one unioned with hot
+  files, plans its shuffles as a scan would. A cached tier prunes
+  in-memory batches by their column stats instead of parquet
+  partitions and row groups, and its rows carry no input file name.
 - "latest state per key" is a VIEW over the changelog (README.md:11:
   "rather a change log than a table"), ordered by (partition, offset)
   within key — Kafka ordering is per-partition, so offset, not
@@ -360,7 +363,19 @@ def _serve(spark: SparkSession, base: str, schema: str | None,
     ``SERVE_CACHE_BYTES``; a cold tier over the budget reads as a plain
     scan. A miss replaces the store's older entry and evicts the least
     recently served stores until the budget holds the new one; entries
-    of any other session are dropped."""
+    of any other session are dropped.
+
+    A cold tier of at most ``spark.sql.files.openCostInBytes`` (read on
+    a miss) is cached as one partition (``coalesce(1)``: no shuffle to
+    fill it). Spark prices opening a file at that many bytes of scan and
+    never splits below it, so those bytes in one file would read as one
+    partition anyway; but a tier of many small ``topic=/ds=`` files
+    scans as several. The one-partition relation reports
+    ``SinglePartition``, which already satisfies every distribution a
+    group-by, window, ``dropDuplicates`` or global sort asks for, so a
+    request over it plans no Exchange and runs one task. A larger tier
+    keeps the scan's partitions, and its requests the scan's
+    parallelism."""
     files = tuple(sorted(files))
     key = (spark, base, schema, files)
     with _served_lock:
@@ -375,6 +390,9 @@ def _serve(spark: SparkSession, base: str, schema: str | None,
         nbytes = sum(os.path.getsize(os.path.join(base, p)) for p in files)
         if nbytes > SERVE_CACHE_BYTES:
             return df
+        if nbytes <= spark._jsparkSession.sessionState().conf() \
+                .filesOpenCostInBytes():
+            df = df.coalesce(1)
         _evict(nbytes)
         _served[base] = _Served(key, df.cache(), nbytes)
         return df
@@ -524,7 +542,13 @@ def read_store(spark: SparkSession, path: str, dedup: bool = True) -> DataFrame:
     (``retention`` past every cold day). A cold tier whose files exceed
     ``SERVE_CACHE_BYTES`` reads as a
     plain file scan with partition pruning; serving a store evicts the
-    least recently served ones the budget cannot also hold. A cached
+    least recently served ones the budget cannot also hold. A cold tier
+    within ``spark.sql.files.openCostInBytes`` is cached as one
+    partition: it reports ``SinglePartition``, so a group-by, window,
+    ``dropDuplicates`` or global sort over it alone needs no Exchange
+    and a request runs one job of one task. A larger tier keeps its
+    scan's partitions, and a union with hot files has no single
+    partition, so both plan their Exchange as before. A cached
     cold tier's rows carry no file: ``input_file_name()`` reads ``""``
     and ``inputFiles()`` lists nothing; ``table_files`` names the
     snapshot's files.

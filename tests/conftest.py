@@ -21,6 +21,18 @@ def live_batches(table: str) -> list[str]:
 
 
 
+def aggregating_requests(df) -> dict:
+    """The discover loop's aggregating request kinds over ``df``, by
+    name: terms on ``key``, an hourly date histogram and the latest
+    state per key."""
+    from kafana_spark import query
+    from kafana_spark.store import latest_state
+
+    return {"terms": query.terms(df, "key"),
+            "date_histogram": query.date_histogram(df, "1 hour"),
+            "latest_state": latest_state(df)}
+
+
 #: the message a ``fail_on`` frame raises with
 INJECTED_FAILURE = "injected write failure"
 

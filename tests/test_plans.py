@@ -16,7 +16,7 @@ import re
 from pyspark.sql import functions as F
 
 from kafana_spark.plans import declared
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, aggregating_requests
 
 
 def plan_of(df) -> str:
@@ -114,6 +114,20 @@ def test_q01_scans_only_needed_columns(spark):
 
 # ------------------------------------------------- store partition pruning
 
+def _two_topic_store(spark, path):
+    """The same 100 events under topics ``foo`` and ``bar``, compacted:
+    a cold tier of a few small ``topic=/ds=`` files."""
+    from kafana_spark.ingest import enrich, events_as_kafka_records
+    from kafana_spark.sources.tables import load_table
+    from kafana_spark.store import compact, write_store
+
+    recs = events_as_kafka_records(
+        load_table(spark, SF_SMOKE, "events").limit(100))
+    for t in ("foo", "bar"):
+        write_store(enrich(recs.withColumn("topic", F.lit(t))), path)
+    compact(spark, path)
+
+
 def test_store_prunes_topic_partitions(spark, tmp_path, monkeypatch):
     """topic is a partition column of the compacted store (= per-topic
     ES index); a single-topic query must prune at the metadata level,
@@ -122,16 +136,9 @@ def test_store_prunes_topic_partitions(spark, tmp_path, monkeypatch):
     it the cached tier prunes its in-memory batches on the same
     predicate, to the same answer."""
     from kafana_spark import store as store_mod
-    from kafana_spark.ingest import enrich, events_as_kafka_records
-    from kafana_spark.sources.tables import load_table
-    from kafana_spark.store import compact, read_store, write_store
+    from kafana_spark.store import read_store
 
-    ev = load_table(spark, SF_SMOKE, "events").limit(100)
-    recs = events_as_kafka_records(ev)
-    for t in ("foo", "bar"):
-        write_store(enrich(recs.withColumn("topic", F.lit(t))),
-                    str(tmp_path / "store"))
-    compact(spark, str(tmp_path / "store"))
+    _two_topic_store(spark, str(tmp_path / "store"))
 
     def foo():
         return (read_store(spark, str(tmp_path / "store"))
@@ -153,6 +160,74 @@ def test_store_prunes_topic_partitions(spark, tmp_path, monkeypatch):
     assert "PartitionFilters" not in plan, plan
     assert sorted(r._id for r in cached.select("_id").collect()) == scan_ids
     assert len(scan_ids) == 100
+
+
+def test_small_served_tier_plans_no_exchange(spark, tmp_path):
+    """A cold tier within ``spark.sql.files.openCostInBytes`` is cached
+    as one partition, so a group-by, a global sort and a window over it
+    read the in-memory relation with no Exchange. Under a 1-byte open
+    cost the same files (copied to a store path the cache has not seen)
+    are a larger tier: its cached scan keeps several partitions, the
+    requests plan their Exchange, and the answers are the same."""
+    import shutil
+
+    from kafana_spark.store import read_store
+
+    store, wide = str(tmp_path / "store"), str(tmp_path / "wide")
+    _two_topic_store(spark, store)
+    shutil.copytree(store, wide)
+    served = aggregating_requests(read_store(spark, store))
+    for kind, df in served.items():
+        plan = plan_of(df)
+        assert "InMemoryTableScan" in plan, (kind, plan)
+        assert "Exchange" not in plan, (kind, plan)
+
+    conf = "spark.sql.files.openCostInBytes"
+    cost = spark.conf.get(conf)
+    spark.conf.set(conf, "1b")
+    try:
+        scanned = aggregating_requests(read_store(spark, wide))
+    finally:
+        spark.conf.set(conf, cost)
+    for kind, df in scanned.items():
+        plan = plan_of(df)
+        assert "InMemoryTableScan" in plan, (kind, plan)
+        assert "Exchange" in plan, (kind, plan)
+        assert sorted(df.collect(), key=str) \
+            == sorted(served[kind].collect(), key=str), kind
+
+
+def _jobs_and_tasks(spark, group: str, action) -> tuple[int, int]:
+    """The jobs and tasks ``action()`` runs, read from the status
+    tracker through job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    return len(jobs), sum(tracker.getStageInfo(s).numTasks for j in jobs
+                          for s in tracker.getJobInfo(j).stageIds)
+
+
+def test_small_served_tier_runs_one_task_per_request(spark, tmp_path):
+    """Over a one-partition cold tier a request is one job of one task,
+    read through the status tracker as perfbench counts it: no shuffle
+    map stage, no range-partition sampling job for the global sort."""
+    from kafana_spark.store import read_store
+
+    store = str(tmp_path / "store")
+    _two_topic_store(spark, store)
+    read_store(spark, store).count()    # fills the serving cache
+
+    for kind in ("date_histogram", "latest_state"):
+        def request():
+            return aggregating_requests(read_store(spark, store))[kind] \
+                .collect()
+        got = _jobs_and_tasks(spark, f"{kind}-{tmp_path.name}", request)
+        assert got == (1, 1), kind
 
 
 def _redelivered_store(spark, path):

@@ -17,7 +17,7 @@ from kafana_spark.store import (
     append_table, batch_meta, compact, read_store,
     read_table, replace_table, retention, table_files, write_store,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, aggregating_requests
 
 
 def _build_store(spark, path, appends=4):
@@ -582,15 +582,26 @@ def _answer(df):
     return sorted(r._id for r in df.select("_id").collect()), df.count()
 
 
+def _aggregations(df):
+    """Sorted rows of each aggregating request kind over ``df``."""
+    return [sorted(a.collect(), key=str)
+            for a in aggregating_requests(df).values()]
+
+
 def _assert_fresh(spark, store, monkeypatch):
     """A deduplicated read equals a read that bypasses the serving
-    cache (budget 0); returns its answer."""
+    cache (budget 0) in its ``_id``s, count and aggregations (a small
+    served tier is one partition, the bypass a multi-partition scan);
+    returns its answer."""
     import kafana_spark.store as store_mod
 
-    got = _answer(read_store(spark, store))
+    served = read_store(spark, store)
+    got, aggs = _answer(served), _aggregations(served)
     with monkeypatch.context() as m:
         m.setattr(store_mod, "SERVE_CACHE_BYTES", 0)
-        assert _answer(read_store(spark, store)) == got
+        scanned = read_store(spark, store)
+        assert _answer(scanned) == got
+        assert _aggregations(scanned) == aggs
     return got
 
 
